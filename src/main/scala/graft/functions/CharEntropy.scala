@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -76,12 +75,6 @@ case class CharEntropy(child: Expression)
 }
 
 object CharEntropy {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "scala_udf")
-
-  def apply(spark: SparkSession, text: Column): Column = {
-    register(spark)
-    call_function("char_entropy", text)
-  }
+  def apply(text: Column): Column =
+    GraftBridge.column(CharEntropy(GraftBridge.expression(text)))
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Fused cosine similarity over two float-vector columns as a native
@@ -99,20 +98,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-API surface for the engine's native functions. */
+/** Column-API surface for [[CosineSimilarity]] (SQL: `cosine_sim`). */
 object GraftFunctions {
-  val all: Map[String, Seq[Expression] => Expression] = Map(
-    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))))
-
-  /** Idempotently register on a session (temp functions). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("cosine_sim", a, b)
-  }
+  def cosineSim(a: Column, b: Column): Column =
+    GraftBridge.column(CosineSimilarity(
+      GraftBridge.expression(a), GraftBridge.expression(b)))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,15 +80,6 @@ case class HashedShingles(child: Expression, shingleWidth: Int)
 }
 
 object HashedShingles {
-  /** Width-specific registration so the Column API can't silently
-    * diverge from a caller-requested width. */
-  def register(spark: SparkSession, width: Int): String = {
-    val name = s"hashed_shingles_$width"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => HashedShingles(exprs.head, width), "scala_udf")
-    name
-  }
-
-  def apply(spark: SparkSession, tokens: Column, width: Int = 5): Column =
-    call_function(register(spark, width), tokens)
+  def apply(tokens: Column, width: Int = 5): Column =
+    GraftBridge.column(HashedShingles(GraftBridge.expression(tokens), width))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -96,13 +95,6 @@ case class MinHashSlices(child: Expression, shingleWidth: Int)
 }
 
 object MinHashSlices {
-  def register(spark: SparkSession, width: Int): String = {
-    val name = s"minhash_slices_$width"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinHashSlices(exprs.head, width), "scala_udf")
-    name
-  }
-
-  def apply(spark: SparkSession, tokens: Column, width: Int = 5): Column =
-    call_function(register(spark, width), tokens)
+  def apply(tokens: Column, width: Int = 5): Column =
+    GraftBridge.column(MinHashSlices(GraftBridge.expression(tokens), width))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -81,14 +80,6 @@ case class ShingleHashSeq(child: Expression, shingleWidth: Int)
 }
 
 object ShingleHashSeq {
-  /** Width-specific registration, mirroring [[HashedShingles.register]]. */
-  def register(spark: SparkSession, width: Int): String = {
-    val name = s"shingle_hash_seq_$width"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleHashSeq(exprs.head, width), "scala_udf")
-    name
-  }
-
-  def apply(spark: SparkSession, tokens: Column, width: Int): Column =
-    call_function(register(spark, width), tokens)
+  def apply(tokens: Column, width: Int): Column =
+    GraftBridge.column(ShingleHashSeq(GraftBridge.expression(tokens), width))
 }

@@ -2,11 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** 16-bit SimHash of a token array in one native per-row pass.
@@ -88,12 +87,6 @@ private[functions] object SimHashEval {
 }
 
 object SimHash16 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash16", exprs => SimHash16(exprs.head), "scala_udf")
-
-  def apply(spark: SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("simhash16", tokens)
-  }
+  def apply(tokens: Column): Column =
+    GraftBridge.column(SimHash16(GraftBridge.expression(tokens)))
 }

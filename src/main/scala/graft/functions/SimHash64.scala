@@ -2,11 +2,10 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** 64-bit SimHash of a token array — the production signature width
@@ -46,12 +45,6 @@ case class SimHash64(child: Expression)
 }
 
 object SimHash64 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-
-  def apply(spark: SparkSession, tokens: Column): Column = {
-    register(spark)
-    call_function("simhash64", tokens)
-  }
+  def apply(tokens: Column): Column =
+    GraftBridge.column(SimHash64(GraftBridge.expression(tokens)))
 }

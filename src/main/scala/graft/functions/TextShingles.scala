@@ -49,7 +49,7 @@ object TextShingles {
     graft.util.Widen(docs)
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol),
-        explode(HashedShingles(docs.sparkSession, col("__toks"), n)).as("sh"))
+        explode(HashedShingles(col("__toks"), n)).as("sh"))
 
   /** DuckDB spelling of [[tokens]] as a WITH clause yielding
     * `tok(doc_id, words)` over any relation with (doc_id, text). */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Batch relational operators mirroring the reference pipeline's
@@ -74,12 +73,4 @@ object Relational {
         factKey === buildKey && saltedFact("__salt") === saltedBuild("__salt"))
       .drop("__salt")
   }
-
-  /** Batch form of the table materialization used by oracle verification:
-    * row_number desc = 1. Kept for tests that need exact tie-inspection. */
-  def latestByKeyWindowed(df: DataFrame, keys: Seq[Column],
-                          offset: Column): DataFrame =
-    df.withColumn("__rn",
-        row_number().over(Window.partitionBy(keys: _*).orderBy(offset.desc)))
-      .filter(col("__rn") === 1).drop("__rn")
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
 import graft.sources.Tables
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** CUSUM change-point detection (Page's test) over the hourly event
   * series — the ingest-monitoring primitive that flags when a metric's
@@ -136,19 +138,7 @@ object ChangePointQueries {
       StructField("x", LongType),
       StructField("k", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      hourly.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
     store.df(s).select(col("event_type"), col("hts"), col("x"))
   }
 

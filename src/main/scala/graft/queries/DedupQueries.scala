@@ -36,7 +36,6 @@ object DedupQueries {
     // widened relation (one exchange, reused) instead of each paying
     // their own inside the helpers
     val docs = graft.util.Widen(docs0)
-    val s = docs.sparkSession
     // persist: sh feeds both sides of the candidate join. The cache is
     // released before returning — the (tiny) pair result is eagerly
     // localCheckpoint'ed off it, so no InMemoryRelation outlives the
@@ -46,7 +45,7 @@ object DedupQueries {
       val sizes = docs
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n"))
+          size(graft.functions.HashedShingles(col("__toks"), N)).as("n"))
       val inter = candidates match {
         case None =>
           sh.as("a").join(sh.as("b"),
@@ -104,7 +103,7 @@ object DedupQueries {
       val sizes = docs
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n"))
+          size(graft.functions.HashedShingles(col("__toks"), N)).as("n"))
       val pj = sh.as("a").join(sh.as("b"),
           col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -288,7 +287,7 @@ object DedupQueries {
       val sizes = docs
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n"))
+          size(graft.functions.HashedShingles(col("__toks"), N)).as("n"))
       sh.as("a").join(sh.as("b"),
           col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -371,7 +370,6 @@ object DedupQueries {
   /** [[minhashLsh]] over ANY (doc_id, text) relation — the streaming
     * corpus build feeds it the accumulated staged documents. */
   private[graft] def minhashLshOver(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     val seeds = 0 until 8
     // min over shingles is multiset-invariant, so each signature is a
     // narrow per-row array_min over the shingle array: NO explode, NO
@@ -383,7 +381,7 @@ object DedupQueries {
     val mh = graft.util.Widen(docs)
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        graft.functions.MinHashSlices(s, col("__toks")).as("__mh"))
+        graft.functions.MinHashSlices(col("__toks")).as("__mh"))
       .select(col("doc_id") +: seeds.map(i =>
         element_at(col("__mh"), i + 1).as(s"h$i")): _*)
       .persist()
@@ -410,12 +408,11 @@ object DedupQueries {
     * relation beat re-exploding for a two-sided join); this feeds the
     * streaming first-wins registry and spec cross-checks. */
   private[graft] def bandRows(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     val seeds = 0 until 8
     graft.util.Widen(docs)
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        graft.functions.MinHashSlices(s, col("__toks")).as("__mh"))
+        graft.functions.MinHashSlices(col("__toks")).as("__mh"))
       .select(col("doc_id") +: seeds.map(i =>
         element_at(col("__mh"), i + 1).as(s"h$i")): _*)
       .select(col("doc_id"),
@@ -490,7 +487,6 @@ object DedupQueries {
     * signature pass + one shingle pass; pay once per index build. */
   private[graft] def restIndexOf(rest0: DataFrame): RestIndex = {
     val rest = graft.util.Widen(rest0)
-    val s = rest.sparkSession
     RestIndex(
       bands = bandRows(rest)
         .select(col("doc_id").as("doc_a"), col("band"), col("sig")),
@@ -498,7 +494,7 @@ object DedupQueries {
       sizes = rest
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n")))
+          size(graft.functions.HashedShingles(col("__toks"), N)).as("n")))
   }
 
   /** The delta-vs-at-rest gate against a PRE-BUILT [[RestIndex]]: only
@@ -510,7 +506,6 @@ object DedupQueries {
   private[graft] def incrementalAgainst(delta0: DataFrame,
                                         idx: RestIndex): DataFrame = {
     val delta = graft.util.Widen(delta0)
-    val s = delta.sparkSession
     val db = bandRows(delta)
       .select(col("doc_id").as("doc_b"), col("band"), col("sig"))
     val cand = idx.bands.join(db, Seq("band", "sig"))
@@ -520,7 +515,7 @@ object DedupQueries {
     val dSizes = delta
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n"))
+        size(graft.functions.HashedShingles(col("__toks"), N)).as("n"))
     cand
       .join(idx.shingles.select(col("doc_id").as("doc_a"),
         col("sh").as("__ash")), Seq("doc_a"))
@@ -573,13 +568,12 @@ object DedupQueries {
   private[graft] def incrementalContainmentAgainst(
       delta0: DataFrame, idx: RestIndex): DataFrame = {
     val delta = graft.util.Widen(delta0)
-    val s = delta.sparkSession
     val dSh = TextShingles.shingleHashSet(delta, "doc_id", "text", N)
       .select(col("doc_id").as("doc_b"), col("sh"))
     val dSizes = delta
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        size(graft.functions.HashedShingles(s, col("__toks"), N)).as("n"))
+        size(graft.functions.HashedShingles(col("__toks"), N)).as("n"))
     idx.shingles.select(col("doc_id").as("doc_a"), col("sh"))
       .join(dSh, Seq("sh"))
       .groupBy(col("doc_a"), col("doc_b"))
@@ -711,7 +705,7 @@ object DedupQueries {
     Tables.documents(s, d)
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        graft.functions.SimHash16(s, col("__toks")).as("simhash"))
+        graft.functions.SimHash16(col("__toks")).as("simhash"))
 
   val simhashSql: String =
     """WITH tok AS (
@@ -825,7 +819,7 @@ object DedupQueries {
       Tables.documents(s, d)
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          graft.functions.SimHash64(s, col("__toks")).as("simhash")),
+          graft.functions.SimHash64(col("__toks")).as("simhash")),
       bandBits = 16)
 
   val simhash64PairsSql: String =
@@ -1154,11 +1148,10 @@ object DedupQueries {
   /** The per-position window-hash relation: one row per token position
     * with its [[SpanTokens]]-gram rolling hash. */
   private[graft] def spanWindows(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
     graft.util.Widen(docs)
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        explode(graft.functions.ShingleHashSeq(s, col("__toks"), SpanTokens))
+        explode(graft.functions.ShingleHashSeq(col("__toks"), SpanTokens))
           .as("h"))
   }
 

@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
 
 import graft.functions.TextShingles
 import graft.sources.Tables
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** HYBRID dense+sparse retrieval (VERDICT r14 next-round #1) — the
   * production hybrid-search shape: the SAME queries run through the
@@ -299,16 +301,14 @@ object HybridQueries {
       StructField("df", LongType),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckptLex = StreamingQueries.scratchDir("graft-sq-")
 
     // dense leg: streaming ingest into a scratch layout under the
     // fixed routing table (the retrain-artifact convention)
     val root = java.nio.file.Paths.get(
-      StreamingQueries.scratchDir("graft-hyb-ivf-"))
+      FiniteStream.scratchDir("graft-hyb-ivf-"))
     val layout = graft.sources.IvfIndex.Layout(
       centroids = root.resolve("centroids").toString,
       vectors = root.resolve("vectors").toString)
-    val ckptIvf = StreamingQueries.scratchDir("graft-hyb-ck-")
     try {
       SimilarityQueries.centroidArrays(s, d)
         .write.mode("overwrite").parquet(layout.centroids)
@@ -318,33 +318,13 @@ object HybridQueries {
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("emb"), col("label"))
       // the two ingest legs are fully independent until the finalize
-      // (separate sources, separate sinks): START both, then drain
-      // both, so their micro-batch fixed costs overlap instead of
-      // serializing (guide §2.6 — overlap independent jobs)
-      val qLex = graft.util.Confs.withShufflePartitions(s, 8) {
-        agg.writeStream.outputMode("update")
-          .option("checkpointLocation", ckptLex)
-          .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-          .start()
-      }
-      try {
-        val qIvf = graft.util.Confs.withShufflePartitions(s, 4) {
-          estream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckptIvf)
-            .foreachBatch { (b: DataFrame, id: Long) =>
-              graft.sources.IvfIndex.appendBatch(layout,
-                b.withColumn("cell", col("label")), id)
-            }
-            .start()
-        }
-        try {
-          qLex.processAllAvailable()
-          qIvf.processAllAvailable()
-        } finally qIvf.stop()
-      } finally {
-        qLex.stop()
-        s.streams.resetTerminated()
-      }
+      // (separate sources, separate sinks): two legs of one drain
+      FiniteStream.drain(
+        Leg(agg, "update", sink = Batches(store.upsert)),
+        Leg(estream, "append", statePartitions = 4, sink = Batches { (b, id) =>
+          graft.sources.IvfIndex.appendBatch(layout,
+            b.withColumn("cell", col("label")), id)
+        }))
 
       // finalize outside the streams; materialize before the scratch
       // layout is deleted
@@ -361,8 +341,7 @@ object HybridQueries {
       val routed = routeCells(s, s.read.parquet(layout.centroids),
         qsel10.select(col("term")))
       fuse(la, denseList(s, layout.vectors, routed)).localCheckpoint()
-    } finally Seq(root.toString, ckptIvf, ckptLex)
-      .foreach(StreamingQueries.deleteRecursively)
+    } finally FiniteStream.deleteRecursively(root.toString)
   }
 
   /** Cross-encoder RERANK stage over the hybrid results — the second

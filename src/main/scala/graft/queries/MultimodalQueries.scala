@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.streaming.FiniteStream
+
 /** Multimodal-column plumbing: media payloads ride as opaque `binary`
   * columns with typed metadata extracted by a partition-level decode
   * pass (`mapPartitions` over an iterator of byte arrays — the Scala
@@ -1024,12 +1026,11 @@ object MultimodalQueries {
     * sources; band j = bits 16j..16j+15, matching the hi/lo oracle
     * spelling of `dedup_simhash64_pairs`. */
   private[graft] def textSimhashBands(docs0: DataFrame): DataFrame = {
-    val s = docs0.sparkSession
     graft.util.Widen(docs0)
       .select(col("doc_id"),
         graft.functions.TextShingles.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
-        graft.functions.SimHash64(s, col("__toks")).as("sh"))
+        graft.functions.SimHash64(col("__toks")).as("sh"))
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, 3), j -> shiftright(sh, j * 16) & 65535)"))
         .as(Seq("band_no", "band_val")))
@@ -1564,7 +1565,7 @@ object MultimodalQueries {
     * the exact top-5 of the remaining corpus, zero tombstones served)
     * lives in CrossmodalLifecycleSpec. */
   def crossmodalDelete(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-mm-del-")
+    val root = FiniteStream.scratchDir("graft-mm-del-")
     try {
       graft.sources.IvfIndex.publish(root, crossmodalCodebook(s),
         crossmodalCorpusStored(s, d)
@@ -1579,7 +1580,7 @@ object MultimodalQueries {
         s"vacuum reclaimed nothing after the compact under $root")
       crossmodalProbeOver(s, d, layout, nprobe = CrossmodalProbe,
         extraFilter = lit(true), vecIdCol = "vec_id").localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** Route over the UNCHANGED one-hot routing table, rank only the
@@ -1676,13 +1677,13 @@ object MultimodalQueries {
     * the trained-centroid geometry end-to-end (the ivfRetrainSql
     * protocol on the cross-modal index). */
   def crossmodalTrained(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-mm-train-")
+    val root = FiniteStream.scratchDir("graft-mm-train-")
     try {
       val layout = publishTrainedCrossmodal(s, d, root)
       crossmodalProbeOver(s, d, layout, nprobe = CrossmodalProbe,
         extraFilter = lit(true), vecIdCol = "vec_id", roundRoute = true)
         .localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** Seed-publish + drift-gated Lloyd completion of the trained
@@ -1719,7 +1720,7 @@ object MultimodalQueries {
     * batch route (identical doubles — `Double.toString` round-trips —
     * identical left-to-right dot, identical rounding/ties). */
   def streamCrossmodalTrained(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-mm-strain-")
+    val root = FiniteStream.scratchDir("graft-mm-strain-")
     try {
       val layout = publishTrainedCrossmodal(s, d, root)
       // pin the routing table: ≤ CrossmodalTrainedK rows
@@ -1768,7 +1769,7 @@ object MultimodalQueries {
           col("z.ids").as("doc_id"),
           expr("(z.scores + z.ids) DIV 4294967296").as("cos_micro"))
         .localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** nprobe RE-ELECTION for the trained codebook (r18 verdict #4,
@@ -1780,7 +1781,7 @@ object MultimodalQueries {
     * must re-run against the geometry it will serve. */
   def crossmodalTrainedAutoprobe(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val root = StreamingQueries.scratchDir("graft-mm-tap-")
+    val root = FiniteStream.scratchDir("graft-mm-tap-")
     try {
       val layout = publishTrainedCrossmodal(s, d, root)
       val q = graft.sources.Tables.documents(s, d)
@@ -1804,7 +1805,7 @@ object MultimodalQueries {
         .join(broadcast(rnk), Seq("cell"))
         .select(col("qid"), col("r"), col("doc_id"), cm.as("cm"))
       autoprobeSweepFrom(s, scored, CrossmodalTrainedK).localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** The trained-codebook CTE chain — stub embeddings, seed
@@ -1920,13 +1921,13 @@ object MultimodalQueries {
     * and the oracle spells the whole lifecycle + filtered serve
     * relationally. */
   def crossmodalTrainedFiltered(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-mm-trainf-")
+    val root = FiniteStream.scratchDir("graft-mm-trainf-")
     try {
       val layout = publishTrainedCrossmodal(s, d, root)
       crossmodalProbeOver(s, d, layout, nprobe = 3,
         extraFilter = col("doc_id") % 3 === 1, vecIdCol = "vec_id",
         roundRoute = true).localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** The sweep over the trained geometry — shares

@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType,
 
 import graft.functions.TextShingles
 import graft.sources.Tables
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** Inverted-index retrieval over the documents corpus — the search
   * primitive a curation pipeline uses for quality filtering and
@@ -230,19 +232,7 @@ object RetrievalQueries {
       StructField("ords", ArrayType(LongType)),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     // finalize on the stored index heads (|vocab| rows, 5 postings each)
     val idx = store.df(s)
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
@@ -419,19 +409,7 @@ object RetrievalQueries {
       StructField("ords", ArrayType(LongType)),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val qsel = idx
       .orderBy(col("df").desc, col("term")).limit(RankHi)
@@ -706,19 +684,7 @@ object RetrievalQueries {
       StructField("ids_a", ArrayType(LongType)),
       StructField("ids_b", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val qsel = store.df(s)
       .orderBy(col("df").desc, col("term")).limit(RankHi)
       .withColumn("r", row_number().over(
@@ -791,19 +757,7 @@ object RetrievalQueries {
       StructField("ids_a", ArrayType(LongType)),
       StructField("ids_b", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
     val qsel = idx
@@ -1300,19 +1254,7 @@ object RetrievalQueries {
       StructField("ords", ArrayType(LongType)),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "bigram")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val qq = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try qq.processAllAvailable()
-    finally {
-      qq.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     store.df(s)
       .select(col("qid"), col("bigram").as("phrase"),
         posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("p", "z")))
@@ -1363,19 +1305,7 @@ object RetrievalQueries {
       StructField("ords", ArrayType(LongType)),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "qid")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val qq = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try qq.processAllAvailable()
-    finally {
-      qq.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     store.df(s)
       .select(col("qid"),
         posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("p", "z")))
@@ -1555,19 +1485,7 @@ object RetrievalQueries {
       StructField("ords", ArrayType(LongType)),
       StructField("ids", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val dfRel = idx.select(col("term"), col("df"))
     val qsel = idx
@@ -1716,19 +1634,7 @@ object RetrievalQueries {
       StructField("df", LongType),
       StructField("ctf", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
     val qs = idx

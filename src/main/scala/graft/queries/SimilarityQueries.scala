@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors). Cosine is computed in DOUBLE with a sequential left fold
@@ -117,7 +119,7 @@ object SimilarityQueries {
     e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("label"),
-        round(graft.functions.GraftFunctions.cosineSim(s,
+        round(graft.functions.GraftFunctions.cosineSim(
           col("embedding"), col("qemb")), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(10)
@@ -163,7 +165,7 @@ object SimilarityQueries {
       e.as("a").join(e.as("b"),
           col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          round(graft.functions.GraftFunctions.cosineSim(s,
+          round(graft.functions.GraftFunctions.cosineSim(
             col("a.embedding"), col("b.embedding")), 6).as("cos_sim"))
         .filter(col("cos_sim") >= 0.9)
         .localCheckpoint()
@@ -196,7 +198,7 @@ object SimilarityQueries {
     e.filter(col("vec_id") % 20 =!= 0)
       .join(bench, col("bucket") === col("bbucket"))
       .withColumn("cos",
-        round(graft.functions.GraftFunctions.cosineSim(s,
+        round(graft.functions.GraftFunctions.cosineSim(
           col("embedding"), col("bemb")), 6))
       .filter(col("cos") >= 0.2)
       .groupBy(col("vec_id").as("doc_id"))
@@ -237,7 +239,7 @@ object SimilarityQueries {
     val agg = train
       .join(broadcast(bench), col("bucket") === col("bbucket"))
       .withColumn("cos",
-        round(graft.functions.GraftFunctions.cosineSim(s,
+        round(graft.functions.GraftFunctions.cosineSim(
           col("embedding"), col("bemb")), 6))
       .filter(col("cos") >= 0.2)
       .groupBy(col("vec_id").as("doc_id"))
@@ -248,21 +250,8 @@ object SimilarityQueries {
       StructField("n_bench_hits", LongType),
       StructField("max_cos", DoubleType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "doc_id")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try {
-      q.processAllAvailable()
-      store.df(s).localCheckpoint()
-    } finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
+    store.df(s).localCheckpoint()
   }
 
   val decontamSemanticSql: String =
@@ -315,7 +304,7 @@ object SimilarityQueries {
           col("a.bucket") === col("b.bucket") &&
             col("a.vec_id") < col("b.vec_id"))
         .select(
-          floor(round(graft.functions.GraftFunctions.cosineSim(s,
+          floor(round(graft.functions.GraftFunctions.cosineSim(
             col("a.embedding"), col("b.embedding")), 6) * 10)
             .cast("long").as("band"),
           col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
@@ -777,7 +766,7 @@ object SimilarityQueries {
     * the remaining corpus on the boundary fixture) lives in
     * IvfRetrainSpec, the [[annRecall]] protocol. */
   def ivfDeleteProbe(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-ivf-del-")
+    val root = FiniteStream.scratchDir("graft-ivf-del-")
     try {
       val e = withEmb(s, d)
       graft.sources.IvfIndex.publish(root,
@@ -789,7 +778,7 @@ object SimilarityQueries {
       require(vacuumed.nonEmpty,
         s"vacuum reclaimed nothing after the compact under $root")
       probeLayout(s, layout, d, nprobe = 1).localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** Route over the UNCHANGED full-corpus routing table, rank only
@@ -824,39 +813,25 @@ object SimilarityQueries {
         col("label"))
   }
 
-  /** Drain a foreachBatch ingest over [[embStream]], then clear the
-    * terminated-query reference (the session-hygiene contract pinned
-    * in StreamingHygieneSpec — a stopped query otherwise stays
-    * reachable through the manager for the session's lifetime). */
-  private def runIngest(s: SparkSession, d: String, ckpt: String)(
-      perBatch: (DataFrame, Long) => Unit): Unit = {
-    val q = graft.util.Confs.withShufflePartitions(s, 4) {
-      embStream(s, d).writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, id: Long) => perBatch(b, id) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-    }
-  }
+  /** Drain a foreachBatch ingest over [[embStream]]. */
+  private def runIngest(s: SparkSession, d: String)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    FiniteStream.drain(Leg(embStream(s, d), "append", statePartitions = 4,
+      sink = Batches(perBatch)))
 
   def streamIvfIngest(s: SparkSession, d: String): DataFrame = {
     val root = java.nio.file.Paths.get(
-      StreamingQueries.scratchDir("graft-ivf-ingest-"))
+      FiniteStream.scratchDir("graft-ivf-ingest-"))
     val layout = graft.sources.IvfIndex.Layout(
       centroids = root.resolve("centroids").toString,
       vectors = root.resolve("vectors").toString)
-    // the routing table is the retrain artifact — written once, fixed
-    // across the whole ingest
-    centroidArrays(s, d).write.mode("overwrite").parquet(layout.centroids)
-    val ckpt = StreamingQueries.scratchDir("graft-ivf-ck-")
-    // scratch index + checkpoint are per-invocation; the cleanup runs
-    // in finally so a failed streaming query doesn't leak /dev/shm
+    // the scratch index is per-invocation; the cleanup runs in finally
+    // so a failed streaming query doesn't leak it
     try {
-      runIngest(s, d, ckpt) { (b, id) =>
+      // the routing table is the retrain artifact — written once, fixed
+      // across the whole ingest
+      centroidArrays(s, d).write.mode("overwrite").parquet(layout.centroids)
+      runIngest(s, d) { (b, id) =>
         // batch-keyed overwrite: a re-executed epoch (foreachBatch
         // is at-least-once) replaces its own subtree instead of
         // double-appending duplicate vectors into the cells
@@ -864,8 +839,7 @@ object SimilarityQueries {
           b.withColumn("cell", col("label")), id)
       }
       probeLayout(s, layout, d, nprobe = 1).localCheckpoint()
-    } finally Seq(root.toString, ckpt)
-      .foreach(StreamingQueries.deleteRecursively)
+    } finally FiniteStream.deleteRecursively(root.toString)
   }
 
   /** The retrain lifecycle under STREAMING ingest — the production
@@ -888,8 +862,7 @@ object SimilarityQueries {
     * measureDrift; production tunes the cadence, the fixture runs it
     * every batch to pin monotone-growing drift. */
   def streamIvfRetrain(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-ivf-sretrain-")
-    val ckpt = StreamingQueries.scratchDir("graft-ivf-sr-ck-")
+    val root = FiniteStream.scratchDir("graft-ivf-sretrain-")
     try {
       val e = withEmb(s, d)
       val seeds = seedCentroids(e)
@@ -899,7 +872,7 @@ object SimilarityQueries {
         seeds.select(col("cid").as("label"), col("cemb")),
         e.limit(0).withColumn("cell", lit(0)))
       val drifts = scala.collection.mutable.ArrayBuffer.empty[Long]
-      runIngest(s, d, ckpt) { (b, id) =>
+      runIngest(s, d) { (b, id) =>
         graft.sources.IvfIndex.appendBatch(v1, assignCells(b, seeds), id)
         drifts += graft.sources.IvfIndex.measureDrift(s, root)
       }
@@ -909,8 +882,7 @@ object SimilarityQueries {
         graft.sources.IvfIndex.maybeRetrain(s, root, thresholdMicros = 0L)
       require(retrained, s"accumulated ingest did not trigger a retrain")
       probeLayout(s, layout, d, nprobe = 1).localCheckpoint()
-    } finally Seq(root, ckpt)
-      .foreach(StreamingQueries.deleteRecursively)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** Assign every vector to its nearest centroid (max rounded cosine,
@@ -985,7 +957,7 @@ object SimilarityQueries {
       .select(col("vec_id").cast("int").as("cid"), col("emb").as("cemb"))
 
   def ivfRetrainProbe(s: SparkSession, d: String): DataFrame = {
-    val root = StreamingQueries.scratchDir("graft-ivf-retrain-")
+    val root = FiniteStream.scratchDir("graft-ivf-retrain-")
     try {
       val e = withEmb(s, d)
       val seeds = seedCentroids(e)
@@ -996,7 +968,7 @@ object SimilarityQueries {
         graft.sources.IvfIndex.maybeRetrain(s, root, thresholdMicros = 0L)
       require(retrained, s"seed centroids did not drift under $d")
       probeLayout(s, layout, d, nprobe = 1).localCheckpoint()
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 
   /** Embeds [[kmeansStepSql]]: the retrained index must hold exactly

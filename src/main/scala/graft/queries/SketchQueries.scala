@@ -6,6 +6,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   StructField, StructType}
 
 import graft.functions.{KmvSketchAgg, Md5Key}
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** KMV (k-minimum-values) distinct-count sketch algebra over the
   * documents corpus — the mergeable cardinality layer of a curation
@@ -265,19 +267,7 @@ object SketchQueries {
       StructField("sk", ArrayType(LongType)),
       StructField("k", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      hourly.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
     slidingOf(store.df(s).select(col("event_type"), col("hts"), col("sk")))
   }
 
@@ -331,19 +321,7 @@ object SketchQueries {
       StructField("source", StringType),
       StructField("sk", ArrayType(LongType))))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "source")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     store.df(s)
       .select(col("source"),
         size(col("sk")).cast("long").as("n_held"),
@@ -453,19 +431,7 @@ object SketchQueries {
         org.apache.spark.sql.types.MapType(StringType, LongType)),
       StructField("n_total", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "source")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val cand = store.df(s).select(col("source"), col("n_total"),
       explode(map_keys(col("sk"))).as("term"))
     s.read.parquet(s"$d/documents.parquet")
@@ -622,19 +588,7 @@ object SketchQueries {
       StructField("n", LongType),
       StructField("k", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      hourly.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
     mgSlidingOf(s, d,
       store.df(s).select(col("event_type"), col("hts"), col("sk"), col("n")))
   }

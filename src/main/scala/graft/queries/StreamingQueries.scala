@@ -1,14 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
-import graft.streaming.{DebeziumJson, Pipeline}
+import graft.streaming.{DebeziumJson, FiniteStream, Pipeline}
+import graft.streaming.FiniteStream.{Batches, Leg, deleteRecursively, scratchDir}
 
 /** Structured Streaming operators surfaced as driver-verifiable
   * queries: each runs a real streaming query (file source or the full
@@ -18,8 +16,6 @@ import graft.streaming.{DebeziumJson, Pipeline}
   * streaming engine itself hash-verified, not just smoke-tested.
   */
 object StreamingQueries {
-
-  private val nameCounter = new AtomicInteger(0)
 
   /** Streaming read of the events table with the same nanos→micros
     * normalization as the batch loader. `wide` inserts the
@@ -40,168 +36,9 @@ object StreamingQueries {
     if (wide) graft.util.Widen.stream(src) else src
   }
 
-  /** Checkpoint to shared memory when available: these finite-input
-    * runs don't need durable recovery, and stateful joins/aggs write
-    * state per micro-batch. */
-  private def shmCheckpoint(): String = scratchDir("graft-sq-")
-
-  /** Throwaway scratch directory, on shared memory when available. */
-  private[graft] def scratchDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) Files.createTempDirectory(shm, prefix).toString
-    else Files.createTempDirectory(prefix).toString
-  }
-
-  /** Stateful operators over these testdata volumes want few state
-    * partitions: each partition writes a store snapshot per
-    * micro-batch, so 32 is pure overhead (stream confs are captured
-    * at query start; restored right after). The query is always
-    * stopped (finally) and its throwaway checkpoint deleted — a
-    * failed processAllAvailable must not leak a running query.
-    *
-    * The result is eagerly DETACHED from the memory sink before
-    * return: the sink's rows are otherwise pinned forever by both the
-    * registered temp view and the manager's terminated-query list, so
-    * returning `s.table(name)` live accumulates every result table in
-    * the driver heap for the session's lifetime (observed: up to 60×
-    * slowdowns for alphabetically-late queries in a 134-query × 3-run
-    * bench suite). After localCheckpoint the rows are ordinary RDD
-    * blocks the ContextCleaner releases once the caller drops the
-    * frame; the view is dropped and the terminated-query registry
-    * cleared so the sink itself is GC-reachable. */
-  private val profPhases =
-    sys.env.get("SPARK_GRAFT_STREAM_PROF").contains("1")
-
-  /** Env-gated micro-batch plan dump (plan-evidence capture for the
-    * optimization log; streaming plans are only inspectable from the
-    * live query handle, unlike batch `.explain`). */
-  private val profExplain =
-    sys.env.get("SPARK_GRAFT_STREAM_EXPLAIN").contains("1")
-
-  private[queries] def runToTable(df: DataFrame, mode: String,
-                         statePartitions: Int = 8): DataFrame = {
-    val s = df.sparkSession
-    val name = s"stream_q_${nameCounter.incrementAndGet()}"
-    val ckpt = shmCheckpoint()
-    def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000
-    val t0 = System.nanoTime()
-    val q = graft.util.Confs.withShufflePartitions(s, statePartitions) {
-      df.writeStream.outputMode(mode).format("memory")
-        .option("checkpointLocation", ckpt)
-        .queryName(name).start()
-    }
-    val tStart = ms(t0)
-    try {
-      val t1 = System.nanoTime()
-      try q.processAllAvailable()
-      catch { case e: Throwable => throw translateStateDecode(e) }
-      val tDrain = ms(t1)
-      if (profExplain) { System.err.println(s"[explain] $name"); q.explain() }
-      val t2 = System.nanoTime()
-      val out = s.table(name).localCheckpoint()
-      if (profPhases)
-        System.err.println(s"[runToTable] $name start=${tStart}ms " +
-          s"drain=${tDrain}ms detach=${ms(t2)}ms")
-      out
-    } finally {
-      val t3 = System.nanoTime()
-      q.stop()
-      s.catalog.dropTempView(name)
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-      if (profPhases)
-        System.err.println(s"[runToTable] $name cleanup=${ms(t3)}ms")
-    }
-  }
-
-  /** [[runToTable]] over several INDEPENDENT finite streams at once:
-    * every query STARTS before any drains, so the per-stream fixed
-    * costs (source listing, micro-batch planning, state commits,
-    * sink detach) overlap instead of serializing — guide §2.6's
-    * overlap-independent-jobs rule applied to the finite-ingest twins
-    * that compose two source streams (claim log + profile, counts +
-    * sketch, …). Per-stream semantics are unchanged: each query keeps
-    * its own memory sink, checkpoint, drain and eager detach, exactly
-    * the [[runToTable]] contract; results return in input order. */
-  private[queries] def runToTables(dfs: Seq[(DataFrame, String)],
-                                   statePartitions: Int = 8): Seq[DataFrame] = {
-    require(dfs.nonEmpty, "runToTables needs at least one stream")
-    val s = dfs.head._1.sparkSession
-    final case class Started(q: org.apache.spark.sql.streaming.StreamingQuery,
-                             name: String, ckpt: String)
-    val started = scala.collection.mutable.ArrayBuffer.empty[Started]
-    try {
-      dfs.foreach { case (df, mode) =>
-        val name = s"stream_q_${nameCounter.incrementAndGet()}"
-        val ckpt = shmCheckpoint()
-        val q = graft.util.Confs.withShufflePartitions(s, statePartitions) {
-          df.writeStream.outputMode(mode).format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName(name).start()
-        }
-        started += Started(q, name, ckpt)
-      }
-      started.map { h =>
-        try h.q.processAllAvailable()
-        catch { case e: Throwable => throw translateStateDecode(e) }
-        s.table(h.name).localCheckpoint()
-      }.toSeq
-    } finally {
-      started.foreach { h =>
-        try {
-          h.q.stop()
-          s.catalog.dropTempView(h.name)
-          deleteRecursively(h.ckpt)
-        } catch { case _: Throwable => () }
-      }
-      s.streams.resetTerminated()
-    }
-  }
-
-  /** State-format break detection (ADVICE r17): the claim registries
-    * ([[neardupCore]]/[[claimCore]]) widened their per-key state in
-    * r17 (bare Long → tuple), so a checkpoint written by the r16
-    * binary fails to restore with an opaque deserialization error deep
-    * in the state-store layer. Translate that failure class into an
-    * explicit instruction instead of letting the raw decode error
-    * surface. Non-decode failures pass through untouched. */
-  private def translateStateDecode(e: Throwable): Throwable = {
-    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .take(16).toSeq
-    // the failure must actually ORIGINATE in the state-store layer —
-    // a decode-shaped exception thrown by query expressions (e.g. an
-    // out-of-bounds array index in user logic) must surface untouched
-    val stateFrame = chain.exists(_.getStackTrace.exists(f =>
-      f.getClassName.contains("sql.execution.streaming.state")))
-    val decodeLike = chain.exists {
-      case _: ClassCastException | _: java.io.InvalidClassException |
-           _: ArrayIndexOutOfBoundsException |
-           _: java.io.StreamCorruptedException => true
-      case c => Option(c.getMessage).exists(m =>
-        m.contains("InvalidUnsafeRow") || m.contains("delta file") ||
-          m.contains("Error reading state") ||
-          m.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE") ||
-          m.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"))
-    }
-    if (decodeLike && stateFrame)
-      new IllegalStateException(
-        "stateful stream failed to restore its checkpoint state — if " +
-          "this checkpoint was written by a pre-r17 binary, the claim-" +
-          "registry state format widened (bare Long -> (contested, " +
-          "sole, pend) tuple) and cannot restore: drain the query on " +
-          "the old binary or restart from a fresh checkpoint", e)
-    else e
-  }
-
-  private[graft] def deleteRecursively(path: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(path)
-      if (Files.exists(root)) {
-        Files.walk(root).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
-      }
-    } catch { case _: Throwable => () } // best-effort cleanup
+  /** One memory-sink [[FiniteStream.drain]] leg: the detached result. */
+  private[queries] def runToTable(df: DataFrame, mode: String): DataFrame =
+    FiniteStream.drain(Leg(df, mode)).head
 
   /** Tumbling 1 h event-time window aggregation, streaming complete
     * mode — the streaming twin of q_tumbling_agg (same oracle SQL). */
@@ -477,14 +314,14 @@ object StreamingQueries {
       .select(col("doc_id"), lit(0).as("band"),
         col("sh").cast(StringType).as("sig"))
     // the claim-log and profile streams are independent until the
-    // finalize join — start both, drain both (runToTables overlap)
-    val Seq(log, prof) = runToTables(Seq(
-      (neardupCore(shingles), "append"),
-      (docs.select(col("doc_id"), col("source"),
+    // finalize join: two legs of one drain
+    val Seq(log, prof) = FiniteStream.drain(
+      Leg(neardupCore(shingles), "append"),
+      Leg(docs.select(col("doc_id"), col("source"),
         graft.functions.TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"), col("source"),
-          size(graft.functions.HashedShingles(s, col("__toks"), 5)).as("n")),
-        "append")))
+          size(graft.functions.HashedShingles(col("__toks"), 5)).as("n")),
+        "append"))
     // renamed projections before the self-join (memory-sink views
     // can't deduplicate shared attributes on their own)
     val a = log.select(col("doc_id").as("doc_a"), col("sig").as("a_sig"))
@@ -543,10 +380,10 @@ object StreamingQueries {
     // registry state: one O(1) tuple per distinct (band, sig) bucket —
     // ≤ 4 buckets contributed per document, a hard bound
     // the claim-log and staging streams are independent until the
-    // compaction-time verify — start both, drain both (runToTables)
-    val Seq(log, staged) = runToTables(Seq(
-      (neardupCore(DedupQueries.bandRows(docs)), "append"),
-      (docs.select(col("doc_id"), col("text"), col("source")), "append")))
+    // compaction-time verify: two legs of one drain
+    val Seq(log, staged) = FiniteStream.drain(
+      Leg(neardupCore(DedupQueries.bandRows(docs)), "append"),
+      Leg(docs.select(col("doc_id"), col("text"), col("source")), "append"))
     val a = log.select(col("doc_id").as("doc_a"), col("band").as("a_band"),
       col("sig").as("a_sig"))
     val b = log.select(col("doc_id").as("doc_b"), col("band").as("b_band"),
@@ -817,11 +654,11 @@ object StreamingQueries {
       .select(explode(graft.functions.TextShingles.tokens(col("text")))
         .as("term"))
     // exact counts and the CMS sketch are independent aggregations of
-    // the same source — start both, drain both (runToTables overlap)
-    val Seq(counts, sk) = runToTables(Seq(
-      (terms.groupBy(col("term")).agg(count(lit(1)).as("n")), "complete"),
-      (terms.agg(expr("count_min_sketch(term, 0.0001d, 0.999d, 42)")
-        .as("sk")), "complete")))
+    // the same source: two legs of one drain
+    val Seq(counts, sk) = FiniteStream.drain(
+      Leg(terms.groupBy(col("term")).agg(count(lit(1)).as("n")), "complete"),
+      Leg(terms.agg(expr("count_min_sketch(term, 0.0001d, 0.999d, 42)")
+        .as("sk")), "complete"))
     val skBytes = sk.collect().head.getAs[Array[Byte]](0)
     val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(skBytes)
     val total = counts.agg(sum(col("n"))).collect().head.getLong(0)
@@ -1240,19 +1077,7 @@ object StreamingQueries {
         array_join(earliest3(col("event_id"), col("event_type")), ",")
           .as("earliest3"),
         count(lit(1)).cast(LongType).as("n"))
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1288,19 +1113,7 @@ object StreamingQueries {
       .groupBy(col("event_type"))
       .agg(sk(col("cents")).as("sketch"),
         count(lit(1)).cast(LongType).as("n"))
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1331,19 +1144,7 @@ object StreamingQueries {
       StructField("n_funnel", LongType),
       StructField("err_after_purchase", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      out.toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1366,19 +1167,7 @@ object StreamingQueries {
       StructField("n_err_sessions", LongType),
       StructField("n_events", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      out.toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1408,19 +1197,7 @@ object StreamingQueries {
       StructField("n_occ", LongType),
       StructField("n_windows", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      out.toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1452,19 +1229,7 @@ object StreamingQueries {
       StructField("ct", LongType),
       StructField("pair", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val t = store.df(s).select(col("source"), col("lang"), col("ct"))
     val nt = t.groupBy(col("source")).agg(sum(col("ct")).as("nt"))
     val g = t.groupBy(col("lang")).agg(sum(col("ct")).as("cg"))
@@ -1554,38 +1319,27 @@ object StreamingQueries {
     // index a corpus maintains alongside itself (paid per corpus
     // version, not per ingest epoch)
     val idxRoot = java.nio.file.Paths.get(scratchDir("graft-dedup-idx-"))
-    val built = DedupQueries.restIndexOf(rest)
-    val (bandsP, shP, sizesP) = (idxRoot.resolve("bands").toString,
-      idxRoot.resolve("shingles").toString, idxRoot.resolve("sizes").toString)
-    built.bands.write.mode("overwrite").parquet(bandsP)
-    built.shingles.write.mode("overwrite").parquet(shP)
-    built.sizes.write.mode("overwrite").parquet(sizesP)
-    val stored = DedupQueries.RestIndex(
-      bands = s.read.parquet(bandsP),
-      shingles = s.read.parquet(shP),
-      sizes = s.read.parquet(sizesP))
     val schema = StructType(valueFields :+ StructField("pair", StringType))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      docStream(s, d).writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          val delta = b.filter(col("doc_id") % 10 === 9)
-          store.upsert(gate(delta, stored)
-            .withColumn("pair", concat_ws("\u0000",
-              col("doc_id").cast(StringType),
-              col("dup_of").cast(StringType))))
-        }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-      deleteRecursively(idxRoot.toString)
-    }
+    try {
+      val built = DedupQueries.restIndexOf(rest)
+      val (bandsP, shP, sizesP) = (idxRoot.resolve("bands").toString,
+        idxRoot.resolve("shingles").toString, idxRoot.resolve("sizes").toString)
+      built.bands.write.mode("overwrite").parquet(bandsP)
+      built.shingles.write.mode("overwrite").parquet(shP)
+      built.sizes.write.mode("overwrite").parquet(sizesP)
+      val stored = DedupQueries.RestIndex(
+        bands = s.read.parquet(bandsP),
+        shingles = s.read.parquet(shP),
+        sizes = s.read.parquet(sizesP))
+      FiniteStream.drain(Leg(docStream(s, d), "append", sink = Batches { (b, _) =>
+        val delta = b.filter(col("doc_id") % 10 === 9)
+        store.upsert(gate(delta, stored)
+          .withColumn("pair", concat_ws("\u0000",
+            col("doc_id").cast(StringType),
+            col("dup_of").cast(StringType))))
+      }))
+    } finally deleteRecursively(idxRoot.toString)
     store.df(s).select(valueFields.map(f => col(f.name)): _*)
   }
 
@@ -1613,19 +1367,7 @@ object StreamingQueries {
       StructField("ct", LongType),
       StructField("pair", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     TextQueries.fertilityTvd(
       store.df(s).select(col("source"), col("bkt"), col("ct")))
   }
@@ -1652,19 +1394,7 @@ object StreamingQueries {
       StructField("event_type", StringType),
       StructField("words", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      out.toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
     val wv = store.df(s).select(col("event_type"),
       explode(split(col("words"), ",")).as("word"))
     val vocab = wv.groupBy(col("event_type")).agg(count(lit(1)).as("nv"))
@@ -1741,19 +1471,7 @@ object StreamingQueries {
         .select(col("user_id"), col("event_id").as("offset"),
           col("event_type").as("latest_type"), col("value").as("latest_value")),
       "user_id", "offset", Seq("latest_type", "latest_value"))
-    val ckpt = shmCheckpoint()
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      table.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(table, "update", sink = Batches(store.upsert)))
     store.df(s)
   }
 
@@ -1925,7 +1643,7 @@ object StreamingQueries {
     // session's shuffle partitions is pure per-micro-batch overhead
     // here. Pin a tiny partition count for these queries (stream
     // confs are captured at query start) and checkpoint to shm.
-    val ckpt = shmCheckpoint()
+    val ckpt = scratchDir("graft-sq-")
     val p = graft.util.Confs.withShufflePartitions(s, 2)(new Pipeline(s, ckpt))
     try {
       p.customersFeed.add(
@@ -2058,12 +1776,11 @@ object StreamingQueries {
     // staging set is re-read every re-pack)
     val staging = scratchDir("graft-scb-staging-")
     val outDir = scratchDir("graft-scb-out-")
-    val ckpt = shmCheckpoint()
     // @volatile: both are written on the stream-execution thread
-    // (inside foreachBatch) and read on the caller thread after
-    // processAllAvailable/stop — the drain-time repack decision must
-    // not depend on StreamExecution's incidental internal locking for
-    // its happens-before edge
+    // (inside foreachBatch) and read on the caller thread after the
+    // drain — the drain-time repack decision must not depend on
+    // StreamExecution's incidental internal locking for its
+    // happens-before edge
     @volatile var packs = 0
     // batches staged since the last re-pack — the drain-time publish
     // runs only when the cadence left staged work unpublished
@@ -2095,31 +1812,20 @@ object StreamingQueries {
     // (an error inside repack(), a bad input file) must not leak the
     // staged document copy into /dev/shm
     try {
-      val q = graft.util.Confs.withShufflePartitions(s, 8) {
-        deduped.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            // batch-keyed overwrite: a re-executed epoch (foreachBatch
-            // is at-least-once) replaces its own staging subtree
-            // instead of double-appending its documents — the same
-            // replay-idempotence bar KeyedParquetSink holds via its
-            // manifest. The extra discovered `batch` partition column
-            // is never selected in the re-pack.
-            if (!b.isEmpty) {
-              b.write.mode("overwrite").parquet(s"$staging/batch=$id")
-              dirty = true
-              stagedBatches += 1
-              if (stagedBatches % repackEvery == 0) repack()
-            }
-            ()
-          }
-          .start()
-      }
-      try q.processAllAvailable()
-      finally {
-        q.stop()
-        s.streams.resetTerminated()
-      }
+      FiniteStream.drain(Leg(deduped, "append", sink = Batches { (b, id) =>
+        // batch-keyed overwrite: a re-executed epoch (foreachBatch is
+        // at-least-once) replaces its own staging subtree instead of
+        // double-appending its documents — the same replay-idempotence
+        // bar KeyedParquetSink holds via its manifest. The extra
+        // discovered `batch` partition column is never selected in the
+        // re-pack.
+        if (!b.isEmpty) {
+          b.write.mode("overwrite").parquet(s"$staging/batch=$id")
+          dirty = true
+          stagedBatches += 1
+          if (stagedBatches % repackEvery == 0) repack()
+        }
+      }))
       // the drain-time publish: whatever the cadence skipped is folded
       // into one final O(staged) pass, so the published corpus never
       // depends on where the cadence boundary fell (skipped when the
@@ -2129,7 +1835,6 @@ object StreamingQueries {
       // detach the result from the scratch dir (eager) before cleanup
       (s.read.parquet(outDir).localCheckpoint(), packs)
     } finally {
-      deleteRecursively(ckpt)
       deleteRecursively(staging)
       deleteRecursively(outDir)
     }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.functions.TextShingles
 import graft.sources.Tables
+import graft.streaming.FiniteStream
+import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** Text-analysis operators over `documents`: token counting, quality
   * scoring, n-gram-heuristic language ID, fingerprinting. All pure
@@ -288,19 +290,7 @@ object TextQueries {
     val schema = StructType(Seq(
       StructField("term", StringType), StructField("df", LongType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    val ckpt = StreamingQueries.scratchDir("graft-sq-")
-    val q = graft.util.Confs.withShufflePartitions(s, 8) {
-      agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) => store.upsert(b) }
-        .start()
-    }
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
-    }
+    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val df = store.df(s)
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
     val tf = Tables.documents(s, d)
@@ -639,7 +629,7 @@ object TextQueries {
   def charEntropyNative(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.functions.CharEntropy(s, col("text")).as("__e"))
+        graft.functions.CharEntropy(col("text")).as("__e"))
       .select(col("doc_id"), col("__e.n_chars").as("n_chars"),
         col("__e.entropy_micro_nats").as("entropy_micro_nats"))
 

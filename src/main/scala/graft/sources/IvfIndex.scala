@@ -426,7 +426,7 @@ object IvfIndex {
         f.getName.drop(1).toInt < floor)
       .map(_.toString).toSeq.sorted
     victims.foreach { v =>
-      graft.queries.StreamingQueries.deleteRecursively(v)
+      graft.streaming.FiniteStream.deleteRecursively(v)
     }
     victims
   }

@@ -115,7 +115,7 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
          |FROM embeddings ORDER BY sim DESC, vec_id LIMIT 5""".stripMargin)
     val dsl = sources.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
-        round(graft.functions.GraftFunctions.cosineSim(spark,
+        round(graft.functions.GraftFunctions.cosineSim(
           col("embedding"), lit(q.toArray)), 6).as("sim"))
       .orderBy(col("sim").desc, col("vec_id")).limit(5)
     assert(sql.collect().toSeq == dsl.collect().toSeq)
@@ -133,8 +133,8 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("doc_id"),
           graft.functions.TextShingles.tokens(col("text")).as("__toks"))
         .select(col("doc_id"),
-          graft.functions.SimHash16(spark, col("__toks")).as("simhash"),
-          size(graft.functions.HashedShingles(spark, col("__toks"), 5))
+          graft.functions.SimHash16(col("__toks")).as("simhash"),
+          size(graft.functions.HashedShingles(col("__toks"), 5))
             .cast("long").as("n_shingles")))
   }
 

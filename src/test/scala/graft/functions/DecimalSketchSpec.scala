@@ -233,7 +233,7 @@ class DecimalSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(DecimalSketch.quantile(merged, q) ==
           bucket(exactQuantile(rows.map(_._2), q)))
     } finally {
-      graft.queries.StreamingQueries.deleteRecursively(dir)
+      graft.streaming.FiniteStream.deleteRecursively(dir)
     }
   }
 

@@ -54,7 +54,7 @@ class EntropyParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     val native = probe
       .select(org.apache.spark.sql.functions.col("doc_id"),
-        CharEntropy(spark,
+        CharEntropy(
           org.apache.spark.sql.functions.col("text")).as("e"))
       .selectExpr("doc_id", "e.n_chars", "e.entropy_micro_nats")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq

@@ -173,7 +173,7 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val b = Seq.fill(16)(rnd.nextFloat() * 20f - 10f)
       val df = Seq((a, b)).toDF("a", "b")
       val native = df.select(
-        GraftFunctions.cosineSim(spark, $"a", $"b")).collect()(0).getDouble(0)
+        GraftFunctions.cosineSim($"a", $"b")).collect()(0).getDouble(0)
       val composed = df.select(
         aggregate(zip_with($"a".cast("array<double>"), $"b".cast("array<double>"),
           (x, y) => x * y), lit(0.0), (acc, x) => acc + x) /
@@ -259,7 +259,7 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val df = Seq((Seq(1.0, 2.0), Seq(1.0f, 2.0f))).toDF("a", "b")
     val e = intercept[Exception] {
-      df.select(GraftFunctions.cosineSim(spark, $"a", $"b")).collect()
+      df.select(GraftFunctions.cosineSim($"a", $"b")).collect()
     }
     assert(e.getMessage.contains("cosine_sim") ||
       e.getMessage.toLowerCase.contains("type"))

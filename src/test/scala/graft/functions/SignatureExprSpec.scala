@@ -33,7 +33,7 @@ class SignatureExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 20).foreach { _ =>
       val toks = randTokens(rnd)
       val df = Seq(Tuple1(toks)).toDF("toks")
-      val native = df.select(MinHashSlices(spark, $"toks").as("m"))
+      val native = df.select(MinHashSlices($"toks").as("m"))
         .collect()(0).getSeq[String](0)
       val shArr = TextShingles.shingles($"toks", 5)
       val h64 = transform(shArr,
@@ -51,7 +51,7 @@ class SignatureExprSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 20).foreach { _ =>
       val toks = randTokens(rnd)
       val df = Seq(Tuple1(toks)).toDF("toks")
-      val native = df.select(SimHash16(spark, $"toks")).collect()(0).getLong(0)
+      val native = df.select(SimHash16($"toks")).collect()(0).getLong(0)
       val expected = {
         val distinct = toks.distinct
         val counts = new Array[Int](16)
@@ -76,8 +76,8 @@ class SignatureExprSpec extends AnyFunSuite with BeforeAndAfterAll {
       val toks = randTokens(rnd)
       val df = Seq(Tuple1(toks)).toDF("toks")
       val row = df.select(
-        ShingleHashSeq(spark, $"toks", 5).as("seq"),
-        HashedShingles(spark, $"toks", 5).as("set")).collect()(0)
+        ShingleHashSeq($"toks", 5).as("seq"),
+        HashedShingles($"toks", 5).as("set")).collect()(0)
       val seq = row.getSeq[String](0)
       val set = row.getSeq[String](1)
       // exactly one hash per shingle start position (short texts: one)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.FiniteStream
+
 /** Contract of [[MultimodalQueries.crossmodalDelete]] beyond the
   * oracle hash: the served results never contain a tombstoned
   * document, and recall is RESTORED after the compact — an exhaustive
@@ -43,7 +45,7 @@ class CrossmodalLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // nprobe = ncells (exhaustive over the compacted layout), and
     // compare against the exact brute-force top-5 of the REMAINING
     // corpus computed independently below
-    val root = StreamingQueries.scratchDir("graft-mm-lifecycle-")
+    val root = FiniteStream.scratchDir("graft-mm-lifecycle-")
     try {
       val docs = graft.sources.Tables.documents(spark, sf)
       val corpus = docs.filter(col("doc_id") >= 5)
@@ -89,6 +91,6 @@ class CrossmodalLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(exhaustive == exact,
         "exhaustive probe of the compacted index diverged from " +
           "exact-over-remaining")
-    } finally StreamingQueries.deleteRecursively(root)
+    } finally FiniteStream.deleteRecursively(root)
   }
 }

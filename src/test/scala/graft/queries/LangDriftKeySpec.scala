@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.FiniteStream
+
 /** Regression guard for the stream_lang_drift composite store key
   * (ADVICE r12): the SnapshotStore is keyed by concat(source, SEP,
   * lang), and with a collidable separator the distinct pairs
@@ -40,6 +42,6 @@ class LangDriftKeySpec extends AnyFunSuite with BeforeAndAfterAll {
         .select("source", "n_docs").as[(String, Long)].collect().toMap
       assert(out == Map("s1" -> 3L, "s1a" -> 5L),
         s"expected both colliding pairs to survive, got $out")
-    } finally StreamingQueries.deleteRecursively(dir)
+    } finally FiniteStream.deleteRecursively(dir)
   }
 }

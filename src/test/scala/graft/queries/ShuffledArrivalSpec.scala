@@ -6,6 +6,8 @@ import org.apache.spark.sql.types.LongType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.FiniteStream
+
 /** Order-independence gate for every stream consumer of the claim-log
   * registries (r16 verdict #1 "done" criterion): a MULTI-FILE fixture
   * whose part files interleave doc_ids (residue classes mod 4,
@@ -29,7 +31,7 @@ class ShuffledArrivalSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    dir = StreamingQueries.scratchDir("shuffled-fixture-")
+    dir = FiniteStream.scratchDir("shuffled-fixture-")
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     // 4 part files, each holding one doc_id residue class (so every
@@ -44,7 +46,7 @@ class ShuffledArrivalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     spark.conf.unset("graft.stream.maxFilesPerTrigger")
-    StreamingQueries.deleteRecursively(dir)
+    FiniteStream.deleteRecursively(dir)
     spark.stop()
   }
 

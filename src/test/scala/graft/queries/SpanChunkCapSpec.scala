@@ -35,8 +35,8 @@ class SpanChunkCapSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("doc_id"),
         graft.functions.TextShingles.tokens(col("text")).as("toks"))
     val rows = docs.select(col("doc_id"),
-      graft.functions.ShingleHashSeq(spark, col("toks"), 4).as("seq"),
-      graft.functions.HashedShingles(spark, col("toks"), 4).as("set"),
+      graft.functions.ShingleHashSeq(col("toks"), 4).as("seq"),
+      graft.functions.HashedShingles(col("toks"), 4).as("set"),
       size(col("toks")).as("n")).collect()
     rows.foreach { r =>
       val seq = r.getSeq[String](1)

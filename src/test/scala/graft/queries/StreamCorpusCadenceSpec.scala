@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.FiniteStream
+
 /** The re-pack cadence of the streaming corpus build — the production
   * amortization the per-batch design documents, made real: with
   * `repackEvery = N`, the O(staged) re-election + re-pack runs once
@@ -57,6 +59,6 @@ class StreamCorpusCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         maxFilesPerTrigger = Some(1))
       assert(packsEvery == 4, s"every-batch over 4 batches should pack 4 times, got $packsEvery")
       assert(everyBatch.collect().toSet == batch)
-    } finally StreamingQueries.deleteRecursively(splitDir)
+    } finally FiniteStream.deleteRecursively(splitDir)
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.FiniteStream
+
 /** Incremental contract of the streaming claim-log registries
   * ([[StreamingQueries.neardupCore]] / [[StreamingQueries.claimCore]],
   * order-independent form — r16 verdict #1): a bucket's rows are
@@ -31,7 +33,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[(Long, Int, String)]
-    val ckpt = StreamingQueries.scratchDir("neardup-spec-")
+    val ckpt = FiniteStream.scratchDir("neardup-spec-")
     val q = StreamingQueries.neardupCore(
         in.toDF().toDF("doc_id", "band", "sig"))
       .writeStream.outputMode("append").format("memory")
@@ -69,7 +71,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.stop()
       spark.catalog.dropTempView("neardup_inc")
       spark.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
+      FiniteStream.deleteRecursively(ckpt)
     }
   }
 
@@ -77,7 +79,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val in = MemoryStream[(Long, Long, String)]
-    val ckpt = StreamingQueries.scratchDir("claim-spec-")
+    val ckpt = FiniteStream.scratchDir("claim-spec-")
     val q = StreamingQueries.claimCore(
         in.toDF().toDF("doc_id", "pos", "sig"))
       .writeStream.outputMode("append").format("memory")
@@ -115,7 +117,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.stop()
       spark.catalog.dropTempView("claim_inc")
       spark.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
+      FiniteStream.deleteRecursively(ckpt)
     }
   }
 
@@ -131,7 +133,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((5L, 9L, "G")))
     def run(cap: Int, tag: String) = {
       val in = MemoryStream[(Long, Long, String)]
-      val ckpt = StreamingQueries.scratchDir(s"claim-cap-$tag-")
+      val ckpt = FiniteStream.scratchDir(s"claim-cap-$tag-")
       val q = StreamingQueries.claimCoreBounded(
           in.toDF().toDF("doc_id", "pos", "sig"), cap)
         .writeStream.outputMode("append").format("memory")
@@ -151,7 +153,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
         q.stop()
         spark.catalog.dropTempView(s"claim_cap_$tag")
         spark.streams.resetTerminated()
-        StreamingQueries.deleteRecursively(ckpt)
+        FiniteStream.deleteRecursively(ckpt)
       }
     }
     val (midsCapped, flaggedCapped) = run(2, "c2")
@@ -191,7 +193,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((5L, 0, "X")))
     def run(batches: Seq[Seq[(Long, Int, String)]], tag: String) = {
       val in = MemoryStream[(Long, Int, String)]
-      val ckpt = StreamingQueries.scratchDir(s"neardup-ord-$tag-")
+      val ckpt = FiniteStream.scratchDir(s"neardup-ord-$tag-")
       val q = StreamingQueries.neardupCore(
           in.toDF().toDF("doc_id", "band", "sig"))
         .writeStream.outputMode("append").format("memory")
@@ -205,7 +207,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
         q.stop()
         spark.catalog.dropTempView(s"neardup_ord_$tag")
         spark.streams.resetTerminated()
-        StreamingQueries.deleteRecursively(ckpt)
+        FiniteStream.deleteRecursively(ckpt)
       }
     }
     val fwd = run(batchesFwd, "fwd")
@@ -217,7 +219,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("retained sole-owner rows survive a query restart from checkpoint") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val ckpt = StreamingQueries.scratchDir("neardup-recover-")
+    val ckpt = FiniteStream.scratchDir("neardup-recover-")
     // memory sinks don't recover; foreachBatch does — collect claim
     // rows emitted AFTER the restart only
     val emitted =
@@ -254,7 +256,7 @@ class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally {
       q2.stop()
       spark.streams.resetTerminated()
-      StreamingQueries.deleteRecursively(ckpt)
+      FiniteStream.deleteRecursively(ckpt)
     }
   }
 

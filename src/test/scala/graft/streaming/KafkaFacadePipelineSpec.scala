@@ -121,7 +121,7 @@ class KafkaFacadePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.streams.resetTerminated()
       Seq("customers", "orders", "shipments")
         .foreach(t => FakeKafka.deleteTopic(topic(t)))
-      graft.queries.StreamingQueries.deleteRecursively(ckpt)
+      graft.streaming.FiniteStream.deleteRecursively(ckpt)
     }
   }
 
@@ -150,7 +150,7 @@ class KafkaFacadePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.catalog.dropTempView(name)
       spark.streams.resetTerminated()
       FakeKafka.deleteTopic(t)
-      graft.queries.StreamingQueries.deleteRecursively(ckpt)
+      graft.streaming.FiniteStream.deleteRecursively(ckpt)
     }
   }
 }

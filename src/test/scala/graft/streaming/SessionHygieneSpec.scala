@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,14 +35,22 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.listTables().collect()
       .filter(_.isTemporary).map(_.name).toSet
 
+  private def checkpoints(): Set[String] =
+    scala.util.Using.resource(java.nio.file.Files.list(FiniteStream.scratchRoot))(
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-sq-")).toSet)
+
   // one memory-sink query, one foreachBatch query, one sentinel-flush
-  // query, the chained golden pipeline, and a state-store session
-  // merge — the wrapper shapes
+  // query, the chained golden pipeline, a state-store session merge,
+  // a two-leg drain, a snapshot-store drain and a batch-function
+  // ingest — the runner shapes
   for (q <- Seq("stream_tumbling_agg", "stream_latest_by_key",
                 "stream_tumbling_final", "stream_pipeline_golden",
-                "stream_session_final"))
+                "stream_session_final", "stream_heavy_hitters",
+                "stream_kmv_distinct", "stream_ivf_ingest"))
     test(s"$q leaves no views, active queries, or terminated refs behind") {
       val viewsBefore = tempViews()
+      val ckptsBefore = checkpoints()
       val out = Catalog.queries(q)(spark, sf)
       assert(out.count() > 0)
       assert(spark.streams.active.isEmpty,
@@ -55,6 +65,8 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!spark.streams.awaitAnyTermination(50L))
       val leaked = tempViews() -- viewsBefore
       assert(leaked.isEmpty, s"temp views leaked: $leaked")
+      val leakedCkpts = checkpoints() -- ckptsBefore
+      assert(leakedCkpts.isEmpty, s"checkpoints leaked: $leakedCkpts")
       // the returned frame must survive the cleanup (it is detached
       // from the dropped view), and a second evaluation still works
       assert(out.count() > 0)

@@ -22,7 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     with `spark.sql.shuffle.partitions` pinned to its state-partition
   *     count (stream confs are captured at start): every state partition
   *     writes a store snapshot per micro-batch, so small finite inputs
-  *     want few.
+  *     want few. Each start goes through
+  *     [[LocalCheckpointFileManager.start]].
   *  2. DRAIN every leg, in leg order. A failure that originates in
   *     state-store decoding is rewritten into an explicit instruction
   *     ([[translateStateDecode]]); any other failure passes through.
@@ -100,9 +101,11 @@ object FiniteStream {
     val w = r.leg.df.writeStream.outputMode(r.leg.mode)
       .option("checkpointLocation", r.ckpt)
       .queryName(r.name)
-    r.leg.sink match {
-      case Memory => w.format("memory").start()
-      case Batches(f) => w.foreachBatch(f).start()
+    LocalCheckpointFileManager.start(r.leg.df.sparkSession) {
+      r.leg.sink match {
+        case Memory => w.format("memory").start()
+        case Batches(f) => w.foreachBatch(f).start()
+      }
     }
   }
 

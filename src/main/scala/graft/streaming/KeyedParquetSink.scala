@@ -48,7 +48,9 @@ import org.apache.spark.sql.types.StructType
   *                    concurrent reader holding a slightly-stale
   *                    manifest never loses its files mid-query;
   *                    versions still referenced by the current manifest
-  *                    are always kept regardless of age). */
+  *                    are always kept regardless of age, and so are
+  *                    versions an in-process [[withSnapshot]] reader
+  *                    holds). */
 class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
                        deletedCol: Option[String] = None,
                        orderCol: Option[String] = None,
@@ -232,6 +234,35 @@ class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
     * leaf directories are read directly — no partition discovery, so
     * readers see exactly the data columns. */
   def df: Option[DataFrame] = readManifest().map(snapshot)
+
+  /** Open reader scopes per version directory name ([[withSnapshot]]);
+    * also the lock that orders a reader's manifest read against
+    * [[prune]]. */
+  private val pins = scala.collection.mutable.Map.empty[String, Int]
+
+  /** [[df]] for a reader that executes the frame later: runs `body`
+    * over the current snapshot, and no version directory that snapshot
+    * names is pruned until `body` returns. Spark resolves a snapshot's
+    * files when the frame is built but reads them when it executes, and
+    * a commit in between prunes versions the new manifest no longer
+    * names. The pin is in-process; a reader in another process relies on
+    * the `retainVersions` grace alone. */
+  def withSnapshot[T](body: Option[DataFrame] => T): T = {
+    val m = pins.synchronized {
+      val m = readManifest()
+      versionsOf(m).foreach(v => pins(v) = pins.getOrElse(v, 0) + 1)
+      m
+    }
+    try body(m.map(snapshot))
+    finally pins.synchronized {
+      versionsOf(m).foreach { v =>
+        if (pins(v) == 1) pins -= v else pins(v) -= 1
+      }
+    }
+  }
+
+  private def versionsOf(m: Option[Manifest]): Set[String] =
+    m.toSeq.flatMap(_.buckets.values.map(_.split('/').head)).toSet
 
   /** Time travel: the EXACT visible state as of `batchId`'s commit —
     * the reproducibility primitive a training-data pipeline needs
@@ -417,16 +448,7 @@ class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
     val histLive = keptBatches.flatMap(b =>
         readManifestAt(mdir.resolve(s"m$b")).toSeq.flatMap(_.buckets.values))
       .map(_.split('/').head).toSet
-    val curLive = readManifest().toSeq
-      .flatMap(_.buckets.values.map(_.split('/').head)).toSet
-    val live = histLive ++ curLive
-    val victims = listDirs(rootPath)
-      .filter(p => p.getFileName.toString.matches("v\\d+") &&
-        Files.isDirectory(p))
-      .map(_.getFileName.toString)
-      .filterNot(live)
-      .filter(reclaimable(_, live))
-    prune(live)
+    val victims = prune(histLive ++ versionsOf(readManifest()))
     assertWriterLease()
     victims.sorted
   }
@@ -459,16 +481,21 @@ class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
     }
   }
 
-  private def prune(keepNames: Set[String]): Unit =
-    listDirs(rootPath)
+  /** Deletes every reclaimable version directory outside `keepNames`
+    * that no [[withSnapshot]] reader has pinned; returns their names. */
+  private def prune(keepNames: Set[String]): Seq[String] = pins.synchronized {
+    val victims = listDirs(rootPath)
       .filter(p => p.getFileName.toString.startsWith("v") && Files.isDirectory(p))
       .filterNot(p => keepNames.contains(p.getFileName.toString))
+      .filterNot(p => pins.contains(p.getFileName.toString))
       .filter(p => reclaimable(p.getFileName.toString, keepNames))
-      .foreach { dir =>
-        import scala.jdk.CollectionConverters._
-        Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
-      }
+    victims.foreach { dir =>
+      import scala.jdk.CollectionConverters._
+      Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(p => Files.deleteIfExists(p))
+    }
+    victims.map(_.getFileName.toString)
+  }
 }
 
 /** Contract checks shared by the keyed sinks ([[KeyedParquetSink]],

@@ -35,6 +35,10 @@ trait DimensionStore {
   def upsert(batch: DataFrame, batchId: Long): Unit
   def df(spark: SparkSession): DataFrame
   def size: Long
+  /** Runs `body` over the current state; every file that state names
+    * stays readable until `body` returns, so `body` may execute its
+    * frame while concurrent upserts commit. */
+  def read[T](spark: SparkSession)(body: DataFrame => T): T = body(df(spark))
 }
 
 /** In-memory dimension snapshot.
@@ -90,9 +94,13 @@ class DurableSnapshotStore(spark: SparkSession, root: String,
   override def upsert(batch: DataFrame, batchId: Long): Unit =
     sink.upsert(batch, batchId)
 
-  override def df(spark: SparkSession): DataFrame =
-    sink.df.getOrElse(
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema))
+  override def df(spark: SparkSession): DataFrame = orEmpty(spark, sink.df)
+
+  override def read[T](spark: SparkSession)(body: DataFrame => T): T =
+    sink.withSnapshot(snap => body(orEmpty(spark, snap)))
+
+  private def orEmpty(spark: SparkSession, snap: Option[DataFrame]): DataFrame =
+    snap.getOrElse(spark.createDataFrame(new java.util.ArrayList[Row](), schema))
 
   override def size: Long = sink.df.map(_.count()).getOrElse(0L)
 }

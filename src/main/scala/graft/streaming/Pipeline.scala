@@ -128,14 +128,16 @@ class Pipeline(spark: SparkSession, checkpointRoot: String,
       tombstoneKey = Some("key" -> "id"))
     val table = LatestByKey.table(unwrapped, "id", "offset",
       Seq("name", "age", "__deleted"))
-    table.writeStream
-      .outputMode("update")
-      .queryName("customers_by_key")
-      .option("checkpointLocation", s"$checkpointRoot/customers_by_key")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        customersByKey.upsert(batch, batchId)
-      }
-      .start()
+    LocalCheckpointFileManager.start(spark) {
+      table.writeStream
+        .outputMode("update")
+        .queryName("customers_by_key")
+        .option("checkpointLocation", s"$checkpointRoot/customers_by_key")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          customersByKey.upsert(batch, batchId)
+        }
+        .start()
+    }
   }
 
   // ---- q2: CREATE STREAM enriched_orders (README.md:448-459) ----
@@ -150,25 +152,32 @@ class Pipeline(spark: SparkSession, checkpointRoot: String,
       .filter(col("order_id").isNotNull && col("customer_id").isNotNull &&
         col("price").isNotNull && col("currency").isNotNull &&
         col("o_ts").isNotNull)
-    orders.writeStream
-      .queryName("enriched_orders")
-      .option("checkpointLocation", s"$checkpointRoot/enriched_orders")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the in-memory store is broadcast-bounded BY CONTRACT, so the
-        // hint is always right there; the durable store is unbounded —
-        // let the planner pick broadcast vs sort-merge from the
-        // snapshot's actual size (autoBroadcastJoinThreshold), so a
-        // dimension that outgrows an executor can't be force-broadcast
-        val cust = customersByKey.df(spark).drop("__deleted")
-        val custSide = if (durableDimension) cust.as("c") else broadcast(cust.as("c"))
-        val enriched = batch.as("o")
-          .join(custSide, col("o.customer_id") === col("c.id"), "left")
-          .select(col("o.order_id"), col("o.price"), col("o.currency"),
-            col("o.customer_id"), col("c.name").as("customer_name"),
-            col("c.age").as("customer_age"), col("o.o_ts"))
-        enrichedChannel.write(enriched, batchId)
-      }
-      .start()
+    LocalCheckpointFileManager.start(spark) {
+      orders.writeStream
+        .queryName("enriched_orders")
+        .option("checkpointLocation", s"$checkpointRoot/enriched_orders")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // the snapshot is resolved and joined in one read scope: a
+          // concurrent q1 commit must not prune the files it names
+          customersByKey.read(spark) { dim =>
+            // the in-memory store is broadcast-bounded BY CONTRACT, so
+            // the hint is always right there; the durable store is
+            // unbounded — let the planner pick broadcast vs sort-merge
+            // from the snapshot's actual size (autoBroadcastJoinThreshold),
+            // so a dimension that outgrows an executor can't be
+            // force-broadcast
+            val cust = dim.drop("__deleted")
+            val custSide = if (durableDimension) cust.as("c") else broadcast(cust.as("c"))
+            val enriched = batch.as("o")
+              .join(custSide, col("o.customer_id") === col("c.id"), "left")
+              .select(col("o.order_id"), col("o.price"), col("o.currency"),
+                col("o.customer_id"), col("c.name").as("customer_name"),
+                col("c.age").as("customer_age"), col("o.o_ts"))
+            enrichedChannel.write(enriched, batchId)
+          }
+        }
+        .start()
+    }
   }
 
   // ---- q3: CREATE STREAM shipped_orders (README.md:464-480) ----
@@ -190,27 +199,29 @@ class Pipeline(spark: SparkSession, checkpointRoot: String,
       .select(col("o.order_id"), col("s.shipment_id"), col("o.customer_id"),
         col("o.customer_name"), col("o.customer_age"), col("s.origin"),
         col("o.price"), col("o.currency"), col("s.__s_offset"))
-    joined.writeStream
-      .outputMode("append")
-      .queryName("shipped_orders")
-      .option("checkpointLocation", s"$checkpointRoot/shipped_orders")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the production egress seam: mirror each shipped batch into
-        // an additional sink (e.g. BulkUpsertSink.forEachBatch — the
-        // ES-analog bulk façade) without forking the operator graph.
-        // With two consumers the batch is persisted first (the
-        // standard foreachBatch multi-sink rule): otherwise the whole
-        // join subtree re-executes per sink, and a nondeterministic
-        // stage could even diverge between them.
-        if (extraShippedSink.isDefined) {
-          batch.persist()
-          try {
-            shippedSink.upsert(batch, batchId)
-            extraShippedSink.foreach(f => f(batch, batchId))
-          } finally { batch.unpersist(); () }
-        } else shippedSink.upsert(batch, batchId)
-      }
-      .start()
+    LocalCheckpointFileManager.start(spark) {
+      joined.writeStream
+        .outputMode("append")
+        .queryName("shipped_orders")
+        .option("checkpointLocation", s"$checkpointRoot/shipped_orders")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // the production egress seam: mirror each shipped batch into
+          // an additional sink (e.g. BulkUpsertSink.forEachBatch — the
+          // ES-analog bulk façade) without forking the operator graph.
+          // With two consumers the batch is persisted first (the
+          // standard foreachBatch multi-sink rule): otherwise the whole
+          // join subtree re-executes per sink, and a nondeterministic
+          // stage could even diverge between them.
+          if (extraShippedSink.isDefined) {
+            batch.persist()
+            try {
+              shippedSink.upsert(batch, batchId)
+              extraShippedSink.foreach(f => f(batch, batchId))
+            } finally { batch.unpersist(); () }
+          } else shippedSink.upsert(batch, batchId)
+        }
+        .start()
+    }
   }
 
   /** Query handles by reference stream name — for tests that drive

@@ -361,9 +361,64 @@ class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       Change("g", "u", Some(MinMaxAgg(2L, 5L, 100L)),
         Some(MinMaxAgg(2L, 4L, 5L)), 1L)), changes)
   }
+
+  test("a checkpoint written by Spark's default file manager restarts under the engine's") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val t0 = java.sql.Timestamp.valueOf("2020-04-02 00:00:00")
+    def at(h: Int) = new java.sql.Timestamp(t0.getTime + h * 3600000L)
+    import CheckpointRecoverySpec.Rec
+    // one combined feed, side "L" or "R": a ±1-day interval join whose
+    // matches need the state of both sides across the restart
+    val b0 = Seq(Rec("L", "a", at(0)), Rec("L", "b", at(1)), Rec("R", "c", at(2)))
+    val b1 = Seq(Rec("R", "a", at(3)), Rec("R", "b", at(30)), Rec("L", "c", at(1)))
+    def writer(f: MemoryStream[Rec], ckpt: String,
+               out: java.util.concurrent.ConcurrentLinkedQueue[String]) = {
+      val in = f.toDF().withWatermark("ts", "1 day")
+      val l = in.filter($"side" === "L").select($"id".as("l_id"), $"ts".as("l_ts"))
+      val r = in.filter($"side" === "R").select($"id".as("r_id"), $"ts".as("r_ts"))
+      l.join(r, org.apache.spark.sql.functions.expr(
+          "l_id = r_id AND r_ts BETWEEN l_ts AND l_ts + INTERVAL 1 DAY"))
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.select("l_id").as[String].collect().foreach(out.add); () }
+    }
+    import scala.jdk.CollectionConverters._
+
+    val whole = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val feed = MemoryStream[Rec]
+    val q = LocalCheckpointFileManager.start(spark)(
+      writer(feed, Files.createTempDirectory("graft-cfm-whole-").toString, whole).start())
+    feed.addData(b0: _*)
+    q.processAllAvailable()
+    feed.addData(b1: _*)
+    q.processAllAvailable()
+    q.stop()
+
+    val ckpt = Files.createTempDirectory("graft-cfm-compat-").toString
+    val restarted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // the first run starts outside the engine's helper: Spark picks its
+    // default, FileContext-based manager
+    assert(spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+    val feed1 = MemoryStream[Rec]
+    val q1 = writer(feed1, ckpt, restarted).start()
+    feed1.addData(b0: _*)
+    q1.processAllAvailable()
+    q1.stop()
+    val feed2 = MemoryStream[Rec]
+    feed2.addData(b0: _*) // replayed batch 0 (skipped by the offset log)
+    feed2.addData(b1: _*)
+    val q2 = LocalCheckpointFileManager.start(spark)(writer(feed2, ckpt, restarted).start())
+    q2.processAllAvailable()
+    q2.stop()
+
+    assert(whole.asScala.toSeq.sorted == Seq("a", "c"))
+    assert(restarted.asScala.toSeq.sorted == whole.asScala.toSeq.sorted)
+  }
 }
 
 object CheckpointRecoverySpec {
   case class FkA(name: String, fk: Long)
   case class FkB(rname: String)
+  case class Rec(side: String, id: String, ts: java.sql.Timestamp)
 }

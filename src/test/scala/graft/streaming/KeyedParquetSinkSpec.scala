@@ -307,4 +307,27 @@ class KeyedParquetSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(versions == Set("v3", "v4", "v5"), s"got $versions")
     assert(sink.df.get.as[(String, String)].collect().toSeq == Seq(("k", "v5")))
   }
+
+  test("a resolved snapshot stays readable while later commits prune past it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-kps-pin-").toString
+    val retain = 3
+    val sink = new KeyedParquetSink(spark, root, "k", numBuckets = 1,
+      retainVersions = retain)
+    sink.upsert(Seq(("k", "v0")).toDF("k", "v"), 0L)
+    // the frame's files are resolved now and read only at collect(),
+    // after retain + 1 commits have rewritten the one bucket: without
+    // the reader pin, v0 is pruned in between and the read fails with
+    // FAILED_READ_FILE.FILE_NOT_EXIST
+    val got = sink.withSnapshot { snap =>
+      (1 to retain + 1).foreach(i =>
+        sink.upsert(Seq(("k", s"v$i")).toDF("k", "v"), i.toLong))
+      snap.get.as[(String, String)].collect().toSeq
+    }
+    assert(got == Seq(("k", "v0")))
+    // the pin ends with the scope: the next commit reclaims v0
+    sink.upsert(Seq(("k", "last")).toDF("k", "v"), retain + 2L)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v0")))
+    assert(sink.df.get.as[(String, String)].collect().toSeq == Seq(("k", "last")))
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   private def usedHeapMb(): Long = {
     val rt = Runtime.getRuntime
@@ -8,80 +7,24 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Streaming checkpoints here are per-query, finite-run and
-      // throwaway (tmpfs): the Spark 4.1-default CRC sidecar written
-      // next to EVERY offsets/commit/state file is pure fixed cost at
-      // any deployment size — measured 156.3 → 149.5 s over the 87
-      // stream queries (sf0.1, 32c). Durability-paranoid deployments
-      // re-enable it per cluster conf.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // Optional conf overrides ("k=v;k=v") for A/B experiments — empty
-    // by default, so the driver's invocation is untouched.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bounded rank/cumulation windows (RetrievalQueries' <=30-row
-    // df-rank selections, SimilarityQueries' |bands|-bounded threshold
-    // sweep, CurationQueries' bucket-total prefix sum) intentionally
-    // run unpartitioned over tiny relations; WindowExec warns per
-    // execution and the spam buries real warnings in this log
-    // (VERDICT r13). partitionBy(lit(1)) is constant-folded away by
-    // the optimizer, so silence the logger, not the plan.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.util.Sessions.local(cpus)
     // JVM/session warm-up outside the timed region (codegen + scan
     // machinery JIT); queries run in stable name order
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
-    // Inter-run hygiene, OUTSIDE the timed region: a 134-query × 3-run
-    // suite in one JVM must not let one run's session debris (temp
-    // views over memory sinks, cached relations, terminated streaming
-    // queries) stay reachable and degrade later queries (observed in
-    // round 6: alphabetically-late queries inflated up to 60×). Every
-    // query (re-)registers whatever views it needs per call, so
-    // dropping them all between runs is safe. The GC nudge is
-    // adaptive — ContextCleaner frees localCheckpoint blocks only
-    // after their frames are collected, so when the heap is deep we
-    // force a collection rather than letting block-manager memory
-    // ratchet across the suite.
+    // Inter-run hygiene, OUTSIDE the timed region (Sessions.sweep).
+    // The GC nudge is adaptive — ContextCleaner frees localCheckpoint
+    // blocks only after their frames are collected, so when the heap is
+    // deep we force a collection rather than letting block-manager
+    // memory ratchet across the suite. Explicit unpersist (in sweep)
+    // beats leaning on System.gc(): the gc-every-query A/B slowed batch
+    // queries ~10% via codegen-class/code-cache churn.
     val gcThresholdMb =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_GC_MB", "8192").toLong
     def sweep(): Unit = {
-      spark.streams.resetTerminated()
-      spark.catalog.clearCache()
-      spark.catalog.listTables().collect()
-        .filter(_.isTemporary)
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      // Release finished queries' localCheckpoint blocks DETERMINISTICALLY:
-      // ContextCleaner only frees them after a JVM GC collects the owning
-      // frames, so in a 357-query × 3-run suite the block manager ratchets
-      // to GBs of dead blocks and unified-memory pressure inflates later
-      // stateful queries (r19 baseline: stream_tumbling_final 1.5 s → 6.2 s
-      // purely from suite position; a forced-GC A/B recovered it to 1.3 s).
-      // Every persistent RDD reachable here belongs to a COMPLETED query —
-      // each catalog fn re-derives its frames per call — so unpersisting
-      // between runs can never invalidate in-flight data. Explicit
-      // unpersist beats leaning on System.gc(): it frees the blocks without
-      // full-collection side effects (the gc-every-query A/B slowed batch
-      // queries ~10% via codegen-class/code-cache churn).
-      // blocking=true (ADVICE r19): sweep() already runs outside the
-      // timed region, so paying the block removal here keeps deferred
-      // cleanup work from overlapping the next timed run.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.util.Sessions.sweep(spark)
       if (usedHeapMb() > gcThresholdMb) System.gc()
     }
 

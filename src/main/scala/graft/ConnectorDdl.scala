@@ -399,56 +399,14 @@ object ConnectorDdl {
 
   // ---- function inventory (SHOW FUNCTIONS / DESCRIBE FUNCTION) ----
 
-  /** Names whose registration is an aggregate — ksql's CATEGORY
-    * column distinguishes them from scalars. */
-  private val aggregateFunctionNames = Set(
-    "bloom_filter_agg", "count_distinct", "topk", "topkdistinct",
-    "latest_by_offset", "earliest_by_offset", "histogram",
-    "topk_by_score_3", "latest_3_by_offset", "earliest_3_by_offset")
-
-  /** The Aggregator-backed registrations don't go through an
-    * expression builder, so their usage is spelled here. */
-  private val udafUsage = Seq(
-    "latest_by_offset" -> "latest_by_offset(offset, value[, ignoreNulls])",
-    "earliest_by_offset" ->
-      "earliest_by_offset(offset, value[, ignoreNulls])",
-    "histogram" -> "histogram(value)",
-    "topk_by_score_3" -> "topk_by_score_3(item, score)",
-    "latest_3_by_offset" ->
-      "latest_3_by_offset(offset, value[, ignoreNulls])",
-    "earliest_3_by_offset" ->
-      "earliest_3_by_offset(offset, value[, ignoreNulls])")
-
-  /** Every builder validates arity with a message that EMBEDS its
-    * usage string ("expected <usage>, got N argument(s)") — probing
-    * with zero arguments recovers it without maintaining a parallel
-    * usage table that could drift from the registrations. */
-  private def usageFromBuilder(name: String,
-      b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-         org.apache.spark.sql.catalyst.expressions.Expression): String =
-    try { b(Seq.empty); s"$name(...)" }
-    catch {
-      case e: Throwable =>
-        "expected (.*), got".r
-          .findFirstMatchIn(Option(e.getMessage).getOrElse(""))
-          .map(_.group(1)).getOrElse(s"$name(...)")
-    }
-
-  /** (name, category, usage) for the whole graft surface: native
-    * Catalyst expressions, the ksql compat pack, and the
-    * Aggregator-backed SQL aggregates. */
-  private def functionInventory: Seq[(String, String, String)] = {
-    def cat(n: String): String =
-      if (aggregateFunctionNames(n)) "AGGREGATE" else "SCALAR"
-    val natives = GraftNativeFunctions.builders.map { case (n, _, b) =>
-      (n, cat(n), usageFromBuilder(n, b))
-    }
-    val compat = graft.functions.KsqlCompat.builders.map { case (n, b) =>
-      (n, cat(n), usageFromBuilder(n, b))
-    }
-    val udafs = udafUsage.map { case (n, u) => (n, "AGGREGATE", u) }
-    (natives ++ compat ++ udafs).sortBy(_._1)
-  }
+  /** (name, category, usage) for every [[FunctionTable]] entry; ksql's
+    * CATEGORY column tells aggregates from scalars. */
+  private def functionInventory: Seq[(String, String, String)] =
+    FunctionTable.entries.map { case (id, info, _) =>
+      (id.funcName,
+        if (info.getGroup == FunctionTable.AggGroup) "AGGREGATE" else "SCALAR",
+        info.getUsage)
+    }.sortBy(_._1)
 
   /** Substitute session-registered CREATE TYPE names (word-boundary,
     * case-insensitive) inside a type spelling — `addr ADDRESS` and
@@ -1467,15 +1425,12 @@ object ConnectorDdl {
       .findFirstMatchIn(select).map(_.group(1)).getOrElse("")
     val wildcard = selectList.split(',')
       .exists(_.trim.matches("(?:\\w+\\.)?\\*"))
-    // aggregate detection goes through Spark's own FunctionRegistry
-    // (every builtin aggregate carries group "agg_funcs") rather than a
-    // name whitelist — a GROUP-BY-less full aggregate over stddev_samp
-    // / count_distinct / any_value / a future builtin must be skipped
-    // too, or the appended bare rowtime column breaks the statement.
-    // The engine's own UDAFs register without group metadata, so they
-    // ride in an explicit extras set.
-    val graftAggs = Set("latest_by_offset", "earliest_by_offset",
-      "topk_by_score_3", "latest_3_by_offset", "earliest_3_by_offset")
+    // aggregate detection reads the session's FunctionRegistry rather
+    // than a name whitelist: every builtin aggregate and every
+    // FunctionTable aggregate carries group "agg_funcs", so a
+    // GROUP-BY-less full aggregate over stddev_samp / histogram / a
+    // future builtin is skipped too, or the appended bare rowtime
+    // column breaks it
     def registryAggregate(n: String): Boolean =
       try spark.sessionState.catalog.lookupFunctionInfo(
           org.apache.spark.sql.catalyst.FunctionIdentifier(n))
@@ -1483,7 +1438,7 @@ object ConnectorDdl {
       catch { case scala.util.control.NonFatal(_) => false }
     val aggregate = """(?i)\b([A-Za-z_]\w*)\s*\(""".r
       .findAllMatchIn(selectList).map(_.group(1).toLowerCase).toSet
-      .exists(n => graftAggs(n) || registryAggregate(n))
+      .exists(registryAggregate)
     val skip = "(?is).*(\\bGROUP\\s+BY\\b|\\browtime\\b).*".r
     select match {
       case _ if wildcard || aggregate => select

@@ -1,125 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{CosineSimilarity, HashedShingles, MinHashSlices, ShingleHashSeq, SimHash16, SimHash64}
-
-/** Session extension registering the engine's native functions at
-  * session build — enable with
-  * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`), after
-  * which `SELECT cosine_sim(a, b)`, `hashed_shingles(toks)`,
-  * `minhash_slices(toks)`, `simhash16(toks)` work in plain SQL on every
-  * session. This is the deployment path for a cluster: no per-session
-  * manual registration. (The Aggregator-backed SQL aggregates are
-  * per-session — see [[GraftSql.registerFunctions]].) */
+/** Session extension that injects the engine's whole SQL function
+  * surface ([[FunctionTable]]: natives, the ksql compat pack and the
+  * Aggregator-backed aggregates) and the as-of join strategy at session
+  * build — enable with `spark.sql.extensions=graft.GraftExtensions`,
+  * as [[graft.util.Sessions.local]] does. This is the deployment path
+  * for a cluster: no per-session manual registration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    GraftNativeFunctions.builders.foreach { case (name, className, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(className, name),
-        builder))
-    }
-    // ksql compat pack rides the same session-wide injection: the
-    // builders expand to builtin-expression trees, so the "class" is
-    // the shared compat object, not a dedicated Expression subclass
-    graft.functions.KsqlCompat.builders.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(graft.functions.KsqlCompat.getClass.getName, name),
-        builder))
-    }
+    FunctionTable.entries.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
-}
-
-/** The native SQL function surface, shared between the session
-  * extension (cluster path) and [[GraftSql.registerFunctions]]
-  * (per-session path) so both register identical names and argument
-  * handling. */
-object GraftNativeFunctions {
-
-  /** Arity gate: SQL calls with the wrong argument count get an
-    * analysis-style error naming the function and its signature, not a
-    * raw IndexOutOfBoundsException from the builder. */
-  private def arity(name: String, usage: String, exprs: Seq[Expression],
-                    min: Int, max: Int): Unit =
-    if (exprs.length < min || exprs.length > max)
-      throw new IllegalArgumentException(
-        s"Invalid number of arguments for function $name: expected " +
-          s"$usage, got ${exprs.length} argument(s)")
-
-  /** Shingle width: optional trailing positive integer literal, default 5. */
-  private def widthArg(name: String, exprs: Seq[Expression]): Int =
-    exprs.lift(1) match {
-      case None => 5
-      case Some(Literal(w: Int, IntegerType)) if w > 0 => w
-      case Some(Literal(w: Int, IntegerType)) => throw new IllegalArgumentException(
-        s"$name: shingle width must be positive, got $w")
-      case Some(other) => throw new IllegalArgumentException(
-        s"$name: shingle width must be an integer literal, got $other")
-    }
-
-  val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    // Spark's runtime-filter bloom expressions, made SQL/DSL-reachable:
-    // the engine's scan-pruning primitive for "is this key possibly in
-    // that (much larger than broadcast-join-able, much smaller than
-    // shuffle-everything) set" — e.g. benchmark-contamination checks.
-    // Inputs are xxhash64 longs, as in Spark's own InjectRuntimeFilter.
-    ("bloom_filter_agg",
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      exprs => {
-        arity("bloom_filter_agg",
-          "bloom_filter_agg(xxhash64_col[, est_items[, num_bits]])",
-          exprs, 1, 3)
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        exprs match {
-          case Seq(c) => new BloomFilterAggregate(c)
-          case Seq(c, n) => new BloomFilterAggregate(c, n)
-          case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-        }
-      }),
-    ("might_contain",
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      exprs => {
-        arity("might_contain", "might_contain(bloom, xxhash64_value)",
-          exprs, 2, 2)
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))
-      }),
-    ("cosine_sim", classOf[CosineSimilarity].getName,
-      exprs => {
-        arity("cosine_sim", "cosine_sim(vec1, vec2)", exprs, 2, 2)
-        CosineSimilarity(exprs(0), exprs(1))
-      }),
-    ("hashed_shingles", classOf[HashedShingles].getName,
-      exprs => {
-        arity("hashed_shingles", "hashed_shingles(tokens[, width])", exprs, 1, 2)
-        HashedShingles(exprs.head, widthArg("hashed_shingles", exprs))
-      }),
-    ("minhash_slices", classOf[MinHashSlices].getName,
-      exprs => {
-        arity("minhash_slices", "minhash_slices(tokens[, width])", exprs, 1, 2)
-        MinHashSlices(exprs.head, widthArg("minhash_slices", exprs))
-      }),
-    ("shingle_hash_seq", classOf[ShingleHashSeq].getName,
-      exprs => {
-        arity("shingle_hash_seq", "shingle_hash_seq(tokens[, width])",
-          exprs, 1, 2)
-        ShingleHashSeq(exprs.head, widthArg("shingle_hash_seq", exprs))
-      }),
-    ("simhash16", classOf[SimHash16].getName,
-      exprs => {
-        arity("simhash16", "simhash16(tokens)", exprs, 1, 1)
-        SimHash16(exprs.head)
-      }),
-    ("simhash64", classOf[SimHash64].getName,
-      exprs => {
-        arity("simhash64", "simhash64(tokens)", exprs, 1, 1)
-        SimHash64(exprs.head)
-      }))
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.udaf
 
 import graft.sources.Tables
 
@@ -10,15 +9,14 @@ import graft.sources.Tables
   * whole graft surface reachable from `spark.sql(...)` strings:
   *
   *  - every testdata table as a temp view (`lineitem`, `documents`, …),
-  *  - every native Catalyst expression as a SQL function
-  *    (`cosine_sim`, `hashed_shingles`, `minhash_slices`, `simhash16`),
-  *  - the typed Aggregators as SQL aggregate functions
-  *    (`latest_by_offset`, `topk_by_score_3`).
+  *  - every entry of [[FunctionTable]] as a SQL function: the native
+  *    Catalyst expressions (`cosine_sim`, `hashed_shingles`, …), the
+  *    ksql compat pack and the typed Aggregators (`latest_by_offset`,
+  *    `topk_by_score_3`, …).
   *
-  * Natives are also injected session-wide by [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.GraftExtensions`) — the deployment path
-  * on a cluster; `registerFunctions` is the per-session equivalent for
-  * sessions built without the extension.
+  * [[GraftExtensions]] injects the same table at session build — the
+  * deployment path on a cluster; `registerFunctions` installs it on a
+  * session built without the extension.
   */
 object GraftSql {
 
@@ -26,13 +24,13 @@ object GraftSql {
     * as `spark.sql("SELECT ... FROM <table> ...")`.
     *
     * Idempotent-cheap by design: every catalog query calls init, and
-    * harnesses (Bench.sweep) drop all temp views between queries — so
-    * a naive init would re-read ten parquet footers and re-derive five
-    * Aggregator encoders per query (round 9 measured small queries at
-    * 2-4× their real cost from exactly this). Repeat calls re-apply
+    * harnesses (`Sessions.sweep`) drop all temp views between queries
+    * — so a naive init would re-read ten parquet footers and re-derive
+    * the Aggregator encoders per query (round 9 measured small queries
+    * at 2-4× their real cost from exactly this). Repeat calls re-apply
     * views from a per-session DataFrame cache (a registry put, no
-    * file I/O) and skip function registration when the name is already
-    * bound. */
+    * file I/O) and skip each function the registry already binds; the
+    * Aggregator encoders are derived once per JVM. */
   def init(spark: SparkSession, sfDir: String): Unit = {
     initViews(spark, sfDir)
     registerFunctions(spark)
@@ -43,7 +41,7 @@ object GraftSql {
   // valid across clearCache()/dropTempView (they read files directly)
   // INVARIANT (ADVICE r19): long-lived cross-call state must be
   // LAZY-PLAN or PATH-backed, never a persisted/localCheckpointed
-  // frame — the Bench/Verify inter-query sweep unpersists every
+  // frame — the inter-query Sessions.sweep unpersists every
   // persistent RDD between queries, so a cached frame whose lineage
   // was truncated would fail later with "checkpoint block not found"
   // instead of recomputing. The frames cached here are unexecuted
@@ -120,7 +118,7 @@ object GraftSql {
         // events.parquet carries TIMESTAMP(NANOS), which Spark only
         // reads with this legacy conf (runtime-settable); a vanilla
         // session would otherwise throw "Illegal Parquet type" before
-        // any view exists. The repo's own builders set it too — this
+        // any view exists. The session factory sets it too — this
         // makes the one-call SQL entry self-sufficient.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         Tables.names.map { n =>
@@ -134,141 +132,20 @@ object GraftSql {
     dfs.foreach { case (n, df) => df.createOrReplaceTempView(n) }
   }
 
-  /** Register every engine function on an extension-less session —
-    * the SAME names and argument handling the extension injects
-    * (shared builders), plus the Aggregator-backed aggregates. The
-    * top-k aggregate carries its k in the name (`topk_by_score_3`),
-    * matching the width-suffix policy of the native registrations, so
-    * SQL callers can't silently assume a configurable k. */
-  /** Compat names that deliberately SHADOW a Spark builtin with a
-    * semantics-compatible superset (ksql-only extra arities). */
-  // uuid/random: ksql arities + the spark.graft.randomSeed seeded mode
-  // are a superset of the Spark builtins they shadow
-  private val overrideNames = Set("array_join", "uuid", "random")
-
-  private val compatOverridesInstalled =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
+  /** Install [[FunctionTable]] on a session built without
+    * [[GraftExtensions]] (on an extension session every entry is
+    * already there). An entry is skipped when the registry already
+    * binds its name to its class, so repeat calls from every catalog
+    * query are a lookup per name: no re-registration, and no "replaced
+    * a previously registered function" warning. A compat name that
+    * shadows a Spark builtin (`array_join`, `uuid`, `random`: ksql-only
+    * extra arities over the same semantics) is bound to the builtin's
+    * class at first, so it installs once. */
   def registerFunctions(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    // registration is skipped when the name is already bound (same
-    // builders every time — the extension injects the identical set),
-    // so repeat init calls don't re-derive Aggregator encoders or spam
-    // "replaced a previously registered function" warnings
-    def absent(name: String): Boolean = !registry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-    GraftNativeFunctions.builders.foreach { case (name, _, builder) =>
-      if (absent(name))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    // ksqlDB builtin-function compatibility pack (builtin-expression
-    // compositions — stays codegen'd; see KsqlCompat for the three
-    // ksql_-prefixed divergent-semantics names). Names in
-    // `overrideNames` shadow a Spark BUILTIN with a compatible
-    // SUPERSET (extra ksql arities only — e.g. 1-arg array_join), so
-    // the absent() guard would wrongly skip them: they install once
-    // per session, tracked by the weak flag below (repeat init stays
-    // silent and cheap, the round-9 watch item).
-    val firstInstall = !compatOverridesInstalled.containsKey(spark)
-    graft.functions.KsqlCompat.builders.foreach { case (name, builder) =>
-      if (if (overrideNames.contains(name)) firstInstall else absent(name))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    compatOverridesInstalled.put(spark, java.lang.Boolean.TRUE)
-    // latest/earliest_by_offset go through a registry BUILDER (not
-    // udf.register, which pins one arity) so the ksqlDB 0.28
-    // optional-boolean form is callable:
-    //   latest_by_offset(offset, value)               -- keep nulls
-    //   latest_by_offset(offset, value, ignoreNulls)  -- boolean literal
-    if (absent("latest_by_offset"))
-      registry.createOrReplaceTempFunction("latest_by_offset",
-        offsetAggBuilder("latest_by_offset", earliest = false), "scala_udf")
-    if (absent("earliest_by_offset"))
-      registry.createOrReplaceTempFunction("earliest_by_offset",
-        offsetAggBuilder("earliest_by_offset", earliest = true), "scala_udf")
-    // ksql HISTOGRAM: map value→count, 1000-key cap as in ksqlDB
-    if (absent("histogram")) spark.udf.register("histogram",
-      udaf(new graft.functions.HistogramAgg))
-    if (absent("topk_by_score_3")) spark.udf.register("topk_by_score_3",
-      udaf(new graft.functions.TopKByScore(3)))
-    // mergeable deterministic quantile sketch (decimal grid): build
-    // from grid integers / union-merge stored sketches — see
-    // graft.functions.DecimalSketch for the grid contract
-    if (absent("decimal_sketch")) spark.udf.register("decimal_sketch",
-      udaf(new graft.functions.DecimalSketchAgg))
-    if (absent("decimal_sketch_merge"))
-      spark.udf.register("decimal_sketch_merge",
-        udaf(new graft.functions.DecimalSketchMergeAgg))
-    if (absent("decimal_sketch_weighted"))
-      spark.udf.register("decimal_sketch_weighted",
-        udaf(new graft.functions.DecimalSketchWeightedAgg))
-    // KMV distinct-count sketch (k in the name per the k-bounded
-    // naming policy): build over md5-u32 hash longs; the set algebra
-    // (union / Jaccard / estimate) is plain array SQL over the
-    // sketch column — see graft.functions.KmvSketch for the integer
-    // estimator contract
-    if (absent("kmv_sketch_256")) spark.udf.register("kmv_sketch_256",
-      udaf(new graft.functions.KmvSketchAgg(256)))
-    // Misra-Gries heavy-hitter sketch (k-bounded naming policy): a
-    // <=64-counter map<term,count> summary; merge stored sketches
-    // with the _merge form. Estimates are bounds, not exact counts —
-    // see graft.functions.MgSketch for the candidates-then-exact
-    // protocol a deterministic caller should follow
-    if (absent("mg_sketch_64")) spark.udf.register("mg_sketch_64",
-      udaf(new graft.functions.MgSketchAgg(64)))
-    if (absent("mg_sketch_merge_64")) spark.udf.register("mg_sketch_merge_64",
-      udaf(new graft.functions.MgSketchMergeAgg(64)))
-    // the k-bounded 2-arg family, k in the name per the same policy —
-    // the bounded-state spelling a STREAMING SQL caller should reach
-    // for (the ksql-layer rewrite of literal-N forms uses collect_list,
-    // whose state is the full key history). Same optional-boolean
-    // ignoreNulls third argument as the scalar family.
-    if (absent("latest_3_by_offset"))
-      registry.createOrReplaceTempFunction("latest_3_by_offset",
-        offsetKAggBuilder("latest_3_by_offset", 3, earliest = false),
-        "scala_udf")
-    if (absent("earliest_3_by_offset"))
-      registry.createOrReplaceTempFunction("earliest_3_by_offset",
-        offsetKAggBuilder("earliest_3_by_offset", 3, earliest = true),
-        "scala_udf")
-    ()
-  }
-
-  /** Builder for the (offset, value[, ignoreNulls]) aggregate family:
-    * the optional third argument must be a BOOLEAN LITERAL (it selects
-    * the Aggregator instance at plan time — ksqlDB's signature is the
-    * same, a compile-time flag, default false here to preserve the
-    * tombstone-keeping 2-arg behavior). */
-  private def offsetAggBuilder(name: String, earliest: Boolean)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftBridge.scalaAggregator(
-      udaf(new graft.functions.LatestByOffsetAgg(
-        earliest, parseIgnoreNulls(name, exprs))),
-      exprs.take(2))
-
-  /** Same optional-boolean contract for the k-bounded family. */
-  private def offsetKAggBuilder(name: String, k: Int, earliest: Boolean)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.GraftBridge.scalaAggregator(
-      udaf(new graft.functions.LatestKByOffsetAgg(
-        k, earliest, parseIgnoreNulls(name, exprs))),
-      exprs.take(2))
-
-  private def parseIgnoreNulls(name: String,
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.BooleanType
-    exprs match {
-      case Seq(_, _) => false
-      case Seq(_, _, Literal(b: Boolean, BooleanType)) => b
-      case _ => throw new IllegalArgumentException(
-        s"Invalid arguments for function $name: expected " +
-          s"$name(offset, value[, ignoreNulls boolean literal]), " +
-          s"got ${exprs.length} argument(s)")
+    FunctionTable.entries.foreach { case (id, info, builder) =>
+      if (!registry.lookupFunction(id).exists(_.getClassName == info.getClassName))
+        registry.registerFunction(id, info, builder)
     }
   }
 }

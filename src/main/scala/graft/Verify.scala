@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,29 +24,8 @@ object Verify {
         sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same rationale as Bench: per-query throwaway checkpoints don't
-      // need the Spark 4.1-default CRC sidecar per checkpoint file
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bounded rank/cumulation windows (RetrievalQueries' <=30-row
-    // df-rank selections, SimilarityQueries' |bands|-bounded threshold
-    // sweep, CurationQueries' bucket-total prefix sum) intentionally
-    // run unpartitioned over tiny relations; WindowExec warns per
-    // execution and the spam buries real warnings in this log
-    // (VERDICT r13). partitionBy(lit(1)) is constant-folded away by
-    // the optimizer, so silence the logger, not the plan.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = graft.util.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -57,12 +35,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop the finished query's localCheckpoint blocks now instead of
-      // waiting for a GC-driven ContextCleaner pass (same inter-query
-      // hygiene as Bench.sweep — every persistent RDD here belongs to a
-      // completed query, so this can never invalidate in-flight data)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.util.Sessions.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

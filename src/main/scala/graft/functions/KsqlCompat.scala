@@ -31,10 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * identifiers), so ksql statements run verbatim while plain
   * `spark.sql` keeps Spark-native behavior.
   *
-  * Aggregates: `TOPK`/`TOPKDISTINCT`/`COUNT_DISTINCT` compose builtin
-  * aggregate expressions here; `HISTOGRAM` (a map-valued aggregate
-  * with no builtin spelling) is the typed [[HistogramAgg]], registered
-  * per-session by [[graft.GraftSql.registerFunctions]].
+  * Aggregates: `TOPK`/`TOPKDISTINCT`/`COUNT_DISTINCT`/`CORRELATION`
+  * compose builtin aggregate expressions ([[aggregates]]); `HISTOGRAM`
+  * (a map-valued aggregate with no builtin spelling) is the typed
+  * [[HistogramAgg]]. All of them are entries of [[graft.FunctionTable]].
   */
 object KsqlCompat {
 
@@ -67,12 +67,14 @@ object KsqlCompat {
       s"$name: expected a string literal argument, got $other")
   }
 
-  /** (name, builder) for every compat function — this pack plus
-    * [[KsqlCompatExt]]. Shared by the session extension
-    * ([[graft.GraftExtensions]]) and the per-session registration
-    * ([[graft.GraftSql.registerFunctions]]). */
+  /** (name, builder) for every compat scalar — this pack plus
+    * [[KsqlCompatExt]]. [[graft.FunctionTable]] lists them. */
   val builders: Seq[(String, Seq[Expression] => Expression)] =
     base ++ KsqlCompatExt.builders
+
+  /** (name, builder) for every compat aggregate. */
+  val aggregates: Seq[(String, Seq[Expression] => Expression)] =
+    baseAggregates ++ KsqlCompatExt.aggregates
 
   private lazy val base: Seq[(String, Seq[Expression] => Expression)] = Seq(
 
@@ -314,9 +316,11 @@ object KsqlCompat {
           fn("cos", fn("radians", lat2))),
           halfSin2(fn("-", lon2, lon1))))
       fn("*", lit(2.0 * radius), fn("asin", fn("sqrt", a)))
-    },
+    })
 
-    // ---- aggregates composed from builtins ----
+  // ---- aggregates composed from builtins ----
+  private lazy val baseAggregates
+      : Seq[(String, Seq[Expression] => Expression)] = Seq(
     "count_distinct" -> { exprs =>
       arity("count_distinct", "count_distinct(col)", exprs, 1, 1)
       UnresolvedFunction("count", exprs, isDistinct = true)

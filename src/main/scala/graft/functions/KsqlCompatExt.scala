@@ -565,9 +565,9 @@ object KsqlCompatExt {
       org.apache.spark.sql.catalyst.expressions.Rand(
         Literal(graftSeed().getOrElse(scala.util.Random.nextLong()),
           org.apache.spark.sql.types.LongType))
-    },
+    })
 
-    // ---- aggregates ----
+  val aggregates: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "correlation" -> { exprs =>
       arity("correlation", "correlation(x, y)", exprs, 2, 2)
       fn("corr", exprs(0), exprs(1))

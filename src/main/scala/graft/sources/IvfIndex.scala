@@ -50,7 +50,7 @@ object IvfIndex {
     * faster, so the writes stay as upstream-partitioned. */
 
   // INVARIANT (ADVICE r19): this memo holds PATHS, never DataFrames —
-  // the Bench/Verify inter-query sweep unpersists all persistent RDDs
+  // the inter-query Sessions.sweep unpersists all persistent RDDs
   // between queries, so any cross-call cached/localCheckpointed frame
   // would lose its blocks. Keep every long-lived artifact path-backed.
   private val built = TrieMap.empty[String, Layout]

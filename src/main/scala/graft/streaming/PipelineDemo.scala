@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable demo of the streaming engine: replays the reference's seed
   * data (reference README.md:502-527) through the three chained
   * streaming queries and prints the shipped_orders sink — the offline
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
   * `curl .../shipped_orders/_search` check (README.md:532-637). */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(4)
 
     val p = new Pipeline(spark, Files.createTempDirectory("graft-demo-").toString)
     p.customersFeed.add(

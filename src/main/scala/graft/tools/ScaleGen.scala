@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver's synthetic star schema
@@ -115,14 +115,8 @@ object ScaleGen {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     for (t <- verbatim ++ shifts.keys.toSeq.sorted) {
       val df = spark.read.parquet(s"$src/$t.parquet")
       val out = if (verbatim.contains(t)) df else scaleTable(df, t, factor)

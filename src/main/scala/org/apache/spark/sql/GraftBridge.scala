@@ -17,11 +17,6 @@ object GraftBridge {
   def column(e: Expression): Column =
     classic.ExpressionUtils.column(e)
 
-  /** What `spark.udf.register(name, udaf)` builds internally, exposed
-    * so a FunctionRegistry BUILDER can construct the aggregate from
-    * its argument expressions — the only way to give one SQL name an
-    * optional (literal-switched) argument, which udf.register's fixed
-    * arity cannot express. */
   /** Run `f` with a THREAD-LOCAL SQLConf override (a clone of the
     * session conf with `overrides` applied). Everything on the calling
     * thread that consults `SQLConf.get` — parser eval-mode capture,
@@ -36,6 +31,12 @@ object GraftBridge {
     internal.SQLConf.withExistingConf(cloned)(f)
   }
 
+  /** What `spark.udf.register(name, udaf)` builds internally, exposed
+    * so a FunctionRegistry BUILDER can construct the aggregate from
+    * its argument expressions — the only way to give one SQL name an
+    * optional (literal-switched) argument, which udf.register's fixed
+    * arity cannot express. The analyzer wraps the returned aggregate
+    * function, so DISTINCT and FILTER apply as for any aggregate. */
   def scalaAggregator(
       agg: expressions.UserDefinedFunction,
       children: Seq[Expression]): Expression =
@@ -43,5 +44,5 @@ object GraftBridge {
       // udaf() always returns a UserDefinedAggregator; the class is
       // private[sql], so the downcast lives here in the bridge
       agg.asInstanceOf[expressions.UserDefinedAggregator[_, _, _]],
-      children).toAggregateExpression()
+      children)
 }

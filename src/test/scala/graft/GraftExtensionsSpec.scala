@@ -1,30 +1,49 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The extensions class must make cosine_sim available to plain SQL on
-  * a fresh session with no manual registration. */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Every [[FunctionTable]] entry resolves with no manual registration
+  * on a session built with [[GraftExtensions]], and after
+  * `GraftSql.registerFunctions` (the function step of `GraftSql.init`)
+  * on a session built without it. */
+class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    // getOrCreate would silently reuse another suite's session and
-    // drop our extensions config — force a fresh one
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  /** Table names the session's registry does not bind to the entry's
+    * class (a builtin of the same name does not count). */
+  private def unbound(s: SparkSession): Seq[String] = {
+    val registry = s.sessionState.functionRegistry
+    FunctionTable.entries.collect {
+      case (id, info, _)
+          if !registry.lookupFunction(id).exists(_.getClassName == info.getClassName) =>
+        id.funcName
+    }
   }
 
-  override def afterAll(): Unit = spark.stop()
+  /** Messages logged while `body` runs. */
+  private def logged(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body finally root.removeAppender(appender)
+    seen.toArray(Array.empty[String]).toSeq
+  }
 
   test("cosine_sim resolves in SQL via spark.sql.extensions") {
+    // the shared context loads the extension by class name from the conf
+    assert(spark.sparkContext.getConf.get("spark.sql.extensions") ==
+      classOf[GraftExtensions].getName)
     val got = spark.sql(
       """SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
         |                  array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c"""
@@ -42,5 +61,28 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seq.length == 3)      // one per position, duplicates kept
     assert(seq.distinct == set)  // same hashing as the set native
     assert(seq(0) == seq(2) && seq(0) != seq(1))
+  }
+
+  test("every table entry resolves on an extension session with no registerFunctions call") {
+    assert(unbound(spark).isEmpty)
+    val h = spark.sql("SELECT histogram(v) AS h FROM VALUES ('a'), ('a'), ('b') AS t(v)")
+      .collect().head.getMap[String, Long](0)
+    assert(h == Map("a" -> 2L, "b" -> 1L))
+  }
+
+  test("every table entry resolves on an extension-less session after GraftSql.registerFunctions") {
+    val bare = BareSession(spark)
+    // the premise: a bare session lacks the engine's names
+    assert(unbound(bare).contains("cosine_sim"))
+    assert(unbound(bare).contains("latest_by_offset"))
+    val replaced = "replaced a previously registered function"
+    val first = logged(GraftSql.registerFunctions(bare)).filter(_.contains(replaced))
+    assert(unbound(bare).isEmpty)
+    // the first call replaces exactly the three builtins the compat pack
+    // shadows; a repeat call re-registers nothing
+    assert(first.size == 3 &&
+      Seq("array_join", "uuid", "random").forall(n => first.exists(_.contains(n))), first)
+    assert(logged(GraftSql.registerFunctions(bare))
+      .filter(_.contains(replaced)).isEmpty)
   }
 }

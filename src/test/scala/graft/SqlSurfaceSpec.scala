@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's user interface is SQL (ksqlDB statements, reference
@@ -11,17 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the native Catalyst expressions (injected session-wide, no manual
   * registration), and the Aggregator-backed SQL aggregates — each
   * checked against its DataFrame-DSL spelling. */
-class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sql-surface")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -29,7 +18,6 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
     GraftSql.initViews(spark, sf)
     ()
   }
-  override def afterAll(): Unit = spark.stop()
 
   // multiset compare (row → count), so a duplicate-multiplicity skew
   // between the SQL and DSL spellings can't pass silently
@@ -139,7 +127,6 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("aggregator-backed SQL aggregates: latest_by_offset + topk_by_score") {
-    GraftSql.registerFunctions(spark)
     sameRows(
       spark.sql(
         """SELECT user_id, latest_by_offset(event_id, event_type) AS latest_type
@@ -158,7 +145,6 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("aggregator-backed SQL aggregates: decimal_sketch family") {
-    GraftSql.registerFunctions(spark)
     import org.apache.spark.sql.functions._
     val sk = udaf(new graft.functions.DecimalSketchAgg)
     // SQL build == DSL build, per group
@@ -760,14 +746,24 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ksql SHOW FUNCTIONS / DESCRIBE FUNCTION cover the graft surface") {
-    val fns = GraftSql.sql(spark, "SHOW FUNCTIONS;")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // the three families are all present with the right category
-    assert(fns.get("cosine_sim").contains("SCALAR"), fns.toString)
-    assert(fns.get("mask_keep_left").contains("SCALAR"), fns.toString)
-    assert(fns.get("latest_by_offset").contains("AGGREGATE"), fns.toString)
-    assert(fns.get("topk").contains("AGGREGATE"), fns.toString)
-    assert(fns.size > 40, s"only ${fns.size} functions listed")
+    val rows = GraftSql.sql(spark, "SHOW FUNCTIONS;")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    val fns = rows.toMap
+    // every table entry, exactly once, with its category
+    assert(rows.size == FunctionTable.entries.size, rows.toString)
+    FunctionTable.entries.foreach { case (id, info, _) =>
+      val cat = if (info.getGroup == "agg_funcs") "AGGREGATE" else "SCALAR"
+      assert(rows.count(_._1 == id.funcName) == 1, id.funcName)
+      assert(fns(id.funcName) == cat, id.funcName)
+    }
+    // the families, incl. the Aggregator-backed ones, with the right category
+    for (n <- Seq("cosine_sim", "mask_keep_left"))
+      assert(fns.get(n).contains("SCALAR"), n)
+    for (n <- Seq("latest_by_offset", "topk", "correlation", "histogram",
+                  "decimal_sketch", "decimal_sketch_merge",
+                  "decimal_sketch_weighted", "kmv_sketch_256",
+                  "mg_sketch_64", "mg_sketch_merge_64"))
+      assert(fns.get(n).contains("AGGREGATE"), n)
     // LIST FUNCTIONS is the ksql synonym
     assert(GraftSql.sql(spark, "LIST FUNCTIONS;").count() == fns.size)
     // usage strings come from the builders' own arity messages, so
@@ -1269,7 +1265,13 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
         "SELECT stddev_samp(k) AS s FROM rtprop t",
         "SELECT count(DISTINCT k) AS n FROM rtprop t",
         "SELECT any_value(k) AS a FROM rtprop t",
-        "SELECT approx_count_distinct(k) AS n FROM rtprop t"))
+        "SELECT approx_count_distinct(k) AS n FROM rtprop t",
+        "SELECT histogram(CAST(k AS STRING)) AS h FROM rtprop t",
+        "SELECT kmv_sketch_256(k) AS s FROM rtprop t",
+        "SELECT decimal_sketch(k) AS s FROM rtprop t",
+        "SELECT decimal_sketch_weighted(k, k) AS s FROM rtprop t",
+        "SELECT mg_sketch_64(CAST(k AS STRING)) AS s FROM rtprop t",
+        "SELECT correlation(k, k) AS c FROM rtprop t"))
       assert(!ConnectorDdl.propagateRowtime(spark, sel).contains("AS rowtime"),
         sel)
     // scalar functions must NOT suppress propagation

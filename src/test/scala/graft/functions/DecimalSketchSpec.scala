@@ -2,10 +2,10 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The three contracts that make [[DecimalSketch]] an exactly-
   * verifiable mergeable quantile sketch:
@@ -18,17 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the input, merged in any order, yields the identical map;
   *  3. the worst-case relative error is < 1% at SigDigits=3.
   */
-class DecimalSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("decimal-sketch")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DecimalSketchSpec extends AnyFunSuite with SharedSpark {
 
   import DecimalSketch.bucket
 

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The native [[CharEntropy]] expression must be BIT-identical to the
   * composed explode→count→join→sum spelling — they share one DuckDB
@@ -10,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * degenerate, libm path, grid flooring) would show up as a silent
   * hash flip at a bigger SF. Pinned row-for-row on the real table
   * plus the hostile degenerate inputs the corpus may not contain. */
-class EntropyParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("entropy-parity")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EntropyParitySpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

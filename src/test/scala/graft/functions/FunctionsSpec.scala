@@ -2,10 +2,10 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Property-style tests (seeded random trials) for the custom Catalyst
   * pieces:
@@ -15,16 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - cosine_sim: the native codegen'd expression is bit-identical to
   *    the composable zip_with/aggregate form.
   */
-class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("functions-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FunctionsSpec extends AnyFunSuite with SharedSpark {
 
   test("latest_by_offset aggregator: result == value at max offset under any interleaving") {
     import spark.implicits._

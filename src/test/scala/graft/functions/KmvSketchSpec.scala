@@ -2,26 +2,17 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** KMV sketch algebra, fuzzed against the direct model
   * `distinct.sorted.take(k)` — insertion folds, unions over arbitrary
   * splits, duplicate insensitivity, the exact-below-k estimator
   * contract, and partition-count invariance of the Spark aggregate
   * (the merge path a 1000-executor run exercises). */
-class KmvSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("kmv-sketch")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KmvSketchSpec extends AnyFunSuite with SharedSpark {
 
   private def model(xs: Seq[Long], k: Int): Seq[Long] =
     xs.distinct.sorted.take(k)
@@ -84,7 +75,6 @@ class KmvSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQL-reachable: kmv_sketch_256 + array-SQL estimator match the model") {
     import spark.implicits._
-    graft.GraftSql.registerFunctions(spark)
     val xs = sample(2000, 10000000L)
     xs.toDF("h").createOrReplaceTempView("kmv_in")
     try {

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, GraftSql}
+import graft.{GraftSql, SharedSpark}
 
 /** Second ksql compat pack ([[KsqlCompatExt]]): the invocation
   * (lambda) functions in both their array and map forms with the ksql
@@ -13,22 +12,7 @@ import graft.{GraftExtensions, GraftSql}
   * Everything runs through [[GraftSql.sql]] — i.e. the ksql DIALECT,
   * so the `=>` arrow rewrite and the `ksql_`-prefix name mapping are
   * part of what's under test. */
-class KsqlCompatExtSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ksql-compat-ext")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    GraftSql.registerFunctions(spark)
-    ()
-  }
-  override def afterAll(): Unit = spark.stop()
+class KsqlCompatExtSpec extends AnyFunSuite with SharedSpark {
 
   private def one(sql: String): Row = GraftSql.sql(spark, sql).collect().head
 

@@ -2,31 +2,15 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSql
+import graft.{GraftSql, SharedSpark}
 
 /** Seeded-random cross-check of the ksql masking/split mappings
   * against a direct per-character Scala model — one DataFrame of all
   * samples, so the whole property evaluates in a single codegen'd
   * query rather than per-sample round-trips. */
-class KsqlCompatPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ksql-compat-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    GraftSql.registerFunctions(spark)
-    ()
-  }
-  override def afterAll(): Unit = spark.stop()
+class KsqlCompatPropertySpec extends AnyFunSuite with SharedSpark {
 
   // the ksql MASK default: upper→X, lower→x, digit→n, other→'-'
   private def modelMask(s: String): String =

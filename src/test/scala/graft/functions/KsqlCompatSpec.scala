@@ -1,33 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, GraftSql}
+import graft.{GraftSql, SharedSpark}
 
 /** ksqlDB builtin-function compatibility pack
   * ([[KsqlCompat]]): semantics of each mapping, the ksql-dialect
   * rewrite of the three divergent names (MASK/SPLIT/REGEXP_EXTRACT),
   * and the aggregates (HISTOGRAM cap, EARLIEST_BY_OFFSET, TOPK).
-  * The session is built WITH the extension, so the scalar pack is
-  * exercised through the cluster-deployment injection path. */
-class KsqlCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ksql-compat")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    GraftSql.registerFunctions(spark) // the UDAF aggregates are per-session
-    ()
-  }
-  override def afterAll(): Unit = spark.stop()
+  * The whole pack, aggregates included, comes from the session
+  * extension (the cluster-deployment injection path). */
+class KsqlCompatSpec extends AnyFunSuite with SharedSpark {
 
   private def one(sql: String): Row = spark.sql(sql).collect().head
   private def oneKsql(sql: String): Row =

@@ -2,10 +2,10 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Misra–Gries invariants, fuzzed against exact counts:
   *
@@ -21,16 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - the summary never exceeds k counters;
   *  - through Spark: the aggregator's query-protocol output is
   *    invariant under repartitioning. */
-class MgSketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("mg-sketch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MgSketchSpec extends AnyFunSuite with SharedSpark {
 
   /** A skewed random stream: a few heavy terms + a long tail. */
   private def stream(rnd: Random, n: Int): Seq[String] =

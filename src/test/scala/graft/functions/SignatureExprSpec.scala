@@ -2,25 +2,16 @@ package graft.functions
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The native signature expressions must be bit-identical to their
   * composable (functions._) spellings on arbitrary token arrays —
   * including short texts (fewer tokens than the shingle width) and
   * duplicate tokens. */
-class SignatureExprSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("signature-exprs")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SignatureExprSpec extends AnyFunSuite with SharedSpark {
 
   private def randTokens(rnd: Random): Seq[String] = {
     val vocab = Seq("data", "row", "scan", "agg", "join", "π", "batch")

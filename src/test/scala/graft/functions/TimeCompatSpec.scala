@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, GraftSql}
+import graft.{GraftSql, SharedSpark}
 
 /** The ksql `TIME` type surface ([[TimeCompat]]): `PARSE_TIME` /
   * `FORMAT_TIME` semantics over the INT millis-of-day wire format
@@ -14,22 +13,7 @@ import graft.{GraftExtensions, GraftSql}
   * `LocalTime`) throws `UnsupportedTemporalTypeException` /
   * `DateTimeException` rather than `DateTimeParseException` and must
   * still yield NULL instead of killing the query. */
-class TimeCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("time-compat")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def beforeAll(): Unit = {
-    GraftSql.registerFunctions(spark)
-    ()
-  }
-  override def afterAll(): Unit = spark.stop()
+class TimeCompatSpec extends AnyFunSuite with SharedSpark {
 
   private def one(sql: String): Row = GraftSql.sql(spark, sql).collect().head
 

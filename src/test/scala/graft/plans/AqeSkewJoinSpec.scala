@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** AQE's runtime skew-join split is the engine's FIRST line of defense
   * for hot keys (graft's `Relational.saltedJoin` is the explicit
@@ -16,26 +16,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * skewJoin.enabled flipped off globally) would silently degrade every
   * hot-key join to a straggler task.
   */
-class AqeSkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AqeSkewJoinSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("aqe-skew")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    // scale AQE's skew thresholds down to test data volumes: a
-    // partition is "skewed" past 64 KiB and 2x the median, and splits
-    // aim at 16 KiB chunks
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // scale AQE's skew thresholds down to test data volumes: a
+  // partition is "skewed" past 64 KiB and 2x the median, and splits
+  // aim at 16 KiB chunks
+  override def sessionConf = Map(
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("a hot key triggers AQE's runtime skew split in the executed plan") {
     import spark.implicits._

@@ -2,28 +2,14 @@ package graft.plans
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+import graft.SharedSpark
 
-  lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("asof-join")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE deliberately ON: the operator must be safe under adaptive
-      // re-planning (it pins its children's partition counts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class AsOfJoinSpec extends AnyFunSuite with SharedSpark {
 
-  override def afterAll(): Unit = spark.stop()
+  // AQE stays ON (the factory default): the operator must be safe under
+  // adaptive re-planning (it pins its children's partition counts)
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

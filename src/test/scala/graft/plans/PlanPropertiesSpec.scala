@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Regression tests for the plan properties the README promises
   * (the "Designed for 100 TB" section): these are the physical-plan
@@ -12,18 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reaching the scan, a dimension join that degrades to sort-merge +
   * full shuffle, a top-k that becomes a global sort. Asserting on the
   * formatted explain output pins them. */
-class PlanPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-properties")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanPropertiesSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -699,7 +689,7 @@ class PlanPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("unpartitioned Windows appear only over limit-bounded or allowlisted-bounded inputs (ADVICE r14)") {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.{GlobalLimitExec, TakeOrderedAndProjectExec}
-    // Bench/Verify silence WindowExec's no-partition-defined WARN (the
+    // Sessions.local silences WindowExec's no-partition-defined WARN (the
     // bounded rank windows spam it); this guard re-imposes the check at
     // the PLAN level, so a future genuinely unpartitioned corpus-sized
     // window — the exact single-task scale regression this repo

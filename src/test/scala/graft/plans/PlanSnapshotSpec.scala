@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** EXPLAIN-diff regression guard over the most expensive catalog
   * queries: each query's STATIC physical plan (AQE off — the
@@ -18,21 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * To regenerate after an intentional plan change, run with
   * SPARK_GRAFT_PLAN_REGEN=1 — the suite prints the current snapshot
   * literal instead of asserting. */
-class PlanSnapshotSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSnapshotSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-snapshot")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // static plans: AQE rewrites happen at runtime and would make the
-    // snapshot depend on row counts; the guard pins the planner output
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // static plans: AQE rewrites happen at runtime and would make the
+  // snapshot depend on row counts; the guard pins the planner output
+  override def sessionConf = Map("spark.sql.adaptive.enabled" -> "false")
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,29 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftExtensions, GraftSql}
+import graft.{BareSession, GraftSql, SharedSpark}
 
 /** The bloom scan-pruning primitive (`bloom_filter_agg` /
   * `might_contain`, Spark's runtime-filter expressions made
   * SQL-reachable) and its use in [[CurationQueries.decontamBloom]]:
   * the bloom must act as a PRE-join filter on the training side, and
   * the pruned query must return exactly the un-pruned answer. */
-class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-prune")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BloomPruneSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -75,8 +61,10 @@ class BloomPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("functions are also reachable on a registerFunctions session") {
-    // per-session path (no extension): the same names resolve
-    val s2 = spark.newSession()
+    // per-session path: a session built without the extension (a
+    // newSession() of this one would inherit it) gets the names from
+    // registerFunctions
+    val s2 = BareSession(spark)
     GraftSql.registerFunctions(s2)
     import s2.implicits._
     (1L to 10L).toDF("k").createOrReplaceTempView("k2")

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The BPE trainer/encoder's core claim: applying a merge as ONE
   * literal `replace` over the double-space symbol representation
@@ -15,18 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * end-to-end through Spark's `replace` builtin (same Java
   * `String.replace` semantics the property test uses), plus shape
   * checks on the trainer and encoder over the sf0.001 tables. */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

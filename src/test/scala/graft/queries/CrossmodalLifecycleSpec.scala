@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream
 
 /** Contract of [[MultimodalQueries.crossmodalDelete]] beyond the
@@ -14,20 +13,9 @@ import graft.streaming.FiniteStream
   * brute-force top-5 over the remaining corpus, i.e. the delete
   * removed exactly the dead rows and nothing else (the IvfRetrainSpec
   * protocol applied to the cross-modal index). */
-class CrossmodalLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CrossmodalLifecycleSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("crossmodal-lifecycle")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("served top-5 excludes every tombstone; exhaustive probe of the compacted index equals exact-over-remaining") {
     val dead = MultimodalQueries.phashNearDup(spark, sf)

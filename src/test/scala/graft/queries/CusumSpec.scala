@@ -2,9 +2,9 @@ package graft.queries
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The load-bearing identity behind q_cusum_changepoint: the
   * prefix-extremum closed form the window spelling computes equals
@@ -12,18 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (positive and negative deviations, long flat runs, saturations),
   * plus an end-to-end check that the batch query raises exactly the
   * alarms a direct recurrence over its own hourly series raises. */
-class CusumSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cusum-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CusumSpec extends AnyFunSuite with SharedSpark {
 
   /** Page's recurrences, folded directly. */
   private def recurrence(xs: Seq[Long], mu: Long,

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Two engine-policy gates on the dedup/similarity operators:
   *
@@ -15,17 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     (Verify/Bench run the whole catalog in one session — leaked caches
   *     accumulate in executor memory and distort later timings).
   */
-class DedupHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-hygiene")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupHygieneSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

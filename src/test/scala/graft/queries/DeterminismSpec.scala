@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The sampling/mixing/shuffling/packing operators all claim the same
   * property: their output is a PURE FUNCTION of the rows — identical
@@ -15,18 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exchange-reuse hazard in the old range-partitioned shard packer —
   * is covered by CurationPackSpec's equivalence to the naive window.)
   */
-class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("determinism")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DeterminismSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Contract of [[DedupQueries.indexDelete]] — the takedown lifecycle
   * on the at-rest dedup signature index: the serve-time tombstone
@@ -12,20 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * remove exactly the verdicts witnessed by tombstoned documents, and
   * a delta document whose only witness was taken down must pass the
   * gate — erasure has to actually unblock. */
-class IndexDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IndexDeleteSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("index-delete")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select(col("doc_id"), col("dup_of")).collect()

@@ -2,10 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream
 
 /** Regression guard for the stream_lang_drift composite store key
@@ -16,17 +15,7 @@ import graft.streaming.FiniteStream
   * no raw control byte in source), which cannot occur inside a parquet
   * string value of this corpus, so the composite key is injective —
   * this spec pins exactly the collision pair from the advice. */
-class LangDriftKeySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("lang-drift-key")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LangDriftKeySpec extends AnyFunSuite with SharedSpark {
 
   test("concatenation-colliding (source, lang) pairs keep separate state rows") {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Contract of [[CurationQueries.leakageSplit]]: verified near-dup
   * pairs can NEVER straddle train/val/test (the property the naive
@@ -11,20 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * keep exactly the naive assignment, and `leaked_before` flags
   * precisely the docs whose component the naive split would have
   * straddled. */
-class LeakageSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LeakageSplitSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("leakage-split")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("zero verified pairs straddle splits; flags match the naive straddles") {
     val split = CurationQueries.leakageSplit(spark, sf)

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Independent-recompute pin for the late-interaction (MaxSim) scorer:
   * the catalog query's nested-HOF spelling (token matrices bound once,
@@ -15,17 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * among its scored tokens gets token-0's max at exactly the term's
   * self-dot (identical token strings ⇒ identical vectors under the
   * shared embedder). */
-class MaxsimSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("maxsim-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MaxsimSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

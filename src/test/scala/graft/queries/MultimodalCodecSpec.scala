@@ -5,9 +5,9 @@ import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The REAL media-decode path: the catalog's mm_media_meta stubs the
   * decode (the synthetic corpus has no media bytes and the oracle must
@@ -16,16 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ImageIO is a real codec that ships with every JVM, so this is an
   * honest end-to-end decode test: render images in memory, ship them
   * through a binary column, and get their actual dimensions back. */
-class MultimodalCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-codec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalCodecSpec extends AnyFunSuite with SharedSpark {
 
   private def render(w: Int, h: Int, format: String): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)

@@ -2,9 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Regression pins for the BM25 retrieval family (ADVICE r13): the
   * streaming index head must order postings by the SATURATED score,
@@ -13,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * score ties by doc_id asc, so a raw-tf head would keep the wrong
   * doc at the k-boundary. The fixture engineers exactly that
   * collision at rank 5. */
-class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("retrieval-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RetrievalSpec extends AnyFunSuite with SharedSpark {
 
   /** Fixture corpus: 20 stopword-ish terms (df=10, ranks 1–20), ten
     * query terms q01–q10 (df=6, ranks 21–30). q01's six postings have

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream
 
 /** Order-independence gate for every stream consumer of the claim-log
@@ -17,16 +17,7 @@ import graft.streaming.FiniteStream
   * min-doc_id owner election. Before the claim-log redesign every one
   * of these five queries matched its oracle only under doc_id-ordered
   * single-file arrival. */
-class ShuffledArrivalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("shuffled-arrival")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShuffledArrivalSpec extends AnyFunSuite with SharedSpark {
 
   private var dir: String = _
 
@@ -47,7 +38,7 @@ class ShuffledArrivalSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     spark.conf.unset("graft.stream.maxFilesPerTrigger")
     FiniteStream.deleteRecursively(dir)
-    spark.stop()
+    super.afterAll()
   }
 
   /** Batch min-owner election over a (doc_id, band-ish, sig-ish) band

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Invariants of the round-6 curation additions: the substring-span
   * dedup diagnostic, the overlapping context-window chunker, and the
@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * loader / mixture spec actually relies on — not a re-run of the
   * DuckDB oracle (the driver does that), but the structural guarantees
   * the oracle's row hash can't express. */
-class SpanChunkCapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("span-chunk-cap")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SpanChunkCapSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -2,10 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream
 
 /** The re-pack cadence of the streaming corpus build — the production
@@ -16,18 +15,7 @@ import graft.streaming.FiniteStream
   * one-shot batch build. Delivery is forced to multiple micro-batches
   * by splitting the fixture into several files and capping
   * maxFilesPerTrigger at 1. */
-class StreamCorpusCadenceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-corpus-cadence")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamCorpusCadenceSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

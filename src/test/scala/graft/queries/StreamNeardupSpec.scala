@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream
 
 /** Incremental contract of the streaming claim-log registries
@@ -16,18 +15,7 @@ import graft.streaming.FiniteStream
   * ([[StreamingQueries.electDupBands]] /
   * [[StreamingQueries.electClaims]]) reproduces the batch owner
   * rule exactly. */
-class StreamNeardupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-neardup")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamNeardupSpec extends AnyFunSuite with SharedSpark {
 
   test("claim log releases buckets at contestation; election is min-id") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

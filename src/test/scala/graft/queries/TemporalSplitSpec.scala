@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Contract of [[CurationQueries.temporalSplit]] /
   * [[CurationQueries.temporalAudit]]: a pure ingest-time cutoff ships
@@ -12,20 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * component-aware assignment ships none of the pairs the clustering
   * covers, components take the side of their EARLIEST member, and
   * singletons reduce exactly to the pure cutoff. */
-class TemporalSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TemporalSplitSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("temporal-split")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("audit pins the fixture's leak counts: naive ships leaks, component ships none") {
     val audit = CurationQueries.temporalAudit(spark, sf).collect()

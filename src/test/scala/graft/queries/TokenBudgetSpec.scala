@@ -1,31 +1,20 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Contract of [[CurationQueries.tokenBudget]]: the two-level
   * distributed prefix sum must reproduce the one-window spelling
   * exactly, admission must be a PREFIX of the (quality desc, doc_id)
   * order within every source (no dropped doc may outrank a kept one),
   * and the fixture must exercise both the keep and drop branches. */
-class TokenBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TokenBudgetSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("token-budget")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private lazy val got = CurationQueries.tokenBudget(spark, sf)
     .collect()

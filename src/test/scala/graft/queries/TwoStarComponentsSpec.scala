@@ -2,25 +2,16 @@ package graft.queries
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The two-rule (large-star / small-star) connected-components variant
   * vs a driver-side union-find model: identical labelings on random
   * graphs — sparse, dense, multi-component — and on the adversarial
   * long-chain/long-cycle graphs where min-label propagation pays
   * O(diameter) rounds and the two-rule alternation pays O(log n). */
-class TwoStarComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("two-star-components")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TwoStarComponentsSpec extends AnyFunSuite with SharedSpark {
 
   /** Union-find with path compression — the reference model. */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {

@@ -2,24 +2,15 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Compaction must shrink the file count to the size-derived target
   * and keep the relation byte-for-byte identical — and it must do so
   * with a NARROW plan (coalesce, no shuffle), since a 100 TB compact
   * that redistributes the data costs a full extra shuffle for nothing. */
-class CompactorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("compactor")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CompactorSpec extends AnyFunSuite with SharedSpark {
 
   test("compaction hits the size-derived file count and preserves the relation") {
     val src = Files.createTempDirectory("graft-compact-src-").toString

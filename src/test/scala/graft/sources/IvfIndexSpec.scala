@@ -1,24 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Index lifecycle contract: build once, probe many, append without
   * rebuild. The probe-side plan properties (partition pruning to the
   * probed cells, no corpus scan) are pinned in PlanPropertiesSpec via
   * `sim_ann_ivf_indexed`; this spec covers the layout itself. */
-class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IvfIndexSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("ivf-index")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def fixture = {
     import spark.implicits._

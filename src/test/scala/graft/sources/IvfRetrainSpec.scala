@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The drift→retrain lifecycle contract of [[IvfIndex]]: versioned
   * publishes with an atomic `_CURRENT` swap, the drift gate (below
@@ -21,16 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * below cluster B, and the whole cluster re-homes into one cell —
   * probe-1 recall returns to 5/5.
   */
-class IvfRetrainSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IvfRetrainSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("ivf-retrain")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def vec(deg: Double): Array[Double] =
     Array(math.cos(math.toRadians(deg)), math.sin(math.toRadians(deg)))

@@ -4,9 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 import scala.jdk.CollectionConverters._
 
@@ -16,16 +16,7 @@ import scala.jdk.CollectionConverters._
   * and every chunk must be ZSTD-coded. (An option typo silently
   * degrades to no-bloom/snappy — the round-trip query would still
   * pass, so only a footer inspection pins the layout.) */
-class ParquetLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("parquet-layout")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ParquetLayoutSpec extends AnyFunSuite with SharedSpark {
 
   test("bloom filter offsets and ZSTD codec land in every footer") {
     val dir = graft.queries.SourceQueries

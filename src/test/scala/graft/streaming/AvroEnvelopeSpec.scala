@@ -5,11 +5,11 @@ import java.io.ByteArrayOutputStream
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The Avro ingress façade must decode real binary Avro offline (core
   * Avro is always on a Spark classpath) and feed the existing
@@ -18,16 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * docker-compose.yml:102-103) with only the value-decode column
   * differing from the JSON path. The native `from_avro` door must
   * degrade predictably where spark-avro is absent (this sandbox). */
-class AvroEnvelopeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AvroEnvelopeSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("avro-envelope")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "2")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private val rowSchemaJson =
     """{"type":"record","name":"row","fields":[

@@ -2,12 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Scale-critical streaming behaviors beyond the reference's surface:
   *  - dropDuplicatesWithinWatermark: streaming dedup whose state is
@@ -17,17 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    available input and stops — the batch-over-streaming operational
   *    mode used for backfills.
   */
-class BoundedStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BoundedStateSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("bounded-state")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

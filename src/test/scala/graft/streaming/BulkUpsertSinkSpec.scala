@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The egress façade's contract (the reference ES sink's
   * `key.ignore=false` semantics, README.md:487-493): per batch at most
@@ -13,16 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * out-of-order batches converge instead of regressing; tombstone rows
   * delete their document. Verified against an in-memory mock endpoint
   * that implements exactly the ES `version_type=external_gte` rule. */
-class BulkUpsertSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bulk-upsert-sink")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BulkUpsertSinkSpec extends AnyFunSuite with SharedSpark {
 
   import BulkUpsertSinkSpec._
 

@@ -7,29 +7,24 @@ import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.expr
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream.Leg
 
 /** No process is forked on the checkpoint path: offset and commit logs,
   * source metadata and state-store files are written without Hadoop's
   * shell-outs (`chmod` per created file, `readlink` per rename). Forks
   * are observed with JFR's `jdk.ProcessStart` event, in-process. */
-class CheckpointForkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CheckpointForkSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("checkpoint-forks")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // checkpoints with Spark's default CRC sidecars on (the session
+  // factory turns them off), as any deployment outside the factory runs
+  override def sessionConf = Map(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "true")
 
   /** The command line of every process started while `body` runs. */
   private def forked(body: => Unit): Seq[String] = {

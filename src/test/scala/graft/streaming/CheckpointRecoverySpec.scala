@@ -2,25 +2,22 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Fault tolerance (SURVEY.md §2.6): a stateful streaming query
   * restarted from its checkpoint resumes with its accumulated state —
   * the Spark analog of ksqlDB's RocksDB + changelog-topic recovery. */
-class CheckpointRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
+class CheckpointRecoverySpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("checkpoint-recovery")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // checkpoints with Spark's default CRC sidecars on (the session
+  // factory turns them off), as any deployment outside the factory runs
+  override def sessionConf = Map(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "true")
 
   test("latest-by-key state survives a query restart from checkpoint") {
     import spark.implicits._

@@ -2,25 +2,18 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The disk-backed inter-query hop must be exactly-once per batch id:
   * a crash between the parquet append and the foreachBatch commit
   * makes Spark replay the batch, and a naive append would duplicate
   * every record in the downstream stream. */
-class FileChannelSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FileChannelSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("file-channel")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private val schema = StructType(Seq(
     StructField("k", StringType), StructField("v", LongType)))

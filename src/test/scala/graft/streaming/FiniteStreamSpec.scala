@@ -4,27 +4,18 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.streaming.FiniteStream.{Batches, Leg}
 
 /** The [[FiniteStream.drain]] contract: every leg drains to the end of
   * its input, and afterwards the session and the scratch root hold no
   * running query, temp view or checkpoint — also when a leg fails to
   * start. */
-class FiniteStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("finite-stream")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FiniteStreamSpec extends AnyFunSuite with SharedSpark {
 
   private def checkpoints(): Set[String] =
     scala.util.Using.resource(Files.list(FiniteStream.scratchRoot))(

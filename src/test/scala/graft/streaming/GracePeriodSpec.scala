@@ -2,30 +2,21 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ConnectorDdl
+import graft.{ConnectorDdl, SharedSpark}
 
 /** ksql `GRACE PERIOD` semantics end-to-end: the clause parsed from a
   * WITHIN statement ([[ConnectorDdl.withinGrace]]) becomes the
   * watermark delay of the streaming interval join, and that delay is
   * exactly the late-admission bound — a late row inside the grace
   * still joins, the same row outside a tighter grace is dropped. */
-class GracePeriodSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GracePeriodSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("grace-period")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,23 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The Kafka façade must degrade predictably where the connector jar
   * is absent (this sandbox): availability is detectable up front, and
   * the failure is Spark's standard missing-source error — not a
   * compile-time dependency. When the jar IS present, the same call
   * yields the ChangeFeed column contract unchanged. */
-class KafkaChangeFeedSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("kafka-feed")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KafkaChangeFeedSpec extends AnyFunSuite with SharedSpark {
 
   test("connector absence is detectable and df() fails fast with the standard error") {
     if (KafkaChangeFeed.isAvailable) {

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The golden pipeline THROUGH the production façades: ingress via
   * [[KafkaChangeFeed.df]] against the embedded [[FakeKafka]] broker
@@ -15,17 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and must reproduce the five published documents plus the live
   * insert — the same bar `PipelineGoldenSpec` holds for the offline
   * feeds. */
-class KafkaFacadePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KafkaFacadePipelineSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("kafka-facade-pipeline")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private val run = System.nanoTime()
   private def topic(name: String) = s"facade_${run}_$name"

@@ -2,24 +2,18 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The durable keyed-upsert contract: per-key latest visible state,
   * idempotent under batch replay, snapshot readers never see partial
   * writes. */
-class KeyedParquetSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KeyedParquetSinkSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("keyed-parquet-sink")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   test("streamed upserts produce latest-per-key durable state; replay is idempotent") {
     import spark.implicits._

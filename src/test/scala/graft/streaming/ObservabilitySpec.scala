@@ -2,12 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
 
-import org.apache.spark.sql.{Observation, Row, SparkSession}
+import org.apache.spark.sql.{Observation, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The OPS surface a 100 TB deployment watches: `Dataset.observe`
   * rides metrics on the data plan itself (no second scan — the
@@ -19,17 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact (the observation is the same data the batch processed, not
   * a sample), and per-batch attribution must be correct.
   */
-class ObservabilitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class ObservabilitySpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("observability")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   test("batch observe: exact row count + domain stats with no second scan") {
     val obs = Observation("stats")

@@ -2,10 +2,10 @@ package graft.streaming
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 import PatternMatch.{EventIn, MatchRow, PatternState}
 
@@ -20,17 +20,7 @@ import PatternMatch.{EventIn, MatchRow, PatternState}
   *     micro-batches converges to the single-batch answer, with state
   *     carrying across batches (constant-size, not the history).
   */
-class PatternMatchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pattern-match")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PatternMatchSpec extends AnyFunSuite with SharedSpark {
 
   private def regexModel(seq: String): (Long, Boolean) = {
     val m = java.util.regex.Pattern.compile("v+c*p").matcher(seq)

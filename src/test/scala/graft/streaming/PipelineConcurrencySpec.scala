@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Non-lockstep arrival: the golden specs drive the pipeline with
   * [[Pipeline.step]], which pins the reference demo's by-hand arrival
@@ -19,17 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    drains) either enrichment outcome is legal per order, but
   *    delivery stays exactly-once-per-key and later orders see every
   *    committed dimension update. */
-class PipelineConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-concurrency")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineConcurrencySpec extends AnyFunSuite with SharedSpark {
 
   private def newPipeline(): Pipeline =
     new Pipeline(spark, Files.createTempDirectory("graft-ckpt-").toString)

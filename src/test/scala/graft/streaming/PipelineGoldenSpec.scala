@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** End-to-end golden test: the reference's manual Elasticsearch check
   * (reference README.md:548-637) as a deterministic spec — seed
@@ -13,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must surface exactly one new row. Negative fixtures (FIXTURES.md §2)
   * cover what the reference's data never exercises.
   */
-class PipelineGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pipeline-golden")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineGoldenSpec extends AnyFunSuite with SharedSpark {
 
   private def newPipeline(): Pipeline = {
     val ckpt = Files.createTempDirectory("graft-ckpt-").toString

@@ -2,13 +2,15 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
+
 /** [[ProtobufEnvelope]] — the Protobuf ingress door's guard pattern
   * and the Confluent Protobuf wire-prefix math (magic + schema id +
   * message-indexes varint list). The sandbox ships neither
   * spark-protobuf nor protobuf-java, so the NEGATIVE path (clear
   * fail-fast naming the jar) is the production wiring under test —
   * the same contract AvroEnvelopeSpec pins for its door. */
-class ProtobufEnvelopeSpec extends AnyFunSuite {
+class ProtobufEnvelopeSpec extends AnyFunSuite with SharedSpark {
 
   private def wire(id: Int, indexBytes: Byte*): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(5 + indexBytes.length + 3)
@@ -48,20 +50,15 @@ class ProtobufEnvelopeSpec extends AnyFunSuite {
   }
 
   test("prefix strip is a pure column expression, null-preserving") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").appName("protobuf-envelope")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val payload = wire(7, 0x00)
-      val stripped = Seq(Some(payload), None).toDF("value")
-        .select(ProtobufEnvelope.stripConfluentPrefix(
-          org.apache.spark.sql.functions.col("value"),
-          ProtobufEnvelope.wirePrefixLength(payload)).as("body"))
-        .collect()
-      assert(stripped(0).getAs[Array[Byte]](0).toSeq ==
-        Seq[Byte](0x08, 0x01, 0x42))
-      assert(stripped(1).isNullAt(0)) // tombstone stays a tombstone
-    } finally spark.stop()
+    import spark.implicits._
+    val payload = wire(7, 0x00)
+    val stripped = Seq(Some(payload), None).toDF("value")
+      .select(ProtobufEnvelope.stripConfluentPrefix(
+        org.apache.spark.sql.functions.col("value"),
+        ProtobufEnvelope.wirePrefixLength(payload)).as("body"))
+      .collect()
+    assert(stripped(0).getAs[Array[Byte]](0).toSeq ==
+      Seq[Byte](0x08, 0x01, 0x42))
+    assert(stripped(1).isNullAt(0)) // tombstone stays a tombstone
   }
 }

@@ -2,12 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.GraftSql
+import graft.{GraftSql, SharedSpark}
 
 /** ksql PAUSE / RESUME through [[QueryControl]] and the DDL surface:
   * pausing stops processing with offsets committed, SHOW QUERIES
@@ -15,16 +13,13 @@ import graft.GraftSql
   * and RESUME restarts from the checkpoint delivering everything
   * exactly once (the file sink would show duplicates or gaps
   * otherwise). */
-class QueryControlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QueryControlSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("query-control")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // checkpoints with Spark's default CRC sidecars on (the session
+  // factory turns them off), as any deployment outside the factory runs
+  override def sessionConf = Map(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "true")
 
   test("pause stops, resume restarts from the checkpoint, exactly once") {
     import spark.implicits._

@@ -1,31 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The production state-store configuration (SURVEY.md §4: RocksDB is
   * the 1:1 analog of ksqlDB's table state): a latest-by-key streaming
   * aggregation must produce identical results under
   * RocksDBStateStoreProvider, carrying state across micro-batches. */
-class RocksDBStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RocksDBStateSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("rocksdb-state")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   test("golden pipeline produces the 5 reference rows under RocksDB state") {
     val p = new Pipeline(spark,

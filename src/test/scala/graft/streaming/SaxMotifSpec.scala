@@ -2,10 +2,10 @@ package graft.streaming
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 import SaxMotif.{MotifRow, SaxIn}
 
@@ -13,17 +13,7 @@ import SaxMotif.{MotifRow, SaxIn}
   * equals a direct windowed-symbolization model on any input, state
   * stays within its documented bound, and any in-order micro-batch
   * split converges to the single-batch answer. */
-class SaxMotifSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sax-motif")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SaxMotifSpec extends AnyFunSuite with SharedSpark {
 
   private val (b1, b2, b3) = (100L, 200L, 300L)
 

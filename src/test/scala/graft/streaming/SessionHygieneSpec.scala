@@ -2,10 +2,9 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.queries.Catalog
 
 /** Long-suite session hygiene: the bench runs 130+ queries × 3 in ONE
@@ -16,18 +15,7 @@ import graft.queries.Catalog
   * alphabetically-late queries from exactly this). This spec pins the
   * contract for the streaming query wrappers: after a query function
   * returns, the session is as clean as before it ran. */
-class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("session-hygiene")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SessionHygieneSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

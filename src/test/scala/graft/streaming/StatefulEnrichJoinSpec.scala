@@ -2,27 +2,18 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The exact-parity stateful stream–table join: within-batch offset
   * ordering — the semantic the snapshot-join form cannot provide
   * (SURVEY.md §7 "what is hard" #1). */
-class StatefulEnrichJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stateful-enrich-join")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StatefulEnrichJoinSpec extends AnyFunSuite with SharedSpark {
 
   case class Cust(id: String, name: String, age: java.lang.Integer,
                   __deleted: String, offset: Long)

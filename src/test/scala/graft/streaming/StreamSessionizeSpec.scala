@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Incremental behavior of the stateful sessionizer
   * (`StreamingQueries.sessionizeCore`) that the finite-input oracle
@@ -13,17 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * MID-STREAM — via a proven in-buffer gap or a watermark timeout on an
   * idle group — with the per-user numbering carried across micro-batches,
   * and the state for a fully-closed user must be removed. */
-class StreamSessionizeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamSessionizeSpec extends AnyFunSuite with SharedSpark {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("stream-sessionize")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 import TableAggregate.GroupAgg
 import TableChangelog.Change
@@ -21,17 +21,10 @@ object TableAggregateSpec {
   case class Acct(grp: String, bal: Long)
 }
 
-class TableAggregateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableAggregateSpec extends AnyFunSuite with SharedSpark {
   import TableAggregateSpec._
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("table-aggregate")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def harness() = {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 import TableChangelog.Change
 import TableTableJoin.Joined
@@ -22,17 +22,10 @@ object TableTableJoinSpec {
   case class Ev(etype: String)
 }
 
-class TableTableJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableTableJoinSpec extends AnyFunSuite with SharedSpark {
   import TableTableJoinSpec._
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("table-table-join")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override def sessionConf = Map("spark.sql.shuffle.partitions" -> "2")
 
   private def drain[T](q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     q.processAllAvailable()

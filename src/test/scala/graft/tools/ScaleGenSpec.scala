@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** The three invariants that make a ScaleGen output a real LARGER
   * scale factor rather than a degenerate copy:
@@ -16,17 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     candidate blowup) while within-copy text is preserved;
   *  3. embedding copies are rotations — norm-preserving, never equal
   *     to the original (no trivial exact-dup vectors for ANN). */
-class ScaleGenSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("scalegen-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ScaleGenSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
   private val factor = 3

@@ -1,21 +1,13 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** [[Confs.withConf]] pins a key for its body only and leaves the
   * session as it found it: a key with a value gets it back, a key
   * without one is unset again. */
-class ConfsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[1]")
-    .appName("confs-spec")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ConfsSpec extends AnyFunSuite with SharedSpark {
 
   test("a key with no value and no default is pinned, then unset again") {
     // no value and no default: `conf.get` throws for this key

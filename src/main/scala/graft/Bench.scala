@@ -12,7 +12,7 @@ object Bench {
     // JVM/session warm-up outside the timed region (codegen + scan
     // machinery JIT); queries run in stable name order
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.sources.Tables.region(spark, sfDir).count()
 
     // Inter-run hygiene, OUTSIDE the timed region (Sessions.sweep).
     // The GC nudge is adaptive — ContextCleaner frees localCheckpoint

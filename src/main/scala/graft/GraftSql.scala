@@ -25,12 +25,12 @@ object GraftSql {
     *
     * Idempotent-cheap by design: every catalog query calls init, and
     * harnesses (`Sessions.sweep`) drop all temp views between queries
-    * — so a naive init would re-read ten parquet footers and re-derive
-    * the Aggregator encoders per query (round 9 measured small queries
-    * at 2-4× their real cost from exactly this). Repeat calls re-apply
+    * — so a naive init would rebuild ten relations and re-derive the
+    * Aggregator encoders per query (round 9 measured small queries at
+    * 2-4× their real cost from exactly this). Repeat calls re-apply
     * views from a per-session DataFrame cache (a registry put, no
     * file I/O) and skip each function the registry already binds; the
-    * Aggregator encoders are derived once per JVM. */
+    * encoders and ([[Tables.schema]]) parquet schemas are per JVM. */
   def init(spark: SparkSession, sfDir: String): Unit = {
     initViews(spark, sfDir)
     registerFunctions(spark)
@@ -106,10 +106,10 @@ object GraftSql {
       .map(stmt => stmt -> sql(spark, stmt))
 
   /** Temp views only (natives may already come from the extension).
-    * First call per (session, sfDir) reads the parquet schemas; repeat
-    * calls re-apply the cached DataFrames — so a harness that drops
-    * all temp views between queries costs a registry put here, not
-    * ten footer reads. */
+    * First call per (session, sfDir) builds the ten relations (schemas
+    * from the [[Tables.schema]] memo); repeat calls re-apply the cached
+    * DataFrames — so a harness that drops all temp views between
+    * queries costs a registry put here, not ten relation builds. */
   def initViews(spark: SparkSession, sfDir: String): Unit = {
     val dfs = viewCache.synchronized {
       val perSf = viewCache.computeIfAbsent(spark,

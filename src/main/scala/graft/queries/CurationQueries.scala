@@ -321,9 +321,7 @@ object CurationQueries {
     val bench = gramsOf(Tables.documents(s, d)
         .filter(col("doc_id") % 20 === 0))
       .select(col("g")).distinct()
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val stream = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet")
+    val stream = graft.util.Widen.stream(Tables.stream(s, d, "documents")
       .filter(col("doc_id") % 20 =!= 0))
     val hits = gramsOf(stream)
       .join(broadcast(bench), Seq("g"))

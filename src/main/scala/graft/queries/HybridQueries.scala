@@ -282,9 +282,7 @@ object HybridQueries {
     // lexical leg: per-term (df, 20-bounded sat-pack head) state
     val topk20 = udaf(new graft.functions.TopKByScoreLong(
       RetrievalQueries.ListK))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
         col("w"))
@@ -312,11 +310,7 @@ object HybridQueries {
     try {
       SimilarityQueries.centroidArrays(s, d)
         .write.mode("overwrite").parquet(layout.centroids)
-      val eschema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val estream = s.readStream.schema(eschema)
-        .parquet(s"$d/{embeddings}.parquet")
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("emb"), col("label"))
+      val estream = SimilarityQueries.embStream(s, d)
       // the two ingest legs are fully independent until the finalize
       // (separate sources, separate sinks): two legs of one drain
       FiniteStream.drain(
@@ -570,9 +564,7 @@ object HybridQueries {
     val cand = hybridRrf(s, d).select(col("term"), col("doc_id"))
       .localCheckpoint()
       .withColumn("qm", qmExpr)
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = graft.util.Widen.stream(
-      s.readStream.schema(raw).parquet(s"$d/{documents}.parquet"))
+    val docs = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
     val scored = docs
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .join(broadcast(cand), Seq("doc_id"))
@@ -687,9 +679,7 @@ object HybridQueries {
     * relation ⇒ the SAME oracle verifies the composition. */
   def streamMaxsimCorpus(s: SparkSession, d: String): DataFrame = {
     val qt = qtokBuckets(qsel(s, d)).localCheckpoint()
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = graft.util.Widen.stream(
-      s.readStream.schema(raw).parquet(s"$d/{documents}.parquet"))
+    val docs = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
     val hits = docTokBuckets(docs)
       .join(broadcast(qt), Seq("bucket"))
       .select(col("term"), col("doc_id"))

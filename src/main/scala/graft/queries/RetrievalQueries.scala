@@ -211,9 +211,7 @@ object RetrievalQueries {
     * order, ties included — same oracle as the batch form. */
   def streamBm25TopK(s: SparkSession, d: String): DataFrame = {
     val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
         col("w"))
@@ -387,9 +385,7 @@ object RetrievalQueries {
         expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
       .collect().head // bounded: ONE row of corpus stats
     val (nDocs, dAvg) = (statsRow.getLong(0), statsRow.getLong(1))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), size(col("w")).cast(LongType).as("dl"),
         explode(array_distinct(col("w"))).as("term"), col("w"))
@@ -658,9 +654,7 @@ object RetrievalQueries {
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
       .collect().head.getLong(0) // bounded: ONE corpus stat
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), size(col("w")).cast(LongType).as("dl"),
         explode(array_distinct(col("w"))).as("term"), col("w"))
@@ -730,9 +724,7 @@ object RetrievalQueries {
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
       .collect().head.getLong(0) // bounded: ONE corpus stat
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), size(col("w")).cast(LongType).as("dl"),
         explode(array_distinct(col("w"))).as("term"), col("w"))
@@ -1231,10 +1223,8 @@ object RetrievalQueries {
       .select(col("qid"), col("bigram"),
         element_at(split(col("bigram"), " "), 1).as("t1"),
         element_at(split(col("bigram"), " "), 2).as("t2"))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
     val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    val hits = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val hits = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
       .join(broadcast(q)) // stream-static: |phrases| = 5 rows
@@ -1281,10 +1271,8 @@ object RetrievalQueries {
     val qp = q.groupBy(col("qid"))
       .agg(min(when(col("r") % 2 === 1, col("term"))).as("t1"),
         min(when(col("r") % 2 === 0, col("term"))).as("t2"))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
     val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    val hits = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val hits = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .join(broadcast(qp)) // stream-static: |queries| = 5 rows
       .withColumn("n_close", expr(
@@ -1464,9 +1452,7 @@ object RetrievalQueries {
     * stream_hybrid_rerank. Shares `prfExpandSql`. */
   def streamPrfExpand(s: SparkSession, d: String): DataFrame = {
     val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
         col("w"))
@@ -1618,9 +1604,7 @@ object RetrievalQueries {
     * at-rest postings under the broadcast 10-row query relation (the
     * stream_prf_expand finalize discipline). Same oracle. */
   def streamQlDirichlet(s: SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = graft.util.Widen.stream(s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet"))
+    val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
         col("w"))

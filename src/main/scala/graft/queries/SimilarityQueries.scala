@@ -231,9 +231,7 @@ object SimilarityQueries {
       .filter(col("vec_id") % 20 === 0)
       .select(bucketF.as("bbucket"), col("embedding").as("bemb"))
       .localCheckpoint()
-    val raw = s.read.parquet(s"$d/embeddings.parquet").schema
-    val train = s.readStream.schema(raw)
-      .parquet(s"$d/{embeddings}.parquet")
+    val train = Tables.stream(s, d, "embeddings")
       .filter(col("vec_id") % 20 =!= 0)
       .withColumn("bucket", bucketF)
     val agg = train
@@ -803,15 +801,11 @@ object SimilarityQueries {
     * quantizer, the quantizer retrains on a drift cadence
     * ([[kmeansStep]]). */
   /** The embeddings table as a stream — shared by every streaming
-    * index path so the source handling (schema pin, single-file glob,
-    * array cast) has one spelling. */
-  private def embStream(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    s.readStream.schema(schema)
-      .parquet(s"$d/{embeddings}.parquet")
+    * index path so the source handling (array cast) has one spelling. */
+  private[queries] def embStream(s: SparkSession, d: String): DataFrame =
+    Tables.stream(s, d, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"),
         col("label"))
-  }
 
   /** Drain a foreachBatch ingest over [[embStream]]. */
   private def runIngest(s: SparkSession, d: String)(

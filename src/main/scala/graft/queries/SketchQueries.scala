@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   StructField, StructType}
 
 import graft.functions.{KmvSketchAgg, Md5Key}
+import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
 
@@ -36,7 +37,7 @@ object SketchQueries {
   private val EstNum: Long = (K - 1).toLong * 4294967296L
 
   private def tokenHashes(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.documents(s, d)
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .select(col("source"), Md5Key.column(col("tok")).as("h"))
@@ -160,7 +161,7 @@ object SketchQueries {
   def kmvRollup(s: SparkSession, d: String): DataFrame = {
     val kmv = udaf(new KmvSketchAgg(K))
     val kmvMerge = udaf(new graft.functions.KmvSketchMergeAgg(K))
-    val hashes = s.read.parquet(s"$d/documents.parquet")
+    val hashes = Tables.documents(s, d)
       .select(col("source"), col("lang"),
         explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
@@ -310,9 +311,7 @@ object SketchQueries {
     * sketch existing is the point). */
   def streamKmvDistinct(s: SparkSession, d: String): DataFrame = {
     val kmv = udaf(new KmvSketchAgg(K))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val toks = s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet")
+    val toks = Tables.stream(s, d, "documents")
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .select(col("source"), Md5Key.column(col("tok")).as("h"))
@@ -380,7 +379,7 @@ object SketchQueries {
     * gate still hash-verifies (both engines produce zero rows). */
   def mgTopK(s: SparkSession, d: String): DataFrame = {
     val mg = udaf(new graft.functions.MgSketchAgg(MgK))
-    def words = s.read.parquet(s"$d/documents.parquet")
+    def words = Tables.documents(s, d)
       .select(col("source"),
         explode(graft.functions.TextShingles.tokens(col("text"))).as("term"))
     val sk = words.groupBy(col("source"))
@@ -418,9 +417,7 @@ object SketchQueries {
     * same oracle as the batch form. */
   def streamMgTopK(s: SparkSession, d: String): DataFrame = {
     val mg = udaf(new graft.functions.MgSketchAgg(MgK))
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val words = s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet")
+    val words = Tables.stream(s, d, "documents")
       .select(col("source"),
         explode(graft.functions.TextShingles.tokens(col("text"))).as("term"))
     val agg = words.groupBy(col("source"))
@@ -434,7 +431,7 @@ object SketchQueries {
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val cand = store.df(s).select(col("source"), col("n_total"),
       explode(map_keys(col("sk"))).as("term"))
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.documents(s, d)
       .select(col("source"),
         explode(graft.functions.TextShingles.tokens(col("text"))).as("term"))
       .join(broadcast(cand), Seq("source", "term"))
@@ -459,7 +456,7 @@ object SketchQueries {
   def mgRollup(s: SparkSession, d: String): DataFrame = {
     val mg = udaf(new graft.functions.MgSketchAgg(MgK))
     val mgMerge = udaf(new graft.functions.MgSketchMergeAgg(MgK))
-    def words = s.read.parquet(s"$d/documents.parquet")
+    def words = Tables.documents(s, d)
       .select(col("source"), col("lang"),
         explode(graft.functions.TextShingles.tokens(col("text"))).as("term"))
     val grain = words.groupBy(col("source"), col("lang"))

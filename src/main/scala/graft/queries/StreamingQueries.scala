@@ -28,11 +28,7 @@ object StreamingQueries {
     * order-insensitive consumers opt in. */
   private[queries] def eventsStream(s: SparkSession, d: String,
                                     wide: Boolean = false): DataFrame = {
-    val raw = s.read.parquet(s"$d/events.parquet").schema
-    // testdata tables are single files; the file-stream source needs a
-    // directory basePath, so address the file through a glob
-    val src = Tables.normalizeEventsTs(
-      s.readStream.schema(raw).parquet(s"$d/{events}.parquet"))
+    val src = Tables.normalizeEventsTs(Tables.stream(s, d, "events"))
     if (wide) graft.util.Widen.stream(src) else src
   }
 
@@ -411,11 +407,8 @@ object StreamingQueries {
     * (ShuffledArrivalSpec) without changing production defaults. */
   private[queries] def docStream(s: SparkSession, d: String,
                                  wide: Boolean = false): DataFrame = {
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val rd = s.readStream.schema(raw)
-    val src = s.conf.getOption("graft.stream.maxFilesPerTrigger")
-      .fold(rd)(v => rd.option("maxFilesPerTrigger", v))
-      .parquet(s"$d/{documents}.parquet")
+    val src = Tables.stream(s, d, "documents",
+      s.conf.getOption("graft.stream.maxFilesPerTrigger"))
     // the widen sits between the source and the per-row text
     // derivations (tokenize/shingle/md5 grids — the heavy part of
     // every doc-stream twin); see eventsStream for the contract
@@ -616,8 +609,7 @@ object StreamingQueries {
     * itself need unbounded state). Same totals, scale-appropriate
     * shapes. */
   def streamBpePairs(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = s.readStream.schema(schema).parquet(s"$d/{documents}.parquet")
+    val docs = Tables.stream(s, d, "documents")
     val pairs = docs
       .select(explode(graft.functions.TextShingles.tokens(col("text")))
         .as("word"))
@@ -649,17 +641,17 @@ object StreamingQueries {
     * summaries of ≤64 counters per source, with the exact pass
     * confined to the ≤64 candidates at gate time. */
   def streamHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    def terms = s.readStream.schema(schema).parquet(s"$d/{documents}.parquet")
+    def terms = Tables.stream(s, d, "documents")
       .select(explode(graft.functions.TextShingles.tokens(col("text")))
         .as("term"))
     // exact counts and the CMS sketch are independent aggregations of
-    // the same source: two legs of one drain
-    val Seq(counts, sk) = FiniteStream.drain(
+    // one source; the 1.6 MB sketch returns as a batch result (a memory
+    // table would ship it inside the task that detaches it)
+    @volatile var skBytes: Array[Byte] = null
+    val Seq(counts) = FiniteStream.drain(
       Leg(terms.groupBy(col("term")).agg(count(lit(1)).as("n")), "complete"),
-      Leg(terms.agg(expr("count_min_sketch(term, 0.0001d, 0.999d, 42)")
-        .as("sk")), "complete"))
-    val skBytes = sk.collect().head.getAs[Array[Byte]](0)
+      Leg(terms.agg(expr("count_min_sketch(term, 0.0001d, 0.999d, 42)").as("sk")),
+        "complete", sink = Batches((b, _) => skBytes = b.head.getAs[Array[Byte]](0))))
     val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(skBytes)
     val total = counts.agg(sum(col("n"))).collect().head.getLong(0)
     val slack = math.ceil(0.0001 * total).toLong
@@ -682,8 +674,7 @@ object StreamingQueries {
     * mode as batches arrive. The winners join back to the static
     * table for their attributes post-materialization. */
   def streamWeightedSample(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = s.readStream.schema(schema).parquet(s"$d/{documents}.parquet")
+    val docs = Tables.stream(s, d, "documents")
     val M = 1L << 20
     val u = (graft.functions.Md5Key.column(col("doc_id").cast(StringType))
       % M + 1).cast(DoubleType) / (M + 1).toDouble
@@ -724,9 +715,7 @@ object StreamingQueries {
       .orderBy(col("n").desc, col("term").asc)
       .limit(VocabK)
       .select(col("term"), lit(1).as("__in_vocab"))
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = graft.util.Widen.stream(
-      s.readStream.schema(schema).parquet(s"$d/{documents}.parquet"))
+    val docs = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
     val agg = docs
       .select(col("source"),
         explode(graft.functions.TextShingles.tokens(col("text")))
@@ -748,8 +737,7 @@ object StreamingQueries {
     * the cheapest possible streaming operator shape — and the batch
     * oracle applies unchanged. */
   def streamClassifierScore(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = s.readStream.schema(schema).parquet(s"$d/{documents}.parquet")
+    val docs = Tables.stream(s, d, "documents")
     runToTable(TextQueries.classifierProjection(docs), "append")
   }
 
@@ -1210,9 +1198,7 @@ object StreamingQueries {
     * window. Finite input ⇒ equals the batch curate_lang_drift
     * oracle. */
   def streamLangDrift(s: SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val docs = s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet")
+    val docs = Tables.stream(s, d, "documents")
       .select(col("source"), col("lang"))
     val agg = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("ct"))
@@ -1506,13 +1492,9 @@ object StreamingQueries {
     * stream. Verified by a per-source rollup against a batch UNION ALL
     * oracle. */
   def streamInsertInto(s: SparkSession, d: String): DataFrame = {
-    def fileStream(name: String): DataFrame = {
-      val raw = s.read.parquet(s"$d/$name.parquet").schema
-      s.readStream.schema(raw).parquet(s"$d/{$name}.parquet")
-    }
-    val orders = fileStream("orders")
+    val orders = Tables.stream(s, d, "orders")
       .select(lit("orders").as("src"), col("o_orderkey").as("id"))
-    val lineitem = fileStream("lineitem")
+    val lineitem = Tables.stream(s, d, "lineitem")
       .select(lit("lineitem").as("src"), col("l_orderkey").as("id"))
     val agg = orders.unionByName(lineitem)
       .groupBy(col("src"))
@@ -1543,17 +1525,13 @@ object StreamingQueries {
                                  projectLineKey: Boolean = false): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
-    def fileStream(name: String): DataFrame = {
-      val raw = s.read.parquet(s"$d/$name.parquet").schema
-      s.readStream.schema(raw).parquet(s"$d/{$name}.parquet")
-    }
     val flushTs = java.sql.Timestamp.valueOf("2099-01-01 00:00:00")
     // parquet timestamps infer as NTZ; watermarks need TIMESTAMP —
     // identical wall values under the UTC session
-    var o = fileStream("orders")
+    var o = Tables.stream(s, d, "orders")
       .select(col("o_orderkey"),
         col("o_orderdate").cast(TimestampType).as("o_orderdate"))
-    var l = fileStream("lineitem")
+    var l = Tables.stream(s, d, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_shipdate").cast(TimestampType).as("l_shipdate"))
     if (withFlush) {
@@ -1738,7 +1716,7 @@ object StreamingQueries {
     // bounded dedup; the horizon must cover the id span on THIS data
     // or eviction would make the finite-input result batch-dependent
     val horizonDays = 60L
-    val schema = s.read.parquet(schemaFrom).schema
+    val schema = Tables.schema(s, schemaFrom)
     // validated against the GLOB — the data the stream actually reads
     // (schemaFrom only pins the schema; the spec passes different
     // paths for the two)

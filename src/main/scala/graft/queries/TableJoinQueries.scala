@@ -281,8 +281,7 @@ object TableJoinQueries {
   private def ordersStatusChangelog(s: SparkSession,
                                     d: String): Dataset[(Long, Long, Option[OrdStatus])] = {
     import s.implicits._
-    val raw = s.read.parquet(s"$d/orders.parquet").schema
-    s.readStream.schema(raw).parquet(s"$d/{orders}.parquet")
+    Tables.stream(s, d, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         struct(col("o_orderstatus").as("status"),
           round(col("o_totalprice") * 100).cast("long").as("cents")).as("v"))
@@ -296,8 +295,7 @@ object TableJoinQueries {
   private def ordersChangelog(s: SparkSession,
                               d: String): Dataset[(Long, Long, Option[OrdInfo])] = {
     import s.implicits._
-    val raw = s.read.parquet(s"$d/orders.parquet").schema
-    s.readStream.schema(raw).parquet(s"$d/{orders}.parquet")
+    Tables.stream(s, d, "orders")
       .select(col("o_custkey"), col("o_orderkey"),
         struct(col("o_totalprice").as("last_price"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("last_order_date"))
@@ -406,15 +404,13 @@ object TableJoinQueries {
   private def streamFk(s: SparkSession, d: String, joinType: String,
                        natFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
     import s.implicits._
-    val rawC = s.read.parquet(s"$d/customer.parquet").schema
-    val custDs = s.readStream.schema(rawC).parquet(s"$d/{customer}.parquet")
+    val custDs = Tables.stream(s, d, "customer")
       .select(col("c_custkey"), col("c_custkey").as("off"),
         struct(col("c_name").as("cust_name"),
           col("c_nationkey").cast("long").as("nation_key")).as("v"))
       .as[(Long, Long, CustInfo)]
       .map { case (k, off, v) => (k, off, Option(v)) }
-    val rawN = s.read.parquet(s"$d/nation.parquet").schema
-    val natRaw = s.readStream.schema(rawN).parquet(s"$d/{nation}.parquet")
+    val natRaw = Tables.stream(s, d, "nation")
     val natDs = natFilter.fold(natRaw)(natRaw.filter)
       .select(col("n_nationkey").cast("long"),
         col("n_nationkey").cast("long").as("off"),

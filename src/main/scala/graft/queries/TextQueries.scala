@@ -281,9 +281,7 @@ object TextQueries {
     * exactly as the batch twin. Same oracle. */
   def streamDocKeyterms(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val raw = s.read.parquet(s"$d/documents.parquet").schema
-    val postings = s.readStream.schema(raw)
-      .parquet(s"$d/{documents}.parquet")
+    val postings = Tables.stream(s, d, "documents")
       .select(col("doc_id"), explode(array_distinct(toks)).as("term"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))

@@ -93,7 +93,9 @@ object LocalCheckpointFileManager {
   def start(spark: SparkSession)(start: => StreamingQuery): StreamingQuery =
     graft.util.Confs.withConf(spark, ConfKey,
         classOf[LocalCheckpointFileManager].getName) {
-      val q = start
+      // built with AQE off: Spark warns about it at start, and the query's
+      // cloned session keeps it off (Spark forces that on stateful ones)
+      val q = graft.util.Confs.withConf(spark, "spark.sql.adaptive.enabled", "false")(start)
       q match {
         case w: StreamingQueryWrapper =>
           // a query that dies initializing reports it itself; past the

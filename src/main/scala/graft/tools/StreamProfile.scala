@@ -14,7 +14,7 @@ object StreamProfile {
     val spark = graft.util.Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    graft.sources.Tables.region(spark, sfDir).count()
 
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, Logger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LogCapture.logged
 
 /** Every [[FunctionTable]] entry resolves with no manual registration
   * on a session built with [[GraftExtensions]], and after
@@ -22,22 +20,6 @@ class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
           if !registry.lookupFunction(id).exists(_.getClassName == info.getClassName) =>
         id.funcName
     }
-  }
-
-  /** Messages logged while `body` runs. */
-  private def logged(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new AbstractAppender("capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        seen.add(e.getMessage.getFormattedMessage); ()
-      }
-    }
-    appender.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(appender)
-    try body finally root.removeAppender(appender)
-    seen.toArray(Array.empty[String]).toSeq
   }
 
   test("cosine_sim resolves in SQL via spark.sql.extensions") {

@@ -73,4 +73,12 @@ class FiniteStreamSpec extends AnyFunSuite with SharedSpark {
     }
     assertClean(viewsBefore, ckptsBefore)
   }
+
+  test("a drain logs no AQE-disabled warning and leaves the session's AQE on") {
+    val aqe = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(aqe) == "true")
+    val lines = graft.LogCapture.logged(FiniteStream.drain(Leg(ints(1, 2), "append")))
+    assert(!lines.exists(_.contains(s"$aqe is not supported in streaming")), lines)
+    assert(spark.conf.get(aqe) == "true")
+  }
 }

@@ -975,6 +975,36 @@ object ConnectorDdl {
               .quoteReplacement(m.matched)))
     }
 
+  /** Index of the bracket that closes the `(` or `[` at `open` in
+    * masked text (a depth scan, so brackets nest), looking no further
+    * than `end`; -1 when it stays open. */
+  private def closingBracket(masked: String, open: Int, end: Int): Int = {
+    val oc = masked.charAt(open)
+    val cc = if (oc == '[') ']' else ')'
+    var d = 0
+    var i = open
+    while (i < end) {
+      val ch = masked.charAt(i)
+      if (ch == oc) d += 1
+      else if (ch == cc) { d -= 1; if (d == 0) return i }
+      i += 1
+    }
+    -1
+  }
+
+  /** [[closingBracket]] over the whole text; a bracket left open is an
+    * error naming `statement`. */
+  private def requireClose(masked: String, open: Int,
+                           statement: String): Int = {
+    val close = closingBracket(masked, open, masked.length)
+    if (close < 0) {
+      val pair = if (masked.charAt(open) == '[') "[]" else "()"
+      throw new IllegalArgumentException(
+        s"unbalanced $pair in: ${statement.take(80)}")
+    }
+    close
+  }
+
   /** ksql literal-constructor syntax → Spark spellings, none of which
     * Spark's parser accepts natively:
     *
@@ -990,18 +1020,6 @@ object ConnectorDdl {
     * later passes; STRUCT/MAP spans WITHOUT `:=` are left for Spark's
     * own `struct`/`map` functions, which ARE those spellings. */
   private[graft] def rewriteKsqlConstructors(statement: String): String = {
-    def matchSpan(masked: String, open: Int, oc: Char, cc: Char): Int = {
-      var d = 0
-      var i = open
-      while (i < masked.length) {
-        val ch = masked.charAt(i)
-        if (ch == oc) d += 1
-        else if (ch == cc) { d -= 1; if (d == 0) return i }
-        i += 1
-      }
-      throw new IllegalArgumentException(
-        s"unbalanced $oc$cc in: ${statement.take(80)}")
-    }
     // indices (relative to span start) of depth-1 occurrences of `t`
     def depth1(masked: String, from: Int, to: Int,
                t: String): Seq[Int] = {
@@ -1026,7 +1044,7 @@ object ConnectorDdl {
       val masked = maskLiterals(s)
       """(?i)\bARRAY\s*\[""".r.findFirstMatchIn(masked) match {
         case Some(m) =>
-          val close = matchSpan(masked, m.end - 1, '[', ']')
+          val close = requireClose(masked, m.end - 1, statement)
           s = s.substring(0, m.start) + "array(" +
             s.substring(m.end, close) + ")" + s.substring(close + 1)
           changed = true
@@ -1036,7 +1054,7 @@ object ConnectorDdl {
         // first STRUCT/MAP whose own argument level carries `:=`
         val hit = """(?i)\b(STRUCT|MAP)\s*\(""".r.findAllMatchIn(masked)
           .map { m =>
-            val close = matchSpan(masked, m.end - 1, '(', ')')
+            val close = requireClose(masked, m.end - 1, statement)
             (m, close, depth1(masked, m.end - 1, close, ":="))
           }
           .find(_._3.nonEmpty)
@@ -1078,14 +1096,25 @@ object ConnectorDdl {
     s
   }
 
-  /** ksql function names whose Spark builtin namesake has DIFFERENT
-    * semantics (ksql MASK masks non-alphanumerics to '-'; ksql SPLIT
-    * takes a literal delimiter, Spark a regex; ksql REGEXP_EXTRACT
-    * puts the pattern first): map them to the `ksql_`-prefixed compat
-    * registrations ([[graft.functions.KsqlCompat]]) so ksql
-    * statements run verbatim through [[GraftSql.sql]]. Guarded by
-    * [[outsideLiterals]]; `MASK_KEEP_LEFT` & co don't match (the
-    * rewrite requires `(` right after the bare name). */
+  /** The ksql dialect's function renames: every `ksql_<name>` entry of
+    * [[FunctionTable]] is a twin of the Spark builtin `<name>`, whose
+    * semantics differ ([[graft.functions.KsqlCompat]] says how, per
+    * twin); a bare `<name>(` becomes `ksql_<name>(`. An aggregate
+    * `FILTER (WHERE …)` clause is not ksql's lambda FILTER and stays. */
+  private lazy val ksqlRenameRe = {
+    val bare = FunctionTable.entries.map(_._1.funcName)
+      .filter(_.startsWith("ksql_")).map(_.stripPrefix("ksql_"))
+    raw"""(?i)\b(${bare.mkString("|")})\s*\((?!\s*WHERE\b)""".r
+  }
+
+  /** The ksql dialect of [[GraftSql.sql]] as text rewrites, so ksql
+    * statements run verbatim: literal constructors, `->` dereference,
+    * `=>` lambdas, time-unit quoting, the function renames
+    * ([[ksqlRenameRe]]: the rename set is FunctionTable's `ksql_`
+    * twins), subscripts and multi-EXPLODE. Every pass is guarded by
+    * [[outsideLiterals]] or runs on masked text; `MASK_KEEP_LEFT` &
+    * co don't match (a rename requires `(` right after the bare
+    * name). */
   private[graft] def rewriteKsqlFunctionNames(statement0: String): String = {
     // constructor syntax first (positional, paren-matched on masked
     // text) — the segment-wise rewrites below then see plain function
@@ -1111,51 +1140,13 @@ object ConnectorDdl {
       seg = """[ \t]*=>[ \t]*""".r.replaceAllIn(seg, " -> ")
       seg = """\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)\s*->""".r
         .replaceAllIn(seg, m => s"${m.group(1)} ->")
-      // the invocation functions and the codec/sort scalars whose
-      // Spark namesake is array-only or semantically different
-      // (KsqlCompatExt): bare name followed by `(`. Aggregate
-      // `FILTER (WHERE …)` clauses are NOT ksql's lambda filter and
-      // stay untouched (negative lookahead).
-      seg = """(?i)\bTRANSFORM\s*\(""".r.replaceAllIn(seg, "ksql_transform(")
-      seg = """(?i)\bFILTER\s*\(\s*(?!WHERE\b)""".r
-        .replaceAllIn(seg, "ksql_filter(")
-      seg = """(?i)\bREDUCE\s*\(""".r.replaceAllIn(seg, "ksql_reduce(")
-      seg = """(?i)\bARRAY_SORT\s*\(""".r.replaceAllIn(seg, "ksql_array_sort(")
-      seg = """(?i)\bENCODE\s*\(""".r.replaceAllIn(seg, "ksql_encode(")
-      // ksql SLICE's third arg is an inclusive end index; Spark's a
-      // length
-      seg = """(?i)\bSLICE\s*\(""".r.replaceAllIn(seg, "ksql_slice(")
-      // ksql CHR decodes a full UTF8 codepoint; Spark's chr is mod-256
-      // ASCII. ksql INSTR takes Oracle-style position/occurrence args
-      // Spark's 2-arg namesake lacks.
-      seg = """(?i)\bCHR\s*\(""".r.replaceAllIn(seg, "ksql_chr(")
-      seg = """(?i)\bINSTR\s*\(""".r.replaceAllIn(seg, "ksql_instr(")
-      // ksql ROUND(v) yields BIGINT; Spark's keeps the input type
-      seg = """(?i)\bROUND\s*\(""".r.replaceAllIn(seg, "ksql_round(")
-      // ksql TRUNC is the NUMERIC toward-zero truncation; Spark's
-      // trunc is the date one (date_trunc is underscore-prefixed and
-      // unaffected by the \b boundary)
-      seg = """(?i)\bTRUNC\s*\(""".r.replaceAllIn(seg, "ksql_trunc(")
-      // ksql REGEXP_EXTRACT_ALL is (pattern, input[, group]) — the
-      // `(` must follow the bare name, so this never collides with
-      // the plain REGEXP_EXTRACT rewrite below
-      seg = """(?i)\bREGEXP_EXTRACT_ALL\s*\(""".r
-        .replaceAllIn(seg, "ksql_regexp_extract_all(")
-      // time functions whose Spark namesake differs: ksql
-      // FROM_UNIXTIME/UNIX_TIMESTAMP are MILLISECOND-based (Spark's
-      // are seconds, and FROM_UNIXTIME returns a formatted string);
-      // ksql DATEADD/DATESUB are 3-arg unit forms (Spark's dateadd is
-      // the 2-arg day add)
-      seg = """(?i)\bFROM_UNIXTIME\s*\(""".r
-        .replaceAllIn(seg, "ksql_from_unixtime(")
-      seg = """(?i)\bUNIX_TIMESTAMP\s*\(""".r
-        .replaceAllIn(seg, "ksql_unix_timestamp(")
       // ksql time units are bare identifiers (DATEADD(DAYS, 5, d));
       // an unresolvable bare column would fail analysis before the
       // function builder ever runs, so the rewrite quotes the unit.
       // TIMESTAMPADD exists in Spark's parser grammar but only with
       // SINGULAR unit tokens (HOUR, not ksql's HOURS) — the quoting
       // rewrite routes both spellings through the compat builders.
+      // This is syntax, not a rename, so it runs first.
       seg = """(?i)\bTIMESTAMPADD\s*\(\s*([A-Za-z]+)\s*,""".r
         .replaceAllIn(seg, m => s"ksql_timestampadd('${m.group(1)}',")
       seg = """(?i)\bDATEADD\s*\(\s*([A-Za-z]+)\s*,""".r
@@ -1164,13 +1155,7 @@ object ConnectorDdl {
         .replaceAllIn(seg, m => s"ksql_datesub('${m.group(1)}',")
       seg = """(?i)\bTIMESTAMPSUB\s*\(\s*([A-Za-z]+)\s*,""".r
         .replaceAllIn(seg, m => s"timestampsub('${m.group(1)}',")
-      seg = """(?i)\bDATEADD\s*\(""".r.replaceAllIn(seg, "ksql_dateadd(")
-      seg = """(?i)\bDATESUB\s*\(""".r.replaceAllIn(seg, "ksql_datesub(")
-      """(?i)\bREGEXP_EXTRACT\s*\(""".r.replaceAllIn(
-        """(?i)\bSPLIT\s*\(""".r.replaceAllIn(
-          """(?i)\bMASK\s*\(""".r.replaceAllIn(seg, "ksql_mask("),
-          "ksql_split("),
-        "ksql_regexp_extract(")
+      ksqlRenameRe.replaceAllIn(seg, m => s"ksql_${m.group(1).toLowerCase}(")
     }
     // subscripts next-to-last: struct dereferences are dots by now, so
     // `s->arr[1]` wraps the whole path; ARRAY[..] constructors are
@@ -1231,17 +1216,7 @@ object ConnectorDdl {
       val m = explodeHeadRe.findFirstMatchIn(masked.substring(a, b))
       m.flatMap { h =>
         val open = a + h.end - 1
-        var dd = 0
-        var j = open
-        var close = -1
-        while (j < b && close < 0) {
-          masked.charAt(j) match {
-            case '(' => dd += 1
-            case ')' => dd -= 1; if (dd == 0) close = j
-            case _ =>
-          }
-          j += 1
-        }
+        val close = closingBracket(masked, open, b)
         if (close < 0) None
         else aliasTailRe.findFirstMatchIn(masked.substring(close + 1, b))
           .map(t => (statement.substring(open + 1, close),
@@ -1322,20 +1297,7 @@ object ConnectorDdl {
       val masked = maskKeepQuotedIdents(s)
       subscriptOpenRe.findFirstMatchIn(masked).foreach { m =>
         val open = m.end - 1
-        // matching close bracket (depth scan; nestable)
-        var d = 0
-        var i = open
-        var close = -1
-        while (i < masked.length && close < 0) {
-          masked.charAt(i) match {
-            case '[' => d += 1
-            case ']' => d -= 1; if (d == 0) close = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (close < 0) throw new IllegalArgumentException(
-          s"unbalanced [] in: ${statement.take(80)}")
+        val close = requireClose(masked, open, statement)
         // backward scan from just before `[` for the base primary
         def skipWsBack(j0: Int): Int = {
           var j = j0
@@ -1391,6 +1353,14 @@ object ConnectorDdl {
     }
     s
   }
+
+  /** The ksql rewrites every select body goes through (EXPLAIN,
+    * INSERT … SELECT, CSAS), short of the WITHIN translation: the
+    * dialect ([[rewriteKsqlFunctionNames]]), pseudo-columns,
+    * LATEST_BY_OFFSET, then the WINDOW clause. */
+  private def rewriteKsqlSelect(spark: SparkSession, select: String): String =
+    rewriteWindowClause(spark, rewriteLatestByOffset(rewritePseudoColumns(
+      rewriteKsqlFunctionNames(select))))
 
   /** ksql's remaining pseudo-columns (0.28: ROWPARTITION, ROWOFFSET —
     * ROWTIME resolves case-insensitively against the propagated
@@ -1766,9 +1736,7 @@ object ConnectorDdl {
               spark.table(bare).queryExecution.explainString(FormattedMode)))
             .toDF("name", "kind", "statement", "plan")
         } else {
-          val rewritten = rewriteWithin(spark, rewriteWindowClause(spark,
-            rewriteLatestByOffset(rewritePseudoColumns(
-              rewriteKsqlFunctionNames(target)))))
+          val rewritten = rewriteWithin(spark, rewriteKsqlSelect(spark, target))
           Seq(("", "QUERY", rewritten,
               spark.sql(rewritten).queryExecution.explainString(FormattedMode)))
             .toDF("name", "kind", "statement", "plan")
@@ -1855,10 +1823,8 @@ object ConnectorDdl {
             s"cannot INSERT INTO $name: no such stream/table")
         } else {
           val target = spark.table(name)
-          val plain = rewriteWindowClause(spark,
-            rewriteLatestByOffset(rewritePseudoColumns(
-              rewriteKsqlFunctionNames(selectBody))))
-          val df = spark.sql(rewriteWithin(spark, plain))
+          val df = spark.sql(
+            rewriteWithin(spark, rewriteKsqlSelect(spark, selectBody)))
           val missing = target.columns.filterNot(c =>
             df.columns.exists(_.equalsIgnoreCase(c)))
           require(missing.isEmpty,
@@ -1968,9 +1934,7 @@ object ConnectorDdl {
         // the already-mentions-rowtime guard); it is best-effort — a
         // select shape the heuristic mis-judges (e.g. aggregate-only
         // without GROUP BY) falls back to the untouched statement
-        val plain = rewriteWindowClause(spark,
-          rewriteLatestByOffset(rewritePseudoColumns(
-            rewriteKsqlFunctionNames(selectBody))))
+        val plain = rewriteKsqlSelect(spark, selectBody)
         val noProp = rewriteWithin(spark, plain)
         val withProp = rewriteWithin(spark, propagateRowtime(spark, plain))
         val (df0, chosenSql) =

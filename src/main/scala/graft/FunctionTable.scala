@@ -20,7 +20,8 @@ import graft.functions._
   *    extension;
   *  - [[GraftSql.registerFunctions]] installs it on a session built
   *    without;
-  *  - `SHOW FUNCTIONS`, `DESCRIBE FUNCTION` and the rowtime propagation
+  *  - `SHOW FUNCTIONS`, `DESCRIBE FUNCTION`, the ksql dialect's
+  *    function renames (every `ksql_` twin) and the rowtime propagation
   *    of [[ConnectorDdl]] read it.
   *
   * Each entry's `ExpressionInfo` carries its usage and its group

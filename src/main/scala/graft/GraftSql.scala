@@ -26,8 +26,8 @@ object GraftSql {
     * Idempotent-cheap by design: every catalog query calls init, and
     * harnesses (`Sessions.sweep`) drop all temp views between queries
     * — so a naive init would rebuild ten relations and re-derive the
-    * Aggregator encoders per query (round 9 measured small queries at
-    * 2-4× their real cost from exactly this). Repeat calls re-apply
+    * Aggregator encoders per query (small queries measured at 2-4×
+    * their real cost from exactly this). Repeat calls re-apply
     * views from a per-session DataFrame cache (a registry put, no
     * file I/O) and skip each function the registry already binds; the
     * encoders and ([[Tables.schema]]) parquet schemas are per JVM. */
@@ -39,7 +39,7 @@ object GraftSql {
   // per-session, per-sfDir cache of the view DataFrames: weak keys so
   // short-lived test sessions don't accumulate; the DataFrames stay
   // valid across clearCache()/dropTempView (they read files directly)
-  // INVARIANT (ADVICE r19): long-lived cross-call state must be
+  // INVARIANT: long-lived cross-call state must be
   // LAZY-PLAN or PATH-backed, never a persisted/localCheckpointed
   // frame — the inter-query Sessions.sweep unpersists every
   // persistent RDD between queries, so a cached frame whose lineage
@@ -79,12 +79,11 @@ object GraftSql {
       val df =
         if (ConnectorDdl.handles(statement)) ConnectorDdl.sql(spark, statement)
         else
-          // this entry point speaks the ksql DIALECT: the three ksql
-          // function names whose Spark namesake differs map to the
-          // compat registrations (MASK/SPLIT/REGEXP_EXTRACT →
-          // ksql_mask/ksql_split/ksql_regexp_extract, outside
-          // literals). Spark-native spellings remain reachable via
-          // spark.sql directly.
+          // this entry point speaks the ksql DIALECT: a ksql function
+          // name whose Spark namesake differs maps to its `ksql_` twin
+          // in FunctionTable (MASK → ksql_mask, ROUND → ksql_round,
+          // …, outside literals). Spark-native spellings remain
+          // reachable via spark.sql directly.
           spark.sql(ConnectorDdl.rewriteKsqlFunctionNames(statement))
       df.schema
       df
@@ -137,10 +136,7 @@ object GraftSql {
     * already there). An entry is skipped when the registry already
     * binds its name to its class, so repeat calls from every catalog
     * query are a lookup per name: no re-registration, and no "replaced
-    * a previously registered function" warning. A compat name that
-    * shadows a Spark builtin (`array_join`, `uuid`, `random`: ksql-only
-    * extra arities over the same semantics) is bound to the builtin's
-    * class at first, so it installs once. */
+    * a previously registered function" warning. */
   def registerFunctions(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     FunctionTable.entries.foreach { case (id, info, builder) =>

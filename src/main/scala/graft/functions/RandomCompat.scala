@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * hyphenated string. Anything but exactly 16 bytes → NULL (ksql's
   * documented behavior — no exception, the row survives).
   *
-  * The 0-arg `UUID()` and `RANDOM()` spellings are handled in
-  * [[KsqlCompatExt.builders]] directly over Spark's own `Uuid` /
-  * `Rand` expressions (same per-partition PRNG machinery Spark's
-  * builtins use), with an engine extension: when
+  * The 0-arg `UUID()` and `RANDOM()` spellings are the `ksql_uuid` /
+  * `ksql_random` twins in [[KsqlCompat.builders]], built directly over
+  * Spark's own `Uuid` / `Rand` expressions (same per-partition PRNG
+  * machinery Spark's builtins use), with an engine extension: when
   * `spark.graft.randomSeed` is set on the session, both draw from
   * that seed, making corpus builds that sample with RANDOM() or tag
   * with UUID() reproducible run-over-run (given the same partitioning

@@ -6,11 +6,11 @@ import graft.GraftSql
 
 /** The ksqlDB builtin-function compatibility pack
   * ([[graft.functions.KsqlCompat]]) exercised END-TO-END through
-  * [[GraftSql.sql]] with the ksql spellings — including the three
-  * divergent names (`MASK`, `SPLIT`, `REGEXP_EXTRACT`) that the
-  * dialect rewrite maps onto the `ksql_`-prefixed registrations —
-  * each query hash-verified against a DuckDB oracle that spells the
-  * same semantics natively.
+  * [[GraftSql.sql]] with the ksql spellings — including the names
+  * whose Spark namesake differs (`MASK`, `SPLIT`, `REGEXP_EXTRACT`,
+  * `ROUND`, …), which the dialect rewrite maps onto their `ksql_`
+  * twins in [[graft.FunctionTable]] — each query hash-verified
+  * against a DuckDB oracle that spells the same semantics natively.
   *
   * Determinism notes: integer-ish outputs are BIGINT on both engines;
   * `geo_distance` (libm trig on both sides) is rounded to integer

@@ -48,8 +48,8 @@ class DdlRewriteFuzzSpec extends AnyFunSuite {
   test("function-name rewrite: literals survive, partial names alone, across 200 seeds") {
     val fnLiterals = Seq("'MASK(secret)'", "'call SPLIT(a, b) later'",
       "'REGEXP_EXTRACT docs'", "'it''s a MASK(x)'", "'plain'")
-    // note: regexp_extract_all is NOT a lookalike — since round 10 it
-    // is a genuine rewrite site (ksql's pattern-first arg order)
+    // note: regexp_extract_all is NOT a lookalike — it is a genuine
+    // rewrite site (ksql's pattern-first arg order)
     val fnLookalikes = Seq("mask_keep_left(name, 2)", "ksql_mask(name)",
       "unmask(name)", "masked", "split_count", "my_regexp_extract_all(x)")
     val rnd = new Random(23)
@@ -67,6 +67,21 @@ class DdlRewriteFuzzSpec extends AnyFunSuite {
       // lookalikes survive byte-for-byte (modulo the genuine rewrites)
       if (!look.startsWith("ksql_mask")) assert(out.contains(look), out)
       // idempotent: a second pass changes nothing
+      assert(ConnectorDdl.rewriteKsqlFunctionNames(out) == out, out)
+    }
+    // every ksql_ twin in FunctionTable is a rename: the bare name, in
+    // either case and with or without a space before `(`, becomes the
+    // twin; the same spelling inside a literal stays
+    val twins = FunctionTable.entries.map(_._1.funcName)
+      .filter(_.startsWith("ksql_"))
+    assert(Seq("ksql_mask", "ksql_array_join", "ksql_uuid", "ksql_random")
+      .forall(twins.contains), twins)
+    twins.foreach { twin =>
+      val bare = twin.stripPrefix("ksql_")
+      val up = bare.toUpperCase
+      val sql = s"SELECT $up(v), '$up(v)' AS a, $bare (w) FROM src"
+      val out = ConnectorDdl.rewriteKsqlFunctionNames(sql)
+      assert(out == s"SELECT $twin(v), '$up(v)' AS a, $twin(w) FROM src", out)
       assert(ConnectorDdl.rewriteKsqlFunctionNames(out) == out, out)
     }
   }
@@ -123,6 +138,9 @@ class DdlRewriteFuzzSpec extends AnyFunSuite {
       // idempotent: a second pass changes nothing
       assert(ConnectorDdl.rewriteKsqlFunctionNames(out) == out, out)
     }
+    // a space inside the clause's paren still marks the aggregate clause
+    val spaced = "SELECT count(x) FILTER ( WHERE x > 0) FROM src"
+    assert(ConnectorDdl.rewriteKsqlFunctionNames(spaced) == spaced)
   }
 
   test("time-fn rewrite: unit quoting, literals safe, idempotent, 200 seeds") {

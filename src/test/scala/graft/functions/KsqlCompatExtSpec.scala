@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSql, SharedSpark}
 
-/** Second ksql compat pack ([[KsqlCompatExt]]): the invocation
+/** The ksql compat pack ([[KsqlCompat]]), second half: the invocation
   * (lambda) functions in both their array and map forms with the ksql
   * `(x) => expr` arrow spelling, the ARRAY_SORT direction/null rules,
   * the ENCODE transcoder, and the JSON/AS_MAP/CORRELATION additions.

@@ -1775,7 +1775,8 @@ object ConnectorDdl {
             cur.columns.exists(_.equalsIgnoreCase(c)))
           require(unknown.isEmpty,
             s"INSERT INTO $name: no such column(s) ${unknown.mkString(", ")}")
-          val row0 = spark.sql(s"SELECT * FROM (VALUES $tuple)")
+          val row0 = spark.sql(
+            rewriteKsqlFunctionNames(s"SELECT * FROM (VALUES $tuple)"))
           require(row0.columns.length == cols.length,
             s"INSERT INTO $name: ${cols.length} column(s) named but " +
               s"${row0.columns.length} value(s) given")

@@ -180,7 +180,8 @@ object FunctionTable {
     aggregator("histogram", classOf[HistogramAgg].getName,
       "histogram(value)", 1)(udaf(new HistogramAgg)),
     aggregator("topk_by_score_3", classOf[TopKByScore].getName,
-      "topk_by_score_3(score, id)", 2)(udaf(new TopKByScore(3))),
+      "topk_by_score_3(score, id)", 2)(
+      graft.operators.Relational.topKAggregator(3, longScores = false)),
     // mergeable deterministic quantile sketch (decimal grid): build
     // from grid integers / union-merge stored sketches — see
     // DecimalSketch for the grid contract

@@ -1,7 +1,13 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+
+import graft.functions.{TopKByScore, TopKByScoreLong}
 
 /** Batch relational operators mirroring the reference pipeline's
   * semantics (SURVEY.md §2) as composable DataFrame transforms.
@@ -34,9 +40,9 @@ object Relational {
   /** J1 stream–table LEFT OUTER equi-join batch analog (enrichment /
     * lookup join; reference README.md:448-459). The dimension side is
     * broadcast: at 100 TB the fact stream never shuffles — each executor
-    * holds the (small) latest-customer snapshot. Falls back to
-    * sort-merge automatically if the dim outgrows
-    * `spark.sql.autoBroadcastJoinThreshold`.
+    * holds the (small) latest-customer snapshot. The explicit hint
+    * overrides `spark.sql.autoBroadcastJoinThreshold`: the dim is
+    * broadcast whatever its size, so it must fit in executor memory.
     */
   def enrichLeft(fact: DataFrame, dim: DataFrame, cond: Column): DataFrame =
     fact.join(broadcast(dim), cond, "left")
@@ -72,5 +78,51 @@ object Relational {
     saltedFact.join(saltedBuild,
         factKey === buildKey && saltedFact("__salt") === saltedBuild("__salt"))
       .drop("__salt")
+  }
+
+  /** Bounded per-group top-k: the `k` best rows of each `keys` group
+    * by `score` descending, `id` ascending on ties, as ranked rows
+    * (keys, `rank`, id, score) with a 1-based BIGINT `rank`.
+    *
+    * The naive spelling (`row_number() OVER (PARTITION BY …) <= k`)
+    * shuffles and sorts every row; this one aggregates into a
+    * k-bounded buffer that map-side-combines, so the shuffle carries
+    * at most k rows per key per map partition. The window form stays
+    * the oracle spelling. An integral `score` takes `longScores`: the
+    * BIGINT variant keeps scores past 2^53 exact, where a Double
+    * would merge near-ties. The id and score columns keep their
+    * names in the output. */
+  def topK(df: DataFrame, keys: Seq[String], score: String, id: String,
+           k: Int, longScores: Boolean): DataFrame =
+    topKRanked(
+      df.groupBy(keys.map(col): _*)
+        .agg(topKAggregator(k, longScores)(col(score), col(id)).as(TopKBuffer)),
+      TopKBuffer, id, score)
+
+  private val TopKBuffer = "__topk"
+
+  private val topKAggregators =
+    new ConcurrentHashMap[(Int, Boolean), UserDefinedFunction]()
+
+  /** The aggregate behind [[topK]], for a caller that must hold the
+    * buffer itself: beside other aggregates in one `agg`, or as a
+    * streaming aggregate's state. Applied to (score, id) it gives the
+    * buffer column [[topKRanked]] unpacks. One instance per
+    * (k, variant) per JVM: deriving its encoders is the costly part. */
+  def topKAggregator(k: Int, longScores: Boolean): UserDefinedFunction =
+    topKAggregators.computeIfAbsent((k, longScores), _ =>
+      if (longScores) udaf(new TopKByScoreLong(k)) else udaf(new TopKByScore(k)))
+
+  /** The ranked rows of the [[topKAggregator]] buffer in column
+    * `buffer`: every other column of `df`, then `rank` (1-based,
+    * BIGINT), then the buffer's ids as `id` and scores as `score`,
+    * best first. */
+  def topKRanked(df: DataFrame, buffer: String, id: String,
+                 score: String): DataFrame = {
+    val keys = df.columns.toSeq.filter(_ != buffer).map(col)
+    df.select(keys :+ posexplode(arrays_zip(
+        col(s"$buffer.scores"), col(s"$buffer.ids"))).as(Seq("__pos", "__z")): _*)
+      .select(keys ++ Seq((col("__pos") + 1).cast(LongType).as("rank"),
+        col("__z.ids").as(id), col("__z.scores").as(score)): _*)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Relational
 import graft.sources.Tables
 
 /** Second tranche of batch-SQL surface: JSON extraction, exact
@@ -128,23 +129,17 @@ object BatchSqlQueries2 {
       |  SELECT c_custkey FROM customer
       |  WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2))""".stripMargin
 
-  /** Per-key top-k via the bounded TopKByScore aggregator (map-side
+  /** Per-key top-k via the bounded top-k operator (map-side
     * k-bounded partials — no full window sort-shuffle); the
     * row_number window form is the oracle. Top-3 orders per customer
     * by price. */
-  def topkPerKey(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScore(3))
-    Tables.orders(s, d)
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
-      .select(col("custkey"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("custkey"),
-        col("z.ids").as("order_id"),
-        col("z.scores").as("price"),
-        (col("pos") + 1).cast(LongType).as("rn"))
-  }
+  def topkPerKey(s: SparkSession, d: String): DataFrame =
+    Relational.topK(
+        Tables.orders(s, d).select(col("o_custkey").as("custkey"),
+          col("o_orderkey").as("order_id"), col("o_totalprice").as("price")),
+        Seq("custkey"), "price", "order_id", k = 3, longScores = false)
+      .select(col("custkey"), col("order_id"), col("price"),
+        col("rank").as("rn"))
 
   val topkPerKeySql: String =
     """SELECT custkey, order_id, price, rn FROM (
@@ -653,7 +648,7 @@ object BatchSqlQueries2 {
     val l = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))
-    graft.operators.Relational.saltedJoin(
+    Relational.saltedJoin(
         l, o, l("l_orderkey"), o("o_orderkey"),
         saltSource = l("l_linenumber"), salts = 8)
       .select(col("l_orderkey").as("order_id"),

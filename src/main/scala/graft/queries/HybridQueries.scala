@@ -3,10 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextShingles
+import graft.operators.Relational
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -88,16 +88,13 @@ object HybridQueries {
   private def lexicalList(s: SparkSession, d: String, tf: DataFrame,
                           q: DataFrame): DataFrame = {
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(
-      RetrievalQueries.ListK))
-    tf.join(broadcast(q), Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("score", RetrievalQueries.ScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk20(col("score"), col("doc_id")).as("top"))
-      .select(col("term"), posexplode(col("top.ids")).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as("rank_a"))
+    Relational.topK(
+        tf.join(broadcast(q), Seq("term"))
+          .crossJoin(broadcast(nDocs))
+          .withColumn("score", RetrievalQueries.ScoreExpr),
+        Seq("term"), "score", "doc_id", RetrievalQueries.ListK,
+        longScores = true)
+      .select(col("term"), col("doc_id"), col("rank").as("rank_a"))
   }
 
   /** Route every query vector to its NProbe best cells against a
@@ -131,41 +128,31 @@ object HybridQueries {
     import s.implicits._
     val cells = routed.map(_._2).distinct
     val routeDf = routed.toDF("term", "cell")
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(
-      RetrievalQueries.ListK))
-    s.read.parquet(vectorsPath)
-      .filter(col("cell").isin(cells: _*))
-      .join(broadcast(routeDf), Seq("cell"))
-      .withColumn("qm", qvecExpr)
-      .withColumn("em",
-        transform(col("emb"), x => floor(x * 1000000).cast(LongType)))
-      .withColumn("sc", dotL(col("qm"), col("em")))
-      .groupBy(col("term"))
-      .agg(topk20(col("sc"), col("vec_id")).as("top"))
-      .select(col("term"), posexplode(col("top.ids")).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as("rank_b"))
+    Relational.topK(
+        s.read.parquet(vectorsPath)
+          .filter(col("cell").isin(cells: _*))
+          .join(broadcast(routeDf), Seq("cell"))
+          .withColumn("qm", qvecExpr)
+          .withColumn("em",
+            transform(col("emb"), x => floor(x * 1000000).cast(LongType)))
+          .withColumn("sc", dotL(col("qm"), col("em"))),
+        Seq("term"), "sc", "vec_id", RetrievalQueries.ListK,
+        longScores = true)
+      .select(col("term"), col("vec_id").as("doc_id"), col("rank").as("rank_b"))
   }
 
   /** RRF merge of the two bounded lists — identical integer grid and
     * ordering to [[RetrievalQueries.rrfFusion]]. */
-  private def fuse(a: DataFrame, b: DataFrame): DataFrame = {
-    val topk5 = udaf(new graft.functions.TopKByScoreLong(
-      RetrievalQueries.K))
-    a.join(b, Seq("term", "doc_id"), "full")
-      .withColumn("rrf",
-        coalesce(expr(s"1000000 DIV (${RetrievalQueries.RrfK} + rank_a)"),
-          lit(0L)) +
-          coalesce(expr(s"1000000 DIV (${RetrievalQueries.RrfK} + rank_b)"),
-            lit(0L)))
-      .groupBy(col("term"))
-      .agg(topk5(col("rrf"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"), col("z.scores").as("rrf_score"))
-  }
+  private def fuse(a: DataFrame, b: DataFrame): DataFrame =
+    Relational.topK(
+        a.join(b, Seq("term", "doc_id"), "full")
+          .withColumn("rrf_score",
+            coalesce(expr(s"1000000 DIV (${RetrievalQueries.RrfK} + rank_a)"),
+              lit(0L)) +
+              coalesce(expr(s"1000000 DIV (${RetrievalQueries.RrfK} + rank_b)"),
+                lit(0L))),
+        Seq("term"), "rrf_score", "doc_id", RetrievalQueries.K,
+        longScores = true)
 
   /** Top-5 hybrid results per query term: lexical BM25 list + IVF
     * dense list over the published index artifact, RRF-fused. */
@@ -280,8 +267,8 @@ object HybridQueries {
     * whole streaming composition. */
   def streamHybridRrf(s: SparkSession, d: String): DataFrame = {
     // lexical leg: per-term (df, 20-bounded sat-pack head) state
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(
-      RetrievalQueries.ListK))
+    val topk20 = Relational.topKAggregator(RetrievalQueries.ListK,
+      longScores = true)
     val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
@@ -293,12 +280,7 @@ object HybridQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk20(col("ord"), col("doc_id")).as("top"))
-      .select(col("term"), col("df"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = RetrievalQueries.headStore(agg, "term")
 
     // dense leg: streaming ingest into a scratch layout under the
     // fixed routing table (the retrain-artifact convention)
@@ -327,11 +309,9 @@ object HybridQueries {
         .withColumn("r", row_number().over(
           Window.orderBy(col("df").desc, col("term"))))
         .filter(col("r") >= RetrievalQueries.RankLo)
-        .select(col("term"), col("ids"))
-      val la = qsel10
-        .select(col("term"), posexplode(col("ids")).as(Seq("p", "doc_id")))
-        .select(col("term"), col("doc_id"),
-          (col("p") + 1).cast(LongType).as("rank_a"))
+        .select(col("term"), col("top"))
+      val la = Relational.topKRanked(qsel10, "top", "doc_id", "ord")
+        .select(col("term"), col("doc_id"), col("rank").as("rank_a"))
       val routed = routeCells(s, s.read.parquet(layout.centroids),
         qsel10.select(col("term")))
       fuse(la, denseList(s, layout.vectors, routed)).localCheckpoint()
@@ -630,8 +610,8 @@ object HybridQueries {
     * the corpus scan) and the top-5 gate. */
   private def shortlistAndRank(s: SparkSession, d: String,
                                hits: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(ShortK))
-    val short = hits
+    val topk = Relational.topKAggregator(ShortK, longScores = true)
+    val heads = hits
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("h"))
       // grid-bound guard (ADVICE r16, the neymanAlloc raise_error
@@ -648,8 +628,9 @@ object HybridQueries {
       // qm computed here — once per TERM, before the explode fans the
       // shortlist out to ≤ShortK rows and before the broadcast ships
       // it into the corpus scan (≤ terms×ShortK×QTokens×Dim longs)
-      .select(col("term"), qmExpr.as("qm"),
-        explode(col("top.ids")).as("doc_id"))
+      .select(col("term"), qmExpr.as("qm"), col("top"))
+    val short = Relational.topKRanked(heads, "top", "doc_id", "ord")
+      .select(col("term"), col("qm"), col("doc_id"))
     maxsimRank(graft.util.Widen(Tables.documents(s, d))
         .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
         .join(broadcast(short), Seq("doc_id")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Relational
 import graft.streaming.FiniteStream
 
 /** Multimodal-column plumbing: media payloads ride as opaque `binary`
@@ -1353,19 +1354,16 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
+    val topk = Relational.topKAggregator(5, longScores = true)
     val heads = q.join(vecs, Seq("cell"))
       .select(col("qid"), col("doc_id"), cm.as("cm"))
       .groupBy(col("qid"))
       .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
         col("doc_id")).as("top"))
-    StreamingQueries.runToTable(heads, "complete")
-      .select(col("qid"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        expr("(z.scores + z.ids) DIV 4294967296").as("cos_micro"))
+    Relational.topKRanked(StreamingQueries.runToTable(heads, "complete"),
+        "top", "doc_id", "pk")
+      .select(col("qid"), col("rank"), col("doc_id"),
+        expr("(pk + doc_id) DIV 4294967296").as("cos_micro"))
   }
 
   /** Measured recall@5 of the probed cross-modal retrieval against
@@ -1383,15 +1381,14 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
-    val exact = s.read.parquet(layout.vectors)
-      .select(col("doc_id"), col("emb"))
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("doc_id"), cm.as("cm"))
-      .groupBy(col("qid"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"), explode(col("top.ids")).as("doc_id"))
+    val exact = Relational.topK(
+        s.read.parquet(layout.vectors)
+          .select(col("doc_id"), col("emb"))
+          .crossJoin(broadcast(q))
+          .select(col("qid"), col("doc_id"),
+            (cm * lit(4294967296L) - col("doc_id")).as("pk")),
+        Seq("qid"), "pk", "doc_id", k = 5, longScores = true)
+      .select(col("qid"), col("doc_id"))
     val hits = crossmodalTopK(s, d).select(col("qid"), col("doc_id"))
       .join(exact, Seq("qid", "doc_id"))
       .groupBy(col("qid")).agg(count(lit(1)).as("h"))
@@ -1458,25 +1455,20 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
-    s.read.parquet(layout.vectors)
-      .withColumn("doc_id", col(vecIdCol)) // no-op on the memoized layout
-      // the lifecycle layout carries the shared verbs' `label` payload
-      // column — drop it so the routed side's label is unambiguous
-      .drop("label")
-      .filter(col("cell").isin(probed: _*) && extraFilter)
-      .join(broadcast(routed), col("cell") === col("label"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("doc_id"), cm.as("cm"))
-      .groupBy(col("qid"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        expr("(z.scores + z.ids) DIV 4294967296").as("cos_micro"))
+    Relational.topK(
+        s.read.parquet(layout.vectors)
+          .withColumn("doc_id", col(vecIdCol)) // no-op on the memoized layout
+          // the lifecycle layout carries the shared verbs' `label` payload
+          // column — drop it so the routed side's label is unambiguous
+          .drop("label")
+          .filter(col("cell").isin(probed: _*) && extraFilter)
+          .join(broadcast(routed), col("cell") === col("label"))
+          .join(broadcast(q), Seq("qid"))
+          .select(col("qid"), col("doc_id"),
+            (cm * lit(4294967296L) - col("doc_id")).as("pk")),
+        Seq("qid"), "pk", "doc_id", k = 5, longScores = true)
+      .select(col("qid"), col("rank"), col("doc_id"),
+        expr("(pk + doc_id) DIV 4294967296").as("cos_micro"))
   }
 
   /** Measured recall@5 of FILTERED cross-modal search against the
@@ -1493,16 +1485,15 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
-    val exact = crossmodalCorpusStored(s, d)
-      .filter(col("doc_id") % 3 === 1)
-      .select(col("doc_id"), col("emb"))
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("doc_id"), cm.as("cm"))
-      .groupBy(col("qid"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"), explode(col("top.ids")).as("doc_id"))
+    val exact = Relational.topK(
+        crossmodalCorpusStored(s, d)
+          .filter(col("doc_id") % 3 === 1)
+          .select(col("doc_id"), col("emb"))
+          .crossJoin(broadcast(q))
+          .select(col("qid"), col("doc_id"),
+            (cm * lit(4294967296L) - col("doc_id")).as("pk")),
+        Seq("qid"), "pk", "doc_id", k = 5, longScores = true)
+      .select(col("qid"), col("doc_id"))
     val hits = crossmodalFiltered(s, d).select(col("qid"), col("doc_id"))
       .join(exact, Seq("qid", "doc_id"))
       .groupBy(col("qid")).agg(count(lit(1)).as("h"))
@@ -1755,19 +1746,16 @@ object MultimodalQueries {
       val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
         (SimilarityQueries.norm(col("emb")) *
           SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-      val topk = udaf(new graft.functions.TopKByScoreLong(5))
+      val topk = Relational.topKAggregator(5, longScores = true)
       val heads = q.join(vecs, Seq("cell"))
         .select(col("qid"), col("doc_id"), cm.as("cm"))
         .groupBy(col("qid"))
         .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
           col("doc_id")).as("top"))
-      StreamingQueries.runToTable(heads, "complete")
-        .select(col("qid"),
-          posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-            .as(Seq("p", "z")))
-        .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-          col("z.ids").as("doc_id"),
-          expr("(z.scores + z.ids) DIV 4294967296").as("cos_micro"))
+      Relational.topKRanked(StreamingQueries.runToTable(heads, "complete"),
+          "top", "doc_id", "pk")
+        .select(col("qid"), col("rank"), col("doc_id"),
+          expr("(pk + doc_id) DIV 4294967296").as("cos_micro"))
         .localCheckpoint()
     } finally FiniteStream.deleteRecursively(root)
   }
@@ -1997,15 +1985,14 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
-    val exact = crossmodalCorpusStored(s, d)
-      .select(col("doc_id"), col("emb"))
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("doc_id"), cm.as("cm"))
-      .groupBy(col("qid"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"), explode(col("top.ids")).as("doc_id"))
+    val exact = Relational.topK(
+        crossmodalCorpusStored(s, d)
+          .select(col("doc_id"), col("emb"))
+          .crossJoin(broadcast(q))
+          .select(col("qid"), col("doc_id"),
+            (cm * lit(4294967296L) - col("doc_id")).as("pk")),
+        Seq("qid"), "pk", "doc_id", k = 5, longScores = true)
+      .select(col("qid"), col("doc_id"))
     val hits = crossmodalTrained(s, d).select(col("qid"), col("doc_id"))
       .join(exact, Seq("qid", "doc_id"))
       .groupBy(col("qid")).agg(count(lit(1)).as("h"))
@@ -2080,7 +2067,6 @@ object MultimodalQueries {
     val cm = round(SimilarityQueries.dot(col("emb"), col("qemb")) /
       (SimilarityQueries.norm(col("emb")) *
         SimilarityQueries.norm(col("qemb"))) * 1000000).cast(LongType)
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
     val scored = s.read.parquet(layout.vectors)
       .join(broadcast(rnk), Seq("cell"))
       .select(col("qid"), col("r"), col("doc_id"), cm.as("cm"))
@@ -2093,24 +2079,18 @@ object MultimodalQueries {
     * merge). `ncells` bounds the swept depths. */
   private def autoprobeSweepFrom(s: SparkSession, scored: DataFrame,
                                  ncells: Int): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(5))
-    val exact = scored.groupBy(col("qid"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"), explode(col("top.ids")).as("doc_id"))
-    val perRank = scored.groupBy(col("qid"), col("r"))
-      .agg(topk(col("cm") * lit(4294967296L) - col("doc_id"),
-        col("doc_id")).as("top"))
-      .select(col("qid"), col("r"),
-        explode(arrays_zip(col("top.scores"), col("top.ids"))).as("z"))
-      .select(col("qid"), col("r"), col("z.scores").as("pk"),
-        col("z.ids").as("doc_id"))
-    val appx = perRank
-      .select(col("qid"), col("pk"), col("doc_id"),
-        explode(expr(s"sequence(r, ${ncells}L)")).as("np"))
-      .groupBy(col("qid"), col("np"))
-      .agg(topk(col("pk"), col("doc_id")).as("top"))
-      .select(col("qid"), col("np"), explode(col("top.ids")).as("doc_id"))
+    val packed = scored.withColumn("pk",
+      col("cm") * lit(4294967296L) - col("doc_id"))
+    val exact = Relational.topK(packed, Seq("qid"), "pk", "doc_id", k = 5,
+        longScores = true)
+      .select(col("qid"), col("doc_id"))
+    val perRank = Relational.topK(packed, Seq("qid", "r"), "pk", "doc_id",
+      k = 5, longScores = true)
+    val appx = Relational.topK(
+        perRank.select(col("qid"), col("pk"), col("doc_id"),
+          explode(expr(s"sequence(r, ${ncells}L)")).as("np")),
+        Seq("qid", "np"), "pk", "doc_id", k = 5, longScores = true)
+      .select(col("qid"), col("np"), col("doc_id"))
     val hits = appx.join(exact, Seq("qid", "doc_id"))
       .groupBy(col("np")).agg(count(lit(1)).as("h"))
     val rec = s.range(1, ncells + 1).select(col("id").as("nprobe"))

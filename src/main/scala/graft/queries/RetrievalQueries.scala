@@ -3,10 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType,
-  StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 import graft.functions.TextShingles
+import graft.operators.Relational
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -37,8 +38,8 @@ import graft.streaming.FiniteStream.{Batches, Leg}
   * explode + two-phase grouped count; query terms are found with a
   * bounded top-30 (TakeOrdered — no global sort) and broadcast back,
   * so the scoring join prunes to 10 posting lists however large the
-  * corpus; per-term top-5 runs through the k-bounded TopKByScore
-  * aggregator (map-side ≤5-row partials), with the row_number window
+  * corpus; per-term top-5 runs through the k-bounded top-k
+  * operator (map-side ≤5-row partials), with the row_number window
   * as the oracle spelling. */
 object RetrievalQueries {
 
@@ -56,6 +57,13 @@ object RetrievalQueries {
     * head stores sat(tf), not tf — see [[streamBm25TopK]]). */
   private val ScoreFromSatExpr: Column = expr(
     "(((n_docs - df) * 2 + 1) * 1000000 DIV (df * 2 + 1)) * sat")
+
+  /** The in-memory keyed store a streaming head aggregate drains
+    * into, over the aggregate's columns, every one nullable. */
+  private[queries] def headStore(agg: DataFrame,
+                                 key: String): graft.streaming.SnapshotStore =
+    new graft.streaming.SnapshotStore(
+      StructType(agg.schema.map(_.copy(nullable = true))), keyField = key)
 
   /** (doc_id, term, tf) — the inverted index relation. */
   private[queries] def tfRel(s: SparkSession, d: String): DataFrame =
@@ -87,18 +95,11 @@ object RetrievalQueries {
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
       .select(col("term"), col("df"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    tf.join(broadcast(q), Seq("term"))
-      .crossJoin(broadcast(nDocs.select(col("n_docs"))))
-      .withColumn("score", ScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tf.join(broadcast(q), Seq("term"))
+        .crossJoin(broadcast(nDocs.select(col("n_docs"))))
+        .withColumn("score", ScoreExpr),
+      Seq("term"), "score", "doc_id", K, longScores = true)
   }
 
   val bm25TopKSql: String =
@@ -145,21 +146,14 @@ object RetrievalQueries {
       .filter(col("r") >= RankLo)
       .withColumn("qid", expr(s"(r - $RankLo) DIV 2 + 1"))
       .select(col("qid"), col("term"), col("df"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(3))
-    tf.join(broadcast(q), Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("score", ScoreExpr)
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).as("n_matched"), sum(col("score")).cast(LongType).as("qscore"))
-      .filter(col("n_matched") === 2) // conjunctive: ALL terms present
-      .groupBy(col("qid"))
-      .agg(topk(col("qscore"), col("doc_id")).as("top"))
-      .select(col("qid"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("qid"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tf.join(broadcast(q), Seq("term"))
+        .crossJoin(broadcast(nDocs))
+        .withColumn("score", ScoreExpr)
+        .groupBy(col("qid"), col("doc_id"))
+        .agg(count(lit(1)).as("n_matched"), sum(col("score")).cast(LongType).as("score"))
+        .filter(col("n_matched") === 2), // conjunctive: ALL terms present
+      Seq("qid"), "score", "doc_id", k = 3, longScores = true)
   }
 
   val bm25ConjunctiveSql: String =
@@ -210,7 +204,7 @@ object RetrievalQueries {
     * term, so (sat desc, doc asc) IS the final (score desc, doc asc)
     * order, ties included — same oracle as the batch form. */
   def streamBm25TopK(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
+    val topk = Relational.topKAggregator(K, longScores = true)
     val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
@@ -222,14 +216,7 @@ object RetrievalQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-      .select(col("term"), col("df"),
-        col("top.scores").as("ords"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ords", ArrayType(LongType)),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     // finalize on the stored index heads (|vocab| rows, 5 postings each)
     val idx = store.df(s)
@@ -239,13 +226,12 @@ object RetrievalQueries {
       .withColumn("r", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"), col("ords"), col("ids"))
-    qsel.crossJoin(broadcast(nDocs))
-      .select(col("term"), col("df"), col("n_docs"),
-        posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("pos", "z")))
-      .withColumn("sat", expr("(z.ords + z.ids) DIV 4294967296"))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"), ScoreFromSatExpr.as("score"))
+      .select(col("term"), col("df"), col("top"))
+    Relational.topKRanked(qsel.crossJoin(broadcast(nDocs)), "top", "doc_id",
+        "ord")
+      .withColumn("sat", expr("(ord + doc_id) DIV 4294967296"))
+      .select(col("term"), col("rank"), col("doc_id"),
+        ScoreFromSatExpr.as("score"))
   }
 
   // ---------------------------------------------------------------
@@ -319,18 +305,11 @@ object RetrievalQueries {
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
       .select(col("term"), col("df"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    tf.join(broadcast(q), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", FullScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tf.join(broadcast(q), Seq("term"))
+        .crossJoin(broadcast(stats))
+        .withColumn("score", FullScoreExpr),
+      Seq("term"), "score", "doc_id", K, longScores = true)
   }
 
   val bm25FullSql: String =
@@ -378,7 +357,7 @@ object RetrievalQueries {
     * their length normalizer between index rebuilds). idf only scales
     * per-term scores, so it stays outside the stream entirely. */
   def streamBm25Full(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
+    val topk = Relational.topKAggregator(K, longScores = true)
     val statsRow = Tables.documents(s, d)
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(count(lit(1)).as("n_docs"),
@@ -397,14 +376,7 @@ object RetrievalQueries {
         (col("tfn") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-      .select(col("term"), col("df"),
-        col("top.scores").as("ords"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ords", ArrayType(LongType)),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val qsel = idx
@@ -412,14 +384,11 @@ object RetrievalQueries {
       .withColumn("r", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"), col("ords"), col("ids"))
-    qsel
-      .select(col("term"), col("df"),
-        posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("pos", "z")))
-      .withColumn("tfn", expr("(z.ords + z.ids) DIV 4294967296"))
+      .select(col("term"), col("df"), col("top"))
+    Relational.topKRanked(qsel, "top", "doc_id", "ord")
+      .withColumn("tfn", expr("(ord + doc_id) DIV 4294967296"))
       .withColumn("n_docs", lit(nDocs))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
+      .select(col("term"), col("rank"), col("doc_id"),
         (expr("((n_docs - df) * 2 + 1) * 1000000 DIV (df * 2 + 1)") *
           col("tfn")).as("score"))
   }
@@ -467,21 +436,13 @@ object RetrievalQueries {
         col("term") === col("qt2"))
       .select(col("doc_id").as("d2"), col("pos").as("pos2"),
         col("term").as("term2"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    p1.join(p2,
-        col("d2") === col("doc_id") && col("pos2") === col("pos") + 1 &&
-          col("term2") === col("t2"))
-      .groupBy(col("qid"), col("bigram"), col("doc_id"))
-      .agg(count(lit(1)).as("n_occ"))
-      .groupBy(col("qid"), col("bigram"))
-      .agg(topk(col("n_occ"), col("doc_id")).as("top"))
-      .select(col("qid"), col("bigram").as("phrase"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), col("phrase"),
-        (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("n_occ"))
+    Relational.topK(
+      p1.join(p2,
+          col("d2") === col("doc_id") && col("pos2") === col("pos") + 1 &&
+            col("term2") === col("t2"))
+        .groupBy(col("qid"), col("bigram").as("phrase"), col("doc_id"))
+        .agg(count(lit(1)).as("n_occ")),
+      Seq("qid", "phrase"), "n_occ", "doc_id", K, longScores = true)
   }
 
   val phraseMatchSql: String =
@@ -555,32 +516,19 @@ object RetrievalQueries {
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
       .select(col("term"), col("df"))
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(ListK))
     val scored = tf.join(broadcast(q), Seq("term"))
       .crossJoin(broadcast(stats))
-    def listOf(score: Column, rankName: String): DataFrame = scored
-      .withColumn("score", score)
-      .groupBy(col("term"))
-      .agg(topk20(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(col("top.ids")).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as(rankName))
-    val a = listOf(ScoreExpr, "rank_a")
-    val b = listOf(FullScoreExpr, "rank_b")
-    val topk5 = udaf(new graft.functions.TopKByScoreLong(K))
-    a.join(b, Seq("term", "doc_id"), "full")
-      .withColumn("rrf",
-        coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
-      .groupBy(col("term"))
-      .agg(topk5(col("rrf"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("rrf_score"))
+    def listOf(score: Column, rankName: String): DataFrame =
+      Relational.topK(scored.withColumn("score", score), Seq("term"),
+          "score", "doc_id", ListK, longScores = true)
+        .select(col("term"), col("doc_id"), col("rank").as(rankName))
+    Relational.topK(
+      listOf(ScoreExpr, "rank_a")
+        .join(listOf(FullScoreExpr, "rank_b"), Seq("term", "doc_id"), "full")
+        .withColumn("rrf_score",
+          coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L))),
+      Seq("term"), "rrf_score", "doc_id", K, longScores = true)
   }
 
   val rrfFusionSql: String =
@@ -649,7 +597,7 @@ object RetrievalQueries {
     * OUTSIDE the stream on the stored heads. Same oracle as the batch
     * fusion. */
   def streamRrfFusion(s: SparkSession, d: String): DataFrame = {
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(ListK))
+    val topk20 = Relational.topKAggregator(ListK, longScores = true)
     val dAvg = Tables.documents(s, d)
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
@@ -670,39 +618,24 @@ object RetrievalQueries {
       .agg(count(lit(1)).as("df"),
         topk20(col("ord_a"), col("doc_id")).as("ta"),
         topk20(col("ord_b"), col("doc_id")).as("tb"))
-      .select(col("term"), col("df"),
-        col("ta.ids").as("ids_a"), col("tb.ids").as("ids_b"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ids_a", ArrayType(LongType)),
-      StructField("ids_b", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val qsel = store.df(s)
       .orderBy(col("df").desc, col("term")).limit(RankHi)
       .withColumn("r", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
-      .select(col("term"), col("ids_a"), col("ids_b"))
-    def ranksOf(idsCol: String, rankName: String): DataFrame = qsel
-      .select(col("term"), posexplode(col(idsCol)).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as(rankName))
-    val topk5 = udaf(new graft.functions.TopKByScoreLong(K))
-    ranksOf("ids_a", "rank_a")
-      .join(ranksOf("ids_b", "rank_b"), Seq("term", "doc_id"), "full")
-      .withColumn("rrf",
-        coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
-      .groupBy(col("term"))
-      .agg(topk5(col("rrf"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("rrf_score"))
+    def ranksOf(head: String, rankName: String): DataFrame =
+      Relational.topKRanked(qsel.select(col("term"), col(head)), head,
+          "doc_id", "ord")
+        .select(col("term"), col("doc_id"), col("rank").as(rankName))
+    Relational.topK(
+      ranksOf("ta", "rank_a")
+        .join(ranksOf("tb", "rank_b"), Seq("term", "doc_id"), "full")
+        .withColumn("rrf_score",
+          coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L))),
+      Seq("term"), "rrf_score", "doc_id", K, longScores = true)
   }
 
   /** Streaming twin of [[rrfFusion3]] — the [[streamRrfFusion]] state
@@ -719,7 +652,7 @@ object RetrievalQueries {
     * through the same chained full-outer RRF. Same oracle as the
     * batch 3-leg fusion. */
   def streamRrfFusion3(s: SparkSession, d: String): DataFrame = {
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(ListK))
+    val topk20 = Relational.topKAggregator(ListK, longScores = true)
     val dAvg = Tables.documents(s, d)
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
@@ -740,15 +673,7 @@ object RetrievalQueries {
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
         topk20(col("ord_a"), col("doc_id")).as("ta"),
         topk20(col("ord_b"), col("doc_id")).as("tb"))
-      .select(col("term"), col("df"), col("ctf"),
-        col("ta.ids").as("ids_a"), col("tb.ids").as("ids_b"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ctf", LongType),
-      StructField("ids_a", ArrayType(LongType)),
-      StructField("ids_b", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
@@ -757,39 +682,29 @@ object RetrievalQueries {
       .withColumn("r", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
-      .select(col("term"), col("ctf"), col("ids_a"), col("ids_b"))
-    def ranksOf(idsCol: String, rankName: String): DataFrame = qsel
-      .select(col("term"), posexplode(col(idsCol)).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as(rankName))
-    val lc = tfDlRel(s, d)
-      .join(broadcast(qsel.select(col("term"), col("ctf"))), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
-      .withColumn("score", QlScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk20(col("score"), col("doc_id")).as("top"))
-      .select(col("term"), posexplode(col("top.ids")).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as("rank_c"))
-    val topk5 = udaf(new graft.functions.TopKByScoreLong(K))
-    ranksOf("ids_a", "rank_a")
-      .join(ranksOf("ids_b", "rank_b"), Seq("term", "doc_id"), "full")
-      .withColumn("rrf2",
-        coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
-      .join(lc, Seq("term", "doc_id"), "full")
-      .withColumn("rrf",
-        coalesce(col("rrf2"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_c)"), lit(0L)))
-      .groupBy(col("term"))
-      .agg(topk5(col("rrf"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("rrf_score"))
+    def ranksOf(head: String, rankName: String): DataFrame =
+      Relational.topKRanked(qsel.select(col("term"), col(head)), head,
+          "doc_id", "ord")
+        .select(col("term"), col("doc_id"), col("rank").as(rankName))
+    val lc = Relational.topK(
+        tfDlRel(s, d)
+          .join(broadcast(qsel.select(col("term"), col("ctf"))), Seq("term"))
+          .crossJoin(broadcast(stats))
+          .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
+          .withColumn("score", QlScoreExpr),
+        Seq("term"), "score", "doc_id", ListK, longScores = true)
+      .select(col("term"), col("doc_id"), col("rank").as("rank_c"))
+    Relational.topK(
+      ranksOf("ta", "rank_a")
+        .join(ranksOf("tb", "rank_b"), Seq("term", "doc_id"), "full")
+        .withColumn("rrf2",
+          coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
+        .join(lc, Seq("term", "doc_id"), "full")
+        .withColumn("rrf_score",
+          coalesce(col("rrf2"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_c)"), lit(0L))),
+      Seq("term"), "rrf_score", "doc_id", K, longScores = true)
   }
 
   // ---------------------------------------------------------------
@@ -965,24 +880,16 @@ object RetrievalQueries {
         col("term") === col("qt3"))
       .select(col("doc_id").as("d3"), col("pos").as("pos3"),
         col("term").as("term3"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    p1.join(p2,
-        col("d2") === col("doc_id") && col("pos2") === col("pos") + 1 &&
-          col("term2") === col("t2"))
-      .join(p3,
-        col("d3") === col("doc_id") && col("pos3") === col("pos") + 2 &&
-          col("term3") === col("t3"))
-      .groupBy(col("qid"), col("trigram"), col("doc_id"))
-      .agg(count(lit(1)).as("n_occ"))
-      .groupBy(col("qid"), col("trigram"))
-      .agg(topk(col("n_occ"), col("doc_id")).as("top"))
-      .select(col("qid"), col("trigram").as("phrase"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), col("phrase"),
-        (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").as("n_occ"))
+    Relational.topK(
+      p1.join(p2,
+          col("d2") === col("doc_id") && col("pos2") === col("pos") + 1 &&
+            col("term2") === col("t2"))
+        .join(p3,
+          col("d3") === col("doc_id") && col("pos3") === col("pos") + 2 &&
+            col("term3") === col("t3"))
+        .groupBy(col("qid"), col("trigram").as("phrase"), col("doc_id"))
+        .agg(count(lit(1)).as("n_occ")),
+      Seq("qid", "phrase"), "n_occ", "doc_id", K, longScores = true)
   }
 
   val phraseNgramSql: String =
@@ -1060,20 +967,13 @@ object RetrievalQueries {
         col("term") === col("qt2"))
       .select(col("doc_id").as("d2"), col("pos").as("pos2"),
         col("term").as("term2"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    p1.join(p2,
-        col("d2") === col("doc_id") && col("term2") === col("t2") &&
-          abs(col("pos2") - col("pos")) <= ProxWindow)
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(count(lit(1)).as("n_close"))
-      .groupBy(col("qid"))
-      .agg(topk(col("n_close"), col("doc_id")).as("top"))
-      .select(col("qid"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").as("n_close"))
+    Relational.topK(
+      p1.join(p2,
+          col("d2") === col("doc_id") && col("term2") === col("t2") &&
+            abs(col("pos2") - col("pos")) <= ProxWindow)
+        .groupBy(col("qid"), col("doc_id"))
+        .agg(count(lit(1)).as("n_close")),
+      Seq("qid"), "n_close", "doc_id", K, longScores = true)
   }
 
   val proximitySql: String =
@@ -1144,16 +1044,8 @@ object RetrievalQueries {
       .join(broadcast(qp.select(col("qid").as("xqid"), col("t2"))),
         col("term") === col("t2"))
       .select(col("xqid").as("qid"), col("doc_id"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    inc.join(exc, Seq("qid", "doc_id"), "left_anti")
-      .groupBy(col("qid"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("qid"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("p", "z")))
-      .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").as("score"))
+    Relational.topK(inc.join(exc, Seq("qid", "doc_id"), "left_anti"),
+      Seq("qid"), "score", "doc_id", K, longScores = true)
   }
 
   val booleanNotSql: String =
@@ -1223,7 +1115,7 @@ object RetrievalQueries {
       .select(col("qid"), col("bigram"),
         element_at(split(col("bigram"), " "), 1).as("t1"),
         element_at(split(col("bigram"), " "), 2).as("t2"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
+    val topk = Relational.topKAggregator(K, longScores = true)
     val hits = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
@@ -1236,22 +1128,11 @@ object RetrievalQueries {
         (col("n_occ") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = hits.groupBy(col("qid"), col("bigram"))
       .agg(topk(col("ord"), col("doc_id")).as("top"))
-      .select(col("qid"), col("bigram"),
-        col("top.scores").as("ords"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("qid", LongType),
-      StructField("bigram", StringType),
-      StructField("ords", ArrayType(LongType)),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "bigram")
+    val store = headStore(agg, "bigram")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s)
-      .select(col("qid"), col("bigram").as("phrase"),
-        posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("p", "z")))
-      .select(col("qid"), col("phrase"),
-        (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        expr("(z.ords + z.ids) DIV 4294967296").as("n_occ"))
+    Relational.topKRanked(store.df(s), "top", "doc_id", "ord")
+      .select(col("qid"), col("bigram").as("phrase"), col("rank"),
+        col("doc_id"), expr("(ord + doc_id) DIV 4294967296").as("n_occ"))
   }
 
   /** Streaming twin of [[proximity]]: the query pairs are the frozen
@@ -1271,7 +1152,7 @@ object RetrievalQueries {
     val qp = q.groupBy(col("qid"))
       .agg(min(when(col("r") % 2 === 1, col("term"))).as("t1"),
         min(when(col("r") % 2 === 0, col("term"))).as("t2"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
+    val topk = Relational.topKAggregator(K, longScores = true)
     val hits = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .join(broadcast(qp)) // stream-static: |queries| = 5 rows
@@ -1286,20 +1167,11 @@ object RetrievalQueries {
         (col("n_close") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = hits.groupBy(col("qid"))
       .agg(topk(col("ord"), col("doc_id")).as("top"))
-      .select(col("qid"),
-        col("top.scores").as("ords"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("qid", LongType),
-      StructField("ords", ArrayType(LongType)),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "qid")
+    val store = headStore(agg, "qid")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s)
-      .select(col("qid"),
-        posexplode(arrays_zip(col("ords"), col("ids"))).as(Seq("p", "z")))
-      .select(col("qid"), (col("p") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        expr("(z.ords + z.ids) DIV 4294967296").as("n_close"))
+    Relational.topKRanked(store.df(s), "top", "doc_id", "ord")
+      .select(col("qid"), col("rank"), col("doc_id"),
+        expr("(ord + doc_id) DIV 4294967296").as("n_close"))
   }
 
   /** Pseudo-relevance feedback (RM3-style query expansion — Lavrenko
@@ -1335,14 +1207,13 @@ object RetrievalQueries {
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
       .select(col("term"), col("df"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
     // pass 1: feedback docs
-    val fb = tf.join(broadcast(q), Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("score", ScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("term").as("qterm"), explode(col("top.ids")).as("doc_id"))
+    val fb = Relational.topK(
+        tf.join(broadcast(q), Seq("term"))
+          .crossJoin(broadcast(nDocs))
+          .withColumn("score", ScoreExpr),
+        Seq("term"), "score", "doc_id", K, longScores = true)
+      .select(col("term").as("qterm"), col("doc_id"))
     prfFinalize(tf, dfRel, q, fb, nDocs)
   }
 
@@ -1354,7 +1225,6 @@ object RetrievalQueries {
     * relation broadcast over the posting lists. */
   private def prfFinalize(tf: DataFrame, dfRel: DataFrame, q: DataFrame,
                           fb: DataFrame, nDocs: DataFrame): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
     // pass 2: top-2 expansion terms per query
     val exp = fb
       .join(tf.select(col("doc_id"), col("term").as("cterm"), col("tf")),
@@ -1372,19 +1242,13 @@ object RetrievalQueries {
         lit(2L).as("wt"))
       .unionByName(exp)
     val termsWithDf = dfRel.join(broadcast(terms), Seq("term"))
-    tf.join(broadcast(termsWithDf), Seq("term"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("wscore", col("wt") * ScoreExpr)
-      .groupBy(col("qterm"), col("doc_id"))
-      .agg(sum(col("wscore")).as("score"))
-      .groupBy(col("qterm"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("qterm").as("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tf.join(broadcast(termsWithDf), Seq("term"))
+        .crossJoin(broadcast(nDocs))
+        .withColumn("wscore", col("wt") * ScoreExpr)
+        .groupBy(col("qterm").as("term"), col("doc_id"))
+        .agg(sum(col("wscore")).as("score")),
+      Seq("term"), "score", "doc_id", K, longScores = true)
   }
 
   val prfExpandSql: String =
@@ -1451,7 +1315,7 @@ object RetrievalQueries {
     * candidate-broadcast corpus-scan discipline of
     * stream_hybrid_rerank. Shares `prfExpandSql`. */
   def streamPrfExpand(s: SparkSession, d: String): DataFrame = {
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
+    val topk = Relational.topKAggregator(K, longScores = true)
     val postings = graft.util.Widen.stream(Tables.stream(s, d, "documents"))
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(array_distinct(col("w"))).as("term"),
@@ -1463,14 +1327,7 @@ object RetrievalQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-      .select(col("term"), col("df"),
-        col("top.scores").as("ords"), col("top.ids").as("ids"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ords", ArrayType(LongType)),
-      StructField("ids", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
+    val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val dfRel = idx.select(col("term"), col("df"))
@@ -1479,8 +1336,9 @@ object RetrievalQueries {
       .withColumn("r", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
-    val fb = qsel.select(col("term").as("qterm"),
-      explode(col("ids")).as("doc_id"))
+    val fb = Relational.topKRanked(qsel.select(col("term"), col("top")),
+        "top", "doc_id", "ord")
+      .select(col("term").as("qterm"), col("doc_id"))
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
     // single-mined: the finalize's expansion mining and pass-3
     // scoring otherwise each execute their own index subplan
@@ -1537,19 +1395,12 @@ object RetrievalQueries {
       .filter(col("r") >= RankLo)
       .select(col("term"))
     val qs = ctf.join(broadcast(q), Seq("term"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    tf.join(broadcast(qs), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
-      .withColumn("score", QlScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tf.join(broadcast(qs), Seq("term"))
+        .crossJoin(broadcast(stats))
+        .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
+        .withColumn("score", QlScoreExpr),
+      Seq("term"), "score", "doc_id", K, longScores = true)
   }
 
   private val qlCtesSql: String =
@@ -1627,19 +1478,12 @@ object RetrievalQueries {
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("r") >= RankLo)
       .select(col("term"), col("ctf"))
-    val topk = udaf(new graft.functions.TopKByScoreLong(K))
-    tfDlRel(s, d).join(broadcast(qs), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
-      .withColumn("score", QlScoreExpr)
-      .groupBy(col("term"))
-      .agg(topk(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("score"))
+    Relational.topK(
+      tfDlRel(s, d).join(broadcast(qs), Seq("term"))
+        .crossJoin(broadcast(stats))
+        .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
+        .withColumn("score", QlScoreExpr),
+      Seq("term"), "score", "doc_id", K, longScores = true)
   }
 
   /** Three-leg reciprocal-rank fusion — [[rrfFusion]]'s two lexical
@@ -1675,38 +1519,24 @@ object RetrievalQueries {
       .filter(col("r") >= RankLo)
       .select(col("term"), col("df"))
     val qs = ctf.join(broadcast(q), Seq("term"))
-    val topk20 = udaf(new graft.functions.TopKByScoreLong(ListK))
     val scored = tf.join(broadcast(qs), Seq("term"))
       .crossJoin(broadcast(stats))
       .withColumn("p_ppm", expr("ctf * 1000000 DIV c_tot"))
-    def listOf(score: Column, rankName: String): DataFrame = scored
-      .withColumn("score", score)
-      .groupBy(col("term"))
-      .agg(topk20(col("score"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(col("top.ids")).as(Seq("p", "doc_id")))
-      .select(col("term"), col("doc_id"),
-        (col("p") + 1).cast(LongType).as(rankName))
-    val a = listOf(ScoreExpr, "rank_a")
-    val b = listOf(FullScoreExpr, "rank_b")
-    val c = listOf(QlScoreExpr, "rank_c")
-    val topk5 = udaf(new graft.functions.TopKByScoreLong(K))
-    a.join(b, Seq("term", "doc_id"), "full")
-      .withColumn("rrf2",
-        coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
-      .join(c, Seq("term", "doc_id"), "full")
-      .withColumn("rrf",
-        coalesce(col("rrf2"), lit(0L)) +
-          coalesce(expr(s"1000000 DIV ($RrfK + rank_c)"), lit(0L)))
-      .groupBy(col("term"))
-      .agg(topk5(col("rrf"), col("doc_id")).as("top"))
-      .select(col("term"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("term"), (col("pos") + 1).cast(LongType).as("rank"),
-        col("z.ids").as("doc_id"),
-        col("z.scores").cast(LongType).as("rrf_score"))
+    def listOf(score: Column, rankName: String): DataFrame =
+      Relational.topK(scored.withColumn("score", score), Seq("term"),
+          "score", "doc_id", ListK, longScores = true)
+        .select(col("term"), col("doc_id"), col("rank").as(rankName))
+    Relational.topK(
+      listOf(ScoreExpr, "rank_a")
+        .join(listOf(FullScoreExpr, "rank_b"), Seq("term", "doc_id"), "full")
+        .withColumn("rrf2",
+          coalesce(expr(s"1000000 DIV ($RrfK + rank_a)"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_b)"), lit(0L)))
+        .join(listOf(QlScoreExpr, "rank_c"), Seq("term", "doc_id"), "full")
+        .withColumn("rrf_score",
+          coalesce(col("rrf2"), lit(0L)) +
+            coalesce(expr(s"1000000 DIV ($RrfK + rank_c)"), lit(0L))),
+      Seq("term"), "rrf_score", "doc_id", K, longScores = true)
   }
 
   val rrfFusion3Sql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Relational
 import graft.sources.Tables
 import graft.streaming.{DebeziumJson, FiniteStream, Pipeline}
 import graft.streaming.FiniteStream.{Batches, Leg, deleteRecursively, scratchDir}
@@ -669,7 +670,7 @@ object StreamingQueries {
     * [[CurationQueries.weightedSample]] (same oracle): priorities are
     * pure per-row functions (md5-keyed uniform, ln(u)/n_chars), so
     * the stream needs NO sampling coordination — state is one
-    * k-bounded [[graft.functions.TopKByScore]] buffer per source
+    * k-bounded [[Relational.topKAggregator]] buffer per source
     * (≤10 (pri, id) pairs, fixed size forever), updated in complete
     * mode as batches arrive. The winners join back to the static
     * table for their attributes post-materialization. */
@@ -678,18 +679,14 @@ object StreamingQueries {
     val M = 1L << 20
     val u = (graft.functions.Md5Key.column(col("doc_id").cast(StringType))
       % M + 1).cast(DoubleType) / (M + 1).toDouble
-    val topk = udaf(new graft.functions.TopKByScore(10))
+    val topk = Relational.topKAggregator(10, longScores = false)
     val agg = docs
       .select(col("source"), col("doc_id"),
         (log(u) / col("n_chars").cast(DoubleType)).as("pri"))
       .groupBy(col("source"))
       .agg(topk(col("pri"), col("doc_id")).as("top"))
-    runToTable(agg, "complete")
-      .select(col("source"),
-        posexplode(arrays_zip(col("top.scores"), col("top.ids")))
-          .as(Seq("pos", "z")))
-      .select(col("source"), col("z.ids").as("doc_id"),
-        (col("pos") + 1).cast(LongType).as("rk"))
+    Relational.topKRanked(runToTable(agg, "complete"), "top", "doc_id", "pri")
+      .select(col("source"), col("doc_id"), col("rank").as("rk"))
       .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
         Seq("doc_id"))
       .select(col("source"), col("doc_id"), col("n_chars"), col("rk"))
@@ -1466,7 +1463,7 @@ object StreamingQueries {
     * against a static latest-event-per-user dimension derived from the
     * same table — equals the batch join oracle on finite input. */
   def streamStaticJoin(s: SparkSession, d: String): DataFrame = {
-    val dim = graft.operators.Relational.latestByKey(Tables.events(s, d),
+    val dim = Relational.latestByKey(Tables.events(s, d),
         col("user_id"), col("event_id"), "latest_type" -> col("event_type"))
       .withColumnRenamed("user_id", "dim_user")
     val joined = eventsStream(s, d)

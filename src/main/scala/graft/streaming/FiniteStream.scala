@@ -24,9 +24,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     writes a store snapshot per micro-batch, so small finite inputs
   *     want few. Each start goes through
   *     [[LocalCheckpointFileManager.start]].
-  *  2. DRAIN every leg, in leg order. A failure that originates in
-  *     state-store decoding is rewritten into an explicit instruction
-  *     ([[translateStateDecode]]); any other failure passes through.
+  *  2. DRAIN every leg, in leg order; a failure passes through.
   *  3. DETACH each memory-sink leg's result eagerly (`localCheckpoint`).
   *     The sink's rows are otherwise pinned by both its temp view and the
   *     manager's terminated-query list, so returning the live table
@@ -80,8 +78,7 @@ object FiniteStream {
           s, leg.statePartitions)(start(r)))
       }
       runs.toSeq.flatMap { r =>
-        try r.query.get.processAllAvailable()
-        catch { case e: Throwable => throw translateStateDecode(e) }
+        r.query.get.processAllAvailable()
         r.leg.sink match {
           case Memory => Some(s.table(r.name).localCheckpoint())
           case Batches(_) => None
@@ -111,41 +108,6 @@ object FiniteStream {
 
   private def quietly(step: => Unit): Unit =
     try step catch { case NonFatal(_) => () }
-
-  /** State-format break detection: the claim registries
-    * (`StreamingQueries.neardupCore`/`claimCore`) widened their per-key
-    * state in r17 (bare Long → tuple), so a checkpoint written by the
-    * r16 binary fails to restore with an opaque deserialization error
-    * deep in the state-store layer. Translate that failure class into
-    * an explicit instruction instead of letting the raw decode error
-    * surface. Non-decode failures pass through untouched. */
-  private def translateStateDecode(e: Throwable): Throwable = {
-    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .take(16).toSeq
-    // the failure must actually ORIGINATE in the state-store layer —
-    // a decode-shaped exception thrown by query expressions (e.g. an
-    // out-of-bounds array index in user logic) must surface untouched
-    val stateFrame = chain.exists(_.getStackTrace.exists(f =>
-      f.getClassName.contains("sql.execution.streaming.state")))
-    val decodeLike = chain.exists {
-      case _: ClassCastException | _: java.io.InvalidClassException |
-           _: ArrayIndexOutOfBoundsException |
-           _: java.io.StreamCorruptedException => true
-      case c => Option(c.getMessage).exists(m =>
-        m.contains("InvalidUnsafeRow") || m.contains("delta file") ||
-          m.contains("Error reading state") ||
-          m.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE") ||
-          m.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"))
-    }
-    if (decodeLike && stateFrame)
-      new IllegalStateException(
-        "stateful stream failed to restore its checkpoint state — if " +
-          "this checkpoint was written by a pre-r17 binary, the claim-" +
-          "registry state format widened (bare Long -> (contested, " +
-          "sole, pend) tuple) and cannot restore: drain the query on " +
-          "the old binary or restart from a fresh checkpoint", e)
-    else e
-  }
 
   /** Parent of every scratch directory: shared memory when writable. */
   private[graft] val scratchRoot: Path = {

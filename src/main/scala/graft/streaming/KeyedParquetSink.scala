@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Durable K2: keyed upsert sink over parquet with BUCKETED
   * copy-on-write snapshots — the offline stand-in for the reference's
@@ -334,8 +335,10 @@ class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
     }
 
     // the batch lineage is read twice (touched-bucket scan + merge
-    // write) — pin it so the upstream micro-batch isn't recomputed
-    val pinned = batch.persist()
+    // write) — pin it so the upstream micro-batch isn't recomputed,
+    // unless the caller already did: then the cache is the caller's
+    val ownCache = batch.storageLevel == StorageLevel.NONE
+    val pinned = if (ownCache) batch.persist() else batch
     try {
     // which buckets does this batch touch? ≤ numBuckets tiny rows —
     // the one driver-side read, and it carries bucket IDs, not data
@@ -394,7 +397,7 @@ class KeyedParquetSink(spark: SparkSession, root: String, keyCol: String,
     // paths), so root spelling can't desynchronize the keep set.
     val live = newBuckets.values.map(_.split('/').head).toSet ++ recent
     prune(live)
-    } finally { pinned.unpersist(blocking = false); () }
+    } finally { if (ownCache) pinned.unpersist(blocking = false); () }
   }
 
   /** Deep-history vacuum: delete every version directory not

@@ -208,17 +208,15 @@ class Pipeline(spark: SparkSession, checkpointRoot: String,
           // the production egress seam: mirror each shipped batch into
           // an additional sink (e.g. BulkUpsertSink.forEachBatch — the
           // ES-analog bulk façade) without forking the operator graph.
-          // With two consumers the batch is persisted first (the
-          // standard foreachBatch multi-sink rule): otherwise the whole
-          // join subtree re-executes per sink, and a nondeterministic
-          // stage could even diverge between them.
-          if (extraShippedSink.isDefined) {
-            batch.persist()
-            try {
-              shippedSink.upsert(batch, batchId)
-              extraShippedSink.foreach(f => f(batch, batchId))
-            } finally { batch.unpersist(); () }
-          } else shippedSink.upsert(batch, batchId)
+          // Every sink reads the one persisted batch (the standard
+          // foreachBatch multi-sink rule): otherwise the whole join
+          // subtree re-executes per read, and a nondeterministic stage
+          // could even diverge between sinks.
+          batch.persist()
+          try {
+            shippedSink.upsert(batch, batchId)
+            extraShippedSink.foreach(f => f(batch, batchId))
+          } finally { batch.unpersist(); () }
         }
         .start()
     }

@@ -725,6 +725,11 @@ class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
       (0 until 40).foreach(i =>
         GraftSql.sql(spark, s"INSERT INTO ins_s VALUES (${200 + i}, 'b');"))
       assert(spark.table("ins_s").count() == 45L)
+      // VALUES speak the ksql dialect: ksql's ROUND(-2.5) is -2,
+      // Spark's round is -3
+      GraftSql.sql(spark, "INSERT INTO ins_s (id) VALUES (ROUND(-2.5));")
+      assert(spark.table("ins_s").filter("id < 0").collect()
+        .map(_.getInt(0)).toSeq == Seq(-2))
       val unions = spark.table("ins_s").queryExecution.analyzed.collect {
         case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
       }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{LogCapture, SharedSpark}
 
 /** End-to-end golden test: the reference's manual Elasticsearch check
   * (reference README.md:548-637) as a deterministic spec — seed
@@ -219,6 +220,23 @@ class PipelineGoldenSpec extends AnyFunSuite with SharedSpark {
       sink.upsert(p.shippedOrders.df.get, batchId = 0)
       assert(snapshot(store) == docs)
     } finally p.stop()
+  }
+
+  test("shipped_orders computes each batch once: every sink reads the one persisted batch") {
+    // q3 persists the batch for all its sinks; if the keyed sink
+    // dropped that cache, the extra sink would re-run the interval join
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[StorageLevel]()
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val logged = LogCapture.logged {
+      val p = new Pipeline(spark, ckpt, extraShippedSink = Some { (b, _) =>
+        levels.add(b.storageLevel); ()
+      })
+      try { seed(p); p.step() } finally p.stop()
+    }
+    assert(!levels.isEmpty)
+    assert(!levels.contains(StorageLevel.NONE), levels)
+    assert(!logged.exists(_.contains("Asked to cache already cached data")),
+      logged.filter(_.contains("cache")))
   }
 
   test("late data: shipment below the advanced watermark is dropped (state eviction)") {

@@ -31,8 +31,8 @@ object Bench {
     // In-band hardware calibration: q1_pricing_summary standalone,
     // min-of-5, OUTSIDE the suite timings. Cross-round bench ratios
     // divide by this to separate box-speed drift from plan
-    // regressions (round 9's ~1.6× hardware skew was only
-    // recoverable from prose; this pins it in the artifact).
+    // regressions (a ~1.6× hardware skew is otherwise recoverable
+    // only from prose; this pins it in the artifact).
     val calibration = (1 to 5).map { _ =>
       sweep()
       val t0 = System.nanoTime()
@@ -40,14 +40,13 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    // Second, COMPUTE-BOUND calibration probe (VERDICT r15 next #8):
-    // q1 is scan-bound, so it does not track compute-bound box drift —
-    // the r13/r14/r15 driver-vs-quiet-box episodes all moved
-    // compute-heavy fixtures while q1 held steady, leaving the drift
-    // attributable only from prose. This probe is a fixed scan-free
-    // arithmetic fold (4M rows x 64-step LCG fold over all cores,
-    // zero I/O, deterministic result), min-of-5 like q1; cross-round
-    // ratios of compute-heavy queries divide by THIS number.
+    // Second, COMPUTE-BOUND calibration probe: q1 is scan-bound, so it
+    // does not track compute-bound box drift — box-to-box episodes
+    // have moved compute-heavy fixtures while q1 held steady. This
+    // probe is a fixed scan-free arithmetic fold (4M rows x 64-step
+    // LCG fold over all cores, zero I/O, deterministic result),
+    // min-of-5 like q1; cross-round ratios of compute-heavy queries
+    // divide by THIS number.
     val calibrationCpu = (1 to 5).map { _ =>
       sweep()
       val t0 = System.nanoTime()
@@ -65,7 +64,7 @@ object Bench {
       args.isEmpty || args.exists(n.contains)
     }
     // min-of-N per query: a single contended run on a shared box can
-    // record 8× the real time (observed round 2); the min of three
+    // record 8× the real time (observed); the min of three
     // runs is the contention-immune estimate of the query's cost
     val runsPerQuery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
@@ -91,17 +90,16 @@ object Bench {
         catch { case e: Throwable => err = e; None }
       }
       val first = (1 to runsPerQuery).flatMap(_ => run())
-      // Variance guard (VERDICT r14 next #5): the streaming fixtures
-      // are micro-batch latency-sensitive to box state — the r13/r14
-      // jitter episodes (stream_pipeline_golden, stream_interval_left)
-      // were single readings 2×+ off on untouched code. When min and
+      // Variance guard: the streaming fixtures are micro-batch
+      // latency-sensitive to box state — stream_pipeline_golden and
+      // stream_interval_left have read 2×+ off on untouched code. When min and
       // median of the first runs diverge >1.5×, escalate to 5 total
       // runs so one noisy run can't dominate the per-query stat; the
       // reported stat stays the MIN over all runs (the contention-
       // immune cross-round comparison number — a median would still
       // carry sustained ambient load), with medians alongside.
       // Escalation gates on the CONFIGURED run count, not the
-      // successful-run count (ADVICE r15): with SPARK_GRAFT_BENCH_RUNS
+      // successful-run count: with SPARK_GRAFT_BENCH_RUNS
       // >= 5 the guard is already amortized by the base runs, but a
       // query with FAILED runs must not sneak into escalation off 2
       // samples when the operator asked for more — so the decision is
@@ -130,8 +128,8 @@ object Bench {
     }
     // per-query MIN (contention-immune cost estimate, the cross-round
     // comparison stat) AND MEDIAN (so one-off scheduler noise is
-    // distinguishable from real regression IN-BAND — round 11's
-    // variance cluster was undiagnosable from min alone)
+    // distinguishable from real regression IN-BAND — a variance
+    // cluster is undiagnosable from min alone)
     val qs = results.map { case (k, ts) => s"\"" + k + "\":" + ts.min }
       .mkString("{", ",", "}")
     val qsMedian = results.map { case (k, ts) => s"\"" + k + "\":" + median(ts) }
@@ -148,10 +146,9 @@ object Bench {
       s""""calibration_q1_sec":$calibration,""" +
       s""""calibration_cpu_sec":$calibrationCpu,""" +
       s""""heap_max_mb":$maxHeapMb,"sf":"$sfDir""""
-    // cpus-stamped default (VERDICT r19 next #1): the driver runs the
-    // bench at two core counts back-to-back; a fixed filename let the
-    // 8-core scaling run clobber the 32-core per-query map, leaving
-    // PERF with no per-query or scaling data. The stdout pointer
+    // cpus-stamped default: the bench may run at two core counts
+    // back-to-back, and a fixed filename would let the second run
+    // clobber the first run's per-query map. The stdout pointer
     // (queries_file) stays authoritative for whoever consumes it.
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"bench_out_c$cpus.json"))

@@ -1436,33 +1436,13 @@ object ConnectorDdl {
                          emit: String): Boolean =
     kindStr.equalsIgnoreCase("STREAM") || emit != null || withProps != null
 
-  /** True when [[sql]] will handle this statement (vs plain Spark SQL). */
-  def handles(statement: String): Boolean = statement match {
-    case createRe(_*) | dropRe(_*) | dropRelationRe(_*) | showRe(_*)
-       | setRe(_*) | unsetRe(_*) | showPropertiesRe(_*)
-       | defineRe(_*) | undefineRe(_*) | showVariablesRe(_*)
-       | runScriptRe(_*) | describeConnectorRe(_*) | showPluginsRe(_*)
-       | showStreamsRe(_*) | streamDefRe(_*) | showTablesRe(_*)
-       | describeRe(_*) | showQueriesRe(_*) | showQueriesExtRe(_*)
-       | showStateStoresRe(_*) | terminateRe(_*)
-       | pauseRe(_*) | resumeRe(_*) | alterRe(_*)
-       | printRe(_*) | explainRe(_*) | showTopicsRe(_*)
-       | insertValuesRe(_*) | insertSelectRe(_*)
-       | createTypeRe(_*) | dropTypeRe(_*)
-       | showTypesRe(_*) | showFunctionsRe(_*)
-       | describeFunctionRe(_*) => true
-    case csasRe(kindStr, _, withProps, _, emit) =>
-      isKsqlCsas(kindStr, withProps, emit)
-    case _ => false
-  }
-
-  /** Execute one connector statement; returns the ksqlDB-style status
-    * frame. Throws IllegalArgumentException on duplicate CREATE (unless
-    * IF NOT EXISTS) or missing DROP target (unless IF EXISTS). */
-  def sql(spark: SparkSession, statement: String): DataFrame = {
-    import spark.implicits._
-    statement match {
-      case createRe(kindStr, ifNotExists, quotedName, bareName, body) =>
+  /** The action [[sql]] runs for a connector statement, or None for
+    * plain Spark SQL. Matching runs only the patterns and guards. */
+  private def action(statement: String): Option[SparkSession => DataFrame] =
+    PartialFunction.condOpt(statement) {
+      case createRe(kindStr, ifNotExists, quotedName, bareName,
+                    body) => spark =>
+        import spark.implicits._
         val spec = ConnectorSpec(
           if (kindStr.equalsIgnoreCase("SOURCE")) Source else Sink,
           pick(quotedName, bareName).toLowerCase,
@@ -1473,14 +1453,16 @@ object ConnectorDdl {
             s"connector ${spec.name} already exists (use IF NOT EXISTS)")
         Seq((spec.name, kindStr.toUpperCase, spec.connectorClass, "CREATED"))
           .toDF("name", "kind", "class", "status")
-      case dropRe(ifExists, quotedName, bareName) =>
+      case dropRe(ifExists, quotedName, bareName) => spark =>
+        import spark.implicits._
         val name = pick(quotedName, bareName)
         val removed = catalog(spark).remove(name.toLowerCase)
         if (removed == null && ifExists == null)
           throw new IllegalArgumentException(s"connector $name does not exist")
         Seq((name.toLowerCase, "DROPPED")).toDF("name", "status")
       case dropRelationRe(kindStr, ifExists, quotedName, bareName,
-                          deleteTopic) =>
+                          deleteTopic) => spark =>
+        import spark.implicits._
         val name = pick(quotedName, bareName)
         val key = name.toLowerCase
         val kind = kindStr.toUpperCase
@@ -1512,15 +1494,18 @@ object ConnectorDdl {
             "name", "kind", "note", "status")
         else throw new IllegalArgumentException(
           s"stream $name does not exist")
-      case showRe() =>
+      case showRe() => spark =>
+        import spark.implicits._
         connectors(spark).map(s => (s.name,
             s.kind match { case Source => "SOURCE"; case Sink => "SINK" },
             s.connectorClass))
           .toDF("name", "kind", "class")
-      case showFunctionsRe() =>
+      case showFunctionsRe() => spark =>
+        import spark.implicits._
         functionInventory.map { case (n, c, _) => (n, c) }
           .toDF("name", "category")
-      case describeFunctionRe(qname, bname) =>
+      case describeFunctionRe(qname, bname) => spark =>
+        import spark.implicits._
         val name = pick(qname, bname).toLowerCase
         functionInventory.find(_._1 == name) match {
           case Some((n, c, u)) =>
@@ -1529,7 +1514,8 @@ object ConnectorDdl {
           // serves builtins through the same spelling
           case None => spark.sql(statement)
         }
-      case createTypeRe(qname, bname, typeBody) =>
+      case createTypeRe(qname, bname, typeBody) => spark =>
+        import spark.implicits._
         val name = pick(qname, bname).toLowerCase
         // resolve references to previously registered types, translate
         // ksql scalar spellings, then VALIDATE by parsing as Spark DDL
@@ -1543,37 +1529,42 @@ object ConnectorDdl {
         if (prev != null) throw new IllegalArgumentException(
           s"type $name already exists (DROP TYPE it first)")
         Seq((name, resolved, "REGISTERED")).toDF("name", "type", "status")
-      case dropTypeRe(ifExists, qname, bname) =>
+      case dropTypeRe(ifExists, qname, bname) => spark =>
+        import spark.implicits._
         val name = pick(qname, bname).toLowerCase
         val removed = state(spark).types.remove(name)
         if (removed == null && ifExists == null)
           throw new IllegalArgumentException(s"type $name does not exist")
         Seq((name, "DROPPED")).toDF("name", "status")
-      case showTypesRe() => {
+      case showTypesRe() => spark =>
+        import spark.implicits._
         import scala.jdk.CollectionConverters._
         state(spark).types.asScala.toSeq.sortBy(_._1)
           .toDF("name", "type")
-      }
-      case setRe(key, value) =>
+      case setRe(key, value) => spark =>
+        import spark.implicits._
         // session-scoped property, quotes stripped; the reference's
         // `SET 'auto.offset.reset' = 'earliest'` lands here (the Kafka
         // source reads it back as its startingOffsets default)
         spark.conf.set(key, unescape(value))
         state(spark).setKeys.add(key)
         Seq((key, unescape(value))).toDF("property", "value")
-      case defineRe(name, value) =>
+      case defineRe(name, value) => spark =>
+        import spark.implicits._
         state(spark).variables.put(name.toLowerCase, unescape(value))
         Seq((name.toLowerCase, unescape(value), "DEFINED"))
           .toDF("variable", "value", "status")
-      case undefineRe(name) =>
+      case undefineRe(name) => spark =>
+        import spark.implicits._
         state(spark).variables.remove(name.toLowerCase)
         Seq((name.toLowerCase, "UNDEFINED")).toDF("variable", "status")
-      case showVariablesRe() => {
+      case showVariablesRe() => spark =>
+        import spark.implicits._
         import scala.jdk.CollectionConverters._
         state(spark).variables.asScala.toSeq.sorted
           .toDF("variable", "value")
-      }
-      case runScriptRe(path) =>
+      case runScriptRe(path) => spark =>
+        import spark.implicits._
         // the CLI's file mode: the whole statement file runs through
         // GraftSql.script (same splitter, same fail-fast contract)
         val text = new String(
@@ -1583,7 +1574,8 @@ object ConnectorDdl {
         ran.map { case (stmt, _) =>
           (stmt.linesIterator.mkString(" ").take(60), "EXECUTED")
         }.toDF("statement", "status")
-      case describeConnectorRe(qname, bname) =>
+      case describeConnectorRe(qname, bname) => spark =>
+        import spark.implicits._
         val name = pick(qname, bname)
         connector(spark, name) match {
           case Some(spec) =>
@@ -1597,7 +1589,8 @@ object ConnectorDdl {
           case None => throw new IllegalArgumentException(
             s"connector $name does not exist")
         }
-      case showPluginsRe() =>
+      case showPluginsRe() => spark =>
+        import spark.implicits._
         // the plugins the reference deployment vendors
         // (confluent-hub-components/*/manifest.json): Debezium
         // Postgres + MongoDB 1.1.0 and the Confluent ES sink 10.0.1
@@ -1609,28 +1602,30 @@ object ConnectorDdl {
           ("io.confluent.connect.elasticsearch.ElasticsearchSinkConnector",
             "SINK", "10.0.1"))
           .toDF("class", "type", "version")
-      case unsetRe(key) =>
+      case unsetRe(key) => spark =>
+        import spark.implicits._
         // back to the default: ksql UNSET clears the session override
         try spark.conf.unset(key)
         catch { case scala.util.control.NonFatal(_) => () } // static confs
         state(spark).setKeys.remove(key)
         Seq((key, "UNSET")).toDF("property", "status")
-      case showPropertiesRe() => {
+      case showPropertiesRe() => spark =>
+        import spark.implicits._
         import scala.jdk.CollectionConverters._
         state(spark).setKeys.asScala.toSeq.sorted
           .map(k => (k, spark.conf.getOption(k).getOrElse(""), "SESSION"))
           .toDF("property", "value", "scope")
-      }
-      case showStreamsRe() =>
+      case showStreamsRe() => spark =>
         // ksql SHOW STREAMS ≈ the session's registered (temp) views,
         // minus views a CTAS declared as TABLEs (ksql lists those only
         // under SHOW TABLES)
         sessionViews(spark, tablesOnly = false)
-      case showTablesRe() =>
+      case showTablesRe() => spark =>
         // ksql SHOW TABLES: the CTAS-declared TABLE views — the exact
         // complement of SHOW STREAMS above
         sessionViews(spark, tablesOnly = true)
-      case describeRe(quotedName, bareName) =>
+      case describeRe(quotedName, bareName) => spark =>
+        import spark.implicits._
         // ksql DESCRIBE <relation>: one row per field with the
         // relation's declared kind (STREAM unless a CTAS registered it
         // as TABLE) and Spark's type spelling
@@ -1642,11 +1637,12 @@ object ConnectorDdl {
         spark.table(name).schema.fields.toSeq
           .map(f => (name.toLowerCase, kind, f.name, f.dataType.sql))
           .toDF("name", "kind", "field", "type")
-      case showQueriesExtRe() =>
+      case showQueriesExtRe() => spark =>
         graft.streaming.QueryMetrics.extended(spark)
-      case showStateStoresRe() =>
+      case showStateStoresRe() => spark =>
         graft.streaming.QueryMetrics.stateStores(spark)
-      case showQueriesRe() =>
+      case showQueriesRe() => spark =>
+        import spark.implicits._
         // ksql SHOW QUERIES: the session's running persistent queries,
         // plus paused-but-resumable registrations (QueryControl)
         (spark.streams.active.toSeq
@@ -1655,7 +1651,8 @@ object ConnectorDdl {
           graft.streaming.QueryControl.paused(spark)
             .map(n => ("", n, "PAUSED")))
           .toDF("query_id", "name", "status")
-      case alterRe(kindStr, qname, bname, clauses) =>
+      case alterRe(kindStr, qname, bname, clauses) => spark =>
+        import spark.implicits._
         val name = pick(qname, bname)
         val key = name.toLowerCase
         val kind = kindStr.toUpperCase
@@ -1692,20 +1689,23 @@ object ConnectorDdl {
         widened.createOrReplaceTempView(name)
         cols.map { case (c, dt) => (key, kind, c, dt.sql, "ALTERED") }
           .toDF("name", "kind", "column", "type", "status")
-      case pauseRe(quotedId, bareId) =>
+      case pauseRe(quotedId, bareId) => spark =>
+        import spark.implicits._
         graft.streaming.QueryControl.pause(spark, pick(quotedId, bareId))
           .toDF("name", "status")
-      case resumeRe(quotedId, bareId) =>
+      case resumeRe(quotedId, bareId) => spark =>
+        import spark.implicits._
         graft.streaming.QueryControl.resume(spark, pick(quotedId, bareId))
           .toDF("name", "status")
-      case printRe(topic, _, limit) =>
+      case printRe(topic, _, limit) => spark =>
         // ksql PRINT: peek at the relation backing the topic
         val rel = topic.split('.').last
         if (!spark.catalog.tableExists(rel))
           throw new IllegalArgumentException(
             s"cannot PRINT '$topic': no relation named $rel in the session")
         spark.table(rel).limit(Option(limit).map(_.toInt).getOrElse(10))
-      case terminateRe(quotedId, bareId) =>
+      case terminateRe(quotedId, bareId) => spark =>
+        import spark.implicits._
         // ksql TERMINATE <query-id> (by id or queryName) / TERMINATE ALL
         val target = pick(quotedId, bareId)
         val matched =
@@ -1720,7 +1720,8 @@ object ConnectorDdl {
         matched.map(q => (q.id.toString, Option(q.name).getOrElse(""),
             "TERMINATED"))
           .toDF("query_id", "name", "status")
-      case explainRe(body) =>
+      case explainRe(body) => spark =>
+        import spark.implicits._
         // ksql EXPLAIN: for a registered stream/table, the recorded
         // statement text plus Spark's formatted plan of the view; for
         // a SELECT, the statement run through the same ksql rewrites
@@ -1741,7 +1742,8 @@ object ConnectorDdl {
               spark.sql(rewritten).queryExecution.explainString(FormattedMode)))
             .toDF("name", "kind", "statement", "plan")
         }
-      case showTopicsRe() =>
+      case showTopicsRe() => spark =>
+        import spark.implicits._
         // ksql SHOW TOPICS: session relations (the offline topic
         // analogs) + every topic exported by a registered sink
         val rels = spark.catalog.listTables().collect()
@@ -1751,7 +1753,8 @@ object ConnectorDdl {
           .filter(_.kind == Sink)
           .flatMap(c => c.topics.map(t => (t, s"SINK ${c.name}")))
         (rels ++ sinkTopics).sortBy(_._1).toDF("name", "source")
-      case insertValuesRe(qname, bname, colList, tuple) =>
+      case insertValuesRe(qname, bname, colList, tuple) => spark =>
+        import spark.implicits._
         // ksql INSERT INTO <stream> VALUES: append one literal row to
         // a registered temp view; values are cast to the view's column
         // types, unmentioned columns become null. A non-temp (real
@@ -1805,7 +1808,8 @@ object ConnectorDdl {
               "1 row", "INSERTED"))
             .toDF("name", "kind", "rows", "status")
         }
-      case insertSelectRe(qname, bname, selectBody) =>
+      case insertSelectRe(qname, bname, selectBody) => spark =>
+        import spark.implicits._
         // ksql INSERT INTO <stream> SELECT … — the second persistent-
         // query form: a derived stream appended into an EXISTING one.
         // The select rides the full ksql rewrite chain (function
@@ -1846,7 +1850,8 @@ object ConnectorDdl {
               "select", "INSERTED"))
             .toDF("name", "kind", "rows", "status")
         }
-      case streamDefRe(_, name, schemaList, body) =>
+      case streamDefRe(_, name, schemaList, body) => spark =>
+        import spark.implicits._
         // bare stream definition over a topic (reference README.md:
         // 396-427). The topic's final dotted segment names the backing
         // relation when one exists in the session (the offline analog
@@ -1910,7 +1915,8 @@ object ConnectorDdl {
             props.map { case (k, v) => s"$k=$v" }.mkString(","), "CREATED"))
           .toDF("name", "kind", "properties", "status")
       case csasRe(kindStr, name, withProps, select, emit)
-          if isKsqlCsas(kindStr, withProps, emit) =>
+          if isKsqlCsas(kindStr, withProps, emit) => spark =>
+        import spark.implicits._
         // ksqlDB CSAS/CTAS: the EMIT clause is stripped — on the finite
         // inputs this engine is verified against, the batch evaluation
         // of the SELECT equals the streaming result (every stream_*
@@ -1978,9 +1984,15 @@ object ConnectorDdl {
         Seq((name.toLowerCase, kindStr.toUpperCase,
             shownProps.map { case (k, v) => s"$k=$v" }.mkString(","), "CREATED"))
           .toDF("name", "kind", "properties", "status")
-      case other =>
-        throw new IllegalArgumentException(
-          s"not a connector statement: ${other.take(80)}")
     }
-  }
+
+  /** True when [[sql]] will handle this statement (vs plain Spark SQL). */
+  def handles(statement: String): Boolean = action(statement).isDefined
+
+  /** Execute one connector statement; returns the ksqlDB-style status
+    * frame. Throws IllegalArgumentException on duplicate CREATE (unless
+    * IF NOT EXISTS) or missing DROP target (unless IF EXISTS). */
+  def sql(spark: SparkSession, statement: String): DataFrame =
+    action(statement).getOrElse(throw new IllegalArgumentException(
+      s"not a connector statement: ${statement.take(80)}"))(spark)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -16,19 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Jaccard candidate mining). Bit-identical to the DuckDB oracle's
   * `DISTINCT substr(md5(shingle), 1, 16)`. */
 case class HashedShingles(child: Expression, shingleWidth: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends TokenArrayFunction("hashed_shingles") with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hashed_shingles expects array<string>, got ${other.simpleString}")
-    }
 
   @transient private lazy val hexChars = "0123456789abcdef".toCharArray
   @transient private lazy val digest: MessageDigest =

@@ -67,11 +67,11 @@ object MgSketch {
   }
 }
 
-/** Mutable Misra–Gries aggregation buffer (VERDICT r14 "what's wrong"
-  * #2): the Aggregators below mutate ONE java.util.HashMap in place
-  * per row/merge — kryo-serialized only at shuffle boundaries — where
-  * the previous immutable-Map fold rebuilt a map per insertion
-  * (measurable CPU at real scale). The algorithms mirror
+/** Mutable Misra–Gries aggregation buffer: the Aggregators below
+  * mutate ONE java.util.HashMap in place per row/merge —
+  * kryo-serialized only at shuffle boundaries — where an immutable-Map
+  * fold would rebuild a map per insertion (measurable CPU at real
+  * scale). The algorithms mirror
   * [[MgSketch.insert]]/[[MgSketch.merge]] exactly (the pure spellings
   * stay as the fuzz-tested specification; MgSketchSpec pins the
   * buffer ≡ pure-fold equivalence), and every sweep treats all
@@ -115,8 +115,8 @@ final class MgBuf extends Serializable {
   /** [[mergeFrom]] over a SCALA map — the rollup path's per-row input
     * ([[MgSketchMergeAgg.reduce]] receives decoded Map[String, Long]
     * sketch columns). Iterating the scala map directly avoids the
-    * per-row O(k) java-HashMap copy the r15 ADVICE flagged (the
-    * allocation the MgBuf change was meant to eliminate). */
+    * per-row O(k) java-HashMap copy (the allocation MgBuf exists to
+    * eliminate). */
   def mergeFrom(other: scala.collection.Map[String, Long], k: Int): Unit = {
     other.foreachEntry { (t, c) =>
       val cur = m.get(t)
@@ -157,10 +157,10 @@ final class MgBuf extends Serializable {
   * [[MgBuf]] (kryo at shuffle boundaries only); the output stays the
   * encoder-friendly Map[String, Long].
   *
-  * STATE-FORMAT NOTE (ADVICE r15): the r15 switch of bufferEncoder
-  * from ExpressionEncoder[Map] to Encoders.kryo[MgBuf] changed the
-  * streaming aggregation STATE schema (map<string,bigint> → binary),
-  * so a checkpoint persisted by a pre-r15 build of an mg_sketch
+  * STATE-FORMAT NOTE: bufferEncoder is Encoders.kryo[MgBuf], so the
+  * streaming aggregation STATE schema is binary, not
+  * map<string,bigint>; a checkpoint persisted by an mg_sketch build
+  * with an ExpressionEncoder[Map] buffer
   * streaming aggregation (e.g. stream_mg_topk) cannot resume against
   * this one — Spark state schema validation rejects the mismatch
   * loudly at restart, it does not corrupt. All catalog checkpoints

@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -21,19 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `substr(md5(array_to_string(words[i:i+k-1], ' ')), 1, 16)`.
   */
 case class ShingleHashSeq(child: Expression, shingleWidth: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends TokenArrayFunction("shingle_hash_seq") with CodegenFallback {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hash_seq expects array<string>, got ${other.simpleString}")
-    }
 
   @transient private lazy val hexChars = "0123456789abcdef".toCharArray
   @transient private lazy val digest: MessageDigest =

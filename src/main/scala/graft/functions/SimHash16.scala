@@ -3,7 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -19,19 +19,9 @@ import org.apache.spark.sql.types._
   * bucketed near-dup join.
   */
 case class SimHash16(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+    extends TokenArrayFunction("simhash16") with CodegenFallback {
 
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"simhash16 expects array<string>, got ${other.simpleString}")
-    }
 
   @transient private lazy val digest: MessageDigest =
     MessageDigest.getInstance("MD5")

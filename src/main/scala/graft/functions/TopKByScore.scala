@@ -46,7 +46,7 @@ class TopKByScore(k: Int) extends Aggregator[ScoredId, TopKBuf, TopKBuf] {
   override def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
 }
 
-/** LONG-scored variant of [[TopKByScore]] (ADVICE r14): the retrieval
+/** LONG-scored variant of [[TopKByScore]]: the retrieval
   * queries score on exact BIGINT grids (idf_ppm · tfn products reach
   * ~1.5e15 at sf1 and keep growing with corpus size), and routing
   * those through a Double payload silently loses exactness past 2^53 —

@@ -15,8 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ksql's UDF reads `java.net.URI.getQuery()` — which percent-DECODES
   * the query as a whole while leaving `+` untouched — and only THEN
   * splits on `&` / `=`. The previous mapping,
-  * `url_decode(parse_url(url, 'QUERY', name))`, diverged on two edges
-  * (ADVICE r12):
+  * `url_decode(parse_url(url, 'QUERY', name))`, diverges on two edges:
   *
   *  - a literal `+` in a value stays `+` under ksql, but
   *    `java.net.URLDecoder` (Spark's `url_decode`) turns it into a
@@ -28,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This expression reproduces the decode-then-split pipeline exactly:
   * `?a=1%262` yields `1` for `a` (the decoded `&` splits), and
-  * `?t=a+b` yields `a+b` verbatim. Pair handling mirrors ksql's UDF
-  * (ADVICE r13): each `&`-pair is split on EVERY `=` (trailing empty
+  * `?t=a+b` yields `a+b` verbatim. Pair handling mirrors ksql's UDF:
+  * each `&`-pair is split on EVERY `=` (trailing empty
   * parts kept), and only pairs whose split yields exactly TWO parts
   * participate — a valueless parameter (`?a`) or a value containing a
   * decoded `=` (`?a=b=c`, three parts) is SKIPPED and the scan

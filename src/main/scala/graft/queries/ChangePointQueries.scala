@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
 
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -31,7 +32,7 @@ import graft.streaming.FiniteStream.{Batches, Leg}
   * spec pins closed form ≡ recurrence on random series. All
   * arithmetic is exact integers (micro-unit value grid; h = μ), and
   * μ and the slack k = μ/20 use the same 2^40-shift FLOOR-division
-  * spelling as [[SeasonalQueries]] (ADVICE r13): Spark `DIV`
+  * spelling as [[SeasonalQueries]]: Spark `DIV`
   * truncates toward zero while DuckDB `//` floors, so a series with
   * negative values would silently desync the two engines under the
   * naive spelling — the positivity shift makes both compute the
@@ -142,11 +143,7 @@ object ChangePointQueries {
     store.df(s).select(col("event_type"), col("hts"), col("x"))
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cusum_changepoint" -> cusumChangepoint _,
-    "stream_cusum_changepoint" -> streamCusumChangepoint _)
-
-  def oracles: Map[String, String] = Map(
-    "q_cusum_changepoint" -> cusumSql,
-    "stream_cusum_changepoint" -> cusumSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q_cusum_changepoint", cusumChangepoint, cusumSql),
+    Entry("stream_cusum_changepoint", streamCusumChangepoint, cusumSql))
 }

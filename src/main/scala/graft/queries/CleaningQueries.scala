@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TextShingles
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** End-to-end corpus cleaning — the composed LLM-data pipeline:
@@ -53,9 +54,6 @@ object CleaningQueries {
       |SELECT doc_id, n_tokens FROM gated
       |WHERE doc_id NOT IN (SELECT loser FROM losers)""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_clean_corpus" -> cleanCorpus _)
-
-  def oracles: Map[String, String] = Map(
-    "pipeline_clean_corpus" -> cleanCorpusSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("pipeline_clean_corpus", cleanCorpus, cleanCorpusSql))
 }

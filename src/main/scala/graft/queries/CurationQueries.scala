@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{Md5Key, TextShingles}
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** Corpus-curation operators — the decision layer of a training-data
@@ -210,9 +211,8 @@ object CurationQueries {
   }
 
   /** SPAN-level decontamination — the excision tier above
-    * [[decontaminate]]'s per-doc evidence (VERDICT r13: the decontam
-    * family was n-gram-overlap only; phrase-EXACT precision was the
-    * missing tier). Matches are exact 5-gram token STRINGS (no hash —
+    * [[decontaminate]]'s per-doc n-gram-overlap evidence, adding
+    * phrase-EXACT precision. Matches are exact 5-gram token STRINGS (no hash —
     * zero collision false positives) carried WITH their positions, so
     * the output is the contaminated SPANS a real pipeline excises
     * (remove the leaked span, keep the document) instead of a
@@ -294,22 +294,20 @@ object CurationQueries {
       |       CAST(COUNT(*) AS BIGINT) AS n_grams
       |FROM grp GROUP BY doc_id, island""".stripMargin
 
-  /** Streaming twin of [[decontamSpan]] (VERDICT r14 next-round #3):
-    * span excision at INGEST time — the corpus-build stream gains the
-    * ability to excise leaked benchmark spans as documents arrive.
-    * The benchmark 5-gram strings are a STATIC side (built once from
-    * the held-out split — in production, the frozen eval-suite
+  /** Streaming twin of [[decontamSpan]]: span excision at INGEST time — the
+    * corpus-build stream gains the ability to excise leaked benchmark spans as
+    * documents arrive. The benchmark 5-gram strings are a STATIC side (built
+    * once from the held-out split — in production, the frozen eval-suite
     * artifact) joined stream-static against each arriving document's
     * posexploded grams: Spark broadcasts the static side under every
-    * micro-batch, the join is STATELESS (append mode — no watermark,
-    * no state store), so ingest cost per document is gram extraction
-    * plus a broadcast-hash probe. Documents arrive WHOLE (one row =
-    * one doc), so all of a doc's hits surface in its own micro-batch
-    * and the island merge is per-doc work at finalize — the shared
-    * [[spanIslands]] spelling over the drained hit table; no
-    * cross-batch state exists anywhere in the pipeline. Finite input
-    * ⇒ the hit relation equals the batch join's, so the SAME oracle
-    * verifies the streaming composition. */
+    * micro-batch, the join is STATELESS (append mode — no watermark, no state
+    * store), so ingest cost per document is gram extraction plus a
+    * broadcast-hash probe. Documents arrive WHOLE (one row = one doc), so all
+    * of a doc's hits surface in its own micro-batch and the island merge is
+    * per-doc work at finalize — the shared [[spanIslands]] spelling over the
+    * drained hit table; no cross-batch state exists anywhere in the pipeline.
+    * Finite input ⇒ the hit relation equals the batch join's, so the SAME
+    * oracle verifies the streaming composition. */
   def streamDecontamSpan(s: SparkSession, d: String): DataFrame = {
     def gramsOf(docs: DataFrame): DataFrame = graft.util.Widen(docs)
       .select(col("doc_id"), TextShingles.tokens(col("text")).as("w"))
@@ -368,7 +366,7 @@ object CurationQueries {
         expr("concat_ws(' ', transform(keep, i -> w[CAST(i AS INT)]))")
           .as("clean_text"))
 
-  /** Cross-document REPEATED-SPAN excision (VERDICT r15 next #3) —
+  /** Cross-document REPEATED-SPAN excision —
     * the Lee et al. 2022 "Deduplicating Training Data Makes Language
     * Models Better" operator: [[graft.queries.DedupQueries]]'s
     * repeated-span DETECTION finds corpus-internal duplicated spans
@@ -533,7 +531,7 @@ object CurationQueries {
       .agg(count(lit(1)).as("nh"),
         sum(col("n_chars")).as("sx"),
         sum(col("n_chars") * col("n_chars")).as("sxx"))
-      // GRID BOUND (ADVICE r14): the variance numerator nh·Σx² − (Σx)²
+      // GRID BOUND: the variance numerator nh·Σx² − (Σx)²
       // wraps BIGINT once Σx > ⌊√(2^63)⌋ = 3,037,000,499 (or once
       // nh·Σx² itself overflows) — Spark (non-ANSI) wraps SILENTLY
       // while DuckDB errors, so past the bound the engines diverge
@@ -1578,7 +1576,7 @@ object CurationQueries {
   private def splitName(bucket: Column): Column =
     when(bucket < 98, "train").when(bucket === 98, "val").otherwise("test")
 
-  /** Leakage-aware train/val/test split (r17 verdict #1) — the split
+  /** Leakage-aware train/val/test split — the split
     * every serious pretraining pipeline actually needs: [[datasetSplit]]
     * buckets each doc_id independently, so the two sides of a verified
     * near-dup pair can land in train AND test — internal train/eval
@@ -1613,7 +1611,7 @@ object CurationQueries {
   /** The split-assignment half of [[leakageSplitOver]], over an
     * ALREADY-CLUSTERED component relation — the audit builds its
     * components from the pair relation it also joins directly, so the
-    * (dominant) pair mining runs once (VERDICT r18 #5). */
+    * (dominant) pair mining runs once. */
   private[graft] def leakageSplitFromComps(docs: DataFrame,
                                            comps: DataFrame): DataFrame = {
     val straddle = comps
@@ -1655,14 +1653,13 @@ object CurationQueries {
     * release review reads (naive > 0 on any corpus with near-dups;
     * component = 0 for every pair the clustering covers, and a
     * non-zero here would surface a candidate-recall gap rather than
-    * hide it). Cost: ONE verified-pair mining pass (VERDICT r18 #5 —
-    * the full shared-shingle relation is mined once and feeds BOTH
-    * the audit join and, intersected with the LSH candidate pairs,
-    * the component builder: an LSH-verified pair is exactly a
-    * shared-shingle-verified pair that also collides in a band, so
-    * the semi-join reproduces `componentsOver`'s input without a
-    * second shingle-intersection pass) plus four doc_id-keyed split
-    * pickups; output = 2 rows. */
+    * hide it). Cost: ONE verified-pair mining pass (the full shared-shingle
+    * relation is mined once and feeds BOTH the audit join and, intersected with
+    * the LSH candidate pairs, the component builder: an LSH-verified pair is
+    * exactly a shared-shingle-verified pair that also collides in a band, so
+    * the semi-join reproduces `componentsOver`'s input without a second
+    * shingle-intersection pass) plus four doc_id-keyed split pickups; output =
+    * 2 rows. */
   def splitLeakageAudit(s: SparkSession, d: String): DataFrame = {
     val docs = graft.sources.Tables.documents(s, d)
     // the dominant cost, paid once: all shared-shingle pairs at
@@ -1740,7 +1737,7 @@ object CurationQueries {
        |FROM r LEFT JOIN ns ON ns.component = r.component_id""".stripMargin
   }
 
-  /** TEMPORAL holdout split (r18 verdict #2) — the OTHER split every
+  /** TEMPORAL holdout split — the OTHER split every
     * pretraining pipeline runs: train on the past, evaluate on the
     * future, with a hard cutoff at 80% of the ingest sequence (the
     * corpus fixture's ingest time is its doc_id — the reference's
@@ -1809,7 +1806,7 @@ object CurationQueries {
       graft.queries.DedupQueries.componentsOver(staged))
   }
 
-  /** Temporal-leakage AUDIT (r18 verdict #2) — the two numbers a
+  /** Temporal-leakage AUDIT — the two numbers a
     * release review reads next to a time-cutoff split: of all
     * verified near-dup pairs (the corpus-wide j ≥ 0.8 relation), how
     * many straddle the cutoff under (a) the pure per-doc cutoff —
@@ -2100,7 +2097,7 @@ object CurationQueries {
       |FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')""".stripMargin
 
   // ---------------------------------------------------------------
-  // DSIR-style importance resampling (r16 verdict next #3) — Xie et
+  // DSIR-style importance resampling — Xie et
   // al. 2023, "Data Selection for Language Models via Importance
   // Resampling": score every document by how much its hashed n-gram
   // distribution looks like a TARGET corpus relative to the raw pool,
@@ -2179,7 +2176,7 @@ object CurationQueries {
 
   /** The per-bucket log-ratio table over ANY (text) raw pool and ANY
     * (text) target corpus — the published DSIR recipe's general form
-    * (r17 verdict #2: the target need not be a slice of the pool).
+    * (the target need not be a slice of the pool).
     * Both sides ride ONE union scan with membership flags, collapsing
     * to ≤ [[DsirBuckets]] rows collected driver-side (bounded by
     * construction, the ANN-router-collect discipline), arithmetic in
@@ -2293,8 +2290,8 @@ object CurationQueries {
 
   /** Pin the DSIR max-score normalizer: ONE driver scalar, guarded —
     * on an empty scorable pool max(score) is NULL and a bare
-    * getLong(0) would surface as an opaque NPE at query-build time
-    * (ADVICE r18); an empty pool is a configuration error, so say so. */
+    * getLong(0) would surface as an opaque NPE at query-build time;
+    * an empty pool is a configuration error, so say so. */
   private def pinnedSmax(scored: DataFrame): Long = {
     val row = scored.agg(max(col("score"))).collect().head // ONE scalar
     Option(row.get(0)).map(_.asInstanceOf[Long]).getOrElse(
@@ -2304,7 +2301,7 @@ object CurationQueries {
   }
 
   /** The pinned normalizer as a BROADCAST 1-ROW RELATION rather than a
-    * `lit` column (r20, guide §4.4's duplication trap): with `smax` a
+    * `lit` column (guide §4.4's duplication trap): with `smax` a
     * literal, the keep filter's condition is alias-substituted and
     * pushed below the scoring projection — the full gram aggregate
     * re-evaluates inside the Filter, underneath the stream widen
@@ -2337,7 +2334,7 @@ object CurationQueries {
       "append")
   }
 
-  /** DSIR against an EXTERNAL target corpus (r17 verdict #2) — the
+  /** DSIR against an EXTERNAL target corpus — the
     * published recipe's actual deployment shape: the raw pool (the
     * trainable documents, `doc_id % 20 <> 0`) is scored against a
     * SEPARATE trusted corpus (the benchmark holdout slice,
@@ -2359,7 +2356,7 @@ object CurationQueries {
     dsirKeep(scored.crossJoin(broadcast(mx)))
   }
 
-  /** Streaming ESS monitor (r18 verdict #6) — the weight-degeneracy
+  /** Streaming ESS monitor — the weight-degeneracy
     * gauge a DEPLOYED DSIR filter actually watches at ingest: the
     * log-ratio model and max-score normalizer are pinned parameters
     * (the [[streamImportanceSample]] discipline), each arriving
@@ -2592,105 +2589,58 @@ object CurationQueries {
     s"""WITH $dsirKCtesSql,
        |$dsirEssTailSql""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "curate_kanon_audit" -> kanonAudit _,
-    "curate_importance_sample" -> importanceSample _,
-    "stream_importance_sample" -> streamImportanceSample _,
-    "curate_importance_target" -> importanceTarget _,
-    "stream_importance_target" -> streamImportanceTarget _,
-    "curate_importance_target_ess" -> importanceTargetEss _,
-    "curate_importance_ess" -> importanceEss _,
-    "stream_importance_ess" -> streamImportanceEss _,
-    "curate_lang_drift" -> langDrift _,
-    "curate_sketch_trim" -> sketchTrim _,
-    "curate_stable_ids" -> stableIds _,
-    "curate_weighted_sample" -> weightedSample _,
-    "curate_dataset_split" -> datasetSplit _,
-    "curate_leakage_split" -> leakageSplit _,
-    "stream_leakage_split" -> streamLeakageSplit _,
-    "curate_split_leakage_audit" -> splitLeakageAudit _,
-    "curate_temporal_split" -> temporalSplit _,
-    "stream_temporal_split" -> streamTemporalSplit _,
-    "curate_temporal_audit" -> temporalAudit _,
-    "stream_temporal_audit" -> streamTemporalAudit _,
-    "curate_token_budget" -> tokenBudget _,
-    "stream_token_budget" -> streamTokenBudget _,
-    "curate_shard_manifest" -> shardManifest _,
-    "curate_corpus_delta" -> corpusDelta _,
-    "curate_chunk_docs" -> chunkDocs _,
-    "curate_cap_sources" -> capSources _,
-    "curate_temperature_mix" -> temperatureMix _,
-    "curate_corpus_build_clean" -> corpusBuildClean _,
-    "curate_length_buckets" -> lengthBuckets _,
-    "curate_epoch_plan" -> epochPlan _,
-    "curate_dataset_card" -> datasetCard _,
-    "curate_corpus_build" -> corpusBuild _,
-    "curate_stratified_sample" -> stratifiedSample _,
-    "curate_canonical_docs" -> canonicalDocs _,
-    "curate_decontaminate" -> decontaminate _,
-    "curate_decontam_span" -> decontamSpan _,
-    "stream_decontam_span" -> streamDecontamSpan _,
-    "curate_excise_spans" -> exciseSpans _,
-    "curate_excise_repeated" -> exciseRepeated _,
-    "stream_excise_repeated" -> streamExciseRepeated _,
-    "curate_neyman_alloc" -> neymanAlloc _,
-    "curate_decontam_overlap" -> decontamOverlap _,
-    "curate_zorder_layout" -> zorderLayout _,
-    "curate_pipeline_funnel" -> pipelineFunnel _,
-    "curate_decontam_bloom" -> decontamBloom _,
-    "curate_pack_shards" -> packShards _,
-    "curate_mix_sources" -> mixSources _,
-    "curate_train_order" -> trainOrder _,
-    "curate_pack_overflow" -> packOverflow _)
-
-  def oracles: Map[String, String] = Map(
-    "curate_importance_sample" -> importanceSampleSql,
-    "stream_importance_sample" -> importanceSampleSql,
-    "curate_importance_target" -> importanceTargetSql,
-    "stream_importance_target" -> importanceTargetSql,
-    "curate_importance_target_ess" -> importanceTargetEssSql,
-    "curate_importance_ess" -> importanceEssSql,
-    "stream_importance_ess" -> importanceEssSql,
-    "curate_kanon_audit" -> kanonAuditSql,
-    "curate_lang_drift" -> langDriftSql,
-    "curate_sketch_trim" -> sketchTrimSql,
-    "curate_stable_ids" -> stableIdsSql,
-    "curate_weighted_sample" -> weightedSampleSql,
-    "curate_dataset_split" -> datasetSplitSql,
-    "curate_leakage_split" -> leakageSplitSql,
-    "stream_leakage_split" -> leakageSplitSql,
-    "curate_split_leakage_audit" -> splitLeakageAuditSql,
-    "curate_temporal_split" -> temporalSplitSql,
-    "stream_temporal_split" -> temporalSplitSql,
-    "curate_temporal_audit" -> temporalAuditSql,
-    "stream_temporal_audit" -> temporalAuditSql,
-    "curate_token_budget" -> tokenBudgetSql,
-    "stream_token_budget" -> tokenBudgetSql,
-    "curate_shard_manifest" -> shardManifestSql,
-    "curate_corpus_delta" -> corpusDeltaSql,
-    "curate_chunk_docs" -> chunkDocsSql,
-    "curate_cap_sources" -> capSourcesSql,
-    "curate_temperature_mix" -> temperatureMixSql,
-    "curate_corpus_build_clean" -> corpusBuildCleanSql,
-    "curate_length_buckets" -> lengthBucketsSql,
-    "curate_epoch_plan" -> epochPlanSql,
-    "curate_dataset_card" -> datasetCardSql,
-    "curate_corpus_build" -> corpusBuildSql,
-    "curate_stratified_sample" -> stratifiedSampleSql,
-    "curate_canonical_docs" -> canonicalDocsSql,
-    "curate_decontaminate" -> decontaminateSql,
-    "curate_decontam_span" -> decontamSpanSql,
-    "stream_decontam_span" -> decontamSpanSql,
-    "curate_excise_spans" -> exciseSpansSql,
-    "curate_excise_repeated" -> exciseRepeatedSql,
-    "stream_excise_repeated" -> exciseRepeatedSql,
-    "curate_neyman_alloc" -> neymanAllocSql,
-    "curate_decontam_overlap" -> decontamOverlapSql,
-    "curate_zorder_layout" -> zorderLayoutSql,
-    "curate_pipeline_funnel" -> pipelineFunnelSql,
-    "curate_decontam_bloom" -> decontaminateSql,
-    "curate_pack_shards" -> packShardsSql,
-    "curate_mix_sources" -> mixSourcesSql,
-    "curate_train_order" -> trainOrderSql,
-    "curate_pack_overflow" -> packOverflowSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("curate_kanon_audit", kanonAudit, kanonAuditSql),
+    Entry("curate_importance_sample", importanceSample, importanceSampleSql),
+    Entry("stream_importance_sample", streamImportanceSample,
+      importanceSampleSql),
+    Entry("curate_importance_target", importanceTarget, importanceTargetSql),
+    Entry("stream_importance_target", streamImportanceTarget,
+      importanceTargetSql),
+    Entry("curate_importance_target_ess", importanceTargetEss,
+      importanceTargetEssSql),
+    Entry("curate_importance_ess", importanceEss, importanceEssSql),
+    Entry("stream_importance_ess", streamImportanceEss, importanceEssSql),
+    Entry("curate_lang_drift", langDrift, langDriftSql),
+    Entry("curate_sketch_trim", sketchTrim, sketchTrimSql),
+    Entry("curate_stable_ids", stableIds, stableIdsSql),
+    Entry("curate_weighted_sample", weightedSample, weightedSampleSql),
+    Entry("curate_dataset_split", datasetSplit, datasetSplitSql),
+    Entry("curate_leakage_split", leakageSplit, leakageSplitSql),
+    Entry("stream_leakage_split", streamLeakageSplit, leakageSplitSql),
+    Entry("curate_split_leakage_audit", splitLeakageAudit,
+      splitLeakageAuditSql),
+    Entry("curate_temporal_split", temporalSplit, temporalSplitSql),
+    Entry("stream_temporal_split", streamTemporalSplit, temporalSplitSql),
+    Entry("curate_temporal_audit", temporalAudit, temporalAuditSql),
+    Entry("stream_temporal_audit", streamTemporalAudit, temporalAuditSql),
+    Entry("curate_token_budget", tokenBudget, tokenBudgetSql),
+    Entry("stream_token_budget", streamTokenBudget, tokenBudgetSql),
+    Entry("curate_shard_manifest", shardManifest, shardManifestSql),
+    Entry("curate_corpus_delta", corpusDelta, corpusDeltaSql),
+    Entry("curate_chunk_docs", chunkDocs, chunkDocsSql),
+    Entry("curate_cap_sources", capSources, capSourcesSql),
+    Entry("curate_temperature_mix", temperatureMix, temperatureMixSql),
+    Entry("curate_corpus_build_clean", corpusBuildClean, corpusBuildCleanSql),
+    Entry("curate_length_buckets", lengthBuckets, lengthBucketsSql),
+    Entry("curate_epoch_plan", epochPlan, epochPlanSql),
+    Entry("curate_dataset_card", datasetCard, datasetCardSql),
+    Entry("curate_corpus_build", corpusBuild, corpusBuildSql),
+    Entry("curate_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Entry("curate_canonical_docs", canonicalDocs, canonicalDocsSql),
+    Entry("curate_decontaminate", decontaminate, decontaminateSql),
+    Entry("curate_decontam_span", decontamSpan, decontamSpanSql),
+    Entry("stream_decontam_span", streamDecontamSpan, decontamSpanSql),
+    Entry("curate_excise_spans", exciseSpans, exciseSpansSql),
+    Entry("curate_excise_repeated", exciseRepeated, exciseRepeatedSql),
+    Entry("stream_excise_repeated", streamExciseRepeated, exciseRepeatedSql),
+    Entry("curate_neyman_alloc", neymanAlloc, neymanAllocSql),
+    Entry("curate_decontam_overlap", decontamOverlap, decontamOverlapSql),
+    Entry("curate_zorder_layout", zorderLayout, zorderLayoutSql),
+    Entry("curate_pipeline_funnel", pipelineFunnel, pipelineFunnelSql),
+    Entry("curate_decontam_bloom", decontamBloom, decontaminateSql),
+    Entry("curate_pack_shards", packShards, packShardsSql),
+    Entry("curate_mix_sources", mixSources, mixSourcesSql),
+    Entry("curate_train_order", trainOrder, trainOrderSql),
+    Entry("curate_pack_overflow", packOverflow, packOverflowSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TextShingles
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** Deduplication operators over the `documents` table — the LLM-data
@@ -478,7 +479,7 @@ object DedupQueries {
     * Jaccard denominator). Derived once from the at-rest corpus; the
     * streaming twin persists them to a scratch layout (the IvfIndex
     * stored-index discipline) so no micro-batch ever re-derives a
-    * corpus-side relation (ADVICE r18). */
+    * corpus-side relation. */
   private[graft] final case class RestIndex(bands: DataFrame,
                                             shingles: DataFrame,
                                             sizes: DataFrame)
@@ -877,8 +878,8 @@ object DedupQueries {
   /** The min-label clustering half of [[componentsOver]], over an
     * ALREADY-MINED verified pair relation — callers that need the
     * pair relation for their own joins (the split-leakage audit) mine
-    * it once and feed it here instead of paying a second mining pass
-    * (VERDICT r18 #5). */
+    * it once and feed it here instead of paying a second mining
+    * pass. */
   private[graft] def componentsOfPairs(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     // the propagation loop runs over the (tiny) node/edge relations:
@@ -955,7 +956,7 @@ object DedupQueries {
         e.select(col("lo").as("u"), col("hi").as("v"))
           .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
       def withMin(e: DataFrame): DataFrame = {
-        // NB (r20 §2.4 audit): an explicit repartition(col("u")) here
+        // NB (guide §2.4 audit): an explicit repartition(col("u")) here
         // to share one exchange between the agg and the join measured
         // a WASH at sf0.1 (the checkpointed edge relation is tiny and
         // rounds are stage-latency-bound) — left out deliberately
@@ -971,7 +972,7 @@ object DedupQueries {
       def smallStar(e: DataFrame): DataFrame = {
         val wm = withMin(e)
         // no inner distinct on the second leg: canon() dedups the
-        // union anyway — the extra exchange bought nothing (r20 §2.4)
+        // union anyway — the extra exchange bought nothing (§2.4)
         canon(wm.filter(col("v") <= col("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .unionAll(wm.select(col("u"), col("m").as("v"))))
@@ -987,7 +988,7 @@ object DedupQueries {
       var converged = edges.isEmpty
       while (!converged) {
         val next = smallStar(largeStar(edges)).localCheckpoint()
-        // set equality in ONE job (VERDICT r14 stretch #8): both
+        // set equality in ONE job: both
         // relations are canonical (distinct) edge sets, so they are
         // equal iff the symmetric difference is empty — one action
         // per round instead of the former count + exceptAll pair,
@@ -1231,41 +1232,23 @@ object DedupQueries {
        |       CAST(SUM(n_docs) AS BIGINT) AS n_docs
        |FROM h GROUP BY cluster_size""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cluster_sizes" -> clusterSizes _,
-    "dedup_repeated_spans" -> repeatedSpans _,
-    "dedup_rate_by_source" -> dedupRateBySource _,
-    "dedup_components" -> components _,
-    "dedup_components_twostar" -> componentsTwoStar _,
-    "dedup_exact" -> exact _,
-    "dedup_ngram_jaccard" -> ngramJaccard _,
-    "dedup_lsh_autotune" -> lshAutotune _,
-    "dedup_containment" -> containment _,
-    "dedup_cross_source" -> crossSourceMatrix _,
-    "dedup_minhash_lsh" -> minhashLsh _,
-    "dedup_incremental" -> incremental _,
-    "dedup_incremental_containment" -> incrementalContainment _,
-    "dedup_index_delete" -> indexDelete _,
-    "dedup_simhash" -> simhash _,
-    "dedup_simhash_pairs" -> simhashPairs _,
-    "dedup_simhash64_pairs" -> simhash64Pairs _)
-
-  def oracles: Map[String, String] = Map(
-    "dedup_cluster_sizes" -> clusterSizesSql,
-    "dedup_repeated_spans" -> repeatedSpansSql,
-    "dedup_rate_by_source" -> dedupRateBySourceSql,
-    "dedup_components" -> componentsSql,
-    "dedup_components_twostar" -> componentsSql,
-    "dedup_exact" -> exactSql,
-    "dedup_ngram_jaccard" -> ngramJaccardSql,
-    "dedup_lsh_autotune" -> lshAutotuneSql,
-    "dedup_containment" -> containmentSql,
-    "dedup_cross_source" -> crossSourceMatrixSql,
-    "dedup_minhash_lsh" -> minhashLshSql,
-    "dedup_incremental" -> incrementalSql,
-    "dedup_incremental_containment" -> incrementalContainmentSql,
-    "dedup_index_delete" -> indexDeleteSql,
-    "dedup_simhash" -> simhashSql,
-    "dedup_simhash_pairs" -> simhashPairsSql,
-    "dedup_simhash64_pairs" -> simhash64PairsSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("dedup_cluster_sizes", clusterSizes, clusterSizesSql),
+    Entry("dedup_repeated_spans", repeatedSpans, repeatedSpansSql),
+    Entry("dedup_rate_by_source", dedupRateBySource, dedupRateBySourceSql),
+    Entry("dedup_components", components, componentsSql),
+    Entry("dedup_components_twostar", componentsTwoStar, componentsSql),
+    Entry("dedup_exact", exact, exactSql),
+    Entry("dedup_ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    Entry("dedup_lsh_autotune", lshAutotune, lshAutotuneSql),
+    Entry("dedup_containment", containment, containmentSql),
+    Entry("dedup_cross_source", crossSourceMatrix, crossSourceMatrixSql),
+    Entry("dedup_minhash_lsh", minhashLsh, minhashLshSql),
+    Entry("dedup_incremental", incremental, incrementalSql),
+    Entry("dedup_incremental_containment", incrementalContainment,
+      incrementalContainmentSql),
+    Entry("dedup_index_delete", indexDelete, indexDeleteSql),
+    Entry("dedup_simhash", simhash, simhashSql),
+    Entry("dedup_simhash_pairs", simhashPairs, simhashPairsSql),
+    Entry("dedup_simhash64_pairs", simhash64Pairs, simhash64PairsSql))
 }

@@ -7,11 +7,12 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextShingles
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
 
-/** HYBRID dense+sparse retrieval (VERDICT r14 next-round #1) — the
+/** HYBRID dense+sparse retrieval — the
   * production hybrid-search shape: the SAME queries run through the
   * engine's lexical retriever (integer BM25 over the inverted index,
   * [[RetrievalQueries]]) AND its dense retriever (IVF probe over the
@@ -75,11 +76,7 @@ object HybridQueries {
     * action each execute their own tokenize→explode→aggregate). */
   private def qselOver(tf: DataFrame): DataFrame = {
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    df.orderBy(col("df").desc, col("term")).limit(RetrievalQueries.RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RetrievalQueries.RankLo)
-      .select(col("term"), col("df"))
+    RetrievalQueries.querySet(df).select(col("term"), col("df"))
   }
 
   /** Lexical 20-bounded candidate list: (term, doc_id, rank_a) under
@@ -304,11 +301,7 @@ object HybridQueries {
 
       // finalize outside the streams; materialize before the scratch
       // layout is deleted
-      val qsel10 = store.df(s)
-        .orderBy(col("df").desc, col("term")).limit(RetrievalQueries.RankHi)
-        .withColumn("r", row_number().over(
-          Window.orderBy(col("df").desc, col("term"))))
-        .filter(col("r") >= RetrievalQueries.RankLo)
+      val qsel10 = RetrievalQueries.querySet(store.df(s))
         .select(col("term"), col("top"))
       val la = Relational.topKRanked(qsel10, "top", "doc_id", "ord")
         .select(col("term"), col("doc_id"), col("rank").as("rank_a"))
@@ -415,7 +408,7 @@ object HybridQueries {
        |FROM j""".stripMargin
 
   // ---------------------------------------------------------------
-  // Multi-vector LATE-INTERACTION retrieval (VERDICT r15 next #1) —
+  // Multi-vector LATE-INTERACTION retrieval —
   // the ColBERT tier (Khattab & Zaharia, SIGIR 2020) between the
   // bi-encoder (one vector per doc — the IVF dense leg) and the
   // cross-encoder rerank (joint scoring of the raw pair): query and
@@ -454,7 +447,7 @@ object HybridQueries {
     * corpus scan (guide §3.3/§4: don't re-evaluate an expensive
     * expression on the hot side of a join), so the per-pair scorer
     * sees the matrix as a plain column instead of re-deriving
-    * QTokens×Dim md5 per candidate row (VERDICT r19 next #3). */
+    * QTokens×Dim md5 per candidate row. */
   private def qmExpr: Column = expr(
     s"transform(sequence(0, ${QTokens - 1}), k -> ${tokVecSql(
       "IF(k = 0, term, concat(term, '#', CAST(k AS STRING)))")})")
@@ -463,9 +456,8 @@ object HybridQueries {
     * token matrix is bound EXACTLY ONCE via the single-element-array
     * lambda trick (the [[MultimodalQueries.audioFpBands]]
     * CollapseProject discipline); the query matrix arrives
-    * precomputed in the `qm` column ([[qmExpr]]). Same integer math
-    * as the pre-r20 inline spelling — Σ_{q ∈ qm} max_{dvec} ⟨q,
-    * dvec⟩ in the same fold order. */
+    * precomputed in the `qm` column ([[qmExpr]]). The integer math is
+    * Σ_{q ∈ qm} max_{dvec} ⟨q, dvec⟩ in a fixed fold order. */
   private def maxsimExpr: Column = expr(
     "element_at(transform(array(" +
       s"transform(slice(w, 1, $DTokens), t -> ${tokVecSql("t")})), dv -> " +
@@ -614,7 +606,7 @@ object HybridQueries {
     val heads = hits
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("h"))
-      // grid-bound guard (ADVICE r16, the neymanAlloc raise_error
+      // grid-bound guard (the neymanAlloc raise_error
       // discipline): the pack is exact only for 0 <= doc_id < 2^33 —
       // out-of-grid ids must fail LOUDLY, not silently reorder the
       // shortlist. One comparison per aggregated (term, doc) row.
@@ -726,7 +718,7 @@ object HybridQueries {
        |  FROM scored)
        |WHERE rank <= ${RetrievalQueries.K}""".stripMargin
 
-  /** Streaming hybrid RERANK (VERDICT r15 next #5) — the full
+  /** Streaming hybrid RERANK — the full
     * streaming retrieval stack closed end-to-end: BOTH retrievers are
     * built by streaming ingest ([[streamHybridRrf]] — per-term
     * LONG-pack posting heads + replay-idempotent IVF cell appends,
@@ -743,25 +735,14 @@ object HybridQueries {
       streamHybridRrf(s, d).select(col("term"), col("doc_id"),
         col("rrf_score")))
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_hybrid_rrf" -> hybridRrf _,
-    "stream_hybrid_rrf" -> streamHybridRrf _,
-    "text_hybrid_rerank" -> hybridRerank _,
-    "stream_hybrid_rerank" -> streamHybridRerank _,
-    "text_hybrid_snippets" -> hybridSnippets _,
-    "text_maxsim" -> maxsim _,
-    "stream_maxsim" -> streamMaxsim _,
-    "text_maxsim_corpus" -> maxsimCorpus _,
-    "stream_maxsim_corpus" -> streamMaxsimCorpus _)
-
-  def oracles: Map[String, String] = Map(
-    "text_hybrid_rrf" -> hybridRrfSql,
-    "stream_hybrid_rrf" -> hybridRrfSql,
-    "text_hybrid_rerank" -> hybridRerankSql,
-    "stream_hybrid_rerank" -> hybridRerankSql,
-    "text_hybrid_snippets" -> hybridSnippetsSql,
-    "text_maxsim" -> maxsimSql,
-    "stream_maxsim" -> maxsimSql,
-    "text_maxsim_corpus" -> maxsimCorpusSql,
-    "stream_maxsim_corpus" -> maxsimCorpusSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("text_hybrid_rrf", hybridRrf, hybridRrfSql),
+    Entry("stream_hybrid_rrf", streamHybridRrf, hybridRrfSql),
+    Entry("text_hybrid_rerank", hybridRerank, hybridRerankSql),
+    Entry("stream_hybrid_rerank", streamHybridRerank, hybridRerankSql),
+    Entry("text_hybrid_snippets", hybridSnippets, hybridSnippetsSql),
+    Entry("text_maxsim", maxsim, maxsimSql),
+    Entry("stream_maxsim", streamMaxsim, maxsimSql),
+    Entry("text_maxsim_corpus", maxsimCorpus, maxsimCorpusSql),
+    Entry("stream_maxsim_corpus", streamMaxsimCorpus, maxsimCorpusSql))
 }

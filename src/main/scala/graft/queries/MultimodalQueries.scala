@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.streaming.FiniteStream
 
 /** Multimodal-column plumbing: media payloads ride as opaque `binary`
@@ -105,7 +106,7 @@ object MultimodalQueries {
         } catch {
           // NonFatal, not just the checked pair: a malformed payload
           // must degrade to the sentinel row, never fail the job
-          // (ADVICE r16 — codec paths also throw runtime exceptions)
+          // (codec paths also throw runtime exceptions)
           case scala.util.control.NonFatal(_) =>
             AudioMeta(id, bytes.length.toLong, -1.0, -1L, -1L, -1.0)
         }
@@ -248,8 +249,8 @@ object MultimodalQueries {
        |FROM mm WHERE width >= $MinSide AND height >= $MinSide""".stripMargin
 
   // ---------------------------------------------------------------
-  // Perceptual-hash near-duplicate detection (VERDICT r13 missing
-  // #3): text had exact/near/semantic dedup; media payloads had none.
+  // Perceptual-hash near-duplicate detection: text has exact/near/
+  // semantic dedup; this gives media payloads the same.
   // The real path is [[imageAHash]] — decode, average-pool to an 8×8
   // luma grid, threshold against the mean, 64-bit aHash packed as
   // four 16-bit hamming BANDS (proven on real in-memory images in
@@ -263,8 +264,8 @@ object MultimodalQueries {
   // payload edits.
   // ---------------------------------------------------------------
 
-  /** `decoded` is the EXPLICIT presence flag from the decode stage
-    * (ADVICE r18): an all-zero band pack is ambiguous — it can mean
+  /** `decoded` is the EXPLICIT presence flag from the decode stage:
+    * an all-zero band pack is ambiguous — it can mean
     * "payload absent/undecodable" OR a genuinely uniform image whose
     * every cell sits at the mean — so downstream absence gates must
     * read this flag, never infer absence from zero signatures. */
@@ -536,8 +537,8 @@ object MultimodalQueries {
        |GROUP BY a.doc_id""".stripMargin
 
   // ---------------------------------------------------------------
-  // Audio perceptual fingerprint (VERDICT r14 next-round #4): images
-  // have aHash near-dup; this closes modality symmetry for audio. The
+  // Audio perceptual fingerprint: images have aHash near-dup; this
+  // gives audio the same. The
   // hash is an 8-frame x 8-sequency WALSH band-energy sign hash: pool
   // the sample sequence to a 64-slot grid of slice sums (time frames),
   // correlate each frame against the 8 square-wave (Walsh/sequency)
@@ -789,7 +790,7 @@ object MultimodalQueries {
               }
             } finally ais.close()
           } catch {
-            // NonFatal (ADVICE r16): undecodable payloads degrade to
+            // NonFatal: undecodable payloads degrade to
             // zero bands (excluded from candidates), never fail the job
             case scala.util.control.NonFatal(_) => new Array[Long](4)
           }
@@ -799,9 +800,8 @@ object MultimodalQueries {
   }
 
   // ---------------------------------------------------------------
-  // Video / frame-sequence near-dup (VERDICT r15 next #4) — the last
-  // modality gap: image (r14) and audio (r15) near-dup are closed;
-  // video adds the TEMPORAL dimension. A video is a FRAME SEQUENCE
+  // Video / frame-sequence near-dup: image and audio near-dup are
+  // per-item; video adds the TEMPORAL dimension. A video is a FRAME SEQUENCE
   // (the [[frameSample]] schema a real pipeline produces with ffmpeg:
   // one row per sampled frame); each frame gets an 8-bit perceptual
   // signature (the aHash idea pooled to 8 cells), and the blocking
@@ -1010,7 +1010,7 @@ object MultimodalQueries {
   }
 
   // ---------------------------------------------------------------
-  // Cross-modal PAIR near-dup (r16 verdict next #4) — the
+  // Cross-modal PAIR near-dup — the
   // caption-dataset operator: image/audio/video near-dup are each
   // closed per-modality, but a (text, image) TRAINING PAIR duplicates
   // whenever EITHER side was copied — same image re-captioned with a
@@ -1056,7 +1056,7 @@ object MultimodalQueries {
     * popcount in BOTH modalities (text ≤ [[TextHammingMax]], image ≤
     * HammingMax) AND an EXPLICIT presence flag on both sides of each
     * gate — absent media must not verify as similar media. Presence
-    * is carried from the feature/decode stage (ADVICE r18: has_text =
+    * is carried from the feature/decode stage (has_text =
     * non-blank text, has_image = the payload yields ≥1 grid feature —
     * the stand-in for [[AHashBands.decoded]] on real bytes) rather
     * than inferred from an all-zero packed signature, which would
@@ -1102,7 +1102,7 @@ object MultimodalQueries {
       .filter(col("t_hamming") <= TextHammingMax &&
         col("i_hamming") <= HammingMax &&
         // a modality only counts as "close" when BOTH sides actually
-        // CARRY it (ADVICE r17/r18): two missing/undecodable images
+        // CARRY it: two missing/undecodable images
         // agree at hamming 0 — absence agreeing with absence, not
         // visual similarity — so an imageless pair must not verify on
         // text evidence alone (and symmetrically for blank text). The
@@ -1227,7 +1227,7 @@ object MultimodalQueries {
        |GROUP BY a.doc_id""".stripMargin
 
   // ---------------------------------------------------------------
-  // Cross-modal retrieval (r17 verdict #4) — the serving composition
+  // Cross-modal retrieval — the serving composition
   // the pair-dedup tier feeds: text-QUERY vectors probed against the
   // IMAGE-embedding IVF index, CLIP-style. The encoders are the
   // deterministic [[embedStub]] feature map (the aligned-encoder
@@ -1284,8 +1284,8 @@ object MultimodalQueries {
       .withColumn("cell",
         array_position(col("emb"), array_max(col("emb"))).cast(IntegerType))
 
-  /** The corpus relation SERVED FROM the memoized published layout
-    * (r20): the layout's vectors ARE [[crossmodalCorpus]]'s rows —
+  /** The corpus relation SERVED FROM the memoized published layout:
+    * the layout's vectors ARE [[crossmodalCorpus]]'s rows —
     * stub embeddings round-trip parquet bit-exactly — so consumers
     * that need the whole corpus relation (exact recall passes, the
     * trained/delete lifecycle publishes) read the pay-once index
@@ -1320,7 +1320,7 @@ object MultimodalQueries {
     streamCrossmodalProbe(s, d, nprobe = CrossmodalProbe,
       extraFilter = lit(true))
 
-  /** STREAMING filtered cross-modal search (r18 verdict #7) — the
+  /** STREAMING filtered cross-modal search — the
     * predicate-inside-probe discipline of [[crossmodalFiltered]] on
     * the arriving-query stream twin: the attribute predicate applies
     * to the STATIC vector side BEFORE the stream–static join and the
@@ -1539,7 +1539,7 @@ object MultimodalQueries {
        |  CAST(COALESCE(h.h, 0) * 1000000 // 5 AS BIGINT) AS recall_ppm
        |FROM qq LEFT JOIN h ON h.qid = qq.qid""".stripMargin
 
-  /** Crossmodal index DELETE lifecycle (r18 verdict #3) — the
+  /** Crossmodal index DELETE lifecycle — the
     * [[SimilarityQueries.ivfDeleteProbe]] tombstone cycle applied to
     * the served cross-modal layout: publish the image corpus as v1
     * (routing table = the one-hot codebook), take the IMAGE near-dup
@@ -1653,8 +1653,8 @@ object MultimodalQueries {
     * the one-hot cells-equal-dims trick. */
   private[graft] val CrossmodalTrainedK = 6
 
-  /** Cross-modal retrieval through a TRAINED coarse quantizer (r18
-    * verdict #4) — the serving path off the one-hot trick: seed the
+  /** Cross-modal retrieval through a TRAINED coarse quantizer — the
+    * serving path off the one-hot trick: seed the
     * codebook with the first [[CrossmodalTrainedK]] image embeddings
     * (k ≠ dims — realistic decoupled cell counts), publish v1 with
     * every vector homed by nearest seed (the shared
@@ -1760,13 +1760,12 @@ object MultimodalQueries {
     } finally FiniteStream.deleteRecursively(root)
   }
 
-  /** nprobe RE-ELECTION for the trained codebook (r18 verdict #4,
-    * second half) — the [[crossmodalAutoprobe]] prefix-merge sweep
-    * with the router swapped for the trained-centroid ranking
-    * (round-6 cosine, cid-asc ties — the same quantizer the trained
-    * top-k serves through), over depths 1..[[CrossmodalTrainedK]]:
-    * changing the codebook changes the recall curve, so the tuner
-    * must re-run against the geometry it will serve. */
+  /** nprobe RE-ELECTION for the trained codebook — the
+    * [[crossmodalAutoprobe]] prefix-merge sweep with the router swapped for the
+    * trained-centroid ranking (round-6 cosine, cid-asc ties — the same
+    * quantizer the trained top-k serves through), over depths
+    * 1..[[CrossmodalTrainedK]]: changing the codebook changes the recall curve,
+    * so the tuner must re-run against the geometry it will serve. */
   def crossmodalTrainedAutoprobe(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val root = FiniteStream.scratchDir("graft-mm-tap-")
@@ -2046,9 +2045,9 @@ object MultimodalQueries {
     * nprobe = 1..[[CrossmodalCells]], measure recall@5 of the probed
     * retrieval against the exact top-5 for the held-out text queries,
     * elect the minimal depth meeting [[CrossmodalTargetPpm]]. Uses
-    * the prefix-merge sweep spelling from day one (the r17-verdict-#5
-    * discipline): each (query, probe-rank) cell reduces to its top-5
-    * once, and per-depth results merge those ≤5-row partial tops —
+    * the prefix-merge sweep spelling: each (query, probe-rank) cell
+    * reduces to its top-5 once, and per-depth results merge those
+    * ≤5-row partial tops —
     * corpus rows are scored once, never replicated per depth. */
   def crossmodalAutoprobe(s: SparkSession, d: String): DataFrame = {
     val layout = crossmodalLayout(s, d)
@@ -2075,8 +2074,8 @@ object MultimodalQueries {
 
   /** The prefix-merge recall sweep over ANY (qid, r, doc_id, cm)
     * scored relation — shared by the one-hot and trained-codebook
-    * tuners (one spelling of the r17-#5 k-bounded selection-monoid
-    * merge). `ncells` bounds the swept depths. */
+    * tuners (one spelling of the k-bounded selection-monoid merge). `ncells`
+    * bounds the swept depths. */
   private def autoprobeSweepFrom(s: SparkSession, scored: DataFrame,
                                  ncells: Int): DataFrame = {
     val packed = scored.withColumn("pk",
@@ -2231,59 +2230,38 @@ object MultimodalQueries {
        |    row_number() OVER (PARTITION BY qid ORDER BY cm DESC, doc_id) rn
        |  FROM sc) WHERE rn <= 5""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_modality_card" -> modalityCard _,
-    "mm_resolution_gate" -> resolutionGate _,
-    "mm_media_meta" -> mediaMeta _,
-    "mm_embed_stub" -> embedStub _,
-    "mm_frame_sample" -> frameSample _,
-    "mm_phash_neardup" -> phashNearDup _,
-    "stream_mm_phash" -> streamPhashNearDup _,
-    "mm_pair_neardup" -> pairNearDup _,
-    "stream_mm_pair" -> streamPairNearDup _,
-    "mm_crossmodal_topk" -> crossmodalTopK _,
-    "stream_mm_crossmodal" -> streamCrossmodalTopK _,
-    "mm_crossmodal_recall" -> crossmodalRecall _,
-    "mm_crossmodal_autoprobe" -> crossmodalAutoprobe _,
-    "mm_crossmodal_filtered" -> crossmodalFiltered _,
-    "stream_mm_crossmodal_filtered" -> streamCrossmodalFiltered _,
-    "mm_crossmodal_filtered_recall" -> crossmodalFilteredRecall _,
-    "mm_crossmodal_delete" -> crossmodalDelete _,
-    "mm_crossmodal_trained" -> crossmodalTrained _,
-    "mm_crossmodal_trained_filtered" -> crossmodalTrainedFiltered _,
-    "stream_mm_crossmodal_trained" -> streamCrossmodalTrained _,
-    "mm_crossmodal_trained_autoprobe" -> crossmodalTrainedAutoprobe _,
-    "mm_crossmodal_trained_recall" -> crossmodalTrainedRecall _,
-    "mm_audio_fp" -> audioFpNearDup _,
-    "stream_mm_audio_fp" -> streamAudioFp _,
-    "mm_video_neardup" -> videoNearDup _,
-    "stream_mm_video" -> streamVideoFp _)
-
-  def oracles: Map[String, String] = Map(
-    "mm_pair_neardup" -> pairNearDupSql,
-    "stream_mm_pair" -> streamPairNearDupSql,
-    "mm_crossmodal_topk" -> crossmodalTopKSql,
-    "stream_mm_crossmodal" -> crossmodalTopKSql,
-    "mm_crossmodal_recall" -> crossmodalRecallSql,
-    "mm_crossmodal_autoprobe" -> crossmodalAutoprobeSql,
-    "mm_crossmodal_filtered" -> crossmodalFilteredSql,
-    "stream_mm_crossmodal_filtered" -> crossmodalFilteredSql,
-    "mm_crossmodal_filtered_recall" -> crossmodalFilteredRecallSql,
-    "mm_crossmodal_delete" -> crossmodalDeleteSql,
-    "mm_crossmodal_trained" -> crossmodalTrainedSql,
-    "mm_crossmodal_trained_filtered" -> crossmodalTrainedFilteredSql,
-    "stream_mm_crossmodal_trained" -> crossmodalTrainedSql,
-    "mm_crossmodal_trained_autoprobe" -> crossmodalTrainedAutoprobeSql,
-    "mm_crossmodal_trained_recall" -> crossmodalTrainedRecallSql,
-    "mm_modality_card" -> modalityCardSql,
-    "mm_resolution_gate" -> resolutionGateSql,
-    "mm_media_meta" -> mediaMetaSql,
-    "mm_embed_stub" -> embedStubSql,
-    "mm_frame_sample" -> frameSampleSql,
-    "mm_phash_neardup" -> phashNearDupSql,
-    "stream_mm_phash" -> streamPhashNearDupSql,
-    "mm_audio_fp" -> audioFpNearDupSql,
-    "stream_mm_audio_fp" -> streamAudioFpSql,
-    "mm_video_neardup" -> videoNearDupSql,
-    "stream_mm_video" -> streamVideoFpSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("mm_modality_card", modalityCard, modalityCardSql),
+    Entry("mm_resolution_gate", resolutionGate, resolutionGateSql),
+    Entry("mm_media_meta", mediaMeta, mediaMetaSql),
+    Entry("mm_embed_stub", embedStub, embedStubSql),
+    Entry("mm_frame_sample", frameSample, frameSampleSql),
+    Entry("mm_phash_neardup", phashNearDup, phashNearDupSql),
+    Entry("stream_mm_phash", streamPhashNearDup, streamPhashNearDupSql),
+    Entry("mm_pair_neardup", pairNearDup, pairNearDupSql),
+    Entry("stream_mm_pair", streamPairNearDup, streamPairNearDupSql),
+    Entry("mm_crossmodal_topk", crossmodalTopK, crossmodalTopKSql),
+    Entry("stream_mm_crossmodal", streamCrossmodalTopK, crossmodalTopKSql),
+    Entry("mm_crossmodal_recall", crossmodalRecall, crossmodalRecallSql),
+    Entry("mm_crossmodal_autoprobe", crossmodalAutoprobe,
+      crossmodalAutoprobeSql),
+    Entry("mm_crossmodal_filtered", crossmodalFiltered, crossmodalFilteredSql),
+    Entry("stream_mm_crossmodal_filtered", streamCrossmodalFiltered,
+      crossmodalFilteredSql),
+    Entry("mm_crossmodal_filtered_recall", crossmodalFilteredRecall,
+      crossmodalFilteredRecallSql),
+    Entry("mm_crossmodal_delete", crossmodalDelete, crossmodalDeleteSql),
+    Entry("mm_crossmodal_trained", crossmodalTrained, crossmodalTrainedSql),
+    Entry("mm_crossmodal_trained_filtered", crossmodalTrainedFiltered,
+      crossmodalTrainedFilteredSql),
+    Entry("stream_mm_crossmodal_trained", streamCrossmodalTrained,
+      crossmodalTrainedSql),
+    Entry("mm_crossmodal_trained_autoprobe", crossmodalTrainedAutoprobe,
+      crossmodalTrainedAutoprobeSql),
+    Entry("mm_crossmodal_trained_recall", crossmodalTrainedRecall,
+      crossmodalTrainedRecallSql),
+    Entry("mm_audio_fp", audioFpNearDup, audioFpNearDupSql),
+    Entry("stream_mm_audio_fp", streamAudioFp, streamAudioFpSql),
+    Entry("mm_video_neardup", videoNearDup, videoNearDupSql),
+    Entry("stream_mm_video", streamVideoFp, streamVideoFpSql))
 }

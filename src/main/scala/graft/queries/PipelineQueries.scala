@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** Batch analogs of the reference pipeline's operators (SURVEY.md §2),
@@ -241,29 +242,16 @@ object PipelineQueries {
       |       o_orderstatus AS status
       |FROM (SELECT * FROM orders UNION ALL SELECT * FROM orders)""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_shipped_orders" -> shippedOrders _,
-    "a2_latest_by_key" -> latestByKey _,
-    "a2_latest_udaf" -> latestByKeyUdaf _,
-    "j1_enrich_left_join" -> enrichLeftJoin _,
-    "j2_interval_join" -> intervalJoin _,
-    "s2_envelope_unwrap" -> envelopeUnwrap _,
-    "s3_envelope_unwrap_drop" -> envelopeUnwrapDrop _,
-    "s5_event_time" -> eventTime _,
-    "p1_projection" -> projection _,
-    "p3_filter_pushdown" -> filterPushdown _,
-    "k2_upsert_sink" -> upsertSink _)
-
-  def oracles: Map[String, String] = Map(
-    "pipeline_shipped_orders" -> shippedOrdersSql,
-    "a2_latest_by_key" -> latestByKeySql,
-    "a2_latest_udaf" -> latestByKeyUdafSql,
-    "j1_enrich_left_join" -> enrichLeftJoinSql,
-    "j2_interval_join" -> intervalJoinSql,
-    "s2_envelope_unwrap" -> envelopeUnwrapSql,
-    "s3_envelope_unwrap_drop" -> envelopeUnwrapDropSql,
-    "s5_event_time" -> eventTimeSql,
-    "p1_projection" -> projectionSql,
-    "p3_filter_pushdown" -> filterPushdownSql,
-    "k2_upsert_sink" -> upsertSinkSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("pipeline_shipped_orders", shippedOrders, shippedOrdersSql),
+    Entry("a2_latest_by_key", latestByKey, latestByKeySql),
+    Entry("a2_latest_udaf", latestByKeyUdaf, latestByKeyUdafSql),
+    Entry("j1_enrich_left_join", enrichLeftJoin, enrichLeftJoinSql),
+    Entry("j2_interval_join", intervalJoin, intervalJoinSql),
+    Entry("s2_envelope_unwrap", envelopeUnwrap, envelopeUnwrapSql),
+    Entry("s3_envelope_unwrap_drop", envelopeUnwrapDrop, envelopeUnwrapDropSql),
+    Entry("s5_event_time", eventTime, eventTimeSql),
+    Entry("p1_projection", projection, projectionSql),
+    Entry("p3_filter_pushdown", filterPushdown, filterPushdownSql),
+    Entry("k2_upsert_sink", upsertSink, upsertSinkSql))
 }

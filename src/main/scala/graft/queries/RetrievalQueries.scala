@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
 
 import graft.functions.TextShingles
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -46,6 +47,16 @@ object RetrievalQueries {
   private[queries] val K = 5 // postings returned per query term
   private[queries] val RankLo = 21
   private[queries] val RankHi = 30
+
+  /** The benchmark query set: `terms` ranked by df descending, then
+    * term, keeping ranks [[RankLo]]..[[RankHi]] — a bounded top-RankHi
+    * (TakeOrdered) ranked locally, with every input column plus the
+    * rank `r`. Callers keep their own `qid` or `select`. */
+  private[queries] def querySet(terms: DataFrame): DataFrame =
+    terms.orderBy(col("df").desc, col("term")).limit(RankHi)
+      .withColumn("r", row_number().over(
+        Window.orderBy(col("df").desc, col("term"))))
+      .filter(col("r") >= RankLo)
 
   /** The full integer score over materialized columns n_docs/df/tf —
     * Spark `DIV` here, DuckDB `//` in the oracle, same parse. */
@@ -89,12 +100,7 @@ object RetrievalQueries {
     * unused; the spelling below is the single source either way). */
   private def bm25TopKOver(tf: DataFrame, nDocs: DataFrame): DataFrame = {
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    // bounded top-30 by df (TakeOrdered), ranked locally over 30 rows
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"))
+    val q = querySet(df).select(col("term"), col("df"))
     Relational.topK(
       tf.join(broadcast(q), Seq("term"))
         .crossJoin(broadcast(nDocs.select(col("n_docs"))))
@@ -140,10 +146,7 @@ object RetrievalQueries {
     val tf = tfRel(s, d).localCheckpoint()
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val q = querySet(df)
       .withColumn("qid", expr(s"(r - $RankLo) DIV 2 + 1"))
       .select(col("qid"), col("term"), col("df"))
     Relational.topK(
@@ -195,7 +198,7 @@ object RetrievalQueries {
     * (sat(tf) desc, doc asc) — packed into the aggregator's double
     * score as sat(tf)·2^32 − doc_id (sat ≤ 1999, so the pack stays
     * below 2^43 — exact in a double). The head MUST order by the
-    * SATURATED tf, not raw tf (ADVICE r13): sat is monotone but not
+    * SATURATED tf, not raw tf: sat is monotone but not
     * injective (distinct tf collide from 62/63 up), and the oracle
     * breaks score ties by doc_id asc — a raw-tf head would prefer the
     * higher-tf doc of a sat-tied pair and diverge at the k-boundary.
@@ -221,12 +224,7 @@ object RetrievalQueries {
     // finalize on the stored index heads (|vocab| rows, 5 postings each)
     val idx = store.df(s)
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    val qsel = idx
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"), col("top"))
+    val qsel = querySet(idx).select(col("term"), col("df"), col("top"))
     Relational.topKRanked(qsel.crossJoin(broadcast(nDocs)), "top", "doc_id",
         "ord")
       .withColumn("sat", expr("(ord + doc_id) DIV 4294967296"))
@@ -236,9 +234,9 @@ object RetrievalQueries {
 
   // ---------------------------------------------------------------
   // Length-normalized BM25 (k1 = 1.2, b = 0.75) — actual BM25, not
-  // the BM25-shaped b = 0 variant above (VERDICT r13 "What's missing"
-  // #1: long documents dominate every posting list without length
-  // normalization). The standard
+  // the BM25-shaped b = 0 variant above (without length
+  // normalization, long documents dominate every posting list). The
+  // standard
   //
   //   tf_norm = tf·(k1+1) / (tf + k1·((1−b) + b·dl/avgdl))
   //
@@ -253,8 +251,8 @@ object RetrievalQueries {
   // any realistic dl/avgdl, since D is bounded by avgdl — a corpus
   // PROPERTY — not by corpus size). score = idf_ppm · tfn_permille
   // (≤ ~2.2e12 · idf growth — exact in BIGINT through the LONG-scored
-  // top-k aggregator at any corpus size; ADVICE r14 removed the old
-  // 2^53 double-payload bound).
+  // top-k aggregator at any corpus size, with no 2^53 double-payload
+  // bound).
   // b = 0 collapses the dl term to a constant and the cross-multiplied
   // comparison reduces to tf vs tf — pinned in Bm25FullSpec.
   // ---------------------------------------------------------------
@@ -300,11 +298,7 @@ object RetrievalQueries {
   private def bm25FullOver(tf: DataFrame, stats0: DataFrame): DataFrame = {
     val stats = stats0.select(col("n_docs"), col("D"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"))
+    val q = querySet(df).select(col("term"), col("df"))
     Relational.topK(
       tf.join(broadcast(q), Seq("term"))
         .crossJoin(broadcast(stats))
@@ -350,12 +344,12 @@ object RetrievalQueries {
     * per-term O(k) posting heads under update-mode state — with the
     * head ordered by the LENGTH-NORMALIZED saturation tfn_permille
     * (packed as tfn·2^32 − doc_id into the LONG-scored aggregator;
-    * exact BIGINT at any corpus size, doc_id < 2^32 — ADVICE r14). tfn needs the normalizer D at ingest
-    * time; D is a PARAMETER of the stream — computed here by one
-    * bounded 1-row batch agg over the same table (in production: the
-    * previous corpus snapshot's avgdl, exactly how search engines pin
-    * their length normalizer between index rebuilds). idf only scales
-    * per-term scores, so it stays outside the stream entirely. */
+    * exact BIGINT at any corpus size, doc_id < 2^32). tfn needs the
+    * normalizer D at ingest time; D is a PARAMETER of the stream — computed
+    * here by one bounded 1-row batch agg over the same table (in production:
+    * the previous corpus snapshot's avgdl, exactly how search engines pin their
+    * length normalizer between index rebuilds). idf only scales per-term
+    * scores, so it stays outside the stream entirely. */
   def streamBm25Full(s: SparkSession, d: String): DataFrame = {
     val topk = Relational.topKAggregator(K, longScores = true)
     val statsRow = Tables.documents(s, d)
@@ -379,12 +373,7 @@ object RetrievalQueries {
     val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
-    val qsel = idx
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"), col("top"))
+    val qsel = querySet(idx).select(col("term"), col("df"), col("top"))
     Relational.topKRanked(qsel, "top", "doc_id", "ord")
       .withColumn("tfn", expr("(ord + doc_id) DIV 4294967296"))
       .withColumn("n_docs", lit(nDocs))
@@ -394,7 +383,7 @@ object RetrievalQueries {
   }
 
   // ---------------------------------------------------------------
-  // Phrase / positional retrieval (VERDICT r13 missing #2): the
+  // Phrase / positional retrieval: the
   // (term, doc, tf) index above cannot answer exact-phrase queries;
   // keeping POSITIONS (one posexplode) makes a 2-term phrase an
   // equi-join of two posting lists on (doc_id, pos+1) — the classic
@@ -502,7 +491,7 @@ object RetrievalQueries {
     * (score desc, doc asc) within lists, (rrf desc, doc asc) at the
     * fuse. */
   def rrfFusion(s: SparkSession, d: String): DataFrame = {
-    // NB (r20): single-mining via localCheckpoint measured 0.87× here —
+    // NB: single-mining via localCheckpoint measured 0.87× here —
     // the duplicated tf consumers already share the index shuffle via
     // ReusedExchange, so materialization only added cost. Left as-is.
     val tf = tfDlRel(s, d)
@@ -511,11 +500,7 @@ object RetrievalQueries {
       .select(size(TextShingles.tokens(col("text"))).cast(LongType).as("dl"))
       .agg(count(lit(1)).as("n_docs"),
         expr("SUM(dl) * 1000 DIV COUNT(*)").as("D"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"))
+    val q = querySet(df).select(col("term"), col("df"))
     val scored = tf.join(broadcast(q), Seq("term"))
       .crossJoin(broadcast(stats))
     def listOf(score: Column, rankName: String): DataFrame =
@@ -589,12 +574,12 @@ object RetrievalQueries {
     * term maintains BOTH retrievers' 20-bounded posting heads — two
     * k-bounded buffers in the same state row, one ordered by the b = 0
     * saturation pack (sat·2^32 − doc), one by the length-normalized
-    * pack (tfn·2^32 − doc; both exact LONG packs — ADVICE r14; D is
-    * the stream's normalizer parameter, as in [[streamBm25Full]]) — so per-term state is O(2k) however long
-    * the stream runs. idf is constant per term, so each stored head's
-    * order IS its retriever's (score desc, doc asc) list order, ties
-    * included (the r13 sat-tie discipline), and the RRF fuse runs
-    * OUTSIDE the stream on the stored heads. Same oracle as the batch
+    * pack (tfn·2^32 − doc; both exact LONG packs; D is the stream's
+    * normalizer parameter, as in [[streamBm25Full]]) — so per-term
+    * state is O(2k) however long the stream runs. idf is constant per term, so
+    * each stored head's order IS its retriever's (score desc, doc asc) list
+    * order, ties included (the sat-tie discipline of [[bm25TopK]]), and the RRF
+    * fuse runs OUTSIDE the stream on the stored heads. Same oracle as the batch
     * fusion. */
   def streamRrfFusion(s: SparkSession, d: String): DataFrame = {
     val topk20 = Relational.topKAggregator(ListK, longScores = true)
@@ -620,11 +605,7 @@ object RetrievalQueries {
         topk20(col("ord_b"), col("doc_id")).as("tb"))
     val store = headStore(agg, "term")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val qsel = store.df(s)
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val qsel = querySet(store.df(s))
     def ranksOf(head: String, rankName: String): DataFrame =
       Relational.topKRanked(qsel.select(col("term"), col(head)), head,
           "doc_id", "ord")
@@ -677,11 +658,7 @@ object RetrievalQueries {
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
-    val qsel = idx
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val qsel = querySet(idx)
     def ranksOf(head: String, rankName: String): DataFrame =
       Relational.topKRanked(qsel.select(col("term"), col(head)), head,
           "doc_id", "ord")
@@ -725,20 +702,18 @@ object RetrievalQueries {
   private val IdcgPpm: Long =
     (0 until 5).map(i => (5L - i) * NdcgDiscount(i)).sum
 
-  /** MRR, nDCG@5, MAP@5 and recall@5 (all ppm — MAP/recall widened in
-    * r18, verdict #7) for each lexical system — b = 0 BM25, full BM25,
-    * Dirichlet QL — against the fusion-consensus qrels. Reuses the
-    * systems' OWN catalog queries as the ranked lists (no second
-    * spelling to drift) and joins each against the ≤50-row qrels
-    * relation; per-term reciprocal rank is MAX(1e6 DIV rank) over
-    * relevant hits, per-term nDCG is the literal-discount dot product
-    * over the fixed ideal, per-term AP@5 is Σ P@r over relevant ranks
-    * (P@r = cumulative hits · 1e6 DIV r, a 5-row window) normalized by
-    * min(|relevant|, 5), and recall@5 is hits · 1e6 DIV |relevant|.
-    * Every division floors on the ppm grid in a fixed order, spelled
-    * identically in the oracle. Output: one row per system. */
+  /** MRR, nDCG@5, MAP@5 and recall@5 (all ppm) for each lexical system — b = 0
+    * BM25, full BM25, Dirichlet QL — against the fusion-consensus qrels. Reuses
+    * the systems' OWN catalog queries as the ranked lists (no second spelling
+    * to drift) and joins each against the ≤50-row qrels relation; per-term
+    * reciprocal rank is MAX(1e6 DIV rank) over relevant hits, per-term nDCG is
+    * the literal-discount dot product over the fixed ideal, per-term AP@5 is Σ
+    * P@r over relevant ranks (P@r = cumulative hits · 1e6 DIV r, a 5-row
+    * window) normalized by min(|relevant|, 5), and recall@5 is hits · 1e6 DIV
+    * |relevant|. Every division floors on the ppm grid in a fixed order,
+    * spelled identically in the oracle. Output: one row per system. */
   def retrievalMetrics(s: SparkSession, d: String): DataFrame = {
-    // Single-mining (r20, guide §2.3/§3.3): this eval composes FOUR
+    // Single-mining (guide §2.3/§3.3): this eval composes FOUR
     // consumers of the same inverted-index relation (the three systems
     // + the 3-leg fusion that builds the qrels) and four corpus-stats
     // scans; Spark does not dedupe common subplans, so the un-factored
@@ -832,7 +807,7 @@ object RetrievalQueries {
        |FROM pn GROUP BY system""".stripMargin
 
   // ---------------------------------------------------------------
-  // n-term phrases + proximity windows (VERDICT r14 next-round #2):
+  // n-term phrases + proximity windows:
   // [[phraseMatch]] answers exactly 2-term phrases; a 3+-term phrase
   // is the SAME positional index with one more chained (doc_id,
   // pos + i) equi-join, and the order-free "terms within k positions"
@@ -949,10 +924,7 @@ object RetrievalQueries {
   def proximity(s: SparkSession, d: String): DataFrame = {
     val tf = tfRel(s, d)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val q = querySet(df)
       .withColumn("qid", expr(s"(r - $RankLo) DIV 2 + 1"))
     val qp = q.groupBy(col("qid"))
       .agg(min(when(col("r") % 2 === 1, col("term"))).as("t1"),
@@ -1027,10 +999,7 @@ object RetrievalQueries {
     val tf = tfRel(s, d).localCheckpoint()
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val q = querySet(df)
       .withColumn("qid", expr(s"(r - $RankLo) DIV 2 + 1"))
     val qp = q.groupBy(col("qid"))
       .agg(min(when(col("r") % 2 === 1, col("term"))).as("t1"),
@@ -1144,10 +1113,7 @@ object RetrievalQueries {
   def streamProximity(s: SparkSession, d: String): DataFrame = {
     val tf = tfRel(s, d)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val q = querySet(df)
       .withColumn("qid", expr(s"(r - $RankLo) DIV 2 + 1"))
     val qp = q.groupBy(col("qid"))
       .agg(min(when(col("r") % 2 === 1, col("term"))).as("t1"),
@@ -1202,11 +1168,7 @@ object RetrievalQueries {
     val tf = tfRel(s, d).localCheckpoint()
     val dfRel = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-    val q = dfRel.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"))
+    val q = querySet(dfRel).select(col("term"), col("df"))
     // pass 1: feedback docs
     val fb = Relational.topK(
         tf.join(broadcast(q), Seq("term"))
@@ -1300,8 +1262,7 @@ object RetrievalQueries {
        |      FROM sc)
        |WHERE rn <= $K""".stripMargin
 
-  /** Streaming twin of [[prfExpand]] (r16 verdict #2 — completes
-    * both-modes symmetry for the retrieval-quality tier): pass 1 IS
+  /** Streaming twin of [[prfExpand]]: pass 1 IS
     * the [[streamBm25TopK]] state — one update-mode aggregation
     * maintaining per-term df and the 5-bounded sat-packed posting
     * head (idf is constant per term, so the sat-desc/doc-asc head
@@ -1331,11 +1292,7 @@ object RetrievalQueries {
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val dfRel = idx.select(col("term"), col("df"))
-    val qsel = idx
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
+    val qsel = querySet(idx)
     val fb = Relational.topKRanked(qsel.select(col("term"), col("top")),
         "top", "doc_id", "ord")
       .select(col("term").as("qterm"), col("doc_id"))
@@ -1347,7 +1304,7 @@ object RetrievalQueries {
   }
 
   // ---------------------------------------------------------------
-  // Dirichlet-smoothed query likelihood (r16 verdict stretch #7) —
+  // Dirichlet-smoothed query likelihood —
   // Zhai & Lafferty 2001, the OTHER standard lexical scorer next to
   // BM25: p(t|d) smoothed by the collection model,
   // (tf + mu·p(t|C)) / (dl + mu). Ranking per query term needs no
@@ -1389,11 +1346,7 @@ object RetrievalQueries {
     val stats = stats0.select(col("c_tot"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val ctf = tf.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"))
+    val q = querySet(df).select(col("term"))
     val qs = ctf.join(broadcast(q), Seq("term"))
     Relational.topK(
       tf.join(broadcast(qs), Seq("term"))
@@ -1472,12 +1425,7 @@ object RetrievalQueries {
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     val idx = store.df(s)
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
-    val qs = idx
-      .orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("ctf"))
+    val qs = querySet(idx).select(col("term"), col("ctf"))
     Relational.topK(
       tfDlRel(s, d).join(broadcast(qs), Seq("term"))
         .crossJoin(broadcast(stats))
@@ -1492,7 +1440,7 @@ object RetrievalQueries {
     * k-bounded heads, chained full-outer fuse. Same shape, same
     * oracle discipline. */
   def rrfFusion3(s: SparkSession, d: String): DataFrame =
-    // NB (r20): single-mining via localCheckpoint measured 0.91× here
+    // NB: single-mining via localCheckpoint measured 0.91× here
     // (the three scored lists already share the index shuffle via
     // ReusedExchange) — left as-is; retrievalMetrics still passes its
     // own checkpointed relation through rrfFusion3Over.
@@ -1513,11 +1461,7 @@ object RetrievalQueries {
     val stats = stats0.select(col("n_docs"), col("D"), col("c_tot"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val ctf = tf.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
-    val q = df.orderBy(col("df").desc, col("term")).limit(RankHi)
-      .withColumn("r", row_number().over(
-        Window.orderBy(col("df").desc, col("term"))))
-      .filter(col("r") >= RankLo)
-      .select(col("term"), col("df"))
+    val q = querySet(df).select(col("term"), col("df"))
     val qs = ctf.join(broadcast(q), Seq("term"))
     val scored = tf.join(broadcast(qs), Seq("term"))
       .crossJoin(broadcast(stats))
@@ -1596,47 +1540,25 @@ object RetrievalQueries {
        |      FROM fused)
        |WHERE rn <= $K""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_prf_expand" -> prfExpand _,
-    "stream_prf_expand" -> streamPrfExpand _,
-    "text_bm25_topk" -> bm25TopK _,
-    "text_bm25_conjunctive" -> bm25Conjunctive _,
-    "stream_bm25_topk" -> streamBm25TopK _,
-    "text_bm25_full" -> bm25Full _,
-    "stream_bm25_full" -> streamBm25Full _,
-    "text_phrase_match" -> phraseMatch _,
-    "text_phrase_ngram" -> phraseNgram _,
-    "text_proximity" -> proximity _,
-    "text_boolean_not" -> booleanNot _,
-    "stream_phrase_match" -> streamPhraseMatch _,
-    "stream_proximity" -> streamProximity _,
-    "text_rrf_fusion" -> rrfFusion _,
-    "text_ql_dirichlet" -> qlDirichlet _,
-    "stream_ql_dirichlet" -> streamQlDirichlet _,
-    "text_rrf_fusion3" -> rrfFusion3 _,
-    "stream_rrf_fusion3" -> streamRrfFusion3 _,
-    "text_retrieval_metrics" -> retrievalMetrics _,
-    "stream_rrf_fusion" -> streamRrfFusion _)
-
-  def oracles: Map[String, String] = Map(
-    "text_prf_expand" -> prfExpandSql,
-    "stream_prf_expand" -> prfExpandSql,
-    "text_bm25_topk" -> bm25TopKSql,
-    "text_bm25_conjunctive" -> bm25ConjunctiveSql,
-    "stream_bm25_topk" -> bm25TopKSql,
-    "text_bm25_full" -> bm25FullSql,
-    "stream_bm25_full" -> bm25FullSql,
-    "text_phrase_match" -> phraseMatchSql,
-    "text_phrase_ngram" -> phraseNgramSql,
-    "text_proximity" -> proximitySql,
-    "text_boolean_not" -> booleanNotSql,
-    "stream_phrase_match" -> phraseMatchSql,
-    "stream_proximity" -> proximitySql,
-    "text_rrf_fusion" -> rrfFusionSql,
-    "text_ql_dirichlet" -> qlDirichletSql,
-    "stream_ql_dirichlet" -> qlDirichletSql,
-    "text_rrf_fusion3" -> rrfFusion3Sql,
-    "stream_rrf_fusion3" -> rrfFusion3Sql,
-    "text_retrieval_metrics" -> retrievalMetricsSql,
-    "stream_rrf_fusion" -> rrfFusionSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("text_prf_expand", prfExpand, prfExpandSql),
+    Entry("stream_prf_expand", streamPrfExpand, prfExpandSql),
+    Entry("text_bm25_topk", bm25TopK, bm25TopKSql),
+    Entry("text_bm25_conjunctive", bm25Conjunctive, bm25ConjunctiveSql),
+    Entry("stream_bm25_topk", streamBm25TopK, bm25TopKSql),
+    Entry("text_bm25_full", bm25Full, bm25FullSql),
+    Entry("stream_bm25_full", streamBm25Full, bm25FullSql),
+    Entry("text_phrase_match", phraseMatch, phraseMatchSql),
+    Entry("text_phrase_ngram", phraseNgram, phraseNgramSql),
+    Entry("text_proximity", proximity, proximitySql),
+    Entry("text_boolean_not", booleanNot, booleanNotSql),
+    Entry("stream_phrase_match", streamPhraseMatch, phraseMatchSql),
+    Entry("stream_proximity", streamProximity, proximitySql),
+    Entry("text_rrf_fusion", rrfFusion, rrfFusionSql),
+    Entry("text_ql_dirichlet", qlDirichlet, qlDirichletSql),
+    Entry("stream_ql_dirichlet", streamQlDirichlet, qlDirichletSql),
+    Entry("text_rrf_fusion3", rrfFusion3, rrfFusion3Sql),
+    Entry("stream_rrf_fusion3", streamRrfFusion3, rrfFusion3Sql),
+    Entry("text_retrieval_metrics", retrievalMetrics, retrievalMetricsSql),
+    Entry("stream_rrf_fusion", streamRrfFusion, rrfFusionSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** Classical seasonal decomposition (trend + seasonal + residual) of
@@ -118,11 +119,7 @@ object SeasonalQueries {
   def streamSeasonalDecompose(s: SparkSession, d: String): DataFrame =
     decomposeOf(ChangePointQueries.hourlyStore(s, d))
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_seasonal_decompose" -> seasonalDecompose _,
-    "stream_seasonal_decompose" -> streamSeasonalDecompose _)
-
-  def oracles: Map[String, String] = Map(
-    "q_seasonal_decompose" -> seasonalSql,
-    "stream_seasonal_decompose" -> seasonalSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q_seasonal_decompose", seasonalDecompose, seasonalSql),
+    Entry("stream_seasonal_decompose", streamSeasonalDecompose, seasonalSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -207,22 +208,19 @@ object SimilarityQueries {
         max(col("cos")).as("max_cos"))
   }
 
-  /** Streaming twin of [[decontamSemantic]] (VERDICT r15 next #2) —
-    * completing both-modes symmetry for all five decontamination
-    * tiers: semantic contamination is flagged AT INGEST, as train
-    * vectors arrive. The benchmark side is a STATIC artifact (the
-    * frozen eval suite's vectors with their sign-LSH buckets — built
-    * once, exactly [[streamDecontamSpan]]'s convention for the 5-gram
-    * tier), broadcast stream-static under every micro-batch; each
-    * arriving train vector meets ONLY the benchmark vectors in its
-    * own bucket (the [[cosNearDup]] blocking — per-row work bounded
-    * by bench-per-bucket, never corpus × bench), the exact cosine
-    * verify runs in-flight, and the per-vector evidence (hit count +
-    * max similarity — the triage fields) folds in an UPDATE-mode
-    * grouped aggregation whose state is one (count, max) pair per
-    * FLAGGED vector: bounded by contamination volume, not corpus
-    * size. Finite input ⇒ the hit relation equals the batch join's,
-    * so the SAME oracle verifies the streaming composition. */
+  /** Streaming twin of [[decontamSemantic]]: semantic contamination is flagged
+    * AT INGEST, as train vectors arrive. The benchmark side is a STATIC
+    * artifact (the frozen eval suite's vectors with their sign-LSH buckets —
+    * built once, exactly [[streamDecontamSpan]]'s convention for the 5-gram
+    * tier), broadcast stream-static under every micro-batch; each arriving
+    * train vector meets ONLY the benchmark vectors in its own bucket (the
+    * [[cosNearDup]] blocking — per-row work bounded by bench-per-bucket, never
+    * corpus × bench), the exact cosine verify runs in-flight, and the
+    * per-vector evidence (hit count + max similarity — the triage fields) folds
+    * in an UPDATE-mode grouped aggregation whose state is one (count, max) pair
+    * per FLAGGED vector: bounded by contamination volume, not corpus size.
+    * Finite input ⇒ the hit relation equals the batch join's, so the SAME
+    * oracle verifies the streaming composition. */
   def streamDecontamSemantic(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
       StructType}
@@ -395,7 +393,7 @@ object SimilarityQueries {
     * vectors sharing a cluster — correct, but when cluster COUNT is
     * fixed (here: the corpus's label set) cluster SIZE grows with the
     * corpus and the pair join is quadratic per cluster: measured
-    * 1.5 s → 155 s for 10× vectors at the r12 sf1 decade. Production
+    * 1.5 s → 155 s for 10× vectors at the sf1 decade. Production
     * SemDeDup caps effective cluster size; this variant adds a second
     * blocking level INSIDE each cluster — BANDED sign-LSH, the vector
     * analog of [[graft.queries.DedupQueries]]'s MinHash banding: 8
@@ -743,7 +741,7 @@ object SimilarityQueries {
 
   val annIvfFilteredSql: String = annIvfProbeSql(2, "e.vec_id % 3 = 1")
 
-  /** IVF TOMBSTONE maintenance (VERDICT r15 next #6) — the dedup
+  /** IVF TOMBSTONE maintenance — the dedup
     * pipeline's removals feeding the index lifecycle: publish the
     * corpus as v1, take the SemDeDup flags as tombstones,
     * [[graft.sources.IvfIndex.deleteAndCompact]] them into v2
@@ -752,7 +750,7 @@ object SimilarityQueries {
     * compacted index. The tombstone feed is [[dedupSemanticLsh]] —
     * the SCALE path of the SemDeDup family, deliberately: the exact
     * all-pairs-per-cluster variant is quadratic in cluster size (the
-    * documented r12 decade cliff, 1.5 s → 155 s for 10× vectors —
+    * documented decade cliff, 1.5 s → 155 s for 10× vectors —
     * measured again at 29× HERE when this query briefly fed from it),
     * while the banded-LSH variant is the one a production maintenance
     * job would run; both are catalog-verified operators, so the feed
@@ -889,7 +887,7 @@ object SimilarityQueries {
     * emb); `cents` carries (cid, cemb). Broadcast of the O(ncells)
     * centroid table; one shuffle on vec_id for the argmax window. */
   private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame = {
-    // r20 (§2.4 — remove shuffles outright): the window-argmax spelling
+    // Guide §2.4 (remove shuffles outright): the window-argmax spelling
     // (crossJoin broadcast + row_number over vec_id) paid a full
     // shuffle+sort of the vector relation per call, and the retrain
     // lifecycles call this twice per query. The routing table is the
@@ -1006,15 +1004,7 @@ object SimilarityQueries {
        |WHERE a.vec_id <> 0
        |ORDER BY cos_sim DESC, vec_id LIMIT 5""".stripMargin
 
-  /** Recall@5 of every ANN variant against the exact brute-force
-    * top-5 — the metric an ANN deployment actually tracks (an index
-    * with unmeasured recall is a guess, not an index), computed
-    * IN-ENGINE so the number ships with the corpus run. Each variant's
-    * top-5 joins the exact set on vec_id; cost = the variants' own
-    * (already pruned) plans plus a 5-row join each. Demonstrates the
-    * recall/cost knob directly: probe-2 recall ≥ probe-1 by
-    * construction. */
-  /** Recall-targeted nprobe auto-tuning (r16 verdict next #5) — the
+  /** Recall-targeted nprobe auto-tuning — the
     * serving-config closure of the ANN loop: given a HELD-OUT query
     * set (vec_ids 0..4, excluded from the corpus) and a target
     * recall@5 ([[AutoprobeTargetPpm]]), sweep nprobe = 1..ncells and
@@ -1026,13 +1016,12 @@ object SimilarityQueries {
     * every nprobe ≥ r), each (query, r) cell reduces to its top-5
     * with the k-bounded LONG aggregator on the micro-cosine grid, the
     * per-depth results are a PREFIX MERGE of those ≤5-row partial
-    * tops (the aggregator is a selection monoid — r17 verdict #5:
-    * corpus rows are scored once and never replicated per depth), and
-    * recall@5 joins against the exact top-5 from the same grid.
-    * Cost: corpus × |queries| scored ONCE plus
-    * O(queries × ncells × k) merge rows — the sweep is a tuning job
-    * over a sample in production, not a serving path. Driver-side
-    * work: the ncells count (router-collect bound). */
+    * tops (the aggregator is a selection monoid, so corpus rows are scored once
+    * and never replicated per depth), and recall@5 joins against the exact
+    * top-5 from the same grid. Cost: corpus × |queries| scored ONCE plus
+    * O(queries × ncells × k) merge rows — the sweep is a tuning job over a
+    * sample in production, not a serving path. Driver-side work: the ncells
+    * count (router-collect bound). */
   def annAutoprobe(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val e = withEmb(s, d)
@@ -1055,7 +1044,7 @@ object SimilarityQueries {
     val exact = Relational.topK(scored, Seq("qid"), "pk", "vec_id", k = 5,
         longScores = true)
       .select(col("qid"), col("vec_id"))
-    // scale-tight sweep spelling (r17 verdict #5): the k-bounded LONG
+    // scale-tight sweep spelling: the k-bounded LONG
     // top-k is a selection MONOID — top-5 at probe depth np equals
     // top-5 over the UNION of per-probe-rank top-5s with r <= np — so
     // aggregate each (qid, r) cell to its top-5 FIRST (one pass over
@@ -1151,6 +1140,14 @@ object SimilarityQueries {
        |            AS BIGINT) AS chosen
        |FROM rec""".stripMargin
 
+  /** Recall@5 of every ANN variant against the exact brute-force
+    * top-5 — the metric an ANN deployment actually tracks (an index
+    * with unmeasured recall is a guess, not an index), computed
+    * IN-ENGINE so the number ships with the corpus run. Each variant's
+    * top-5 joins the exact set on vec_id; cost = the variants' own
+    * (already pruned) plans plus a 5-row join each. Demonstrates the
+    * recall/cost knob directly: probe-2 recall ≥ probe-1 by
+    * construction. */
   def annRecall(s: SparkSession, d: String): DataFrame = {
     // single-mined (guide §2.3): the exact top-5 feeds all six recall
     // arms — without the cut the full-corpus brute-force scan executes
@@ -1508,7 +1505,7 @@ object SimilarityQueries {
   }
 
   /** IVF-PQ composed index — the standard production ANN layout when
-    * raw vectors can't be read per probe (VERDICT r7 next #3): vectors
+    * raw vectors can't be read per probe: vectors
     * route into IVF cells, and WITHIN each cell the RESIDUAL
     * (vector − cell centroid) is product-quantized, so a probe (a)
     * prunes to nprobe cell partitions of the persisted CODE table —
@@ -1825,65 +1822,35 @@ object SimilarityQueries {
        |FROM km JOIN sd ON sd.cid = km.cid AND sd.dim = km.dim
        |GROUP BY km.cid""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_centroid_drift" -> centroidDrift _,
-    "sim_quantize_int8" -> quantizeInt8TopK _,
-    "sim_pq_adc" -> pqAdcTopK _,
-    "sim_ann_ivfpq" -> annIvfPq _,
-    "sim_ann_ivfpq_rerank" -> annIvfPqRerank _,
-    "sim_kmeans_step" -> kmeansStep _,
-    "sim_topk_bruteforce" -> bruteForceTopK _,
-    "sim_topk_native" -> bruteForceTopKNative _,
-    "sim_ann_sign_lsh" -> annSignLsh _,
-    "sim_ann_ivf" -> annIvf _,
-    "sim_ann_ivf_probe2" -> annIvfProbe2 _,
-    "sim_ann_ivf_indexed" -> annIvfIndexed _,
-    "sim_ann_filtered" -> annIvfFiltered _,
-    "curate_decontam_semantic" -> decontamSemantic _,
-    "stream_decontam_semantic" -> streamDecontamSemantic _,
-    "stream_ivf_ingest" -> streamIvfIngest _,
-    "sim_ivf_retrain" -> ivfRetrainProbe _,
-    "sim_ivf_delete" -> ivfDeleteProbe _,
-    "stream_ivf_retrain" -> streamIvfRetrain _,
-    "sim_ann_recall" -> annRecall _,
-    "sim_ann_autoprobe" -> annAutoprobe _,
-    "sim_pq_autotune" -> pqAutotune _,
-    "sim_hard_negatives" -> hardNegatives _,
-    "sim_cos_neardup" -> cosNearDup _,
-    "sim_threshold_sweep" -> thresholdSweep _,
-    "dedup_semantic" -> dedupSemantic _,
-    "dedup_semantic_lsh" -> dedupSemanticLsh _,
-    "curate_prototypes" -> curatePrototypes _,
-    "sim_label_centroids" -> labelCentroids _)
-
-  def oracles: Map[String, String] = Map(
-    "sim_centroid_drift" -> centroidDriftSql,
-    "sim_quantize_int8" -> quantizeInt8TopKSql,
-    "sim_pq_adc" -> pqAdcTopKSql,
-    "sim_ann_ivfpq" -> annIvfPqSql,
-    "sim_ann_ivfpq_rerank" -> annIvfPqRerankSql,
-    "sim_kmeans_step" -> kmeansStepSql,
-    "sim_topk_bruteforce" -> bruteForceTopKSql,
-    "sim_topk_native" -> bruteForceTopKSql,
-    "sim_ann_sign_lsh" -> annSignLshSql,
-    "sim_ann_ivf" -> annIvfSql,
-    "sim_ann_ivf_probe2" -> annIvfProbe2Sql,
-    "sim_ann_ivf_indexed" -> annIvfSql,
-    "sim_ann_filtered" -> annIvfFilteredSql,
-    "curate_decontam_semantic" -> decontamSemanticSql,
-    "stream_decontam_semantic" -> decontamSemanticSql,
-    "stream_ivf_ingest" -> annIvfSql,
-    "sim_ivf_retrain" -> ivfRetrainSql,
-    "sim_ivf_delete" -> ivfDeleteSql,
-    "stream_ivf_retrain" -> ivfRetrainSql,
-    "sim_ann_recall" -> annRecallSql,
-    "sim_ann_autoprobe" -> annAutoprobeSql,
-    "sim_pq_autotune" -> pqAutotuneSql,
-    "sim_hard_negatives" -> hardNegativesSql,
-    "sim_cos_neardup" -> cosNearDupSql,
-    "sim_threshold_sweep" -> thresholdSweepSql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "dedup_semantic_lsh" -> dedupSemanticLshSql,
-    "curate_prototypes" -> curatePrototypesSql,
-    "sim_label_centroids" -> labelCentroidsSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("sim_centroid_drift", centroidDrift, centroidDriftSql),
+    Entry("sim_quantize_int8", quantizeInt8TopK, quantizeInt8TopKSql),
+    Entry("sim_pq_adc", pqAdcTopK, pqAdcTopKSql),
+    Entry("sim_ann_ivfpq", annIvfPq, annIvfPqSql),
+    Entry("sim_ann_ivfpq_rerank", annIvfPqRerank, annIvfPqRerankSql),
+    Entry("sim_kmeans_step", kmeansStep, kmeansStepSql),
+    Entry("sim_topk_bruteforce", bruteForceTopK, bruteForceTopKSql),
+    Entry("sim_topk_native", bruteForceTopKNative, bruteForceTopKSql),
+    Entry("sim_ann_sign_lsh", annSignLsh, annSignLshSql),
+    Entry("sim_ann_ivf", annIvf, annIvfSql),
+    Entry("sim_ann_ivf_probe2", annIvfProbe2, annIvfProbe2Sql),
+    Entry("sim_ann_ivf_indexed", annIvfIndexed, annIvfSql),
+    Entry("sim_ann_filtered", annIvfFiltered, annIvfFilteredSql),
+    Entry("curate_decontam_semantic", decontamSemantic, decontamSemanticSql),
+    Entry("stream_decontam_semantic", streamDecontamSemantic,
+      decontamSemanticSql),
+    Entry("stream_ivf_ingest", streamIvfIngest, annIvfSql),
+    Entry("sim_ivf_retrain", ivfRetrainProbe, ivfRetrainSql),
+    Entry("sim_ivf_delete", ivfDeleteProbe, ivfDeleteSql),
+    Entry("stream_ivf_retrain", streamIvfRetrain, ivfRetrainSql),
+    Entry("sim_ann_recall", annRecall, annRecallSql),
+    Entry("sim_ann_autoprobe", annAutoprobe, annAutoprobeSql),
+    Entry("sim_pq_autotune", pqAutotune, pqAutotuneSql),
+    Entry("sim_hard_negatives", hardNegatives, hardNegativesSql),
+    Entry("sim_cos_neardup", cosNearDup, cosNearDupSql),
+    Entry("sim_threshold_sweep", thresholdSweep, thresholdSweepSql),
+    Entry("dedup_semantic", dedupSemantic, dedupSemanticSql),
+    Entry("dedup_semantic_lsh", dedupSemanticLsh, dedupSemanticLshSql),
+    Entry("curate_prototypes", curatePrototypes, curatePrototypesSql),
+    Entry("sim_label_centroids", labelCentroids, labelCentroidsSql))
 }

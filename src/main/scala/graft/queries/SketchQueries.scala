@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
   StructField, StructType}
 
 import graft.functions.{KmvSketchAgg, Md5Key}
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -243,17 +244,15 @@ object SketchQueries {
           .otherwise(expr(s"$EstNum DIV kth_hash")))
   }
 
-  /** Streaming twin of the sliding cardinality (VERDICT r13 missing
-    * #4): per-(series, hour) KMV sketches accumulate as update-mode
-    * aggregation state — the [[ChangePointQueries.hourlyStore]]
-    * counter-store pattern with a sketch payload: state is one ≤K-long
-    * array per live (series, hour), bounded by the covered TIME SPAN ×
-    * K, never by user count or stream length. Each batch upserts the
-    * refreshed hourly sketches; the 24 h RANGE-merge window runs
-    * OUTSIDE the stream at gate time (merging ≤24 stored arrays per
-    * row). Finite input ⇒ the stored sketches equal the batch hourly
-    * sketches (KMV union is order-independent), so the same oracle
-    * verifies both. */
+  /** Streaming twin of the sliding cardinality: per-(series, hour) KMV sketches
+    * accumulate as update-mode aggregation state — the
+    * [[ChangePointQueries.hourlyStore]] counter-store pattern with a sketch
+    * payload: state is one ≤K-long array per live (series, hour), bounded by
+    * the covered TIME SPAN × K, never by user count or stream length. Each
+    * batch upserts the refreshed hourly sketches; the 24 h RANGE-merge window
+    * runs OUTSIDE the stream at gate time (merging ≤24 stored arrays per row).
+    * Finite input ⇒ the stored sketches equal the batch hourly sketches (KMV
+    * union is order-independent), so the same oracle verifies both. */
   def streamKmvSliding(s: SparkSession, d: String): DataFrame = {
     val kmv = udaf(new KmvSketchAgg(K))
     val hourly = StreamingQueries.eventsStream(s, d)
@@ -355,7 +354,7 @@ object SketchQueries {
   // ---------------------------------------------------------------
   // Misra–Gries frequency sketch — the heavy-hitter member of the
   // sketch triad (cardinality = KMV above, quantiles = DecimalSketch,
-  // frequency = MG; VERDICT r13 next-round #3). See
+  // frequency = MG). See
   // [[graft.functions.MgSketch]] for the bounds and the deterministic
   // candidates-then-exact protocol these queries implement.
   // ---------------------------------------------------------------
@@ -479,9 +478,9 @@ object SketchQueries {
     * events is guaranteed held by the frame's merged sketch. */
   private val MgWinK = 16
 
-  /** Sliding-window heavy hitters (VERDICT r14 next-round #7 — the
-    * missing sliding member of the frequency family, completing
-    * window symmetry across all three sketch tiers): per-(series,
+  /** Sliding-window heavy hitters (the sliding member of the
+    * frequency family, so all three sketch tiers have a window form):
+    * per-(series,
     * hour) MG summaries merge over a trailing-24 h RANGE frame
     * ([[kmvSliding]]'s shape with the frequency sketch as payload),
     * then the [[mgTopK]] candidates-then-exact protocol runs PER
@@ -590,29 +589,16 @@ object SketchQueries {
       store.df(s).select(col("event_type"), col("hts"), col("sk"), col("n")))
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_kmv_distinct" -> kmvDistinct _,
-    "sketch_kmv_jaccard" -> kmvJaccard _,
-    "sketch_kmv_rollup" -> kmvRollup _,
-    "sketch_kmv_sliding" -> kmvSliding _,
-    "stream_kmv_sliding" -> streamKmvSliding _,
-    "stream_kmv_distinct" -> streamKmvDistinct _,
-    "sketch_mg_topk" -> mgTopK _,
-    "sketch_mg_sliding" -> mgSliding _,
-    "stream_mg_sliding" -> streamMgSliding _,
-    "sketch_mg_rollup" -> mgRollup _,
-    "stream_mg_topk" -> streamMgTopK _)
-
-  def oracles: Map[String, String] = Map(
-    "sketch_kmv_distinct" -> kmvDistinctSql,
-    "sketch_kmv_jaccard" -> kmvJaccardSql,
-    "sketch_kmv_rollup" -> kmvRollupSql,
-    "sketch_kmv_sliding" -> kmvSlidingSql,
-    "stream_kmv_sliding" -> kmvSlidingSql,
-    "stream_kmv_distinct" -> streamKmvDistinctSql,
-    "sketch_mg_topk" -> mgTopKSql,
-    "sketch_mg_sliding" -> mgSlidingSql,
-    "stream_mg_sliding" -> mgSlidingSql,
-    "sketch_mg_rollup" -> mgTopKSql,
-    "stream_mg_topk" -> mgTopKSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("sketch_kmv_distinct", kmvDistinct, kmvDistinctSql),
+    Entry("sketch_kmv_jaccard", kmvJaccard, kmvJaccardSql),
+    Entry("sketch_kmv_rollup", kmvRollup, kmvRollupSql),
+    Entry("sketch_kmv_sliding", kmvSliding, kmvSlidingSql),
+    Entry("stream_kmv_sliding", streamKmvSliding, kmvSlidingSql),
+    Entry("stream_kmv_distinct", streamKmvDistinct, streamKmvDistinctSql),
+    Entry("sketch_mg_topk", mgTopK, mgTopKSql),
+    Entry("sketch_mg_sliding", mgSliding, mgSlidingSql),
+    Entry("stream_mg_sliding", streamMgSliding, mgSlidingSql),
+    Entry("sketch_mg_rollup", mgRollup, mgTopKSql),
+    Entry("stream_mg_topk", streamMgTopK, mgTopKSql))
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 
 /** File-format source/sink surface (the K1 "named output" analog +
@@ -280,25 +281,14 @@ object SourceQueries {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderstatus""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "src_csv_roundtrip" -> csvRoundtrip _,
-    "src_json_roundtrip" -> jsonRoundtrip _,
-    "src_orc_roundtrip" -> orcRoundtrip _,
-    "src_partitioned_parquet" -> partitionedParquet _,
-    "src_schema_evolution" -> schemaEvolution _,
-    "src_dynamic_overwrite" -> dynamicOverwrite _,
-    "src_dpp_prune" -> dppPrune _,
-    "src_bloom_parquet" -> bloomParquet _,
-    "src_bucketed_join" -> bucketedJoin _)
-
-  def oracles: Map[String, String] = Map(
-    "src_csv_roundtrip" -> csvRoundtripSql,
-    "src_json_roundtrip" -> jsonRoundtripSql,
-    "src_orc_roundtrip" -> orcRoundtripSql,
-    "src_partitioned_parquet" -> partitionedParquetSql,
-    "src_schema_evolution" -> schemaEvolutionSql,
-    "src_dynamic_overwrite" -> dynamicOverwriteSql,
-    "src_dpp_prune" -> dppPruneSql,
-    "src_bloom_parquet" -> bloomParquetSql,
-    "src_bucketed_join" -> bucketedJoinSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("src_csv_roundtrip", csvRoundtrip, csvRoundtripSql),
+    Entry("src_json_roundtrip", jsonRoundtrip, jsonRoundtripSql),
+    Entry("src_orc_roundtrip", orcRoundtrip, orcRoundtripSql),
+    Entry("src_partitioned_parquet", partitionedParquet, partitionedParquetSql),
+    Entry("src_schema_evolution", schemaEvolution, schemaEvolutionSql),
+    Entry("src_dynamic_overwrite", dynamicOverwrite, dynamicOverwriteSql),
+    Entry("src_dpp_prune", dppPrune, dppPruneSql),
+    Entry("src_bloom_parquet", bloomParquet, bloomParquetSql),
+    Entry("src_bucketed_join", bucketedJoin, bucketedJoinSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.{DebeziumJson, FiniteStream, Pipeline}
 import graft.streaming.FiniteStream.{Batches, Leg, deleteRecursively, scratchDir}
@@ -25,7 +26,7 @@ object StreamingQueries {
     * FILE count as its task count, so per-row work above the source
     * is serial otherwise). Default OFF: the events consumers are
     * cheap per-row aggregations where the extra exchange measured as
-    * pure cost (r20 family A/B: +0.05..0.55 s per query); heavy,
+    * pure cost (+0.05..0.55 s per query in a family A/B); heavy,
     * order-insensitive consumers opt in. */
   private[queries] def eventsStream(s: SparkSession, d: String,
                                     wide: Boolean = false): DataFrame = {
@@ -245,9 +246,8 @@ object StreamingQueries {
     * election runs at finalize over that bounded log
     * ([[electDupBands]]) — so the result is independent of arrival
     * order, matching the batch EXISTS oracle under any file order,
-    * batch split, or partition interleave (r16 verdict #1; pinned
-    * against a multi-file doc_id-shuffled fixture in
-    * ShuffledArrivalSpec).
+    * batch split, or partition interleave (pinned against a
+    * multi-file doc_id-shuffled fixture in ShuffledArrivalSpec).
     *
     * Scale shape: state is ~ONE long per distinct (band, sig) bucket
     * (bounded by distinct signatures, not corpus rows; at cluster
@@ -263,7 +263,7 @@ object StreamingQueries {
       runToTable(neardupCore(DedupQueries.bandRows(docs)), "append"))
   }
 
-  /** Streaming cross-source contamination matrix (r17 verdict #6) —
+  /** Streaming cross-source contamination matrix —
     * the ingest-time twin of [[DedupQueries.crossSourceMatrix]],
     * sharing its oracle EXACTLY. The trick is what the registry is
     * keyed on: each document's distinct 5-gram SHINGLES (band 0,
@@ -354,7 +354,7 @@ object StreamingQueries {
         (col("jaccard_ppm") < 800000L).cast(LongType).as("asymmetric"))
   }
 
-  /** BOUNDED-STATE streaming contamination matrix (r18 verdict #1) —
+  /** BOUNDED-STATE streaming contamination matrix —
     * the 100×-scale spelling of [[streamCrossSource]]: the ingest
     * registry keys on each document's MinHash BAND rows (4 per doc —
     * [[DedupQueries.bandRows]], the `stream_neardup` footprint), so
@@ -417,7 +417,7 @@ object StreamingQueries {
   }
 
   /** The stateful bucket registry over ANY (doc_id, band, sig)
-    * stream — ORDER-INDEPENDENT form (r16 verdict #1): instead of
+    * stream — ORDER-INDEPENDENT form: instead of
     * flagging rows by arrival order, the registry emits the CLAIM LOG
     * — every row belonging to a bucket observed to hold ≥2 distinct
     * documents — and leaves ownership to a finalize-time min-doc_id
@@ -427,9 +427,9 @@ object StreamingQueries {
     * distinct document arrives, after which every member row passes
     * straight through. State per bucket: (contested, sole doc_id,
     * retained-row count) — one tuple, O(1); emitted rows leave state
-    * forever. STATE-FORMAT NOTE: r17 widened the per-bucket state
-    * from a bare Long (min id) to this tuple — a checkpoint written
-    * by the r16 registry does not restore into it (the MgSketch kryo
+    * forever. STATE-FORMAT NOTE: a checkpoint whose per-bucket state
+    * is a bare Long (min id) does not restore into this tuple (the
+    * MgSketch kryo
     * break class; throwaway fixture checkpoints are unaffected, a
     * production upgrade drains or restarts the query). Same applies
     * to [[claimCore]]. Package-visible so the spec drives it
@@ -497,8 +497,8 @@ object StreamingQueries {
     * [[electClaims]] then flags the non-owner occurrences. Within-doc
     * repeats of a sole-owned signature stay retained (never released,
     * never flagged) UP TO [[ClaimPendCap]] positions — beyond the cap,
-    * overflow positions SPILL straight into the claim log (ADVICE
-    * r17: a pathological document repeating one gram must not inflate
+    * overflow positions SPILL straight into the claim log (a
+    * pathological document repeating one gram must not inflate
     * the state store, nor pay a quadratic re-concat per batch). The
     * spill is election-lossless: a sole-owner row reaches
     * [[electClaims]] identically whether replayed at contestation or
@@ -544,7 +544,6 @@ object StreamingQueries {
             // from pend.nonEmpty: with a tiny pendCap every position can
             // spill while the key stays sole-owned, and forgetting the
             // owner would let a later second document pass uncontested
-            // (ADVICE r18)
             val docs =
               (rows.map(_._1) ++ (if (soleDoc >= 0) Seq(soleDoc) else Nil))
                 .distinct
@@ -635,7 +634,7 @@ object StreamingQueries {
     * queries (exact per-term counts; the one-row sketch), then the
     * 20-row driver-side probe.
     *
-    * STATE NOTE (VERDICT r13): the exact-count leg keys state on the
+    * STATE NOTE: the exact-count leg keys state on the
     * whole vocabulary — it exists to VERIFY the sketch, and this query
     * is the verification twin. The production bounded-state monitor is
     * `stream_mg_topk` ([[SketchQueries.streamMgTopK]]): Misra–Gries
@@ -925,10 +924,6 @@ object StreamingQueries {
       }.toDF()
   }
 
-  /** Same oracle as the batch sessionize — final emissions must equal
-    * the one-shot answer. */
-  val streamSessionizeSql: String = BatchSqlQueries3.oracles("q_sessionize")
-
   case class Scd2In(user_id: Long, event_id: Long, state: String, us: Long,
                     ts: java.sql.Timestamp)
   case class Scd2Ev(us: Long, event_id: Long, state: String)
@@ -943,7 +938,7 @@ object StreamingQueries {
     * emission only for CLOSED versions. */
   private val Scd2OpenDelayUs = 365L * 86400L * 1000000L
 
-  /** Streaming SCD TYPE-2 — [[BatchSqlQueries3.scd2History]] built
+  /** Streaming SCD TYPE-2 — [[BatchSqlQueries.scd2History]] built
     * CONTINUOUSLY from the event stream: one `flatMapGroupsWithState`
     * per user holds only the not-yet-closed tail of its history; a
     * version row emits (append, final) once the watermark passes the
@@ -1109,7 +1104,7 @@ object StreamingQueries {
     * exactly (the sketch merge is lossless, so WHERE the micro-batch
     * boundaries fell cannot show through). */
   def streamSketchDrift(s: SparkSession, d: String): DataFrame =
-    BatchSqlQueries2.tvdAgainstGlobal(decsketchStore(s, d))
+    BatchSqlQueries.tvdAgainstGlobal(decsketchStore(s, d))
 
   /** Streaming CEP: the [[graft.streaming.PatternMatch]] automaton
     * (incremental `v+c*p` funnel count + `p.*e` flag, constant per-key
@@ -1144,7 +1139,7 @@ object StreamingQueries {
       unix_micros(col("ts")).as("us"), col("event_id"),
       substring(col("event_type"), 1, 1).as("ch"))
     val out = graft.streaming.PatternMatch.sessionTable(s, ev,
-      BatchSqlQueries3.SessionGapUs)
+      BatchSqlQueries.SessionGapUs)
     val schema = StructType(Seq(
       StructField("user_id", LongType),
       StructField("n_sessions", LongType),
@@ -1156,6 +1151,20 @@ object StreamingQueries {
     store.df(s)
   }
 
+  /** The events stream with each series' batch-trained SAX
+    * breakpoints attached by a broadcast stream-static join. */
+  private def saxStream(s: SparkSession, d: String): DataFrame = {
+    val bps = BatchSqlQueries.saxBreakpoints(
+        BatchSqlQueries.saxSums(BatchSqlQueries.saxEvents(s, d)))
+      .select(col("event_type"), col("b1"), col("b2"), col("b3"))
+    val ev = eventsStream(s, d).select(col("event_type"),
+      unix_micros(col("ts")).as("us"), col("event_id"),
+      round(col("value") * 100).cast(LongType).as("cents"))
+    ev.join(broadcast(bps), "event_type")
+      .select(col("event_type"), col("us"), col("event_id"),
+        col("cents"), col("b1"), col("b2"), col("b3"))
+  }
+
   /** Streaming SAX motif mining ([[graft.streaming.SaxMotif]]): the
     * rank-quartile breakpoints are TRAINED batch-side (a global
     * property no stream can compute online — same artifact/inference
@@ -1165,17 +1174,8 @@ object StreamingQueries {
     * two letters, ≤64 trigram counters per series). On finite input
     * the final motif table equals the batch q_sax_motif oracle. */
   def streamSaxMotif(s: SparkSession, d: String): DataFrame = {
-    val bps = BatchSqlQueries3.saxBreakpoints(
-        BatchSqlQueries3.saxSums(BatchSqlQueries3.saxEvents(s, d)))
-      .select(col("event_type"), col("b1"), col("b2"), col("b3"))
-    val ev = eventsStream(s, d).select(col("event_type"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      round(col("value") * 100).cast(LongType).as("cents"))
-    val joined = ev.join(broadcast(bps), "event_type")
-      .select(col("event_type"), col("us"), col("event_id"),
-        col("cents"), col("b1"), col("b2"), col("b3"))
-    val out = graft.streaming.SaxMotif.table(s, joined,
-      BatchSqlQueries3.SaxW)
+    val out = graft.streaming.SaxMotif.table(s, saxStream(s, d),
+      BatchSqlQueries.SaxW)
     val schema = StructType(Seq(
       StructField("event_type", StringType),
       StructField("motif", StringType),
@@ -1213,37 +1213,24 @@ object StreamingQueries {
       StructField("pair", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val t = store.df(s).select(col("source"), col("lang"), col("ct"))
-    val nt = t.groupBy(col("source")).agg(sum(col("ct")).as("nt"))
-    val g = t.groupBy(col("lang")).agg(sum(col("ct")).as("cg"))
-      .crossJoin(t.agg(sum(col("ct")).as("ng")))
-    nt.crossJoin(broadcast(g))
-      .join(t, Seq("source", "lang"), "left")
-      .na.fill(0L, Seq("ct"))
-      .groupBy(col("source"), col("nt"), col("ng"))
-      .agg(sum(abs(col("ct") * col("ng") - col("cg") * col("nt")))
-        .as("tvd_scaled"))
-      .select(col("source"), col("tvd_scaled"),
-        (col("tvd_scaled") / (lit(2.0) * col("nt") * col("ng"))).as("tvd"),
-        col("nt").as("n_docs"))
+    TextQueries.fertilityTvd(
+      store.df(s).select(col("source"), col("lang"), col("ct")), "lang")
   }
 
   /** Streaming incremental dedup gate — [[DedupQueries.incremental]]
     * the way it DEPLOYS: the at-rest corpus's signature index (band
     * rows, shingle rows, set sizes — [[DedupQueries.restIndexOf]]) is
     * MATERIALIZED ONCE to a stored parquet layout before the stream
-    * starts (the IvfIndex stored-index discipline; ADVICE r18 — the
-    * prior spelling re-derived the corpus-side relations inside every
-    * epoch), then each arriving micro-batch of delta documents gates
-    * against the stored index inside its own batch
-    * ([[DedupQueries.incrementalAgainst]] — delta bands equi-join the
-    * stored band relation, exact-Jaccard verify joins the stored
-    * shingle/size relations), and verified rejections upsert into the
-    * result snapshot keyed on the pair, so a replayed epoch is
-    * idempotent. No cross-batch state at all, and no corpus-side
-    * derivation after the build: per-ingest cost is
-    * O(batch + collisions) regardless of history length. Finite
-    * input ⇒ equals the batch oracle. */
+    * starts (the IvfIndex stored-index discipline, so no epoch
+    * re-derives the corpus-side relations), then each arriving micro-batch of
+    * delta documents gates against the stored index inside its own batch
+    * ([[DedupQueries.incrementalAgainst]] — delta bands equi-join the stored
+    * band relation, exact-Jaccard verify joins the stored shingle/size
+    * relations), and verified rejections upsert into the result snapshot keyed
+    * on the pair, so a replayed epoch is idempotent. No cross-batch state at
+    * all, and no corpus-side derivation after the build: per-ingest cost is
+    * O(batch + collisions) regardless of history length. Finite input ⇒ equals
+    * the batch oracle. */
   def streamIncremental(s: SparkSession, d: String): DataFrame =
     streamRestGate(s, d,
       valueFields = Seq(StructField("doc_id", LongType),
@@ -1326,16 +1313,14 @@ object StreamingQueries {
     store.df(s).select(valueFields.map(f => col(f.name)): _*)
   }
 
-  /** Streaming tokenizer-fertility drift monitor (r17 verdict #8
-    * stretch, stream half): the per-document fertility BUCKET is a
-    * pure narrow expression ([[TextQueries.fertilityBuckets]] plans
-    * on the unbounded source), so (source, bucket) counts accumulate
-    * under update-mode aggregation — state = one counter per live
-    * pair, the categorical sketch of [[streamLangDrift]] — and the
-    * TVD-vs-global finalize ([[TextQueries.fertilityTvd]], shared
-    * with the batch gate) runs OUTSIDE the stream on the stored
-    * counts. Finite input ⇒ equals the batch text_fertility_drift
-    * oracle. */
+  /** Streaming tokenizer-fertility drift monitor: the per-document fertility
+    * BUCKET is a pure narrow expression ([[TextQueries.fertilityBuckets]] plans
+    * on the unbounded source), so (source, bucket) counts accumulate under
+    * update-mode aggregation — state = one counter per live pair, the
+    * categorical sketch of [[streamLangDrift]] — and the TVD-vs-global finalize
+    * ([[TextQueries.fertilityTvd]], shared with the batch gate) runs OUTSIDE
+    * the stream on the stored counts. Finite input ⇒ equals the batch
+    * text_fertility_drift oracle. */
   def streamFertilityDrift(s: SparkSession, d: String): DataFrame = {
     val agg = TextQueries.fertilityBuckets(
         docStream(s, d).select(col("source"), col("text")))
@@ -1352,7 +1337,7 @@ object StreamingQueries {
     val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
     FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
     TextQueries.fertilityTvd(
-      store.df(s).select(col("source"), col("bkt"), col("ct")))
+      store.df(s).select(col("source"), col("bkt"), col("ct")), "bkt")
   }
 
   /** Streaming symbolic similarity: the SAME SAX automaton emits each
@@ -1362,40 +1347,15 @@ object StreamingQueries {
     * stream. Completes the SAX triple (motif, similarity) in both
     * execution modes against one oracle. */
   def streamSaxSimilarity(s: SparkSession, d: String): DataFrame = {
-    val bps = BatchSqlQueries3.saxBreakpoints(
-        BatchSqlQueries3.saxSums(BatchSqlQueries3.saxEvents(s, d)))
-      .select(col("event_type"), col("b1"), col("b2"), col("b3"))
-    val ev = eventsStream(s, d).select(col("event_type"),
-      unix_micros(col("ts")).as("us"), col("event_id"),
-      round(col("value") * 100).cast(LongType).as("cents"))
-    val joined = ev.join(broadcast(bps), "event_type")
-      .select(col("event_type"), col("us"), col("event_id"),
-        col("cents"), col("b1"), col("b2"), col("b3"))
-    val out = graft.streaming.SaxMotif.vocabTable(s, joined,
-      BatchSqlQueries3.SaxW)
+    val out = graft.streaming.SaxMotif.vocabTable(s, saxStream(s, d),
+      BatchSqlQueries.SaxW)
     val schema = StructType(Seq(
       StructField("event_type", StringType),
       StructField("words", StringType)))
     val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
     FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
-    val wv = store.df(s).select(col("event_type"),
-      explode(split(col("words"), ",")).as("word"))
-    val vocab = wv.groupBy(col("event_type")).agg(count(lit(1)).as("nv"))
-    wv.as("a")
-      .join(wv.as("b"), col("a.word") === col("b.word") &&
-        col("a.event_type") < col("b.event_type"))
-      .groupBy(col("a.event_type").as("type_a"),
-        col("b.event_type").as("type_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(vocab.select(col("event_type").as("type_a"),
-        col("nv").as("nv_a")), Seq("type_a"))
-      .join(vocab.select(col("event_type").as("type_b"),
-        col("nv").as("nv_b")), Seq("type_b"))
-      .select(col("type_a"), col("type_b"), col("n_common"),
-        col("nv_a"), col("nv_b"),
-        (col("n_common") /
-          (col("nv_a") + col("nv_b") - col("n_common")).cast("double"))
-          .as("jaccard"))
+    BatchSqlQueries.saxJaccard(store.df(s).select(col("event_type"),
+      explode(split(col("words"), ",")).as("word")))
   }
 
   /** The batch pattern-match oracle minus the folded string (the
@@ -1815,90 +1775,62 @@ object StreamingQueries {
     }
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_sessionize" -> streamSessionize _,
-    "stream_corpus_build" -> streamCorpusBuild _,
-    "stream_tumbling_agg" -> tumblingAgg _,
-    "stream_ohlc_bars" -> ohlcBars _,
-    "stream_ohlc_final" -> ohlcFinal _,
-    "stream_session_agg" -> sessionAgg _,
-    "stream_dedup" -> streamDedup _,
-    "stream_neardup" -> streamNeardup _,
-    "stream_cross_source" -> streamCrossSource _,
-    "stream_cross_source_banded" -> streamCrossSourceBanded _,
-    "stream_containment" -> streamContainment _,
-    "stream_incremental" -> streamIncremental _,
-    "stream_incremental_containment" -> streamIncrementalContainment _,
-    "stream_index_delete" -> streamIndexDelete _,
-    "stream_bpe_pairs" -> streamBpePairs _,
-    "stream_classifier_score" -> streamClassifierScore _,
-    "stream_vocab_oov" -> streamVocabOov _,
-    "stream_heavy_hitters" -> streamHeavyHitters _,
-    "stream_weighted_sample" -> streamWeightedSample _,
-    "stream_scd2" -> streamScd2 _,
-    "stream_dedup_bounded" -> streamDedupBounded _,
-    "stream_latest_by_key" -> streamLatestByKey _,
-    "stream_latest_k" -> streamLatestK _,
-    "stream_decsketch" -> streamDecsketch _,
-    "stream_sketch_drift" -> streamSketchDrift _,
-    "stream_pattern_match" -> streamPatternMatch _,
-    "stream_pattern_sessions" -> streamPatternSessions _,
-    "stream_sax_motif" -> streamSaxMotif _,
-    "stream_sax_similarity" -> streamSaxSimilarity _,
-    "stream_lang_drift" -> streamLangDrift _,
-    "stream_fertility_drift" -> streamFertilityDrift _,
-    "stream_static_join" -> streamStaticJoin _,
-    "stream_hopping_agg" -> hoppingAgg _,
-    "stream_insert_into" -> streamInsertInto _,
-    "stream_tumbling_final" -> tumblingFinal _,
-    "stream_hopping_final" -> hoppingFinal _,
-    "stream_session_final" -> sessionFinal _,
-    "stream_interval_join" -> streamIntervalJoin _,
-    "stream_interval_left" -> streamIntervalLeft _,
-    "stream_interval_full" -> streamIntervalFull _,
-    "stream_pipeline_golden" -> pipelineGolden _)
-
-  def oracles: Map[String, String] = Map(
-    "stream_sessionize" -> streamSessionizeSql,
-    "stream_corpus_build" -> CurationQueries.corpusBuildSql,
-    "stream_tumbling_agg" -> BatchSqlQueries.tumblingAggSql,
-    "stream_ohlc_bars" -> BatchSqlQueries3.ohlcBarsSql,
-    "stream_ohlc_final" -> BatchSqlQueries3.ohlcBarsSql,
-    "stream_session_agg" -> sessionAggSql,
-    "stream_dedup" -> streamDedupSql,
-    "stream_neardup" -> streamNeardupSql,
-    "stream_cross_source" -> DedupQueries.crossSourceMatrixSql,
-    "stream_cross_source_banded" -> DedupQueries.crossSourceBandedSql,
-    "stream_containment" -> DedupQueries.containmentSql,
-    "stream_incremental" -> DedupQueries.incrementalSql,
-    "stream_incremental_containment" ->
-      DedupQueries.incrementalContainmentSql,
-    "stream_index_delete" -> DedupQueries.indexDeleteSql,
-    "stream_bpe_pairs" -> TextQueries.bpePairsSql,
-    "stream_classifier_score" -> TextQueries.classifierScoreSql,
-    "stream_vocab_oov" -> TextQueries.vocabCoverageSql,
-    "stream_heavy_hitters" -> TextQueries.heavyHittersSql,
-    "stream_weighted_sample" -> CurationQueries.weightedSampleSql,
-    "stream_scd2" -> BatchSqlQueries3.scd2HistorySql,
-    "stream_dedup_bounded" -> streamDedupBoundedSql,
-    "stream_latest_by_key" -> PipelineQueries.latestByKeySql,
-    "stream_latest_k" -> BatchSqlQueries3.latestKByOffsetSql,
-    "stream_decsketch" -> streamDecsketchSql,
-    "stream_sketch_drift" -> BatchSqlQueries2.sketchDriftSql,
-    "stream_pattern_match" -> streamPatternMatchSql,
-    "stream_pattern_sessions" -> BatchSqlQueries3.patternSessionsSql,
-    "stream_sax_motif" -> BatchSqlQueries3.saxMotifSql,
-    "stream_sax_similarity" -> BatchSqlQueries3.saxSimilaritySql,
-    "stream_lang_drift" -> CurationQueries.langDriftSql,
-    "stream_fertility_drift" -> TextQueries.fertilityDriftSql,
-    "stream_static_join" -> streamStaticJoinSql,
-    "stream_hopping_agg" -> BatchSqlQueries.hoppingAggSql,
-    "stream_insert_into" -> streamInsertIntoSql,
-    "stream_tumbling_final" -> BatchSqlQueries.tumblingAggSql,
-    "stream_hopping_final" -> BatchSqlQueries.hoppingAggSql,
-    "stream_session_final" -> sessionAggSql,
-    "stream_interval_join" -> PipelineQueries.intervalJoinSql,
-    "stream_interval_left" -> streamIntervalLeftSql,
-    "stream_interval_full" -> streamIntervalFullSql,
-    "stream_pipeline_golden" -> pipelineGoldenSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("stream_sessionize", streamSessionize, BatchSqlQueries.sessionizeSql),
+    Entry("stream_corpus_build", streamCorpusBuild,
+      CurationQueries.corpusBuildSql),
+    Entry("stream_tumbling_agg", tumblingAgg, BatchSqlQueries.tumblingAggSql),
+    Entry("stream_ohlc_bars", ohlcBars, BatchSqlQueries.ohlcBarsSql),
+    Entry("stream_ohlc_final", ohlcFinal, BatchSqlQueries.ohlcBarsSql),
+    Entry("stream_session_agg", sessionAgg, sessionAggSql),
+    Entry("stream_dedup", streamDedup, streamDedupSql),
+    Entry("stream_neardup", streamNeardup, streamNeardupSql),
+    Entry("stream_cross_source", streamCrossSource,
+      DedupQueries.crossSourceMatrixSql),
+    Entry("stream_cross_source_banded", streamCrossSourceBanded,
+      DedupQueries.crossSourceBandedSql),
+    Entry("stream_containment", streamContainment, DedupQueries.containmentSql),
+    Entry("stream_incremental", streamIncremental, DedupQueries.incrementalSql),
+    Entry("stream_incremental_containment", streamIncrementalContainment,
+      DedupQueries.incrementalContainmentSql),
+    Entry("stream_index_delete", streamIndexDelete,
+      DedupQueries.indexDeleteSql),
+    Entry("stream_bpe_pairs", streamBpePairs, TextQueries.bpePairsSql),
+    Entry("stream_classifier_score", streamClassifierScore,
+      TextQueries.classifierScoreSql),
+    Entry("stream_vocab_oov", streamVocabOov, TextQueries.vocabCoverageSql),
+    Entry("stream_heavy_hitters", streamHeavyHitters,
+      TextQueries.heavyHittersSql),
+    Entry("stream_weighted_sample", streamWeightedSample,
+      CurationQueries.weightedSampleSql),
+    Entry("stream_scd2", streamScd2, BatchSqlQueries.scd2HistorySql),
+    Entry("stream_dedup_bounded", streamDedupBounded, streamDedupBoundedSql),
+    Entry("stream_latest_by_key", streamLatestByKey,
+      PipelineQueries.latestByKeySql),
+    Entry("stream_latest_k", streamLatestK,
+      BatchSqlQueries.latestKByOffsetSql),
+    Entry("stream_decsketch", streamDecsketch, streamDecsketchSql),
+    Entry("stream_sketch_drift", streamSketchDrift,
+      BatchSqlQueries.sketchDriftSql),
+    Entry("stream_pattern_match", streamPatternMatch, streamPatternMatchSql),
+    Entry("stream_pattern_sessions", streamPatternSessions,
+      BatchSqlQueries.patternSessionsSql),
+    Entry("stream_sax_motif", streamSaxMotif, BatchSqlQueries.saxMotifSql),
+    Entry("stream_sax_similarity", streamSaxSimilarity,
+      BatchSqlQueries.saxSimilaritySql),
+    Entry("stream_lang_drift", streamLangDrift, CurationQueries.langDriftSql),
+    Entry("stream_fertility_drift", streamFertilityDrift,
+      TextQueries.fertilityDriftSql),
+    Entry("stream_static_join", streamStaticJoin, streamStaticJoinSql),
+    Entry("stream_hopping_agg", hoppingAgg, BatchSqlQueries.hoppingAggSql),
+    Entry("stream_insert_into", streamInsertInto, streamInsertIntoSql),
+    Entry("stream_tumbling_final", tumblingFinal,
+      BatchSqlQueries.tumblingAggSql),
+    Entry("stream_hopping_final", hoppingFinal, BatchSqlQueries.hoppingAggSql),
+    Entry("stream_session_final", sessionFinal, sessionAggSql),
+    Entry("stream_interval_join", streamIntervalJoin,
+      PipelineQueries.intervalJoinSql),
+    Entry("stream_interval_left", streamIntervalLeft, streamIntervalLeftSql),
+    Entry("stream_interval_full", streamIntervalFull, streamIntervalFullSql),
+    Entry("stream_pipeline_golden", pipelineGolden, pipelineGoldenSql))
 }

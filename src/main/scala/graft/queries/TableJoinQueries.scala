@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.{TableAggregate, TableChangelog, TableTableJoin}
 
@@ -426,37 +427,22 @@ object TableJoinQueries {
         col("after.right.nation_name").as("nation_name"))
   }
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_table_table_join" -> tableTableJoin _,
-    "q_table_table_inner" -> tableTableInner _,
-    "q_table_table_full" -> tableTableFull _,
-    "q_table_fk_join" -> tableFkJoin _,
-    "q_table_fk_left" -> tableFkLeft _,
-    "q_table_agg" -> tableAgg _,
-    "q_table_agg_minmax" -> tableAggMinMax _,
-    "stream_table_agg_minmax" -> streamTableAggMinMax _,
-    "stream_table_agg" -> streamTableAgg _,
-    "stream_table_changelog" -> streamTableChangelog _,
-    "stream_table_table_join" -> streamTableTableJoin _,
-    "stream_table_table_inner" -> streamTableTableInner _,
-    "stream_table_table_full" -> streamTableTableFull _,
-    "stream_table_fk_join" -> streamTableFkJoin _,
-    "stream_table_fk_left" -> streamTableFkLeft _)
-
-  def oracles: Map[String, String] = Map(
-    "q_table_table_join" -> tableTableJoinSql,
-    "q_table_table_inner" -> tableTableInnerSql,
-    "q_table_table_full" -> tableTableFullSql,
-    "q_table_fk_join" -> tableFkJoinSql,
-    "q_table_fk_left" -> tableFkLeftSql,
-    "q_table_agg" -> tableAggSql,
-    "q_table_agg_minmax" -> tableAggMinMaxSql,
-    "stream_table_agg_minmax" -> tableAggMinMaxSql,
-    "stream_table_agg" -> tableAggSql,
-    "stream_table_changelog" -> streamTableChangelogSql,
-    "stream_table_table_join" -> tableTableJoinSql,
-    "stream_table_table_inner" -> tableTableInnerSql,
-    "stream_table_table_full" -> tableTableFullSql,
-    "stream_table_fk_join" -> tableFkJoinSql,
-    "stream_table_fk_left" -> tableFkLeftSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q_table_table_join", tableTableJoin, tableTableJoinSql),
+    Entry("q_table_table_inner", tableTableInner, tableTableInnerSql),
+    Entry("q_table_table_full", tableTableFull, tableTableFullSql),
+    Entry("q_table_fk_join", tableFkJoin, tableFkJoinSql),
+    Entry("q_table_fk_left", tableFkLeft, tableFkLeftSql),
+    Entry("q_table_agg", tableAgg, tableAggSql),
+    Entry("q_table_agg_minmax", tableAggMinMax, tableAggMinMaxSql),
+    Entry("stream_table_agg_minmax", streamTableAggMinMax, tableAggMinMaxSql),
+    Entry("stream_table_agg", streamTableAgg, tableAggSql),
+    Entry("stream_table_changelog", streamTableChangelog,
+      streamTableChangelogSql),
+    Entry("stream_table_table_join", streamTableTableJoin, tableTableJoinSql),
+    Entry("stream_table_table_inner", streamTableTableInner,
+      tableTableInnerSql),
+    Entry("stream_table_table_full", streamTableTableFull, tableTableFullSql),
+    Entry("stream_table_fk_join", streamTableFkJoin, tableFkJoinSql),
+    Entry("stream_table_fk_left", streamTableFkLeft, tableFkLeftSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TextShingles
+import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
 import graft.streaming.FiniteStream.{Batches, Leg}
@@ -543,7 +544,7 @@ object TextQueries {
     * identical vocabulary. */
   def vocabCoverage(s: SparkSession, d: String): DataFrame = {
     val VocabK = 1000
-    // NB (r20): single-mining the exploded token stream via
+    // NB: single-mining the exploded token stream via
     // localCheckpoint measured 0.69× (materializing corpus-token rows
     // costs more than the second tokenize pass it saves) — left as
     // two passes deliberately.
@@ -729,16 +730,17 @@ object TextQueries {
         expr(s"(__t * 1000 DIV __w) DIV $FertilityBucketMilli").as("bkt"))
   }
 
-  /** TVD finalize over ANY (source, bkt, ct) count relation — shared
-    * by the batch gate and the streaming twin's stored counts; the
+  /** TVD finalize over ANY (source, bucket, ct) count relation — shared
+    * by the batch gate and the streaming twins' stored counts; the
     * exact-arithmetic spelling of [[CurationQueries.langDrift]]
     * (Σ|ct·Ng − cg·Nt| in BIGINT, one IEEE division to normalize). */
-  private[queries] def fertilityTvd(t: DataFrame): DataFrame = {
+  private[queries] def fertilityTvd(t: DataFrame,
+                                    bucket: String): DataFrame = {
     val nt = t.groupBy(col("source")).agg(sum(col("ct")).as("nt"))
-    val g = t.groupBy(col("bkt")).agg(sum(col("ct")).as("cg"))
+    val g = t.groupBy(col(bucket)).agg(sum(col("ct")).as("cg"))
       .crossJoin(t.agg(sum(col("ct")).as("ng")))
     nt.crossJoin(broadcast(g))
-      .join(t, Seq("source", "bkt"), "left")
+      .join(t, Seq("source", bucket), "left")
       .na.fill(0L, Seq("ct"))
       .groupBy(col("source"), col("nt"), col("ng"))
       .agg(sum(abs(col("ct") * col("ng") - col("cg") * col("nt")))
@@ -748,21 +750,19 @@ object TextQueries {
         col("nt").as("n_docs"))
   }
 
-  /** Per-source tokenizer-FERTILITY drift gate (r17 verdict #8
-    * stretch) — the tokenizer-health monitor a production corpus runs
-    * continuously: each document's subword fertility
-    * (milli-tokens-per-word under the frozen [[bpeEncode]] merges)
-    * buckets on a [[FertilityBucketMilli]] grid, and each source's
-    * bucket distribution is scored by total-variation distance
-    * against the global mix — the categorical drift machinery of
-    * `curate_lang_drift` composed with the BPE fertility relation. A
-    * source whose new crawl suddenly tokenizes worse (code, another
-    * language, mojibake) moves mass to high buckets and trips the
-    * gate long before eval loss would. Everything after the narrow
-    * per-doc encode is |sources|×|buckets| rows. */
+  /** Per-source tokenizer-FERTILITY drift gate — the tokenizer-health monitor a
+    * production corpus runs continuously: each document's subword fertility
+    * (milli-tokens-per-word under the frozen [[bpeEncode]] merges) buckets on a
+    * [[FertilityBucketMilli]] grid, and each source's bucket distribution is
+    * scored by total-variation distance against the global mix — the
+    * categorical drift machinery of `curate_lang_drift` composed with the BPE
+    * fertility relation. A source whose new crawl suddenly tokenizes worse
+    * (code, another language, mojibake) moves mass to high buckets and trips
+    * the gate long before eval loss would. Everything after the narrow per-doc
+    * encode is |sources|×|buckets| rows. */
   def fertilityDrift(s: SparkSession, d: String): DataFrame =
     fertilityTvd(fertilityBuckets(Tables.documents(s, d))
-      .groupBy(col("source"), col("bkt")).agg(count(lit(1)).as("ct")))
+      .groupBy(col("source"), col("bkt")).agg(count(lit(1)).as("ct")), "bkt")
 
   val fertilityDriftSql: String = {
     val repW = "'  ' || array_to_string(string_split(w, ''), '  ') || '  '"
@@ -1276,65 +1276,35 @@ object TextQueries {
        |  CAST(sum(n_bigrams) AS BIGINT) AS tokens
        |FROM b GROUP BY bucket""".stripMargin
 
-  def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "curate_difficulty_buckets" -> difficultyBuckets _,
-    "text_bigram_logprob" -> bigramLogprob _,
-    "text_quality_calibration" -> qualityDupCalibration _,
-    "text_pii_by_source" -> piiBySource _,
-    "text_quality_histogram" -> qualityHistogram _,
-    "text_boilerplate" -> boilerplate _,
-    "text_term_rarity" -> termRarity _,
-    "text_corpus_stats" -> corpusStats _,
-    "text_repetition" -> repetition _,
-    "text_pii_scrub" -> piiScrub _,
-    "text_top_terms" -> topTerms _,
-    "text_doc_keyterms" -> docKeyterms _,
-    "stream_doc_keyterms" -> streamDocKeyterms _,
-    "text_heavy_hitters" -> heavyHitters _,
-    "text_bpe_pairs" -> bpePairs _,
-    "text_bpe_train" -> bpeTrain _,
-    "text_bpe_encode" -> bpeEncode _,
-    "text_classifier_score" -> classifierScore _,
-    "text_bpe_fertility" -> bpeFertility _,
-    "text_fertility_drift" -> fertilityDrift _,
-    "text_char_entropy" -> charEntropy _,
-    "text_char_entropy_native" -> charEntropyNative _,
-    "text_vocab_coverage" -> vocabCoverage _,
-    "text_composition_report" -> compositionReport _,
-    "text_token_count" -> tokenCount _,
-    "text_pretokenize" -> pretokenize _,
-    "text_quality" -> quality _,
-    "text_langid" -> langId _,
-    "text_fingerprint" -> fingerprint _)
-
-  def oracles: Map[String, String] = Map(
-    "curate_difficulty_buckets" -> difficultyBucketsSql,
-    "text_bigram_logprob" -> bigramLogprobSql,
-    "text_quality_calibration" -> qualityDupCalibrationSql,
-    "text_pii_by_source" -> piiBySourceSql,
-    "text_quality_histogram" -> qualityHistogramSql,
-    "text_boilerplate" -> boilerplateSql,
-    "text_term_rarity" -> termRaritySql,
-    "text_corpus_stats" -> corpusStatsSql,
-    "text_repetition" -> repetitionSql,
-    "text_pii_scrub" -> piiScrubSql,
-    "text_top_terms" -> topTermsSql,
-    "text_doc_keyterms" -> docKeytermsSql,
-    "stream_doc_keyterms" -> docKeytermsSql,
-    "text_heavy_hitters" -> heavyHittersSql,
-    "text_bpe_pairs" -> bpePairsSql,
-    "text_bpe_train" -> bpeTrainSql,
-    "text_bpe_encode" -> bpeEncodeSql,
-    "text_classifier_score" -> classifierScoreSql,
-    "text_bpe_fertility" -> bpeFertilitySql,
-    "text_fertility_drift" -> fertilityDriftSql,
-    "text_char_entropy" -> charEntropySql,
-    "text_char_entropy_native" -> charEntropySql,
-    "text_vocab_coverage" -> vocabCoverageSql,
-    "text_composition_report" -> compositionReportSql,
-    "text_token_count" -> tokenCountSql,
-    "text_pretokenize" -> pretokenizeSql,
-    "text_quality" -> qualitySql,
-    "text_langid" -> langIdSql,
-    "text_fingerprint" -> fingerprintSql)
+  def entries: Seq[Entry] = Seq(
+    Entry("curate_difficulty_buckets", difficultyBuckets, difficultyBucketsSql),
+    Entry("text_bigram_logprob", bigramLogprob, bigramLogprobSql),
+    Entry("text_quality_calibration", qualityDupCalibration,
+      qualityDupCalibrationSql),
+    Entry("text_pii_by_source", piiBySource, piiBySourceSql),
+    Entry("text_quality_histogram", qualityHistogram, qualityHistogramSql),
+    Entry("text_boilerplate", boilerplate, boilerplateSql),
+    Entry("text_term_rarity", termRarity, termRaritySql),
+    Entry("text_corpus_stats", corpusStats, corpusStatsSql),
+    Entry("text_repetition", repetition, repetitionSql),
+    Entry("text_pii_scrub", piiScrub, piiScrubSql),
+    Entry("text_top_terms", topTerms, topTermsSql),
+    Entry("text_doc_keyterms", docKeyterms, docKeytermsSql),
+    Entry("stream_doc_keyterms", streamDocKeyterms, docKeytermsSql),
+    Entry("text_heavy_hitters", heavyHitters, heavyHittersSql),
+    Entry("text_bpe_pairs", bpePairs, bpePairsSql),
+    Entry("text_bpe_train", bpeTrain, bpeTrainSql),
+    Entry("text_bpe_encode", bpeEncode, bpeEncodeSql),
+    Entry("text_classifier_score", classifierScore, classifierScoreSql),
+    Entry("text_bpe_fertility", bpeFertility, bpeFertilitySql),
+    Entry("text_fertility_drift", fertilityDrift, fertilityDriftSql),
+    Entry("text_char_entropy", charEntropy, charEntropySql),
+    Entry("text_char_entropy_native", charEntropyNative, charEntropySql),
+    Entry("text_vocab_coverage", vocabCoverage, vocabCoverageSql),
+    Entry("text_composition_report", compositionReport, compositionReportSql),
+    Entry("text_token_count", tokenCount, tokenCountSql),
+    Entry("text_pretokenize", pretokenize, pretokenizeSql),
+    Entry("text_quality", quality, qualitySql),
+    Entry("text_langid", langId, langIdSql),
+    Entry("text_fingerprint", fingerprint, fingerprintSql))
 }

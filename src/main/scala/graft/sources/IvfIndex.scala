@@ -33,7 +33,7 @@ object IvfIndex {
 
   final case class Layout(centroids: String, vectors: String)
 
-  /** NB (r20, tried and REVERTED after measurement): clustering the
+  /** NB (tried and REVERTED after measurement): clustering the
     * vector relation by `cell` before each partitionBy write (a
     * `REBALANCE(cell)` hint — guide §6's writer clustering, which at
     * corpus scale is the right default: without it every writer task
@@ -49,7 +49,7 @@ object IvfIndex {
     * fixture's write sizes the un-clustered write is strictly
     * faster, so the writes stay as upstream-partitioned. */
 
-  // INVARIANT (ADVICE r19): this memo holds PATHS, never DataFrames —
+  // INVARIANT: this memo holds PATHS, never DataFrames —
   // the inter-query Sessions.sweep unpersists all persistent RDDs
   // between queries, so any cross-call cached/localCheckpointed frame
   // would lose its blocks. Keep every long-lived artifact path-backed.
@@ -326,7 +326,7 @@ object IvfIndex {
     }
   }
 
-  /** TOMBSTONE maintenance (VERDICT r15 next #6) — the third index
+  /** TOMBSTONE maintenance — the third index
     * lifecycle verb after append and retrain: DELETE a set of vec_ids
     * (typically the dedup pipeline's removals — SemDeDup flags feeding
     * the vector store) and COMPACT the layout so probes stop paying
@@ -352,7 +352,7 @@ object IvfIndex {
     val cur = currentLayout(root).getOrElse(
       throw new IllegalStateException(s"no published version under $root"))
     val vecs = layoutVectors(s, cur)
-    // r20 (§3.1/§6): the compact only has to REWRITE cells that held a
+    // Guide §3.1/§6: the compact only has to REWRITE cells that held a
     // tombstoned row — untouched cell directories are immutable files
     // of the retiring version and carry over by hard link (copy
     // fallback), so compaction I/O is ∝ touched cells, not the corpus.

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** `SHOW QUERIES EXTENDED` (VERDICT r15 next #7) — state-size
+/** `SHOW QUERIES EXTENDED` — state-size
   * observability for persistent queries: the capacity-planning signal
   * a 100 TB operator reads BEFORE a state store OOMs. ksqlDB's
   * `SHOW QUERIES EXTENDED`/`EXPLAIN <query>` surfaces per-query
@@ -51,7 +51,7 @@ object QueryMetrics {
       "state_operators", "state_rows", "state_bytes", "input_rows")
   }
 
-  /** `SHOW STATE STORES` (r18 verdict #8 stretch) — the PER-OPERATOR
+  /** `SHOW STATE STORES` — the PER-OPERATOR
     * drill-down of [[extended]]: one row per stateful operator of
     * every active query, from the same
     * [[org.apache.spark.sql.streaming.StreamingQueryProgress]]

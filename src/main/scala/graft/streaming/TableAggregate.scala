@@ -142,7 +142,7 @@ object TableAggregate {
         (g: G, it: Iterator[(G, Long, Long)], st: GroupState[MinMaxState]) =>
           val cur = st.getOption.getOrElse(MinMaxState(Map.empty, 0L))
           // Pre-aggregate the batch's deltas PER VALUE before touching
-          // state (ADVICE r14): TableChangelog.of emits intermediate u
+          // state: TableChangelog.of emits intermediate u
           // records when a key changes twice in one micro-batch, and the
           // group-iterator order after the shuffle is not contractually
           // stable — so a same-batch subtract may precede its matching

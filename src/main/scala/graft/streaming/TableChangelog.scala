@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Retraction-aware changelog output for TABLES (SURVEY.md §2.6 /
-  * VERDICT r7 "what's missing" #2): ksqlDB tables emit per-key change
+/** Retraction-aware changelog output for TABLES (SURVEY.md §2.6):
+  * ksqlDB tables emit per-key change
   * records downstream so a consumer — another table, a re-keyed join,
   * an external cache — can maintain its own copy of the state without
   * re-reading it. The engine's update-mode aggregations emit upserts

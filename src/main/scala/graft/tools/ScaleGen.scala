@@ -53,7 +53,7 @@ object ScaleGen {
   private val verbatim = Seq("region", "nation")
 
   /** Fail fast if any shifted column's source range exceeds its
-    * assumed per-copy shift (ADVICE r12): the shifts encode the
+    * assumed per-copy shift: the shifts encode the
     * seed=42 layout's DOMAIN sizes (e.g. o_custkey shifts by the
     * customer domain, which orders alone cannot reveal), so they
     * cannot simply be recomputed from this one table — but they CAN
@@ -70,7 +70,7 @@ object ScaleGen {
       val row = df.agg(aggs.head, aggs.tail: _*).collect().head
       keys.zipWithIndex.foreach { case (k, i) =>
         // max() over an empty table is NULL — vacuously shiftable
-        // (nothing to collide), not an NPE (ADVICE r13).
+        // (nothing to collide), not an NPE.
         if (!row.isNullAt(i)) {
           val mx = row.getLong(i)
           require(mx < m(k),

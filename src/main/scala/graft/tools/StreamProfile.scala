@@ -2,8 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Profiling harness for the streaming fixture fixed cost (VERDICT r19
-  * next #2): runs the named stream_* queries with a listener that dumps
+/** Profiling harness for the streaming fixture fixed cost: runs the
+  * named stream_* queries with a listener that dumps
   * each micro-batch's durationMs breakdown (queryPlanning, getBatch,
   * addBatch, walCommit, stateOperators commit times), so the ~2 s/query
   * overhead can be attributed. Not part of the bench contract.

@@ -53,8 +53,8 @@ object Sessions {
 
   /** Inter-query hygiene: one query's session debris (terminated
     * streaming queries, cached relations, temp views over memory
-    * sinks) must not stay reachable and slow later queries (observed in
-    * round 6: alphabetically-late queries inflated up to 60×). Every
+    * sinks) must not stay reachable and slow later queries (observed:
+    * alphabetically-late queries inflated up to 60×). Every
     * catalog query (re-)registers the views it needs per call, so
     * dropping them all is safe.
     *
@@ -62,7 +62,7 @@ object Sessions {
     * ContextCleaner frees localCheckpoint blocks only after a GC
     * collects their frames, so over a whole catalog run the block
     * manager ratchets to GBs of dead blocks and memory pressure
-    * inflates later stateful queries (r19: stream_tumbling_final
+    * inflates later stateful queries (observed: stream_tumbling_final
     * 1.5 s → 6.2 s from suite position alone). Every persistent RDD
     * reachable between queries belongs to a COMPLETED query — each
     * catalog function re-derives its frames per call — so this never

@@ -53,7 +53,7 @@ object Widen {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** STREAMING variant (r20): a file-stream micro-batch inherits the
+  /** STREAMING variant: a file-stream micro-batch inherits the
     * arriving FILE count as its scan partitioning — the single-file
     * fixture delivers every batch as ONE task, so heavy per-row
     * derivation above the source (tokenize/shingle/md5 grids) runs

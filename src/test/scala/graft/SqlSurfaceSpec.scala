@@ -57,6 +57,16 @@ class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
       .contains("width must be positive"))
   }
 
+  test("token-array natives reject a non-array input at analysis, naming themselves") {
+    for (name <- Seq("hashed_shingles", "shingle_hash_seq", "minhash_slices",
+        "simhash16", "simhash64")) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $name(1)"))
+      assert(err.getMessage.contains(s"$name expects array<string>, got int"),
+        s"$name: ${err.getMessage}")
+    }
+  }
+
   test("relational SQL over views matches the DSL: agg + join + window") {
     sameRows(
       spark.sql(
@@ -141,7 +151,7 @@ class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
           |  array_join(earliest_3_by_offset(event_id, event_type), ',') AS earliest3,
           |  COUNT(*) AS n
           |FROM events GROUP BY user_id""".stripMargin),
-      queries.BatchSqlQueries3.latestKByOffset(spark, sf))
+      queries.BatchSqlQueries.latestKByOffset(spark, sf))
   }
 
   test("aggregator-backed SQL aggregates: decimal_sketch family") {

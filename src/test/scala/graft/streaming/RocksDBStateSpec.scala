@@ -363,7 +363,7 @@ class RocksDBStateSpec extends AnyFunSuite with SharedSpark {
     val d = "/root/testdata/sf0.001"
     val got = graft.queries.StreamingQueries.streamPatternMatch(spark, d)
       .as[(Long, Long, Long, Long)].collect().toSet
-    val expected = graft.queries.BatchSqlQueries3.patternMatch(spark, d)
+    val expected = graft.queries.BatchSqlQueries.patternMatch(spark, d)
       .select(col("user_id"), col("seq_len"), col("n_funnel"),
         col("err_after_purchase"))
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -378,7 +378,7 @@ class RocksDBStateSpec extends AnyFunSuite with SharedSpark {
     val d = "/root/testdata/sf0.001"
     val got = graft.queries.StreamingQueries.streamSaxMotif(spark, d)
       .as[(String, String, Long, Long)].collect().toSet
-    val expected = graft.queries.BatchSqlQueries3.saxMotif(spark, d)
+    val expected = graft.queries.BatchSqlQueries.saxMotif(spark, d)
       .as[(String, String, Long, Long)].collect().toSet
     assert(got.nonEmpty && got == expected,
       s"got=${got.size} rows, expected=${expected.size}")
@@ -422,7 +422,7 @@ class RocksDBStateSpec extends AnyFunSuite with SharedSpark {
     val d = "/root/testdata/sf0.001"
     val stream = graft.queries.StreamingQueries.ohlcBars(spark, d)
       .collect().map(_.toSeq).toSet
-    val batch = graft.queries.BatchSqlQueries3.ohlcBars(spark, d)
+    val batch = graft.queries.BatchSqlQueries.ohlcBars(spark, d)
       .collect().map(_.toSeq).toSet
     assert(stream.nonEmpty && stream == batch,
       s"stream=${stream.size} bars, batch=${batch.size}")
@@ -571,7 +571,7 @@ class RocksDBStateSpec extends AnyFunSuite with SharedSpark {
     val got = graft.queries.StreamingQueries.streamScd2(spark, d)
       .as[(Long, String, String, Option[String], Long)]
       .collect().sorted.toSeq
-    val expected = graft.queries.BatchSqlQueries3.scd2History(spark, d)
+    val expected = graft.queries.BatchSqlQueries.scd2History(spark, d)
       .as[(Long, String, String, Option[String], Long)]
       .collect().sorted.toSeq
     assert(got.nonEmpty && got == expected,

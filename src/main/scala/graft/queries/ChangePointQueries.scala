@@ -3,13 +3,12 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.LongType
 
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Keyed, Leg}
 
 /** CUSUM change-point detection (Page's test) over the hourly event
   * series — the ingest-monitoring primitive that flags when a metric's
@@ -130,17 +129,8 @@ object ChangePointQueries {
     val hourly = StreamingQueries.eventsStream(s, d)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hts"))
       .agg(sum(expr("CAST(floor(value * 1000000) AS BIGINT)")).as("x"))
-      .withColumn("k",
-        concat_ws("\u0000", col("event_type"),
-          date_format(col("hts"), "yyyy-MM-dd HH:mm:ss")))
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("hts", org.apache.spark.sql.types.TimestampType),
-      StructField("x", LongType),
-      StructField("k", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
-    store.df(s).select(col("event_type"), col("hts"), col("x"))
+    FiniteStream.drain(Leg(hourly, "update", sink = Keyed("event_type", "hts")))
+      .head
   }
 
   def entries: Seq[Entry] = Seq(

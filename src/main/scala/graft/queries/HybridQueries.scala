@@ -10,7 +10,7 @@ import graft.operators.Relational
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Batches, Keyed, Leg}
 
 /** HYBRID dense+sparse retrieval — the
   * production hybrid-search shape: the SAME queries run through the
@@ -277,7 +277,6 @@ object HybridQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk20(col("ord"), col("doc_id")).as("top"))
-    val store = RetrievalQueries.headStore(agg, "term")
 
     // dense leg: streaming ingest into a scratch layout under the
     // fixed routing table (the retrain-artifact convention)
@@ -292,8 +291,8 @@ object HybridQueries {
       val estream = SimilarityQueries.embStream(s, d)
       // the two ingest legs are fully independent until the finalize
       // (separate sources, separate sinks): two legs of one drain
-      FiniteStream.drain(
-        Leg(agg, "update", sink = Batches(store.upsert)),
+      val Seq(idx) = FiniteStream.drain(
+        Leg(agg, "update", sink = Keyed("term")),
         Leg(estream, "append", statePartitions = 4, sink = Batches { (b, id) =>
           graft.sources.IvfIndex.appendBatch(layout,
             b.withColumn("cell", col("label")), id)
@@ -301,7 +300,7 @@ object HybridQueries {
 
       // finalize outside the streams; materialize before the scratch
       // layout is deleted
-      val qsel10 = RetrievalQueries.querySet(store.df(s))
+      val qsel10 = RetrievalQueries.querySet(idx)
         .select(col("term"), col("top"))
       val la = Relational.topKRanked(qsel10, "top", "doc_id", "ord")
         .select(col("term"), col("doc_id"), col("rank").as("rank_a"))

@@ -3,15 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextShingles
 import graft.operators.Relational
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Keyed, Leg}
 
 /** Inverted-index retrieval over the documents corpus — the search
   * primitive a curation pipeline uses for quality filtering and
@@ -68,13 +67,6 @@ object RetrievalQueries {
     * head stores sat(tf), not tf — see [[streamBm25TopK]]). */
   private val ScoreFromSatExpr: Column = expr(
     "(((n_docs - df) * 2 + 1) * 1000000 DIV (df * 2 + 1)) * sat")
-
-  /** The in-memory keyed store a streaming head aggregate drains
-    * into, over the aggregate's columns, every one nullable. */
-  private[queries] def headStore(agg: DataFrame,
-                                 key: String): graft.streaming.SnapshotStore =
-    new graft.streaming.SnapshotStore(
-      StructType(agg.schema.map(_.copy(nullable = true))), keyField = key)
 
   /** (doc_id, term, tf) — the inverted index relation. */
   private[queries] def tfRel(s: SparkSession, d: String): DataFrame =
@@ -219,10 +211,8 @@ object RetrievalQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-    val store = headStore(agg, "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     // finalize on the stored index heads (|vocab| rows, 5 postings each)
-    val idx = store.df(s)
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
     val qsel = querySet(idx).select(col("term"), col("df"), col("top"))
     Relational.topKRanked(qsel.crossJoin(broadcast(nDocs)), "top", "doc_id",
@@ -370,9 +360,7 @@ object RetrievalQueries {
         (col("tfn") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-    val store = headStore(agg, "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val idx = store.df(s)
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     val qsel = querySet(idx).select(col("term"), col("df"), col("top"))
     Relational.topKRanked(qsel, "top", "doc_id", "ord")
       .withColumn("tfn", expr("(ord + doc_id) DIV 4294967296"))
@@ -603,9 +591,8 @@ object RetrievalQueries {
       .agg(count(lit(1)).as("df"),
         topk20(col("ord_a"), col("doc_id")).as("ta"),
         topk20(col("ord_b"), col("doc_id")).as("tb"))
-    val store = headStore(agg, "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val qsel = querySet(store.df(s))
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
+    val qsel = querySet(idx)
     def ranksOf(head: String, rankName: String): DataFrame =
       Relational.topKRanked(qsel.select(col("term"), col(head)), head,
           "doc_id", "ord")
@@ -654,9 +641,7 @@ object RetrievalQueries {
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"),
         topk20(col("ord_a"), col("doc_id")).as("ta"),
         topk20(col("ord_b"), col("doc_id")).as("tb"))
-    val store = headStore(agg, "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val idx = store.df(s)
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
     val qsel = querySet(idx)
     def ranksOf(head: String, rankName: String): DataFrame =
@@ -1097,9 +1082,9 @@ object RetrievalQueries {
         (col("n_occ") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = hits.groupBy(col("qid"), col("bigram"))
       .agg(topk(col("ord"), col("doc_id")).as("top"))
-    val store = headStore(agg, "bigram")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    Relational.topKRanked(store.df(s), "top", "doc_id", "ord")
+    val Seq(heads) =
+      FiniteStream.drain(Leg(agg, "update", sink = Keyed("qid", "bigram")))
+    Relational.topKRanked(heads, "top", "doc_id", "ord")
       .select(col("qid"), col("bigram").as("phrase"), col("rank"),
         col("doc_id"), expr("(ord + doc_id) DIV 4294967296").as("n_occ"))
   }
@@ -1133,9 +1118,8 @@ object RetrievalQueries {
         (col("n_close") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = hits.groupBy(col("qid"))
       .agg(topk(col("ord"), col("doc_id")).as("top"))
-    val store = headStore(agg, "qid")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    Relational.topKRanked(store.df(s), "top", "doc_id", "ord")
+    val Seq(heads) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("qid")))
+    Relational.topKRanked(heads, "top", "doc_id", "ord")
       .select(col("qid"), col("rank"), col("doc_id"),
         expr("(ord + doc_id) DIV 4294967296").as("n_close"))
   }
@@ -1288,9 +1272,7 @@ object RetrievalQueries {
         (col("sat") * lit(4294967296L) - col("doc_id")).as("ord"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), topk(col("ord"), col("doc_id")).as("top"))
-    val store = headStore(agg, "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val idx = store.df(s)
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     val dfRel = idx.select(col("term"), col("df"))
     val qsel = querySet(idx)
     val fb = Relational.topKRanked(qsel.select(col("term"), col("top")),
@@ -1417,13 +1399,7 @@ object RetrievalQueries {
       .select(col("term"), col("tf"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("ctf"))
-    val schema = StructType(Seq(
-      StructField("term", StringType),
-      StructField("df", LongType),
-      StructField("ctf", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val idx = store.df(s)
+    val Seq(idx) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     val stats = idx.agg(sum(col("ctf")).as("c_tot"))
     val qs = querySet(idx).select(col("term"), col("ctf"))
     Relational.topK(

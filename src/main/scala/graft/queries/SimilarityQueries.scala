@@ -7,7 +7,7 @@ import graft.operators.Relational
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Batches, Keyed, Leg}
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors). Cosine is computed in DOUBLE with a sequential left fold
@@ -222,8 +222,6 @@ object SimilarityQueries {
     * Finite input ⇒ the hit relation equals the batch join's, so the SAME
     * oracle verifies the streaming composition. */
   def streamDecontamSemantic(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
-      StructType}
     val bucketF = concat((1 to 8).map(i =>
       when(element_at(col("embedding"), i) >= 0, "1").otherwise("0")): _*)
     val bench = Tables.embeddings(s, d)
@@ -242,13 +240,8 @@ object SimilarityQueries {
       .groupBy(col("vec_id").as("doc_id"))
       .agg(count(lit(1)).cast("long").as("n_bench_hits"),
         max(col("cos")).as("max_cos"))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_bench_hits", LongType),
-      StructField("max_cos", DoubleType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "doc_id")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s).localCheckpoint()
+    FiniteStream.drain(Leg(agg, "update", sink = Keyed("doc_id"))).head
+      .localCheckpoint()
   }
 
   val decontamSemanticSql: String =

@@ -2,14 +2,13 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.{KmvSketchAgg, Md5Key}
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Keyed, Leg}
 
 /** KMV (k-minimum-values) distinct-count sketch algebra over the
   * documents corpus — the mergeable cardinality layer of a curation
@@ -258,17 +257,8 @@ object SketchQueries {
     val hourly = StreamingQueries.eventsStream(s, d)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hts"))
       .agg(kmv(Md5Key.column(col("user_id").cast("string"))).as("sk"))
-      .withColumn("k",
-        concat_ws("\u0000", col("event_type"),
-          date_format(col("hts"), "yyyy-MM-dd HH:mm:ss")))
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("hts", org.apache.spark.sql.types.TimestampType),
-      StructField("sk", ArrayType(LongType)),
-      StructField("k", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
-    slidingOf(store.df(s).select(col("event_type"), col("hts"), col("sk")))
+    slidingOf(FiniteStream.drain(
+      Leg(hourly, "update", sink = Keyed("event_type", "hts"))).head)
   }
 
   val kmvSlidingSql: String =
@@ -315,12 +305,7 @@ object SketchQueries {
       .filter(col("tok") =!= "")
       .select(col("source"), Md5Key.column(col("tok")).as("h"))
     val agg = toks.groupBy(col("source")).agg(kmv(col("h")).as("sk"))
-    val schema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("sk", ArrayType(LongType))))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "source")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(agg, "update", sink = Keyed("source"))).head
       .select(col("source"),
         size(col("sk")).cast("long").as("n_held"),
         element_at(col("sk"), -1).as("kth_hash"))
@@ -421,14 +406,9 @@ object SketchQueries {
         explode(graft.functions.TextShingles.tokens(col("text"))).as("term"))
     val agg = words.groupBy(col("source"))
       .agg(mg(col("term")).as("sk"), count(lit(1)).as("n_total"))
-    val schema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("sk",
-        org.apache.spark.sql.types.MapType(StringType, LongType)),
-      StructField("n_total", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "source")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val cand = store.df(s).select(col("source"), col("n_total"),
+    val Seq(sketches) =
+      FiniteStream.drain(Leg(agg, "update", sink = Keyed("source")))
+    val cand = sketches.select(col("source"), col("n_total"),
       explode(map_keys(col("sk"))).as("term"))
     Tables.documents(s, d)
       .select(col("source"),
@@ -573,20 +553,8 @@ object SketchQueries {
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hts"))
       .agg(mg(col("user_id").cast("string")).as("sk"),
         count(lit(1)).as("n"))
-      .withColumn("k",
-        concat_ws("\u0000", col("event_type"),
-          date_format(col("hts"), "yyyy-MM-dd HH:mm:ss")))
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("hts", org.apache.spark.sql.types.TimestampType),
-      StructField("sk",
-        org.apache.spark.sql.types.MapType(StringType, LongType)),
-      StructField("n", LongType),
-      StructField("k", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "k")
-    FiniteStream.drain(Leg(hourly, "update", sink = Batches(store.upsert)))
-    mgSlidingOf(s, d,
-      store.df(s).select(col("event_type"), col("hts"), col("sk"), col("n")))
+    mgSlidingOf(s, d, FiniteStream.drain(
+      Leg(hourly, "update", sink = Keyed("event_type", "hts"))).head)
   }
 
   def entries: Seq[Entry] = Seq(

@@ -8,7 +8,8 @@ import graft.operators.Relational
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.{DebeziumJson, FiniteStream, Pipeline}
-import graft.streaming.FiniteStream.{Batches, Leg, deleteRecursively, scratchDir}
+import graft.streaming.FiniteStream.{Batches, Keyed, Leg, deleteRecursively,
+  scratchDir}
 
 /** Structured Streaming operators surfaced as driver-verifiable
   * queries: each runs a real streaming query (file source or the full
@@ -1043,12 +1044,6 @@ object StreamingQueries {
     val latest3 = udaf(new graft.functions.LatestKByOffsetAgg(3))
     val earliest3 =
       udaf(new graft.functions.LatestKByOffsetAgg(3, earliest = true))
-    val schema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("latest3", StringType),
-      StructField("earliest3", StringType),
-      StructField("n", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
     val agg = eventsStream(s, d)
       .groupBy(col("user_id"))
       .agg(
@@ -1057,8 +1052,7 @@ object StreamingQueries {
         array_join(earliest3(col("event_id"), col("event_type")), ",")
           .as("earliest3"),
         count(lit(1)).cast(LongType).as("n"))
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(agg, "update", sink = Keyed("user_id"))).head
   }
 
   /** Streaming [[graft.functions.DecimalSketch]]: per-event-type
@@ -1082,19 +1076,13 @@ object StreamingQueries {
     * table. Per-key state is the bounded bucket map. */
   private def decsketchStore(s: SparkSession, d: String): DataFrame = {
     val sk = udaf(new graft.functions.DecimalSketchAgg)
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("sketch", MapType(LongType, LongType)),
-      StructField("n", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
     val agg = eventsStream(s, d)
       .select(col("event_type"),
         round(col("value") * 100).cast(LongType).as("cents"))
       .groupBy(col("event_type"))
       .agg(sk(col("cents")).as("sketch"),
         count(lit(1)).cast(LongType).as("n"))
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(agg, "update", sink = Keyed("event_type"))).head
   }
 
   /** Streaming drift monitor: the same stored per-type sketches,
@@ -1118,14 +1106,7 @@ object StreamingQueries {
       unix_micros(col("ts")).as("us"), col("event_id"),
       substring(col("event_type"), 1, 1).as("ch"))
     val out = graft.streaming.PatternMatch.table(s, ev)
-    val schema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("seq_len", LongType),
-      StructField("n_funnel", LongType),
-      StructField("err_after_purchase", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
-    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Keyed("user_id"))).head
   }
 
   /** Streaming session-scoped CEP ([[graft.streaming.PatternMatch.sessionTable]]):
@@ -1140,15 +1121,7 @@ object StreamingQueries {
       substring(col("event_type"), 1, 1).as("ch"))
     val out = graft.streaming.PatternMatch.sessionTable(s, ev,
       BatchSqlQueries.SessionGapUs)
-    val schema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("n_sessions", LongType),
-      StructField("n_funnel", LongType),
-      StructField("n_err_sessions", LongType),
-      StructField("n_events", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
-    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Keyed("user_id"))).head
   }
 
   /** The events stream with each series' batch-trained SAX
@@ -1176,14 +1149,8 @@ object StreamingQueries {
   def streamSaxMotif(s: SparkSession, d: String): DataFrame = {
     val out = graft.streaming.SaxMotif.table(s, saxStream(s, d),
       BatchSqlQueries.SaxW)
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("motif", StringType),
-      StructField("n_occ", LongType),
-      StructField("n_windows", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
-    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(out.toDF(), "append", sink = Keyed("event_type")))
+      .head
   }
 
   /** Streaming corpus-composition monitor: per-source (source, lang)
@@ -1199,22 +1166,8 @@ object StreamingQueries {
       .select(col("source"), col("lang"))
     val agg = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("ct"))
-      // Composite store key: the separator must be a character that
-      // cannot appear in either value, or distinct (source, lang)
-      // pairs whose concatenation collides (("s1","ab") vs
-      // ("s1a","b")) would share a key and silently merge counts.
-      // NUL is spelled as an escape so no raw control byte hides in
-      // the source text.
-      .withColumn("pair", concat_ws("\u0000", col("source"), col("lang")))
-    val schema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("lang", StringType),
-      StructField("ct", LongType),
-      StructField("pair", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    TextQueries.fertilityTvd(
-      store.df(s).select(col("source"), col("lang"), col("ct")), "lang")
+    TextQueries.fertilityTvd(FiniteStream.drain(
+      Leg(agg, "update", sink = Keyed("source", "lang"))).head, "lang")
   }
 
   /** Streaming incremental dedup gate — [[DedupQueries.incremental]]
@@ -1289,8 +1242,8 @@ object StreamingQueries {
     // index a corpus maintains alongside itself (paid per corpus
     // version, not per ingest epoch)
     val idxRoot = java.nio.file.Paths.get(scratchDir("graft-dedup-idx-"))
-    val schema = StructType(valueFields :+ StructField("pair", StringType))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
+    val store = new graft.streaming.SnapshotStore(StructType(valueFields),
+      keys = Seq("doc_id", "dup_of"))
     try {
       val built = DedupQueries.restIndexOf(rest)
       val (bandsP, shP, sizesP) = (idxRoot.resolve("bands").toString,
@@ -1304,13 +1257,10 @@ object StreamingQueries {
         sizes = s.read.parquet(sizesP))
       FiniteStream.drain(Leg(docStream(s, d), "append", sink = Batches { (b, _) =>
         val delta = b.filter(col("doc_id") % 10 === 9)
-        store.upsert(gate(delta, stored)
-          .withColumn("pair", concat_ws("\u0000",
-            col("doc_id").cast(StringType),
-            col("dup_of").cast(StringType))))
+        store.upsert(gate(delta, stored))
       }))
     } finally deleteRecursively(idxRoot.toString)
-    store.df(s).select(valueFields.map(f => col(f.name)): _*)
+    store.df(s)
   }
 
   /** Streaming tokenizer-fertility drift monitor: the per-document fertility
@@ -1326,18 +1276,8 @@ object StreamingQueries {
         docStream(s, d).select(col("source"), col("text")))
       .groupBy(col("source"), col("bkt"))
       .agg(count(lit(1)).as("ct"))
-      // NUL-separated composite store key — see streamLangDrift
-      .withColumn("pair",
-        concat_ws("\u0000", col("source"), col("bkt").cast(StringType)))
-    val schema = StructType(Seq(
-      StructField("source", StringType),
-      StructField("bkt", LongType),
-      StructField("ct", LongType),
-      StructField("pair", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "pair")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    TextQueries.fertilityTvd(
-      store.df(s).select(col("source"), col("bkt"), col("ct")), "bkt")
+    TextQueries.fertilityTvd(FiniteStream.drain(
+      Leg(agg, "update", sink = Keyed("source", "bkt"))).head, "bkt")
   }
 
   /** Streaming symbolic similarity: the SAME SAX automaton emits each
@@ -1349,12 +1289,9 @@ object StreamingQueries {
   def streamSaxSimilarity(s: SparkSession, d: String): DataFrame = {
     val out = graft.streaming.SaxMotif.vocabTable(s, saxStream(s, d),
       BatchSqlQueries.SaxW)
-    val schema = StructType(Seq(
-      StructField("event_type", StringType),
-      StructField("words", StringType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "event_type")
-    FiniteStream.drain(Leg(out.toDF(), "append", sink = Batches(store.upsert)))
-    BatchSqlQueries.saxJaccard(store.df(s).select(col("event_type"),
+    val Seq(vocab) =
+      FiniteStream.drain(Leg(out.toDF(), "append", sink = Keyed("event_type")))
+    BatchSqlQueries.saxJaccard(vocab.select(col("event_type"),
       explode(split(col("words"), ",")).as("word")))
   }
 
@@ -1400,22 +1337,15 @@ object StreamingQueries {
       |GROUP BY c.event_type, qq.q, nn.n""".stripMargin
 
   /** A2/A3 streaming form: update-mode latest-by-offset aggregation
-    * materialized into a SnapshotStore via foreachBatch — the final
+    * drained as a keyed leg, the table keyed by user_id — the final
     * table state must equal the batch arg_max oracle. */
   def streamLatestByKey(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("user_id", LongType),
-      StructField("latest_type", StringType),
-      StructField("latest_value", DoubleType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "user_id")
     val table = graft.streaming.LatestByKey.table(
       eventsStream(s, d)
         .select(col("user_id"), col("event_id").as("offset"),
           col("event_type").as("latest_type"), col("value").as("latest_value")),
       "user_id", "offset", Seq("latest_type", "latest_value"))
-    FiniteStream.drain(Leg(table, "update", sink = Batches(store.upsert)))
-    store.df(s)
+    FiniteStream.drain(Leg(table, "update", sink = Keyed("user_id"))).head
   }
 
   /** Native stream–static join (Spark's built-in J1 shape: the static

@@ -8,7 +8,7 @@ import graft.functions.TextShingles
 import graft.queries.Catalog.Entry
 import graft.sources.Tables
 import graft.streaming.FiniteStream
-import graft.streaming.FiniteStream.{Batches, Leg}
+import graft.streaming.FiniteStream.{Keyed, Leg}
 
 /** Text-analysis operators over `documents`: token counting, quality
   * scoring, n-gram-heuristic language ID, fingerprinting. All pure
@@ -286,11 +286,7 @@ object TextQueries {
       .select(col("doc_id"), explode(array_distinct(toks)).as("term"))
     val agg = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
-    val schema = StructType(Seq(
-      StructField("term", StringType), StructField("df", LongType)))
-    val store = new graft.streaming.SnapshotStore(schema, keyField = "term")
-    FiniteStream.drain(Leg(agg, "update", sink = Batches(store.upsert)))
-    val df = store.df(s)
+    val Seq(df) = FiniteStream.drain(Leg(agg, "update", sink = Keyed("term")))
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
     val tf = Tables.documents(s, d)
       .select(col("doc_id"), explode(toks).as("term"))

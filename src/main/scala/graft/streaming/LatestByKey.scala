@@ -29,8 +29,9 @@ object LatestByKey {
   * the enrichment join (lookup-at-processing-time semantics). A
   * `__deleted='true'` row (S2 rewrite mode / Kafka tombstone) removes
   * its key — the ksqlDB tombstone behavior. Two implementations:
-  * [[SnapshotStore]] (in-memory, broadcast-dimension-bounded) and
-  * [[DurableSnapshotStore]] (parquet copy-on-write, unbounded). */
+  * [[SnapshotStore]] (in-memory, broadcast-dimension-bounded, keyed by
+  * a tuple of columns) and [[DurableSnapshotStore]] (parquet
+  * copy-on-write, unbounded, keyed by one column). */
 trait DimensionStore {
   def upsert(batch: DataFrame, batchId: Long): Unit
   def df(spark: SparkSession): DataFrame
@@ -41,7 +42,10 @@ trait DimensionStore {
   def read[T](spark: SparkSession)(body: DataFrame => T): T = body(df(spark))
 }
 
-/** In-memory dimension snapshot.
+/** In-memory dimension snapshot, keyed by the tuple of the `keys`
+  * columns' values: two rows share a key only when every key column is
+  * equal, nulls included, so a null key and the string "null" stay
+  * apart.
   *
   * Scale contract: this store backs the *broadcast side* of the
   * enrichment join, so it is bounded by the same "dimension fits in an
@@ -49,14 +53,17 @@ trait DimensionStore {
   * offline engine dependency-free. Past that bound, use
   * [[DurableSnapshotStore]].
   */
-class SnapshotStore(val schema: StructType, keyField: String,
+class SnapshotStore(val schema: StructType, keys: Seq[String],
                     deletedField: String = "__deleted") extends DimensionStore {
-  private val rows = new java.util.concurrent.ConcurrentHashMap[String, Row]()
+  keys.foreach(k => require(schema.fieldNames.contains(k),
+    s"key column $k is not a column of (${schema.fieldNames.mkString(", ")})"))
+
+  private val rows = new java.util.concurrent.ConcurrentHashMap[Row, Row]()
 
   def upsert(batch: DataFrame): Unit = {
     val hasDeleted = batch.schema.fieldNames.contains(deletedField)
     batch.collect().foreach { r =>
-      val k = String.valueOf(r.getAs[Any](keyField))
+      val k = Row.fromSeq(keys.map(f => r.getAs[Any](f)))
       val deleted = hasDeleted && r.getAs[String](deletedField) == "true"
       if (deleted) rows.remove(k)
       else rows.put(k, Row.fromSeq(schema.fieldNames.toSeq.map(f => r.getAs[Any](f))))

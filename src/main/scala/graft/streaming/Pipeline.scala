@@ -95,7 +95,7 @@ class Pipeline(spark: SparkSession, checkpointRoot: String,
     if (durableDimension)
       new DurableSnapshotStore(spark, s"$checkpointRoot/stores/customers_by_key",
         snapshotSchema, keyField = "id")
-    else new SnapshotStore(snapshotSchema, keyField = "id")
+    else new SnapshotStore(snapshotSchema, keys = Seq("id"))
   }
 
   /** Intermediate "topic": enriched_orders — disk-backed, executor I/O. */

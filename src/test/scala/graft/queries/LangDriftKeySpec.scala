@@ -7,14 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
 import graft.streaming.FiniteStream
 
-/** Regression guard for the stream_lang_drift composite store key
-  * (ADVICE r12): the SnapshotStore is keyed by concat(source, SEP,
-  * lang), and with a collidable separator the distinct pairs
-  * ("s1","ab") and ("s1a","b") would map to ONE key, silently merging
-  * their counts. The key now uses a NUL separator (spelled with the backslash-u0000 escape,
-  * no raw control byte in source), which cannot occur inside a parquet
-  * string value of this corpus, so the composite key is injective —
-  * this spec pins exactly the collision pair from the advice. */
+/** Regression guard for the stream_lang_drift state key: the result
+  * is keyed by the (source, lang) pair, so distinct pairs must keep
+  * separate state rows, also the pairs ("s1","ab") and ("s1a","b")
+  * whose concatenations are equal; a merged key would silently
+  * overwrite one pair's count with the other's. */
 class LangDriftKeySpec extends AnyFunSuite with SharedSpark {
 
   test("concatenation-colliding (source, lang) pairs keep separate state rows") {

@@ -28,7 +28,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SharedSpark {
         org.apache.spark.sql.types.StructField("k",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.StringType))), keyField = "k")
+          org.apache.spark.sql.types.StringType))), keys = Seq("k"))
 
     val feed = MemoryStream[(String, String, Long)]
     def startQuery(f: MemoryStream[(String, String, Long)]) =
@@ -136,7 +136,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SharedSpark {
         org.apache.spark.sql.types.StructField("n_funnel",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("err_after_purchase",
-          org.apache.spark.sql.types.LongType))), keyField = "user_id")
+          org.apache.spark.sql.types.LongType))), keys = Seq("user_id"))
 
     def startQuery(f: MemoryStream[EventIn]) =
       PatternMatch.table(spark, f.toDF())
@@ -181,7 +181,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SharedSpark {
         org.apache.spark.sql.types.StructField("n_occ",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("n_windows",
-          org.apache.spark.sql.types.LongType))), keyField = "event_type")
+          org.apache.spark.sql.types.LongType))), keys = Seq("event_type"))
 
     def startQuery(f: MemoryStream[SaxIn]) =
       SaxMotif.table(spark, f.toDF(), 2)
@@ -229,7 +229,7 @@ class CheckpointRecoverySpec extends AnyFunSuite with SharedSpark {
             org.apache.spark.sql.types.LongType)),
         org.apache.spark.sql.types.StructField("ids",
           org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))), keyField = "g")
+            org.apache.spark.sql.types.LongType)))), keys = Seq("g"))
     val topk = org.apache.spark.sql.functions.udaf(
       new graft.functions.TopKByScoreLong(3))
     val feed = MemoryStream[(String, Long, Long)]
